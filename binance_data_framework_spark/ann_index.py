@@ -204,7 +204,7 @@ class AnnIndexStore(SnapshotStore):
 
     def _write_model(
         self,
-        staging: str,
+        path: str,
         params: dict,
         fp: list[int],
         centroids,
@@ -216,7 +216,7 @@ class AnnIndexStore(SnapshotStore):
         """The ONE model-sidecar writer shared by every committing path
         (build / append / delete) — a single definition of the component
         set, so a layout change cannot desynchronize the three commit
-        paths (review r7 #6)."""
+        paths (review r7 #6). ``path`` is the commit's staging dir."""
         model_rows = [
             (
                 "meta",
@@ -237,8 +237,30 @@ class AnnIndexStore(SnapshotStore):
             .coalesce(1)
             .write.option("compression", "zstd")
             .mode("overwrite")
-            .parquet(f"{self.root}/{staging}/model")
+            .parquet(f"{path}/model")
         )
+
+    @staticmethod
+    def _model_rule(orig_man: dict, op: str):
+        """_staged_commit conflict rule of the model-rolling commits
+        (append / delete): the live model files must be exactly those of
+        ``orig_man``, the manifest the rolled fingerprint was computed
+        from — a racing append/rebuild raises (retry re-reads the
+        rolled-forward model) instead of silently losing the other
+        writer's fingerprint contribution. Removes the old model files."""
+        orig_model = sorted(f for f in orig_man["files"] if f.startswith("model/"))
+
+        def removed(latest: dict | None) -> list[str]:
+            live = SnapshotStore._live(latest)
+            if sorted(f for f in live if f.startswith("model/")) != orig_model:
+                raise RuntimeError(
+                    f"concurrent index write during {op}: the model files "
+                    f"changed since this {op} read them — retry on the "
+                    f"rolled-forward model"
+                )
+            return orig_model
+
+        return removed
 
     # -- build -------------------------------------------------------------
 
@@ -412,39 +434,29 @@ class AnnIndexStore(SnapshotStore):
             S._pq_codes_udf(opq_books, sub_dim)(F.col("_rr")).alias("_code"),
         ).withColumn("variant", F.lit("opq"))
 
-        import uuid as _uuid
-
-        staging = f"_staging-{_uuid.uuid4().hex}"
-        (
+        coded = (
             coded_pq.unionByName(coded_opq)
             .withColumnRenamed("_c", "cell")
             .withColumnRenamed("_code", "code")
             .withColumnRenamed("_norm", "norm")
             .withColumnRenamed("_chash", "chash")
-            .repartition("variant", "cell")  # one file per (variant, cell)
-            .sortWithinPartitions(self.id_col)
-            .write.partitionBy("variant", "cell")
-            .option("compression", "zstd")
-            .mode("overwrite")
-            .save(f"{self.root}/{staging}/codes")
         )
-        self._write_model(
-            staging,
-            params,
-            fp,
-            centroids,
-            pq_books,
-            rotation,
-            opq_books,
-            {"n_planes": lsh_planes, "n_tables": lsh_tables, "seed": 42},
-        )
-        new_files = self._publish_staged(staging)
 
-        def _delta(latest: dict | None):
-            # full-replace: a rebuild supersedes every prior artifact file
-            return new_files, (latest["files"] if latest else [])
+        def write(path: str) -> None:
+            self._cell_writer(coded).save(f"{path}/codes")
+            self._write_model(
+                path,
+                params,
+                fp,
+                centroids,
+                pq_books,
+                rotation,
+                opq_books,
+                {"n_planes": lsh_planes, "n_tables": lsh_tables, "seed": 42},
+            )
 
-        self._commit_or_reclaim(new_files, _delta)
+        # full-replace: a rebuild supersedes every prior artifact file
+        self._staged_commit(write, removed_fn=self._live)
         return self.load(validate_against=None)
 
     #: tombstone count above which append(purge="auto") folds the physical
@@ -473,6 +485,17 @@ class AnnIndexStore(SnapshotStore):
     @staticmethod
     def _is_code_delta(rel: str) -> bool:
         return rel.startswith("codes_delta/")
+
+    def _cell_writer(self, rows: DataFrame):
+        """Writer of the bucketed code layout: one id-sorted file per
+        (variant, cell)."""
+        return (
+            rows.repartition("variant", "cell")
+            .sortWithinPartitions(self.id_col)
+            .write.partitionBy("variant", "cell")
+            .option("compression", "zstd")
+            .mode("overwrite")
+        )
 
     # _local_root() is inherited from SnapshotStore (hoisted in review
     # r10 round 2)
@@ -696,10 +719,11 @@ class AnnIndexStore(SnapshotStore):
         centroids/codebooks trained on the original distribution; rebuild
         when recall certificates degrade.
 
-        Concurrent appends: the commit's delta_fn re-checks that the model
-        files it read are still the live ones — a racing append/rebuild
-        raises (retry re-reads the rolled-forward model) instead of
-        silently losing the other writer's fingerprint contribution.
+        Concurrent appends: the commit's conflict rule (_model_rule)
+        re-checks that the model files it read are still the live ones — a
+        racing append/rebuild raises (retry re-reads the rolled-forward
+        model) instead of silently losing the other writer's fingerprint
+        contribution.
 
         ``purge`` decides when pending tombstones are physically reclaimed
         (ADVICE r7 #3 — the old unconditional purge attached an
@@ -790,16 +814,13 @@ class AnnIndexStore(SnapshotStore):
                         "left_anti",
                     )
                 )
-        # orig_model MUST come from the manifest idx was parsed from (its
-        # version), not from a fresh _snapshot(): a rebuild landing between
-        # load() and a later snapshot read would make the concurrency check
-        # below compare against the NEW model while the encode below uses
-        # the OLD one — committing stale-quantizer codes that the check
-        # can't see (review r6b #1, TOCTOU).
+        # orig_man MUST be the manifest idx was parsed from (its version),
+        # not a fresh _snapshot(): a rebuild landing between load() and a
+        # later snapshot read would make the concurrency check (_model_rule)
+        # compare against the NEW model while the encode below uses the
+        # OLD one — committing stale-quantizer codes that the check can't
+        # see (review r6b #1, TOCTOU).
         orig_man = self._resolve(idx.version)
-        orig_model = sorted(
-            f for f in orig_man["files"] if f.startswith("model/")
-        )
         if dfp[0] == 0:
             return idx
         if check_duplicates:
@@ -897,9 +918,6 @@ class AnnIndexStore(SnapshotStore):
             coded_pq = coded_pq.drop("_chash")
             coded_opq = coded_opq.drop("_chash")
 
-        import uuid as _uuid
-
-        staging = f"_staging-{_uuid.uuid4().hex}"
         coded = (
             coded_pq.unionByName(coded_opq)
             .withColumnRenamed("_c", "cell")
@@ -907,33 +925,6 @@ class AnnIndexStore(SnapshotStore):
             .withColumnRenamed("_norm", "norm")
             .withColumnRenamed("_chash", "chash")
         )
-        if dfp[0] <= self.CODES_DELTA_MAX_VECTORS:
-            # delta-run write (r10): a micro-batch append lands as ONE
-            # (variant, cell)-sorted file instead of one near-empty file
-            # per touched (variant, cell) — measured 28.6 s / ~1000 files
-            # for a 2000-vector batch at 512 cells on the bucketed path.
-            # Lookups consult runs alongside the bucket layout (codes());
-            # maybe_fold_code_deltas() merges them at a rows-fraction
-            # trigger, amortizing the rewrite to O(delta) per append.
-            (
-                # repartition, NOT coalesce: coalesce(1) propagates up and
-                # single-threads the whole encode chain (measured 10.3 s
-                # of the append); the shuffle is batch-sized
-                coded.repartition(1)
-                .sortWithinPartitions("variant", "cell")
-                .write.option("compression", "zstd")
-                .mode("overwrite")
-                .save(f"{self.root}/{staging}/codes_delta")
-            )
-        else:
-            (
-                coded.repartition("variant", "cell")
-                .sortWithinPartitions(self.id_col)
-                .write.partitionBy("variant", "cell")
-                .option("compression", "zstd")
-                .mode("overwrite")
-                .save(f"{self.root}/{staging}/codes")
-            )
         new_fp = [a + b for a, b in zip(idx.fingerprint, dfp)]
         params = dict(
             dim=idx.dim,
@@ -945,30 +936,41 @@ class AnnIndexStore(SnapshotStore):
             auto_cells=idx.auto_cells,
             target_cell=idx.target_cell,
         )
-        self._write_model(
-            staging,
-            params,
-            new_fp,
-            idx.centroids,
-            idx.pq_books,
-            idx.opq_rotation,
-            idx.opq_books,
-            idx.lsh,
-        )
-        new_files = self._publish_staged(staging)
 
-        def _delta(latest: dict | None):
-            live = latest["files"] if latest else []
-            live_model = sorted(f for f in live if f.startswith("model/"))
-            if live_model != orig_model:
-                raise RuntimeError(
-                    "concurrent index write during append: the model files "
-                    "changed since this append read them — retry on the "
-                    "rolled-forward model"
+        def write(path: str) -> None:
+            if dfp[0] <= self.CODES_DELTA_MAX_VECTORS:
+                # delta-run write (r10): a micro-batch append lands as ONE
+                # (variant, cell)-sorted file instead of one near-empty file
+                # per touched (variant, cell) — measured 28.6 s / ~1000
+                # files for a 2000-vector batch at 512 cells on the bucketed
+                # path. Lookups consult runs alongside the bucket layout
+                # (codes()); maybe_fold_code_deltas() merges them at a
+                # rows-fraction trigger, amortizing the rewrite to O(delta)
+                # per append.
+                (
+                    # repartition, NOT coalesce: coalesce(1) propagates up
+                    # and single-threads the whole encode chain (measured
+                    # 10.3 s of the append); the shuffle is batch-sized
+                    coded.repartition(1)
+                    .sortWithinPartitions("variant", "cell")
+                    .write.option("compression", "zstd")
+                    .mode("overwrite")
+                    .save(f"{path}/codes_delta")
                 )
-            return new_files, list(orig_model)
+            else:
+                self._cell_writer(coded).save(f"{path}/codes")
+            self._write_model(
+                path,
+                params,
+                new_fp,
+                idx.centroids,
+                idx.pq_books,
+                idx.opq_rotation,
+                idx.opq_books,
+                idx.lsh,
+            )
 
-        self._commit_or_reclaim(new_files, _delta)
+        self._staged_commit(write, removed_fn=self._model_rule(orig_man, "append"))
         return self.load()
 
     # -- load / read -------------------------------------------------------
@@ -1130,9 +1132,6 @@ class AnnIndexStore(SnapshotStore):
                 f"AnnIndexStore at {self.root} is empty — nothing to delete"
             )
         orig_man = self._resolve(idx.version)
-        orig_model = sorted(
-            f for f in orig_man["files"] if f.startswith("model/")
-        )
         pq = self.codes("pq", masked=False)
         if "_chash" not in pq.columns:
             raise ValueError(
@@ -1161,16 +1160,6 @@ class AnnIndexStore(SnapshotStore):
             idx.fingerprint[1] - int(agg["s"]),
             idx.fingerprint[2] - int(agg["c"]),
         ]
-        import uuid as _uuid
-
-        staging = f"_staging-{_uuid.uuid4().hex}"
-        (
-            matched.select(self.id_col)
-            .coalesce(1)
-            .write.option("compression", "zstd")
-            .mode("overwrite")
-            .parquet(f"{self.root}/{staging}/tombstones")
-        )
         params = dict(
             dim=idx.dim,
             n_centroids=idx.n_centroids,
@@ -1181,30 +1170,28 @@ class AnnIndexStore(SnapshotStore):
             auto_cells=idx.auto_cells,
             target_cell=idx.target_cell,
         )
-        self._write_model(
-            staging,
-            params,
-            new_fp,
-            idx.centroids,
-            idx.pq_books,
-            idx.opq_rotation,
-            idx.opq_books,
-            idx.lsh,
-        )
-        new_files = self._publish_staged(staging)
 
-        def _delta(latest: dict | None):
-            live = latest["files"] if latest else []
-            live_model = sorted(f for f in live if f.startswith("model/"))
-            if live_model != orig_model:
-                raise RuntimeError(
-                    "concurrent index write during delete: the model files "
-                    "changed since this delete read them — retry"
-                )
-            # prior tombstone files stay live (they accumulate until purge)
-            return new_files, list(orig_model)
+        def write(path: str) -> None:
+            (
+                matched.select(self.id_col)
+                .coalesce(1)
+                .write.option("compression", "zstd")
+                .mode("overwrite")
+                .parquet(f"{path}/tombstones")
+            )
+            self._write_model(
+                path,
+                params,
+                new_fp,
+                idx.centroids,
+                idx.pq_books,
+                idx.opq_rotation,
+                idx.opq_books,
+                idx.lsh,
+            )
 
-        self._commit_or_reclaim(new_files, _delta)
+        # prior tombstone files stay live (they accumulate until purge)
+        self._staged_commit(write, removed_fn=self._model_rule(orig_man, "delete"))
         return self.load()
 
     def purge_tombstones(self) -> int:
@@ -1263,36 +1250,21 @@ class AnnIndexStore(SnapshotStore):
         # fraction-bounded, and the rewrite folds them into the bucket
         # layout as a side effect)
         affected_deltas = delta_files
-        new_files: list[str] = []
-        if affected or affected_deltas:
-            survivors = self._read_code_rows(affected, affected_deltas).join(
-                F.broadcast(tomb), self.id_col, "left_anti"
-            )
-            import uuid as _uuid
 
-            staging = f"_staging-{_uuid.uuid4().hex}"
-            (
-                survivors.repartition("variant", "cell")
-                .sortWithinPartitions(self.id_col)
-                .write.partitionBy("variant", "cell")
-                .option("compression", "zstd")
-                .mode("overwrite")
-                .save(f"{self.root}/{staging}/codes")
-            )
-            new_files = self._publish_staged(staging)
-        superseded = affected + affected_deltas + tomb_files
-        sup = set(superseded)
+        def write(path: str) -> None:
+            if affected or affected_deltas:
+                self._cell_writer(
+                    self._read_code_rows(affected, affected_deltas).join(
+                        F.broadcast(tomb), self.id_col, "left_anti"
+                    )
+                ).save(f"{path}/codes")
 
-        def _delta(latest: dict | None):
-            live = set(latest["files"]) if latest else set()
-            if not sup <= live:
-                raise RuntimeError(
-                    "concurrent index write during purge: an affected code "
-                    "or tombstone file is no longer live — retry"
-                )
-            return new_files, superseded
-
-        self._commit_or_reclaim(new_files, _delta)
+        self._staged_commit(
+            write,
+            affected + affected_deltas + tomb_files,
+            op="purge_tombstones",
+            kind="index",
+        )
         return tomb.count()
 
     def compact_codes(self, min_files: int = 2, fold_deltas: bool = False) -> int:
@@ -1347,30 +1319,12 @@ class AnnIndexStore(SnapshotStore):
             affected = [f for f in code_files if _vc(f) in hit]
         folded_deltas = delta_files if folding else []
         frag = self._read_code_rows(affected, folded_deltas)
-        import uuid as _uuid
-
-        staging = f"_staging-{_uuid.uuid4().hex}"
-        (
-            frag.repartition("variant", "cell")
-            .sortWithinPartitions(self.id_col)
-            .write.partitionBy("variant", "cell")
-            .option("compression", "zstd")
-            .mode("overwrite")
-            .save(f"{self.root}/{staging}/codes")
+        self._staged_commit(
+            lambda path: self._cell_writer(frag).save(f"{path}/codes"),
+            affected + folded_deltas,
+            op="compact_codes",
+            kind="index",
         )
-        new_files = self._publish_staged(staging)
-        sup = set(affected) | set(folded_deltas)
-
-        def _delta(latest: dict | None):
-            live = set(latest["files"]) if latest else set()
-            if not sup <= live:
-                raise RuntimeError(
-                    "concurrent index write during compaction: an affected "
-                    "code file is no longer live — retry"
-                )
-            return new_files, affected + folded_deltas
-
-        self._commit_or_reclaim(new_files, _delta)
         # folded-deltas-only compactions still did work: report >= 1
         return len(hit) or (1 if folded_deltas else 0)
 

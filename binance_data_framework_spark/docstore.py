@@ -36,8 +36,6 @@ two-commit vacuum grace for concurrent readers.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
@@ -209,17 +207,14 @@ class BandIndexStore(SnapshotStore):
         the count is derived state owned by the store, and a rebucket —
         by this handle or another — must be visible to the next lookup,
         not to the next process."""
-        import json as _json
-
         if self._layout_checked:
             if self._auto:
-                stored = _json.loads(self._read_bytes("_layout.json"))
-                self.n_buckets = int(stored["n_buckets"])
+                self.n_buckets = int(self._read_layout()["n_buckets"])
             return
 
-        fs, p = self._fs_path("_layout.json")
+        fs, p = self._fs_path(self._LAYOUT)
         if fs.exists(p):
-            stored = _json.loads(self._read_bytes("_layout.json"))
+            stored = self._read_layout()
             if self._auto:
                 # adopt the stored layout wholesale: in auto mode the
                 # caller pins nothing — a reopened auto store keeps its
@@ -265,7 +260,7 @@ class BandIndexStore(SnapshotStore):
                         f"rebuild the index to pin {self.params}"
                     )
                 stored["params"] = self.params
-                self._write_bytes("_layout.json", _json.dumps(stored).encode())
+                self._write_layout(stored)
             elif self.params is not None and stored_params != self.params:
                 raise ValueError(
                     f"BandIndexStore band-param mismatch at {self.root}: "
@@ -274,42 +269,17 @@ class BandIndexStore(SnapshotStore):
                     f"match committed rows (rebuild the index to change them)"
                 )
         else:
-            self._write_bytes(
-                "_layout.json",
-                _json.dumps(
-                    {
-                        "n_buckets": self.n_buckets,
-                        "id_col": self.id_col,
-                        "params": self.params,
-                        "auto_buckets": self._auto,
-                        "target_bucket_rows": self.target_bucket_rows,
-                        "n_rows": 0,
-                    }
-                ).encode(),
+            self._write_layout(
+                {
+                    "n_buckets": self.n_buckets,
+                    "id_col": self.id_col,
+                    "params": self.params,
+                    "auto_buckets": self._auto,
+                    "target_bucket_rows": self.target_bucket_rows,
+                    "n_rows": 0,
+                }
             )
         self._layout_checked = True
-
-    def _layout_update(self, **fields) -> dict:
-        """Read-modify-write the layout sidecar (driver-side JSON).
-        Used for the auto-mode bookkeeping fields (n_rows, n_buckets)
-        only — the pinned identity fields never change this way."""
-        import json as _json
-
-        stored = _json.loads(self._read_bytes("_layout.json"))
-        stored.update(fields)
-        self._write_bytes("_layout.json", _json.dumps(stored).encode())
-        return stored
-
-    def _bump_rows(self, delta: int) -> None:
-        """Auto-mode row bookkeeping (best-effort under concurrent
-        writers — a lost increment only delays the growth trigger; the
-        rebuild-style rewrite recounts exactly)."""
-        import json as _json
-
-        stored = _json.loads(self._read_bytes("_layout.json"))
-        self._layout_update(
-            n_rows=max(0, int(stored.get("n_rows", 0)) + delta)
-        )
 
     def pin_params(self, params: dict) -> None:
         """Declare the band-generation params this session derives keys
@@ -339,6 +309,20 @@ class BandIndexStore(SnapshotStore):
     @staticmethod
     def _is_delta(rel: str) -> bool:
         return rel.startswith("delta/")
+
+    def _bucketed_writer(self, rows: DataFrame):
+        """Writer of the bucket layout (one file per bucket). band_hash-
+        sorted rows + small row groups: the point-lookup path in
+        candidates() skips at ROW-GROUP granularity, so a file's row
+        groups must carry tight band_hash min/max stats."""
+        return (
+            rows.repartition("bucket")
+            .sortWithinPartitions("bucket", "band_hash")
+            .write.partitionBy("bucket")
+            .option("compression", "zstd")
+            .option("parquet.block.size", str(self.BAND_ROWGROUP_BYTES))
+            .mode("overwrite")
+        )
 
     def append(self, bands: DataFrame) -> int:
         """Add-only commit of (id_col, band_idx, band_hash) rows. Returns
@@ -371,33 +355,23 @@ class BandIndexStore(SnapshotStore):
         n_in = with_bucket.count()
         if not n_in:
             return 0
-        staging = f"_staging-{uuid.uuid4().hex}"
-        if n_in <= self.target_bucket_rows:
-            (
-                with_bucket.coalesce(1)
-                .sortWithinPartitions("band_hash")
-                .write.option("compression", "zstd")
-                .option("parquet.block.size", str(self.BAND_ROWGROUP_BYTES))
-                .mode("overwrite")
-                .save(f"{self.root}/{staging}/delta")
-            )
-        else:
-            (
-                with_bucket.repartition("bucket")
-                # band_hash-sorted rows + small row groups: the point-lookup
-                # path in candidates() skips at ROW-GROUP granularity, so a
-                # file's row groups must carry tight band_hash min/max stats
-                .sortWithinPartitions("bucket", "band_hash")
-                .write.partitionBy("bucket")
-                .option("compression", "zstd")
-                .option("parquet.block.size", str(self.BAND_ROWGROUP_BYTES))
-                .mode("overwrite")
-                .save(f"{self.root}/{staging}")
-            )
-        new_files = self._publish_staged(staging)
+
+        def write(path: str) -> None:
+            if n_in <= self.target_bucket_rows:
+                (
+                    with_bucket.coalesce(1)
+                    .sortWithinPartitions("band_hash")
+                    .write.option("compression", "zstd")
+                    .option("parquet.block.size", str(self.BAND_ROWGROUP_BYTES))
+                    .mode("overwrite")
+                    .save(f"{path}/delta")
+                )
+            else:
+                self._bucketed_writer(with_bucket).save(path)
+
+        new_files = self._staged_commit(write)
         if not new_files:
             return 0
-        self._commit_or_reclaim(new_files, lambda latest: (new_files, []))
         if self._auto:
             # growth bookkeeping for maybe_rebucket's O(1) trigger —
             # exact: n_in is the committed row count (best-effort under
@@ -756,29 +730,12 @@ class BandIndexStore(SnapshotStore):
             survivors = stored
         if fold_duplicates:
             survivors = survivors.distinct()
-        staging = f"_staging-{uuid.uuid4().hex}"
-        (
-            survivors.repartition("bucket")
-            .sortWithinPartitions("bucket", "band_hash")
-            .write.partitionBy("bucket")
-            .option("compression", "zstd")
-            .option("parquet.block.size", str(self.BAND_ROWGROUP_BYTES))
-            .mode("overwrite")
-            .save(f"{self.root}/{staging}")
+        self._staged_commit(
+            self._bucketed_writer(survivors).save,
+            files,
+            op="compact",
+            kind="band-index",
         )
-        new_files = self._publish_staged(staging)
-        sup = set(files)
-
-        def _delta(latest: dict | None):
-            live = set(latest["files"]) if latest else set()
-            if not sup <= live:
-                raise RuntimeError(
-                    "concurrent band-index write during compact: a rewritten "
-                    "bucket file is no longer live — retry"
-                )
-            return new_files, files
-
-        self._commit_or_reclaim(new_files, _delta)
         # delta runs have no bucket directory (_bucket_of -> None); count
         # the rewritten buckets, with a folded-runs-only rewrite as 1
         rewritten = {self._bucket_of(f) for f in files}
@@ -802,9 +759,7 @@ class BandIndexStore(SnapshotStore):
         self._check_layout()
         if not self._auto:
             return False
-        import json as _json
-
-        stored = _json.loads(self._read_bytes("_layout.json"))
+        stored = self._read_layout()
         ideal = self.auto_buckets(
             int(stored.get("n_rows", 0)),
             int(stored.get("target_bucket_rows", self.target_bucket_rows)),
@@ -895,31 +850,14 @@ class BandIndexStore(SnapshotStore):
             if self._auto:
                 self._layout_update(n_rows=exact)
             return False
-        staging = f"_staging-{uuid.uuid4().hex}"
-        (
-            rows.withColumn("bucket", F.pmod("band_hash", F.lit(final)))
-            .repartition("bucket")
-            .sortWithinPartitions("bucket", "band_hash")
-            .write.partitionBy("bucket")
-            .option("compression", "zstd")
-            .option("parquet.block.size", str(self.BAND_ROWGROUP_BYTES))
-            .mode("overwrite")
-            .save(f"{self.root}/{staging}")
+        self._staged_commit(
+            self._bucketed_writer(
+                rows.withColumn("bucket", F.pmod("band_hash", F.lit(final)))
+            ).save,
+            list(man["files"]),
+            op="rebucket",
+            kind="band-index",
         )
-        new_files = self._publish_staged(staging)
-        old = list(man["files"])
-        sup = set(old)
-
-        def _delta(latest: dict | None):
-            live = set(latest["files"]) if latest else set()
-            if not sup <= live:
-                raise RuntimeError(
-                    "concurrent band-index write during rebucket: a "
-                    "superseded file is no longer live — retry"
-                )
-            return new_files, old
-
-        self._commit_or_reclaim(new_files, _delta)
         self._layout_update(n_buckets=final, n_rows=exact)
         self.n_buckets = final
         return True
@@ -1007,17 +945,14 @@ class DocumentStore(SnapshotStore):
         every call (one small driver-side read): in auto mode the count
         is derived state, and a reshard — by this handle or another —
         must be visible to the next operation, not the next process."""
-        import json as _json
-
         if self._layout_checked:
             if self._auto:
-                stored = _json.loads(self._read_bytes("_layout.json"))
-                self.n_shards = int(stored["n_shards"])
+                self.n_shards = int(self._read_layout()["n_shards"])
             return
 
-        fs, p = self._fs_path("_layout.json")
+        fs, p = self._fs_path(self._LAYOUT)
         if fs.exists(p):
-            stored = _json.loads(self._read_bytes("_layout.json"))
+            stored = self._read_layout()
             if self._auto:
                 # adopt the stored layout wholesale (auto stores keep
                 # their grown count; opening a PINNED store with
@@ -1043,41 +978,16 @@ class DocumentStore(SnapshotStore):
                     f"key_col={self.key_col!r}"
                 )
         else:
-            self._write_bytes(
-                "_layout.json",
-                _json.dumps(
-                    {
-                        "n_shards": self.n_shards,
-                        "key_col": self.key_col,
-                        "auto_shards": self._auto,
-                        "target_shard_rows": self.target_shard_rows,
-                        "n_rows": 0,
-                    }
-                ).encode(),
+            self._write_layout(
+                {
+                    "n_shards": self.n_shards,
+                    "key_col": self.key_col,
+                    "auto_shards": self._auto,
+                    "target_shard_rows": self.target_shard_rows,
+                    "n_rows": 0,
+                }
             )
         self._layout_checked = True
-
-    def _layout_update(self, **fields) -> dict:
-        """Read-modify-write the layout sidecar (the BandIndexStore
-        helper's twin) — bookkeeping fields only; pinned identity fields
-        never change this way."""
-        import json as _json
-
-        stored = _json.loads(self._read_bytes("_layout.json"))
-        stored.update(fields)
-        self._write_bytes("_layout.json", _json.dumps(stored).encode())
-        return stored
-
-    def _bump_rows(self, delta: int) -> None:
-        """Auto-mode row bookkeeping (best-effort under concurrent
-        writers — a lost increment only delays the reshard trigger;
-        maybe_reshard's rewrite recounts exactly)."""
-        import json as _json
-
-        stored = _json.loads(self._read_bytes("_layout.json"))
-        self._layout_update(
-            n_rows=max(0, int(stored.get("n_rows", 0)) + delta)
-        )
 
     # -- helpers -----------------------------------------------------------
     @staticmethod
@@ -1095,6 +1005,38 @@ class DocumentStore(SnapshotStore):
         OhlcvStore._series_window_files): cut the listing driver-side so
         the merge scan is O(touched shards), not O(store)."""
         return [f for f in files if self._shard_of(f) in shards]
+
+    def _shard_writer(self, rows: DataFrame):
+        """Writer of the shard layout: one file per shard, rows key-sorted
+        for row-group skipping on point reads."""
+        return (
+            rows.repartition("shard")
+            .sortWithinPartitions(self.key_col)
+            .write.partitionBy("shard")
+            .option("compression", "zstd")
+            .mode("overwrite")
+        )
+
+    def _same_shard_rule(self, superseded: list[str], touched: set[int], op: str):
+        """_staged_commit conflict rule of the shard-merging writes: the
+        touched shards' file set must be unchanged in ANY direction since
+        the merge snapshot. Removals mean the merge base is gone; ADDITIONS
+        matter too (code-review r6): two writers upserting the same EMPTY
+        shard would both see superseded=[] and silently commit duplicate
+        keys."""
+        sup = set(superseded)
+
+        def removed(latest: dict | None) -> list[str]:
+            now = set(self._shard_files(self._live(latest), touched))
+            if now != sup:
+                raise RuntimeError(
+                    f"concurrent same-shard write during {op}: touched "
+                    f"shards' files changed since the merge snapshot; "
+                    f"e.g. {sorted(now ^ sup)[:2]}"
+                )
+            return superseded
+
+        return removed
 
     def _check_schema_against_stored(
         self, incoming: DataFrame, live: list[str], op: str
@@ -1189,40 +1131,17 @@ class DocumentStore(SnapshotStore):
             .where(F.col("_rn") == 1)
             .drop("_rank", "_rn")
         )
-        staging = f"_staging-{uuid.uuid4().hex}"
-        (
-            merged.repartition("shard")  # one file per touched shard
-            .sortWithinPartitions(self.key_col)  # row-group skipping on key
-            .write.partitionBy("shard")
-            .option("compression", "zstd")
-            .mode("overwrite")
-            .save(f"{self.root}/{staging}")
+        self._staged_commit(
+            self._shard_writer(merged).save,
+            # a full refresh replaces whatever is live NOW (a concurrent
+            # commit's files are superseded too — last refresh wins,
+            # atomically)
+            removed_fn=(
+                self._live
+                if full_refresh
+                else self._same_shard_rule(superseded, set(touched), "save_docs")
+            ),
         )
-        new_files = self._publish_staged(staging)
-        sup = set(superseded)
-        touched_set = set(touched)
-
-        def _delta(latest: dict | None):
-            live_now = latest["files"] if latest else []
-            if full_refresh:
-                # replace whatever is live NOW (a concurrent commit's files
-                # are superseded too — last full refresh wins, atomically)
-                return new_files, list(live_now)
-            # same-shard conflict = the touched shards' file set changed in
-            # ANY direction since our merge snapshot. Removals mean our
-            # merge base is gone; ADDITIONS matter too (code-review r6): two
-            # writers upserting the same EMPTY shard would both see
-            # superseded=[] and silently commit duplicate keys.
-            now_in_touched = set(self._shard_files(live_now, touched_set))
-            if now_in_touched != sup:
-                drift = sorted((now_in_touched - sup) | (sup - now_in_touched))
-                raise RuntimeError(
-                    f"concurrent same-shard write detected: touched shards' "
-                    f"files changed since the merge snapshot; e.g. {drift[:2]}"
-                )
-            return new_files, superseded
-
-        self._commit_or_reclaim(new_files, _delta)
         if self._auto:
             # upsert mixes inserts and replacements, so the counter cannot
             # be rolled forward from the delta alone — recount the live
@@ -1325,7 +1244,6 @@ class DocumentStore(SnapshotStore):
             .where(F.col("_rn") == 1)
             .drop("_rn")
         )
-        staging = f"_staging-{uuid.uuid4().hex}"
         # the appended-row count rides the staging write as an observe()
         # metric — it was a separate pre-write count() action (r13, guide
         # §1.2/§5: one fewer driver-synchronized job on the streaming
@@ -1333,20 +1251,14 @@ class DocumentStore(SnapshotStore):
         from pyspark.sql import Observation
 
         obs = Observation()
-        (
-            deduped.observe(obs, F.count(F.lit(1)).alias("n"))
-            .repartition("shard")
-            .sortWithinPartitions(self.key_col)
-            .write.partitionBy("shard")
-            .option("compression", "zstd")
-            .mode("overwrite")
-            .save(f"{self.root}/{staging}")
+        new_files = self._staged_commit(
+            self._shard_writer(
+                deduped.observe(obs, F.count(F.lit(1)).alias("n"))
+            ).save
         )
-        n_rows = int(obs.get["n"])
-        new_files = self._publish_staged(staging)
         if not new_files:
             return 0
-        self._commit_or_reclaim(new_files, lambda latest: (new_files, []))
+        n_rows = int(obs.get["n"])
         if self._auto and n_rows:
             self._bump_rows(n_rows)
         return n_rows
@@ -1372,30 +1284,10 @@ class DocumentStore(SnapshotStore):
         survivors = stored.join(
             keyed.select(self.key_col), on=self.key_col, how="left_anti"
         )
-        staging = f"_staging-{uuid.uuid4().hex}"
-        (
-            survivors.repartition("shard")
-            .sortWithinPartitions(self.key_col)
-            .write.partitionBy("shard")
-            .option("compression", "zstd")
-            .mode("overwrite")
-            .save(f"{self.root}/{staging}")
+        new_files = self._staged_commit(
+            self._shard_writer(survivors).save,
+            removed_fn=self._same_shard_rule(superseded, touched, "delete_docs"),
         )
-        new_files = self._publish_staged(staging)
-        sup = set(superseded)
-
-        def _delta(latest: dict | None):
-            live_now = latest["files"] if latest else []
-            now_in_touched = set(self._shard_files(live_now, touched))
-            if now_in_touched != sup:
-                drift = sorted((now_in_touched - sup) | (sup - now_in_touched))
-                raise RuntimeError(
-                    f"concurrent same-shard write detected during delete; "
-                    f"e.g. {drift[:2]}"
-                )
-            return new_files, superseded
-
-        self._commit_or_reclaim(new_files, _delta)
         if self._auto:
             # exact removed-row delta from parquet footers (the rewritten
             # shard files are batch-bounded; no plan re-execution)
@@ -1507,31 +1399,10 @@ class DocumentStore(SnapshotStore):
         df = self.spark.read.option("basePath", self.root).parquet(
             *[f"{self.root}/{f}" for f in originals]
         )
-        staging = f"_staging-{uuid.uuid4().hex}"
-        writer = (
-            df.repartition("shard")
-            .sortWithinPartitions(self.key_col)
-            .write.partitionBy("shard")
-            .option("compression", "zstd")
-            .mode("overwrite")
-        )
+        writer = self._shard_writer(df)
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        writer.save(f"{self.root}/{staging}")
-        new_files = self._publish_staged(staging)
-        sup = set(originals)
-
-        def _delta(latest: dict | None):
-            live = set(latest["files"]) if latest else set()
-            gone = sup - live
-            if gone:
-                raise RuntimeError(
-                    f"concurrent write during optimize: {len(gone)} "
-                    f"compacted file(s) no longer live"
-                )
-            return new_files, originals
-
-        self._commit_or_reclaim(new_files, _delta)
+        self._staged_commit(writer.save, originals, op="optimize")
         return len(todo)
 
     def maybe_reshard(self, grow_factor: float = 2.0) -> bool:
@@ -1546,9 +1417,7 @@ class DocumentStore(SnapshotStore):
         self._check_layout()
         if not self._auto:
             return False
-        import json as _json
-
-        stored = _json.loads(self._read_bytes("_layout.json"))
+        stored = self._read_layout()
         ideal = self.auto_shards(
             int(stored.get("n_rows", 0)),
             int(stored.get("target_shard_rows", self.target_shard_rows)),
@@ -1584,36 +1453,15 @@ class DocumentStore(SnapshotStore):
             if n_shards is not None
             else self.auto_shards(exact, self.target_shard_rows)
         )
-        import json as _json
-
         if final == self.n_shards:
             if self._auto:
                 self._layout_update(n_rows=exact)
             return False
-        staging = f"_staging-{uuid.uuid4().hex}"
-        (
-            shard_assign(rows, final, self.key_col)
-            .repartition("shard")
-            .sortWithinPartitions(self.key_col)
-            .write.partitionBy("shard")
-            .option("compression", "zstd")
-            .mode("overwrite")
-            .save(f"{self.root}/{staging}")
+        self._staged_commit(
+            self._shard_writer(shard_assign(rows, final, self.key_col)).save,
+            list(man["files"]),
+            op="reshard",
         )
-        new_files = self._publish_staged(staging)
-        old_files = list(man["files"])
-        sup = set(old_files)
-
-        def _delta(latest: dict | None):
-            live = set(latest["files"]) if latest else set()
-            if not sup <= live:
-                raise RuntimeError(
-                    "concurrent write during reshard: a superseded file is "
-                    "no longer live — retry"
-                )
-            return new_files, old_files
-
-        self._commit_or_reclaim(new_files, _delta)
         self._layout_update(n_shards=final, n_rows=exact)
         self.n_shards = final
         return True

@@ -329,6 +329,9 @@ def _repetition_counts_batch():
             )[:-1][valid]
             order = np.lexsort((key, doc_bi))
             sk, sd = key[order], doc_bi[order]
+        # tokens but no in-doc bigram (only '', null or one-token docs):
+        # no runs to count, and run_starts' [0] would index an empty array
+        if T >= 2 and len(sk):
             boundary = np.flatnonzero((sd[1:] != sd[:-1]) | (sk[1:] != sk[:-1]))
             run_starts = np.concatenate(([0], boundary + 1))
             run_lens = np.diff(np.concatenate((run_starts, [len(sk)])))

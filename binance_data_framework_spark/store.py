@@ -131,6 +131,7 @@ def _utc(d: datetime) -> datetime:
 #: see SnapshotStore._committed_parquet. Immutable uuid-named files make
 #: entries permanently valid; the size cap only bounds driver memory.
 _PARQUET_SCHEMA_CACHE: dict = {}
+_PARQUET_SCHEMA_CACHE_MAX = 512
 
 
 class SnapshotStore:
@@ -207,12 +208,9 @@ class SnapshotStore:
         written consistently by the store's own writers; supplying the
         schema makes Spark cast partition values to it, which pins the
         str-or-int inference drift the ann code-reader already normalizes.
-        ``rels`` are paths relative to self.root."""
-        if os.environ.get("SPARK_GRAFT_NO_SCHEMA_CACHE"):
-            r = self.spark.read
-            if base_path is not None:
-                r = r.option("basePath", base_path)
-            return r.parquet(*[f"{self.root}/{f}" for f in rels])
+        ``rels`` are paths relative to self.root. At the size cap the
+        OLDEST entry is evicted (insertion order), never the whole memo —
+        a wholesale flush made every hot store re-infer at once."""
         key = (base_path or "", f"{self.root}/{rels[0]}")
         schema = _PARQUET_SCHEMA_CACHE.get(key)
         if schema is None:
@@ -220,8 +218,8 @@ class SnapshotStore:
             if base_path is not None:
                 r = r.option("basePath", base_path)
             schema = r.parquet(key[1]).schema
-            if len(_PARQUET_SCHEMA_CACHE) >= 512:
-                _PARQUET_SCHEMA_CACHE.clear()
+            if len(_PARQUET_SCHEMA_CACHE) >= _PARQUET_SCHEMA_CACHE_MAX:
+                del _PARQUET_SCHEMA_CACHE[next(iter(_PARQUET_SCHEMA_CACHE))]
             _PARQUET_SCHEMA_CACHE[key] = schema
         r = self.spark.read.schema(schema)
         if base_path is not None:
@@ -253,6 +251,34 @@ class SnapshotStore:
             )
         finally:
             stream.close()
+
+    # -- layout sidecar (driver-side JSON, outside the manifest protocol) --
+    #: pins a derived-layout tier's identity (DocumentStore shard count,
+    #: BandIndexStore bucket count) and holds its auto-mode row counter
+    _LAYOUT = "_layout.json"
+
+    def _read_layout(self) -> dict:
+        return json.loads(self._read_bytes(self._LAYOUT))
+
+    def _write_layout(self, layout: dict) -> None:
+        self._write_bytes(self._LAYOUT, json.dumps(layout).encode())
+
+    def _layout_update(self, **fields) -> dict:
+        """Read-modify-write the layout sidecar — bookkeeping fields
+        (n_rows, the derived count) only; pinned identity fields never
+        change this way."""
+        stored = self._read_layout()
+        stored.update(fields)
+        self._write_layout(stored)
+        return stored
+
+    def _bump_rows(self, delta: int) -> None:
+        """Auto-mode row bookkeeping (best-effort under concurrent
+        writers — a lost increment only delays the growth trigger; the
+        re-layout rewrite recounts exactly)."""
+        stored = self._read_layout()
+        stored["n_rows"] = max(0, int(stored.get("n_rows", 0)) + delta)
+        self._write_layout(stored)
 
     # -- manifest protocol -----------------------------------------------
     def _manifest_versions(self) -> list[int]:
@@ -455,8 +481,8 @@ class SnapshotStore:
         If the publish loses the rename CAS to a concurrent PROCESS, rebase
         onto the new head and retry (bounded); concurrent threads on this
         instance are serialized by the lock outright. delta_fn is
-        responsible for detecting same-series conflicts against the head it
-        is given (save_data checks its merged base files are still live)."""
+        responsible for detecting conflicts against the head it is given
+        (_staged_commit's rule: the superseded files are still live)."""
         with self._commit_lock:
             last_err: ConcurrentCommit | None = None
             for attempt in range(_COMMIT_RETRIES):
@@ -655,6 +681,69 @@ class SnapshotStore:
                     self._prune_empty_parents(p)
             raise
 
+    @staticmethod
+    def _live(latest: dict | None) -> list[str]:
+        """Files of a resolved head (None = empty store). As a
+        ``removed_fn`` it is the full-replace rule: supersede whatever is
+        live at commit time."""
+        return latest["files"] if latest else []
+
+    def _staged_commit(
+        self,
+        write,
+        superseded: list[str] = (),
+        *,
+        op: str = "",
+        kind: str = "",
+        removed_fn=None,
+    ) -> list[str]:
+        """Steps 2-4 of the snapshot protocol, for every store write:
+
+        1. ``write(path)`` writes this commit's files under ``path``, a
+           PRIVATE ``_staging-<uuid>`` dir. Private because Hadoop's
+           FileOutputCommitter stages every job under <out>/_temporary, so
+           concurrent writers cannot share one output root; underscore-
+           prefixed, so a crashed writer's orphans are invisible to readers
+           and manifests and never adopted by a later commit.
+        2. _publish_staged renames the staged files into the layout — the
+           staging listing IS the exact new file set. Driver-side metadata
+           ops; reader visibility is gated by the manifest, not the renames.
+        3. _commit_or_reclaim publishes added=<staged files> on the rebased
+           head, and deletes them again if the commit fails.
+
+        Conflict rule (default): every ``superseded`` file must still be
+        live at the rebased head — the rewrite was computed from them, so
+        committing after a concurrent writer retired one would silently
+        undo that writer — else ``RuntimeError("concurrent <kind> write
+        during <op>: ... no longer live — retry")``; removed =
+        ``superseded``. Add-only writes pass no ``superseded``; a write
+        that staged no file and supersedes nothing commits nothing. A site
+        with another rule passes ``removed_fn(latest_head) -> removed``,
+        which raises on its own conflicts. Returns the staged files'
+        store-relative paths."""
+        staging = f"_staging-{uuid.uuid4().hex}"
+        write(f"{self.root}/{staging}")
+        new_files = self._publish_staged(staging)
+        if removed_fn is None:
+            if not new_files and not superseded:
+                return new_files
+            sup = set(superseded)
+            who = f"{kind} write" if kind else "write"
+
+            def removed_fn(latest: dict | None) -> list[str]:
+                gone = sup.difference(self._live(latest))
+                if gone:
+                    raise RuntimeError(
+                        f"concurrent {who} during {op}: {len(gone)} superseded "
+                        f"file(s) no longer live — retry; e.g. {sorted(gone)[:2]}"
+                    )
+                return list(superseded)
+
+        self._commit_or_reclaim(
+            new_files, lambda latest: (new_files, removed_fn(latest))
+        )
+        return new_files
+
     # -- exports (reference colab_interface.py:565-594) ------------------
     def export(
         self,
@@ -833,18 +922,7 @@ class OhlcvStore(SnapshotStore):
             .where(F.col("_rn") == 1)
             .drop("_rank", "_rn")
         )
-        # Write to a PRIVATE staging dir, then FS-rename files into the
-        # final layout. Two reasons: (a) concurrent writers can't share one
-        # output root — Hadoop's FileOutputCommitter stages every job under
-        # root/_temporary, so parallel jobs (load_many's threads) corrupt
-        # each other's commits; (b) the staging listing IS the exact new
-        # file set — no diff-against-pre-listing, and a crashed writer's
-        # orphans sit invisibly in _staging-* (underscore-prefixed = ignored
-        # by readers and manifests), never adopted by a later commit. The
-        # renames are driver-side metadata ops, O(touched days); visibility
-        # is controlled by the manifest swap below, not by rename timing.
-        staging = f"_staging-{uuid.uuid4().hex}"
-        (
+        writer = (
             merged.withColumn("dt", F.to_date("ts"))
             # cluster by the physical partition key before writing: the merge
             # window leaves rows hash-scattered by (ts,symbol,timeframe), and
@@ -859,30 +937,18 @@ class OhlcvStore(SnapshotStore):
             # manifest checkpoints already standardized on zstd
             .option("compression", "zstd")
             .mode("overwrite")
-            .save(f"{self.root}/{staging}")
         )
-        new_files = self._publish_staged(staging)
-        # commit-time rebase: re-resolve the LATEST snapshot (another
-        # thread or process may have committed a different series since our
-        # merge snapshot) and apply this write's delta to it — concurrent
-        # different-series writers compose (lock in-process, CAS-retry
-        # cross-process); a same-series race is detected and raised, since
-        # this merge was computed against files that are no longer live
-        sup = set(superseded)
-
-        def _delta(latest: dict | None):
-            live = set(latest["files"]) if latest else set()
-            gone = sup - live
-            if gone:
-                raise RuntimeError(
-                    f"concurrent same-series write detected for "
-                    f"{symbol}/{timeframe}: merged against "
-                    f"{len(gone)} file(s) no longer live (store is "
-                    f"single-writer-per-series); e.g. {sorted(gone)[:2]}"
-                )
-            return new_files, superseded
-
-        self._commit_or_reclaim(new_files, _delta)
+        # the commit rebases onto the LATEST snapshot: a different series
+        # committed since our merge snapshot composes (lock in-process,
+        # CAS-retry cross-process); a same-series race is detected and
+        # raised, since this merge was computed against files that are no
+        # longer live
+        self._staged_commit(
+            writer.save,
+            superseded,
+            op=f"save_data({symbol}/{timeframe})",
+            kind="same-series",
+        )
         return True
 
     def save_many(self, df: DataFrame) -> list[tuple[str, str]]:
@@ -960,34 +1026,17 @@ class OhlcvStore(SnapshotStore):
             .where(F.col("_rn") == 1)
             .drop("_rank", "_rn")
         )
-        staging = f"_staging-{uuid.uuid4().hex}"
-        (
+        writer = (
             merged.withColumn("dt", F.to_date("ts"))
             .repartition("symbol", "timeframe", "dt")
             .sortWithinPartitions("ts")
             .write.partitionBy("symbol", "timeframe", "dt")
-            # zstd: ~30-40% smaller than snappy at comparable scan cost —
-            # at 100 TB the dominant cost is bytes scanned/stored, and the
-            # manifest checkpoints already standardized on zstd
-            .option("compression", "zstd")
+            .option("compression", "zstd")  # same codec as save_data
             .mode("overwrite")
-            .save(f"{self.root}/{staging}")
         )
-        new_files = self._publish_staged(staging)
-        sup = set(superseded)
-
-        def _delta(latest: dict | None):
-            live_now = set(latest["files"]) if latest else set()
-            gone = sup - live_now
-            if gone:
-                raise RuntimeError(
-                    f"concurrent same-series write detected during "
-                    f"save_many: merged against {len(gone)} file(s) no "
-                    f"longer live; e.g. {sorted(gone)[:2]}"
-                )
-            return new_files, superseded
-
-        self._commit_or_reclaim(new_files, _delta)
+        self._staged_commit(
+            writer.save, superseded, op="save_many", kind="same-series"
+        )
         return series
 
     def get_data(
@@ -1112,7 +1161,6 @@ class OhlcvStore(SnapshotStore):
         df = self.spark.read.option("basePath", self.root).parquet(
             *[f"{self.root}/{f}" for f in originals]
         )
-        staging = f"_staging-{uuid.uuid4().hex}"
         writer = (
             df.repartition("symbol", "timeframe", "dt")
             .sortWithinPartitions("ts")  # keep row-group ts skipping tight
@@ -1122,24 +1170,10 @@ class OhlcvStore(SnapshotStore):
         )
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        writer.save(f"{self.root}/{staging}")
-        new_files = self._publish_staged(staging)
-        sup = set(originals)
-
-        def _delta(latest: dict | None):
-            live = set(latest["files"]) if latest else set()
-            gone = sup - live
-            if gone:
-                # a concurrent upsert superseded files we compacted: our
-                # rewrite would resurrect replaced rows — abort (reclaiming
-                # the compacted files), never publish stale data
-                raise RuntimeError(
-                    f"concurrent write during optimize: {len(gone)} "
-                    f"compacted file(s) no longer live; e.g. {sorted(gone)[:2]}"
-                )
-            return new_files, originals
-
-        self._commit_or_reclaim(new_files, _delta)
+        # a concurrent upsert that superseded a compacted file aborts the
+        # commit (reclaiming the compacted files): publishing would
+        # resurrect the replaced rows
+        self._staged_commit(writer.save, originals, op="optimize")
         return len(todo)
 
     def get_stored_info(self) -> DataFrame:

@@ -107,6 +107,7 @@ SLOW_TESTS = {
     ("test_extensions.py", "test_pagerank_deep_iteration_bounded_plan"),
     ("test_properties.py", "test_pack_sequences_conservation_property"),
     ("test_docstore.py", "test_docstore_optimize_compacts_multifile_shards"),
+    ("test_ann_index.py", "test_compact_codes_detects_concurrent_append"),
 }
 
 

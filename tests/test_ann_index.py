@@ -1006,3 +1006,43 @@ def test_serve_batch_reads_version_consistent_codes(spark, tmp_path):
         for r in serve_batch(probes, st, idx_v1, df, k=4).collect()
     }
     assert got == want and got
+
+
+def test_compact_codes_detects_concurrent_append(spark, tmp_path, monkeypatch):
+    """compact_codes races a concurrent append whose tombstone purge
+    retires code files the compaction read: the compaction's commit must
+    RAISE naming the op (publishing it would resurrect the purged row),
+    the appender's vectors stay loadable, and the compaction's staged
+    code files are reclaimed from the layout."""
+    import os
+
+    df = _emb(spark)
+    root = str(tmp_path / "idx")
+    a = AnnIndexStore(spark, root)
+    a.build(df.where(F.col("vec_id") < 30), **BUILD)
+    a.append(df.where((F.col("vec_id") >= 30) & (F.col("vec_id") < 45)))
+    a.delete(spark.createDataFrame([(7,)], "vec_id bigint"))  # pending tomb
+    b = AnnIndexStore(spark, root)
+    orig_publish = AnnIndexStore._publish_staged
+    staged: list[str] = []
+
+    def racing_publish(self, staging):
+        if self is not b or staged:
+            return orig_publish(self, staging)
+        # the concurrent writer lands first: its purge rewrites the
+        # tombstoned cell and the delta run this compaction folds
+        a.append(df.where(F.col("vec_id") >= 45), purge="always")
+        staged.extend(orig_publish(self, staging))
+        return staged
+
+    monkeypatch.setattr(AnnIndexStore, "_publish_staged", racing_publish)
+    with pytest.raises(
+        RuntimeError, match="concurrent index write during compact_codes"
+    ):
+        b.compact_codes(fold_deltas=True)
+    monkeypatch.undo()
+
+    assert staged and not [f for f in staged if os.path.exists(f"{root}/{f}")]
+    assert a.load().n_vectors == 59
+    got = {r["vec_id"] for r in a.codes("pq").collect()}
+    assert got == set(range(60)) - {7}

@@ -901,3 +901,23 @@ def test_save_rejects_null_timestamps_and_keys(store, spark):
     with pytest.raises(ValueError, match="null symbol"):
         store.save_many(batch)
     assert store._snapshot() is None  # nothing landed
+
+
+def test_schema_memo_evicts_oldest_entry_only(store, spark, monkeypatch):
+    """At its 512-entry cap the committed-parquet schema memo drops only
+    its OLDEST entry (ADVICE r14: a wholesale clear() made every hot store
+    re-pay schema inference at once)."""
+    from binance_data_framework_spark import store as store_mod
+
+    store.save_data(_bars(spark, T0, 5, 100.0), "BTCUSDT", "1h")
+    (rel,) = store._snapshot()["files"]
+    dummies = [("dummy", f"file-{i}") for i in range(512)]
+    monkeypatch.setattr(
+        store_mod, "_PARQUET_SCHEMA_CACHE", {k: None for k in dummies}
+    )
+    rows = store.get_data("BTCUSDT", "1h").collect()  # one real memoized read
+    memo = store_mod._PARQUET_SCHEMA_CACHE
+    assert len(memo) == 512
+    assert dummies[0] not in memo and dummies[1] in memo
+    assert (store.root, f"{store.root}/{rel}") in memo
+    assert [r["open"] for r in rows] == [100.0 + i for i in range(5)]
