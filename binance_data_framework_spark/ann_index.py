@@ -48,6 +48,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from binance_data_framework_spark.materialize import checkpoint_observed
 from binance_data_framework_spark.operators import similarity as S
 from binance_data_framework_spark.store import SnapshotStore
 
@@ -96,6 +97,12 @@ class AnnIndexStore(SnapshotStore):
         # only instead of re-counting the whole layout per gate batch
         # (ADVICE r10 #4)
         self._base_rows_cache: tuple[tuple, int] | None = None
+        # model component payloads, keyed by the live model file list:
+        # model files are uuid-named and never rewritten, so an unchanged
+        # list means an unchanged model and load() reads nothing. The raw
+        # JSON is kept, not the parsed lists, so every load() hands out
+        # its own objects
+        self._model_memo: tuple[tuple, dict] | None = None
 
     # -- fingerprint -------------------------------------------------------
     def _fingerprint(self, df: DataFrame) -> list[int]:
@@ -129,13 +136,7 @@ class AnnIndexStore(SnapshotStore):
         three fingerprint sums ride the checkpoint's materialization pass
         as observe() metrics instead of running as a separate
         driver-synchronized agg afterwards (r13, guide §1.2/§5)."""
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        out = df.observe(obs, *self._fingerprint_aggs()).localCheckpoint(
-            eager=True
-        )
-        r = obs.get
+        out, r = checkpoint_observed(df, *self._fingerprint_aggs())
         return out, [int(r["n"]), int(r["s"] or 0), int(r["c"] or 0)], int(r["nn"])
 
     def _content_hash(self):
@@ -202,6 +203,10 @@ class AnnIndexStore(SnapshotStore):
 
         return _Bound()
 
+    #: schema of the model sidecar — written by _write_model and supplied
+    #: to load()'s read, so a cold load runs no schema-inference job
+    _MODEL_SCHEMA = "component string, payload string"
+
     def _write_model(
         self,
         path: str,
@@ -231,9 +236,7 @@ class AnnIndexStore(SnapshotStore):
             ("lsh", json.dumps(lsh)),
         ]
         (
-            self.spark.createDataFrame(
-                model_rows, "component string, payload string"
-            )
+            self.spark.createDataFrame(model_rows, self._MODEL_SCHEMA)
             .coalesce(1)
             .write.option("compression", "zstd")
             .mode("overwrite")
@@ -911,9 +914,9 @@ class AnnIndexStore(SnapshotStore):
             (f for f in orig_man["files"] if f.startswith("codes/")), None
         )
         if first_code is not None and "chash" not in (
-            self.spark.read.option("basePath", f"{self.root}/codes")
-            .parquet(f"{self.root}/{first_code}")
-            .columns
+            self._committed_parquet(
+                [first_code], base_path=f"{self.root}/codes"
+            ).columns
         ):
             coded_pq = coded_pq.drop("_chash")
             coded_opq = coded_opq.drop("_chash")
@@ -979,15 +982,28 @@ class AnnIndexStore(SnapshotStore):
         ``validate_against``: when given, the stored fingerprint is checked
         against the CURRENT corpus and a stale index returns None (callers
         then rebuild) — one tiny agg, the price of never serving a
-        quantizer trained on different data."""
+        quantizer trained on different data.
+
+        The model components are memoized per handle against the live
+        model file list (see ``_model_memo``): only a commit that replaced
+        the model costs a read (one collect, no schema inference)."""
         man = self._snapshot()
         if not man or not man["files"]:
             return None
-        model_files = [f for f in man["files"] if f.startswith("model/")]
+        model_files = tuple(sorted(f for f in man["files"] if f.startswith("model/")))
         if not model_files:
             return None
-        rows = self._committed_parquet(model_files).collect()
-        comp = {r["component"]: json.loads(r["payload"]) for r in rows}
+        if self._model_memo is None or self._model_memo[0] != model_files:
+            rows = (
+                self.spark.read.schema(self._MODEL_SCHEMA)
+                .parquet(*[f"{self.root}/{f}" for f in model_files])
+                .collect()
+            )
+            self._model_memo = (
+                model_files,
+                {r["component"]: r["payload"] for r in rows},
+            )
+        comp = {k: json.loads(v) for k, v in self._model_memo[1].items()}
         meta = comp["meta"]
         idx = AnnIndex(
             version=man["version"],

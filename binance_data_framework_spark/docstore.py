@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from binance_data_framework_spark.materialize import checkpoint_observed
 from binance_data_framework_spark.operators.curation import shard_assign
 from binance_data_framework_spark.store import SnapshotStore
 
@@ -496,9 +497,14 @@ class BandIndexStore(SnapshotStore):
           the pre-r10 path, still the right plan when the probe side is
           itself corpus-sized (dedup-style self-comparisons)."""
         self._check_layout()
-        incoming = bands.select(
-            F.col(self.id_col).alias("id_new"), "band_idx", "band_hash"
-        ).withColumn("bucket", F.pmod("band_hash", F.lit(self.n_buckets)))
+        # a null band key never equals a stored one, and count_distinct
+        # below skips rows with any null column while the probe collect
+        # would not — drop them so the count and the collect agree
+        incoming = (
+            bands.select(F.col(self.id_col).alias("id_new"), "band_idx", "band_hash")
+            .dropna()
+            .withColumn("bucket", F.pmod("band_hash", F.lit(self.n_buckets)))
+        )
         man = self._snapshot()
         empty = incoming.select("id_new").limit(0).withColumn(
             "id_stored", F.col("id_new")
@@ -1051,11 +1057,7 @@ class DocumentStore(SnapshotStore):
         (always int), so names suffice for it."""
         if not live:
             return
-        stored_schema = (
-            self.spark.read.option("basePath", self.root)
-            .parquet(f"{self.root}/{live[0]}")
-            .schema
-        )
+        stored_schema = self._committed_parquet(live[:1], base_path=self.root).schema
         stored_fields = {
             (f.name, f.dataType.simpleString())
             for f in stored_schema.fields
@@ -1224,17 +1226,12 @@ class DocumentStore(SnapshotStore):
                         f"on_existing='skip' or save_docs()"
                     )
             else:
-                from pyspark.sql import Observation
-
-                skip_obs = Observation()
-                incoming = (
-                    incoming.join(existing, self.key_col, "left_anti")
-                    .observe(skip_obs, F.count(F.lit(1)).alias("n"))
-                    .localCheckpoint(eager=True)
-                )
                 # survivor count rides the checkpoint job (r13) — this was
                 # a separate limit(1).count() action
-                if not int(skip_obs.get["n"]):
+                incoming, skip_obs = checkpoint_observed(
+                    incoming.join(existing, self.key_col, "left_anti")
+                )
+                if not int(skip_obs["n"]):
                     return 0
         # one-survivor rule among duplicate incoming keys (save_docs parity;
         # content-hash order makes the survivor partitioning-invariant)
@@ -1332,7 +1329,12 @@ class DocumentStore(SnapshotStore):
         touches every shard, and the semi-join form read them WHOLE) or
         semi-join (large key sets)."""
         self._check_layout()
-        keyed = shard_assign(keys.select(self.key_col), self.n_shards, self.key_col)
+        # a null key never matches a stored row (save/append reject null
+        # keys), and count_distinct below skips nulls while the probe
+        # collect would not — drop them so the count and the collect agree
+        keyed = shard_assign(
+            keys.select(self.key_col).dropna(), self.n_shards, self.key_col
+        )
         # COUNT-FIRST planning (restored r14, same rule as candidates():
         # the r13 limit(MAX+1)-collect pulled up to 8193 full (key, shard)
         # rows to decide the path and then ran a SECOND distinct collect

@@ -28,6 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StructField, StructType
 
+from binance_data_framework_spark.materialize import checkpoint_observed
+
 
 def content_hash(col: Column | str) -> Column:
     """256-bit content hash (collision-safe at 100 TB row counts)."""
@@ -936,29 +938,22 @@ def cluster_min_label(
     At 100 TB the first rounds still contract distributedly (a duplicate
     CLIQUE — the dominant structure — collapses in round one), and the
     finish replaces only the long tail of tiny-graph rounds."""
-    from pyspark.sql import Observation
 
     def _ckpt_msum(df):
-        """(eager checkpoint of df, sum(m) of df) in ONE job: the
-        decimal sum is collected as an observation of the checkpoint's
-        own materialization pass."""
-        obs = Observation()
-        out = df.observe(
-            obs, F.sum(F.col("m").cast("decimal(38,0)")).alias("s")
-        ).localCheckpoint(eager=True)
-        return out, obs.get["s"]
+        """(eager checkpoint of df, sum(m) of df) in ONE job."""
+        out, obs = checkpoint_observed(
+            df, F.sum(F.col("m").cast("decimal(38,0)")).alias("s")
+        )
+        return out, obs["s"]
 
-    eobs = Observation()
-    edges = (
+    edges, eobs = checkpoint_observed(
         pairs.select(
             F.least("id_a", "id_b").alias("u"), F.greatest("id_a", "id_b").alias("v")
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .observe(eobs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
-    n_edges = int(eobs.get["n"])
+    n_edges = int(eobs["n"])
     nodes = (
         edges.select(F.col("u").alias("n"))
         .unionByName(edges.select(F.col("v").alias("n")))
@@ -1040,8 +1035,7 @@ def cluster_min_label(
             .select("src", F.coalesce("_lm", "label").alias("label"))
             .localCheckpoint(eager=False)
         )
-        nobs = Observation()
-        edges = (
+        edges, nobs = checkpoint_observed(
             edges.join(m.select(F.col("u"), F.col("m").alias("_mu")), on="u")
             .join(
                 m.select(F.col("u").alias("v"), F.col("m").alias("_mv")), on="v"
@@ -1051,10 +1045,8 @@ def cluster_min_label(
             )
             .where(F.col("u") != F.col("v"))
             .distinct()
-            .observe(nobs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
-        n_edges = int(nobs.get["n"])
+        n_edges = int(nobs["n"])
     singletons = ids.join(
         nodes.withColumnRenamed("n", id_col), on=id_col, how="left_anti"
     ).select(F.col(id_col), F.col(id_col).alias("cluster_id"))

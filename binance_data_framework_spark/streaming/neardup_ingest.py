@@ -60,6 +60,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from binance_data_framework_spark.materialize import checkpoint_observed
 from binance_data_framework_spark.operators.dedup import (
     minhash_bands,
     minhash_candidates,
@@ -76,7 +77,7 @@ def _banded_drops(
     num_hashes: int,
     threshold: float,
     same_id_is_redelivery: bool,
-    return_redeliveries: bool = False,
+    read_batch_keys: bool = False,
 ):
     """Batch ids to DROP against one persisted (band index, doc store)
     pair: band the batch signatures, look up candidate collisions in only
@@ -87,36 +88,56 @@ def _banded_drops(
     the eval-decontamination stage (where ids are from a DIFFERENT corpus
     — an id collision is coincidence and must still verify by content).
 
-    ``return_redeliveries=True`` additionally returns the same-id
-    collision ids (the batch docs provably already stored — an identical
-    redelivery's bands equal its stored bands, so it always collides
-    with itself): the append-new save path uses them to know which
-    survivors need no store write."""
+    Returns ``(drops, redelivered, stored)``:
+
+    - ``redelivered``: with ``same_id_is_redelivery``, the same-id
+      collision ids (the batch docs provably already stored — an identical
+      redelivery's bands equal its stored bands, so it always collides
+      with itself): the append-new save path uses them to know which
+      survivors need no store write. Otherwise None.
+    - ``stored``: the checkpointed (key, sig) point read the verification
+      used, or None when nothing was read. ``read_batch_keys=True`` widens
+      that ONE read to the batch's own ids too (whenever the doc store is
+      non-empty), so the append-new save split reads from it instead of
+      point-reading the store a second time — no commit lands between the
+      two uses, so they see the same snapshot."""
     bands = minhash_bands(sigs, id_col, num_bands, num_hashes)
-    # the candidate set feeds up to three consumers (the emptiness probe,
-    # the drop verification, and the redelivery split) — one eager
+    key = docstore.key_col
+    # the candidate set feeds up to three consumers (the drop
+    # verification, the redelivery split, the stored-key read) — one eager
     # checkpoint replaces three bucket-pruned index scans + their
-    # driver-side touched-bucket collects (review r9 #5); it is bounded
-    # at batch x num_bands x collisions
-    cand_all = band_store.candidates(bands).localCheckpoint(eager=True)
-    cand = cand_all
+    # driver-side touched-bucket collects (review r9 #5); it is bounded at
+    # batch x num_bands x collisions. The cross-id count that decides
+    # whether anything needs verifying rides the same job.
+    cross = F.col("id_new") != F.col("id_stored")
+    cand, obs = checkpoint_observed(
+        band_store.candidates(bands),
+        F.count(F.when(cross, 1) if same_id_is_redelivery else F.lit(1)).alias(
+            "n_cross"
+        ),
+    )
     redelivered = None
     if same_id_is_redelivery:
-        cand = cand_all.where(F.col("id_new") != F.col("id_stored"))
-        if return_redeliveries:
-            redelivered = (
-                cand_all.where(F.col("id_new") == F.col("id_stored"))
-                .select("id_new")
-                .distinct()
-            )
-    if not cand.limit(1).count():
-        empty = cand.limit(0).select("id_new")
-        return (empty, redelivered) if return_redeliveries else empty
-    stored_sigs = docstore.read_keys(
-        cand.select(F.col("id_stored").alias(docstore.key_col)).distinct()
-    ).select(
-        F.col(docstore.key_col).alias("id_stored"),
-        F.col("sig").alias("_sig_stored"),
+        redelivered = cand.where(~cross).select("id_new").distinct()
+        cand = cand.where(cross)
+    n_cross = int(obs["n_cross"])
+    keys = cand.select(F.col("id_stored").alias(key)) if n_cross else None
+    if read_batch_keys:
+        dman = docstore._snapshot()
+        if dman and dman["files"]:
+            own = sigs.select(F.col(id_col).alias(key))
+            keys = own if keys is None else keys.unionByName(own)
+    stored = None
+    if keys is not None:
+        stored = (
+            docstore.read_keys(keys.distinct())
+            .select(key, "sig")
+            .localCheckpoint(eager=True)
+        )
+    if not n_cross:
+        return cand.limit(0).select("id_new"), redelivered, stored
+    stored_sigs = stored.select(
+        F.col(key).alias("id_stored"), F.col("sig").alias("_sig_stored")
     )
     # exact est on the stored signatures — same eq/num_hashes arithmetic
     # as minhash_candidates
@@ -139,7 +160,7 @@ def _banded_drops(
         .select("id_new")
         .distinct()
     )
-    return (drops, redelivered) if return_redeliveries else drops
+    return drops, redelivered, stored
 
 
 def build_eval_index(
@@ -164,8 +185,8 @@ def build_eval_index(
         {"num_hashes": num_hashes, "num_bands": num_bands, "shingle_n": shingle_n}
     )
     sigs = minhash_signature(eval_docs, text_col, id_col, num_hashes, shingle_n)
-    keyed = eval_docs.join(sigs, id_col).localCheckpoint(eager=True)
-    n = keyed.count()
+    keyed, obs = checkpoint_observed(eval_docs.join(sigs, id_col))
+    n = int(obs["n"])
     if n:
         # band-leg idempotency (ADVICE r8 #4): save_docs is a keyed
         # upsert, but band append is add-only — a re-run would append the
@@ -432,8 +453,10 @@ def neardup_gate_batch(
         stage_sec[name] = round(now - _mark[0], 3)
         _mark[0] = now
 
-    batch_df = batch_df.localCheckpoint(eager=True)  # micro-batch sized
-    n_arrived = batch_df.count()
+    # every count below rides the eager checkpoint that materializes its
+    # frame (checkpoint_observed): one Spark job per stage boundary
+    batch_df, obs = checkpoint_observed(batch_df)  # micro-batch sized
+    n_arrived = int(obs["n"])
     if not n_arrived:
         return {
             "arrived": 0,
@@ -464,17 +487,15 @@ def neardup_gate_batch(
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )
-    sigs = sigs_all.join(losers, id_col, "left_anti").localCheckpoint(
-        eager=True
-    )
-    n_self = sigs.count()
+    sigs, obs = checkpoint_observed(sigs_all.join(losers, id_col, "left_anti"))
+    n_self = int(obs["n"])
     _tick("sig_selfdedup")
     # 2. eval-decontamination check FIRST (when configured): contaminated
     #    docs must never reach any store, and dropping them before the
     #    corpus check keeps the two drop counters disjoint
     n_eval = n_self
     if eval_band_store is not None:
-        contaminated = _banded_drops(
+        contaminated, _, _ = _banded_drops(
             sigs,
             eval_docstore,
             eval_band_store,
@@ -484,15 +505,19 @@ def neardup_gate_batch(
             threshold if eval_threshold is None else eval_threshold,
             same_id_is_redelivery=False,
         )
-        sigs = sigs.join(
-            contaminated.withColumnRenamed("id_new", id_col), id_col, "left_anti"
-        ).localCheckpoint(eager=True)
-        n_eval = sigs.count()
+        sigs, obs = checkpoint_observed(
+            sigs.join(
+                contaminated.withColumnRenamed("id_new", id_col),
+                id_col,
+                "left_anti",
+            )
+        )
+        n_eval = int(obs["n"])
         _tick("eval_check")
     # 3. corpus check via the persisted band index
     if save_mode not in ("append_new", "upsert"):
         raise ValueError(f"neardup_gate_batch: unknown save_mode {save_mode!r}")
-    dropped, redelivered = _banded_drops(
+    dropped, redelivered, stored = _banded_drops(
         sigs,
         docstore,
         band_store,
@@ -501,17 +526,16 @@ def neardup_gate_batch(
         num_hashes,
         threshold,
         same_id_is_redelivery=True,
-        return_redeliveries=True,
+        read_batch_keys=save_mode == "append_new",
     )
-    survivors = (
+    survivors, obs = checkpoint_observed(
         sigs.join(
             dropped.withColumnRenamed("id_new", id_col), id_col, "left_anti"
         )
         .select(id_col, "sig")
         .join(batch_df, id_col)
-        .localCheckpoint(eager=True)
     )
-    n_kept = survivors.count()
+    n_kept = int(obs["n"])
     _tick("corpus_check")
     # 4. commit: docs first, then bands (replay-convergent either way —
     # see module docstring crash note), then the ANN leg (also convergent:
@@ -521,8 +545,9 @@ def neardup_gate_batch(
         if save_mode == "append_new":
             # band-detected redeliveries are provably stored WITH their
             # bands — excluded from the doc and band writes. The rest
-            # splits by one pushed point-read of the batch's keys
-            # (row-group-pruned, batch-bounded — review r9 #4):
+            # splits by the corpus check's point read, which already
+            # covers the batch's keys (row-group-pruned, batch-bounded —
+            # review r9 #4):
             # - not stored            -> NEW: doc + bands
             # - stored, SAME sig      -> crash-window replay (doc landed,
             #   bands did not): bands only
@@ -534,16 +559,12 @@ def neardup_gate_batch(
                 redelivered.withColumnRenamed("id_new", id_col),
                 id_col,
                 "left_anti",
-            ).localCheckpoint(eager=True)
-            dman = docstore._snapshot()
-            if dman and dman["files"]:
-                stored_sig = docstore.read_keys(
-                    maybe_new.select(docstore.key_col)
-                ).select(
-                    docstore.key_col, F.col("sig").alias("_stored_sig")
-                )
+            )
+            if stored is not None:
                 flagged = maybe_new.join(
-                    stored_sig, docstore.key_col, "left"
+                    stored.withColumnRenamed("sig", "_stored_sig"),
+                    docstore.key_col,
+                    "left",
                 ).localCheckpoint(eager=True)
                 to_store = flagged.where(F.col("_stored_sig").isNull()).drop(
                     "_stored_sig"
@@ -552,8 +573,8 @@ def neardup_gate_batch(
                     F.col("_stored_sig") == F.col("sig")
                 ).drop("_stored_sig")
                 to_band = to_store.unionByName(backfill)
-            else:
-                to_store, to_band = maybe_new, maybe_new
+            else:  # empty doc store: every survivor is new
+                to_store = to_band = maybe_new.localCheckpoint(eager=True)
             n_saved = docstore.append_docs(to_store, on_existing="trust")
         else:
             to_store, to_band = survivors, survivors
@@ -715,8 +736,8 @@ def delete_documents(
     keyed = (
         keys.select(docstore.key_col).distinct().localCheckpoint(eager=True)
     )
-    doomed = docstore.read_keys(keyed).localCheckpoint(eager=True)
-    n = doomed.count()
+    doomed, obs = checkpoint_observed(docstore.read_keys(keyed))
+    n = int(obs["n"])
     if n:
         band_store.compact(
             drop_bands=minhash_bands(

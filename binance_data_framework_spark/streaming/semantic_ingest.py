@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from binance_data_framework_spark.materialize import checkpoint_observed
 from binance_data_framework_spark.operators import similarity as S
 from binance_data_framework_spark.streaming.ann_serve import serve_batch
 
@@ -82,8 +83,6 @@ def semantic_gate_batch(
     redelivery_check / corpus_check / commit."""
     import time as _time
 
-    from pyspark.sql import Observation
-
     stage_sec: dict[str, float] = {}
     _mark = [_time.time()]
 
@@ -93,15 +92,8 @@ def semantic_gate_batch(
         _mark[0] = now
 
     def _ckpt_count(df: DataFrame) -> tuple[DataFrame, int]:
-        """(eager checkpoint, row count) in ONE job — the count rides the
-        checkpoint's materialization pass as an observe() metric instead
-        of running as a second driver-synchronized action (r13, guide
-        §1.2/§5: the gate ran two actions per stage boundary)."""
-        obs = Observation()
-        out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
-            eager=True
-        )
-        return out, int(obs.get["n"])
+        out, obs = checkpoint_observed(df)
+        return out, int(obs["n"])
 
     batch_df, n_arrived = _ckpt_count(batch_df)  # micro-batch sized
     if n_arrived == 0:

@@ -64,7 +64,6 @@ SLOW_TESTS = {
     ("test_store.py", "test_save_many_single_commit_multi_series"),
     ("test_extensions.py", "test_minhash_finds_exact_duplicates"),
     ("test_skew.py", "test_salted_join_matches_plain_inner"),
-    ("test_streaming.py", "test_gate_append_new_save_path"),
     ("test_properties.py", "test_pagerank_matches_bruteforce"),
     ("test_store.py", "test_save_and_read_roundtrip"),
     ("test_store.py", "test_delta_log_checkpoint_cadence_and_pruning"),
@@ -84,7 +83,6 @@ SLOW_TESTS = {
     ("test_extensions.py", "test_topk_filtered_ivfpq_invariants"),
     ("test_ingest.py", "test_sqlite_migration_roundtrip"),
     ("test_text_retrieval.py", "test_repetition_matches_counter_reference"),
-    ("test_streaming.py", "test_neardup_gate_batch_stats_and_band_layout"),
     ("test_properties.py", "test_stratified_sampling_is_nested"),
     ("test_properties.py", "test_range_join_matches_bruteforce_property"),
     ("test_extensions.py", "test_topk_filtered_ivfpq_selectivity_gate"),

@@ -105,6 +105,50 @@ def test_fingerprint_observed_equals_standalone(built):
     assert observed2 == standalone
 
 
+def test_load_memoizes_model_until_it_changes(spark, tmp_path, monkeypatch):
+    """load() keeps the parsed model per handle, keyed by the live model
+    files (immutable, uuid-named): an unchanged model costs no parquet read
+    and no Spark job; an append's new model is read once and carries the
+    rolled-forward fingerprint; a fresh handle parses the same index,
+    field by field."""
+    from dataclasses import asdict
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    root = str(tmp_path / "idx")
+    st = AnnIndexStore(spark, root)
+    st.build(_emb(spark, n=40), **BUILD)
+    first = st.load()
+
+    reads = []
+    orig = DataFrameReader.parquet
+
+    def counting(self, *paths, **kw):
+        reads.append(paths)
+        return orig(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    sc = spark.sparkContext
+    sc.setJobGroup("ann-memo-probe", "second load")
+    try:
+        again = st.load()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert reads == []
+    assert sc.statusTracker().getJobIdsForGroup("ann-memo-probe") == []
+    assert asdict(again) == asdict(first)
+    monkeypatch.undo()
+
+    delta = _emb(spark, n=50).where(F.col("vec_id") >= 40)
+    st.append(delta)
+    rolled = st.load()
+    assert rolled.version > first.version
+    assert rolled.n_vectors == 50
+    assert rolled.fingerprint == st._fingerprint(_emb(spark, n=50))
+    fresh = AnnIndexStore(spark, root).load()
+    assert asdict(fresh) == asdict(rolled)
+
+
 def test_codes_layout_and_physical_cell_pruning(built):
     st, idx, df = built
     for variant in ("pq", "opq"):

@@ -649,6 +649,45 @@ def test_candidates_point_lookup_matches_join_path(spark, tmp_path, monkeypatch)
     assert point == after
 
 
+def test_null_planning_keys_change_no_lookup(spark, tmp_path, monkeypatch):
+    """ADVICE docstore.py:550: a null planning key can never match a stored
+    row, so read_keys and candidates drop it before their count-first
+    planning agg — a probe with a null key returns exactly the rows of the
+    same probe without it, on the point path and on the join path."""
+    st = DocumentStore(spark, str(tmp_path / "ds"), n_shards=4)
+    st.save_docs(_docs(spark, [(i, f"t{i}", 0.0) for i in range(50)]))
+    keys = spark.createDataFrame([(5,), (3,), (99,)], "doc_id bigint")
+    with_null = keys.unionByName(spark.createDataFrame([(None,)], "doc_id bigint"))
+
+    bands = BandIndexStore(spark, str(tmp_path / "bands"), n_buckets=8)
+    bands.append(_band_rows(spark, range(20)))
+    probe = _band_rows(spark, [3, 7, 900])
+    null_probe = probe.unionByName(
+        spark.createDataFrame(
+            [(3, 0, None), (None, 1, 7 * 2_654_435_761 + 97_003)],
+            "doc_id bigint, band_idx int, band_hash long",
+        )
+    )
+
+    def lookups():
+        got_keys = [
+            sorted(r["doc_id"] for r in st.read_keys(k).collect())
+            for k in (keys, with_null)
+        ]
+        got_pairs = [
+            sorted((r["id_new"], r["id_stored"]) for r in bands.candidates(p).collect())
+            for p in (probe, null_probe)
+        ]
+        return got_keys, got_pairs
+
+    (k_plain, k_null), (c_plain, c_null) = lookups()
+    assert k_plain == k_null == [3, 5]
+    assert c_plain == c_null and (3, 3) in c_plain and (7, 7) in c_plain
+    monkeypatch.setattr(DocumentStore, "READ_KEYS_PUSHDOWN_MAX", 0)
+    monkeypatch.setattr(BandIndexStore, "CANDIDATES_PUSHDOWN_MAX", 0)
+    assert lookups() == ([k_plain, k_plain], [c_plain, c_plain])
+
+
 def test_candidates_point_lookup_prunes_row_groups(spark, tmp_path):
     """The footer plan must actually SKIP row groups: with band_hash-sorted
     multi-row-group files and a one-key probe, the planned hit list reads

@@ -503,6 +503,52 @@ def test_neardup_gate_batch_stats_and_band_layout(spark, tmp_path):
         )
 
 
+def test_gate_batch_reads_docstore_once(spark, tmp_path, monkeypatch):
+    """Per-batch read budget: against a non-empty store the corpus check's
+    signature verification and the append-new save split share ONE
+    DocumentStore.read_keys point read (batch ids plus candidate ids), and
+    the split still classifies copy / redelivery / fresh correctly."""
+    from binance_data_framework_spark.docstore import BandIndexStore, DocumentStore
+    from binance_data_framework_spark.streaming.neardup_ingest import (
+        neardup_gate_batch,
+    )
+
+    store = DocumentStore(spark, str(tmp_path / "store"), n_shards=2)
+    bands = BandIndexStore(spark, str(tmp_path / "bands"), n_buckets=4)
+    mk = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows, "doc_id bigint, text string"
+    )
+    texts = [
+        f"wholly distinct content number {i} tokens alpha{i} beta{i} gamma{i}"
+        for i in range(4)
+    ]
+    neardup_gate_batch(mk([(0, texts[0]), (1, texts[1])]), store, bands)
+    calls = []
+    orig = DocumentStore.read_keys
+
+    def counting(self, keys):
+        calls.append(self.root)
+        return orig(self, keys)
+
+    monkeypatch.setattr(DocumentStore, "read_keys", counting)
+    # 10 copies stored doc 0 under a new id, 1 is redelivered, 3 is fresh
+    stats = neardup_gate_batch(
+        mk([(10, texts[0]), (1, texts[1]), (3, texts[3])]), store, bands
+    )
+    assert len(calls) == 1
+    stats.pop("stage_sec")
+    assert stats == {
+        "arrived": 3,
+        "kept": 2,
+        "saved": 1,
+        "dropped_in_batch": 0,
+        "dropped_contaminated": 0,
+        "dropped_vs_corpus": 1,
+        "drift": None,
+    }
+    assert {r["doc_id"] for r in store.read().collect()} == {0, 1, 3}
+
+
 def test_neardup_gate_band_param_drift_raises(spark, tmp_path):
     """Band hashes are a pure function of the minhash params, so the gate
     pins them in the band store's layout sidecar (ADVICE r6): reopening
