@@ -106,8 +106,9 @@ class CacheOrFetchLoader:
             fetched = self.source.to_ohlcv(
                 self.store.spark, symbol, timeframe, _utc_ms(start), _utc_ms(end)
             )
-            if fetched.limit(1).count() > 0:
-                self.store.save_data(fetched, symbol, timeframe)
+            # an empty fetch commits nothing: save_data returns after its
+            # bounds agg
+            self.store.save_data(fetched, symbol, timeframe)
         return self.store.get_data(symbol, timeframe, start, end)
 
     def load_incremental(
@@ -243,8 +244,7 @@ class CacheOrFetchLoader:
             fetched = self.source.to_ohlcv(
                 spark, symbol, timeframe, r["r_start_ms"], r["r_end_ms"]
             )
-            if fetched.limit(1).count() > 0:
-                self.store.save_data(fetched, symbol, timeframe)
+            self.store.save_data(fetched, symbol, timeframe)
         return self.store.get_data(symbol, timeframe, start, end)
 
     def load_many(

@@ -5,15 +5,21 @@ The reference maintains a hand-rolled zone-map table ``ohlcv_metadata``
 (database_handler.py:219-228) and probes it in ``check_data_exists``
 (database_handler.py:257-307). Spark-first: coverage is a *computed*
 aggregate (parquet footers already hold min/max; this aggregate exists only
-because containment/freshness is application semantics), and the probe is a
-broadcast semi-join of a tiny request spec against it — never a collect.
+because containment/freshness is application semantics). The containment/
+freshness rule is one column expression, ``covered_expr``. The batch probe
+``coverage_check`` applies it after a broadcast left join of a request spec
+onto the coverage aggregate. The store's single-series probe
+(``OhlcvStore.check_data_exists``) applies it to a one-row aggregate over
+the series' first and last day files only: ``dt`` is ``to_date(ts)``, so
+those two files hold the series' min and max ts. That is one Spark job over
+at most two day files, whatever the store size.
 """
 
 from __future__ import annotations
 
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
@@ -33,23 +39,15 @@ def meta_coverage(
     )
 
 
-def coverage_check(
-    coverage: DataFrame,
-    requests: DataFrame,
-    now: datetime,
-    key_cols: tuple[str, ...] = ("symbol", "timeframe"),
-) -> DataFrame:
-    """Request-vs-coverage containment probe (reference check_data_exists,
-    database_handler.py:279-298 incl. the freshness escape at 291-295).
-
-    `requests(symbol, timeframe, req_start, req_end)` is tiny -> broadcast
-    left join onto the coverage aggregate; containment/freshness are plain
-    boolean exprs after the equi-join:
+def covered_expr(now: datetime) -> Column:
+    """The containment + freshness rule (reference check_data_exists,
+    database_handler.py:279-298 incl. the freshness escape at 291-295), over
+    the columns ``start_ts``/``end_ts`` (stored coverage), ``req_start``/
+    ``req_end`` (request) and ``timeframe``:
       covered :=  start_ts <= req_start
               AND (end_ts + bar - 1ms >= req_end
                    OR abs(now - end_ts) < 2 * bar)       -- freshness escape
-    Returns requests + `covered` boolean + coverage bounds.
-    """
+    No coverage (null bounds) is not covered."""
     # Naive datetimes are engine-convention UTC; .timestamp() on a naive
     # value would shift with the PROCESS-local timezone (time.mktime), so pin
     # it — the driver may run this in any TZ.
@@ -57,23 +55,33 @@ def coverage_check(
         now = now.replace(tzinfo=timezone.utc)
     bar_ms = timeframe_duration_col(F.col("timeframe"))
     end_ms = F.unix_millis(F.col("end_ts"))
-    containment = (F.col("start_ts") <= F.col("req_start")) & (
-        end_ms + bar_ms - F.lit(1) >= F.unix_millis(F.col("req_end"))
+    contained = end_ms + bar_ms - F.lit(1) >= F.unix_millis(F.col("req_end"))
+    fresh = F.abs(F.lit(int(now.timestamp() * 1000)) - end_ms) < 2 * bar_ms
+    return F.coalesce(
+        (F.col("start_ts") <= F.col("req_start")) & (contained | fresh),
+        F.lit(False),
     )
-    fresh = (F.col("start_ts") <= F.col("req_start")) & (
-        F.abs(F.lit(int(now.timestamp() * 1000)) - end_ms) < 2 * bar_ms
-    )
+
+
+def coverage_check(
+    coverage: DataFrame,
+    requests: DataFrame,
+    now: datetime,
+    key_cols: tuple[str, ...] = ("symbol", "timeframe"),
+) -> DataFrame:
+    """Request-vs-coverage containment probe over many series.
+
+    `requests(symbol, timeframe, req_start, req_end)` is tiny -> broadcast
+    left join onto the coverage aggregate, then ``covered_expr``.
+    Returns requests + `covered` boolean + coverage bounds.
+    """
     # broadcast the BUILD side: a BroadcastHashJoin cannot build the
     # preserved (left) side of a left-outer join, so a hint on `requests`
     # would be silently dropped and both sides would shuffle. The coverage
     # aggregate is the right side and is small by construction (one row per
     # SERIES — bars-not-events cardinality), so it is the legal broadcast.
-    return (
-        requests.join(broadcast(coverage), on=list(key_cols), how="left")
-        .withColumn(
-            "covered",
-            F.coalesce(containment | fresh, F.lit(False)),
-        )
+    return requests.join(broadcast(coverage), on=list(key_cols), how="left").withColumn(
+        "covered", covered_expr(now)
     )
 
 

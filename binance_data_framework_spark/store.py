@@ -79,7 +79,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from binance_data_framework_spark.operators.coverage import coverage_check, meta_coverage
+from binance_data_framework_spark.operators.coverage import covered_expr, meta_coverage
 
 KEY = ["ts", "symbol", "timeframe"]
 OHLCV_COLS = ["ts", "symbol", "timeframe", "open", "high", "low", "close", "volume"]
@@ -809,21 +809,28 @@ class OhlcvStore(SnapshotStore):
         ``dt=`` day dir (possible in adopted legacy layouts) are included
         for READS (they may hold any days) but excluded for WRITE
         supersession (save_data only rewrites day-bounded files)."""
-        prefix = f"symbol={symbol}/timeframe={timeframe}/"
         out = []
+        for d, rel in OhlcvStore._series_days(files, symbol, timeframe):
+            if d is None:
+                if include_undated:
+                    out.append(rel)
+            elif (lo_d is None or d >= lo_d) and (hi_d is None or d <= hi_d):
+                out.append(rel)
+        return out
+
+    @staticmethod
+    def _series_days(files: list[str], symbol: str, timeframe: str):
+        """(day, rel) for every file of one series in a manifest listing:
+        ``day`` is the date of its ``dt=`` dir, None for an undated file."""
+        prefix = f"symbol={symbol}/timeframe={timeframe}/"
         for rel in files:
             if not rel.startswith(prefix):
                 continue
             day = rel[len(prefix):].split("/", 1)[0]
             if not day.startswith("dt="):
-                if include_undated:
-                    out.append(rel)
-                continue
-            d = datetime.strptime(day[3:], "%Y-%m-%d").date()
-            if (lo_d is not None and d < lo_d) or (hi_d is not None and d > hi_d):
-                continue
-            out.append(rel)
-        return out
+                yield None, rel
+            else:
+                yield datetime.strptime(day[3:], "%Y-%m-%d").date(), rel
 
     def _read_series(
         self, symbol: str, timeframe: str, lo_d=None, hi_d=None
@@ -910,8 +917,7 @@ class OhlcvStore(SnapshotStore):
         )
         if superseded:
             stored = (
-                self.spark.read.option("basePath", self.root)
-                .parquet(*[f"{self.root}/{f}" for f in superseded])
+                self._committed_parquet(superseded, base_path=self.root)
                 .select(*OHLCV_COLS)
                 .withColumn("_rank", F.lit(1))
             )
@@ -1014,8 +1020,7 @@ class OhlcvStore(SnapshotStore):
         )
         if superseded:
             stored = (
-                self.spark.read.option("basePath", self.root)
-                .parquet(*[f"{self.root}/{f}" for f in superseded])
+                self._committed_parquet(superseded, base_path=self.root)
                 .select(*OHLCV_COLS)
                 .withColumn("_rank", F.lit(1))
             )
@@ -1077,17 +1082,41 @@ class OhlcvStore(SnapshotStore):
         now: datetime | None = None,
     ) -> tuple[bool, tuple[datetime, datetime] | None]:
         """Containment + freshness probe (database_handler.py:257-307).
-        One broadcast semi-join over the coverage aggregate; the only
-        driver-side materialization is the single result row."""
-        if not self._exists():
+        Returns (covered, (start_ts, end_ts)) of the stored series, or
+        (False, None) when nothing of it is stored.
+
+        Boundary-file probe: the ``dt`` partition is ``to_date(ts)``, so the
+        series' min ts lies in its first stored day file and its max ts in
+        its last (the invariant get_data's day pruning relies on too). The
+        manifest listing is pruned driver-side to those two days (plus any
+        undated legacy files, which may hold any day), and one single-task
+        Spark job computes min/max(ts) over them and applies
+        ``covered_expr``. Cost: one job over at most two day files, whatever
+        the store or series size; the only driver-side materialization is
+        the single result row. get_stored_info keeps the full scan."""
+        man = self._snapshot()
+        days = list(self._series_days(man["files"] if man else [], symbol, timeframe))
+        dated = [d for d, _ in days if d is not None]
+        ends = {min(dated), max(dated)} if dated else set()
+        probe = [rel for d, rel in days if d is None or d in ends]
+        if not probe:
             return False, None
-        req = self.spark.createDataFrame(
-            [(symbol, timeframe, _utc(start), _utc(end))],
-            "symbol string, timeframe string, req_start timestamp, req_end timestamp",
+        row = (
+            self._committed_parquet(probe, base_path=self.root)
+            # two day files: one task, so the global agg needs no shuffle
+            .coalesce(1)
+            .agg(F.min("ts").alias("start_ts"), F.max("ts").alias("end_ts"))
+            .select(
+                "start_ts",
+                "end_ts",
+                F.lit(timeframe).alias("timeframe"),
+                F.lit(_utc(start)).alias("req_start"),
+                F.lit(_utc(end)).alias("req_end"),
+            )
+            .withColumn("covered", covered_expr(_utc(now or datetime.now(timezone.utc))))
+            .first()
         )
-        cov = meta_coverage(self._read_all())
-        row = coverage_check(cov, req, _utc(now or datetime.now(timezone.utc))).first()
-        if row is None or row["start_ts"] is None:
+        if row["start_ts"] is None:
             return False, None
         return bool(row["covered"]), (row["start_ts"], row["end_ts"])
 
@@ -1158,9 +1187,7 @@ class OhlcvStore(SnapshotStore):
         if not todo:
             return 0
         originals = sorted(f for fl in todo.values() for f in fl)
-        df = self.spark.read.option("basePath", self.root).parquet(
-            *[f"{self.root}/{f}" for f in originals]
-        )
+        df = self._committed_parquet(originals, base_path=self.root)
         writer = (
             df.repartition("symbol", "timeframe", "dt")
             .sortWithinPartitions("ts")  # keep row-group ts skipping tight

@@ -120,6 +120,27 @@ def test_cache_or_fetch_routing(spark, tmp_path):
     assert calls["n"] == n_after_first
 
 
+def test_empty_fetch_commits_nothing(spark, tmp_path):
+    """A fetch that returns no rows commits nothing (save_data returns
+    after its bounds agg on an empty batch), and the loaders still return
+    the stored rows."""
+    fetch, _ = fake_exchange(n_bars=24)
+    store = OhlcvStore(spark, str(tmp_path / "store_empty"))
+    start = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    end = datetime(2024, 1, 1, 23, tzinfo=timezone.utc)
+    now = datetime(2025, 1, 1, tzinfo=timezone.utc)
+    CacheOrFetchLoader(store, PagedKlineSource(fetch, page_size=1000)).load(
+        "BTCUSDT", "1h", start, end, now=now
+    )
+    versions = store.snapshot_versions()
+
+    empty = CacheOrFetchLoader(store, PagedKlineSource(lambda *a: [], page_size=1000))
+    wider = end + timedelta(days=1)  # not covered: both loaders fetch
+    assert empty.load("BTCUSDT", "1h", start, wider, now=now).count() == 24
+    assert empty.load_incremental("BTCUSDT", "1h", start, wider, now=now).count() == 24
+    assert store.snapshot_versions() == versions
+
+
 def test_incremental_gap_fill(spark, tmp_path):
     """load_incremental fetches ONLY the missing ranges (plan.md:79-80
     design), not the whole range like load() does on a partial miss."""

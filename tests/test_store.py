@@ -4,7 +4,7 @@ database_handler.py)."""
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -921,3 +921,125 @@ def test_schema_memo_evicts_oldest_entry_only(store, spark, monkeypatch):
     assert dummies[0] not in memo and dummies[1] in memo
     assert (store.root, f"{store.root}/{rel}") in memo
     assert [r["open"] for r in rows] == [100.0 + i for i in range(5)]
+
+
+def _grid(spark, start: datetime, n: int, bar_s: int, holes=()):
+    """n bars of ``bar_s`` seconds from ``start`` (UTC), minus the bar
+    indices in each ``holes`` range; generated JVM-side."""
+    i = F.col("id")
+    df = spark.range(n)
+    for h in holes:
+        df = df.where(~i.between(h.start, h.stop - 1))
+    px = F.lit(100.0) + i
+    return df.select(
+        F.timestamp_seconds(F.lit(int(start.timestamp())) + i * bar_s).alias("ts"),
+        px.alias("open"),
+        (px + 1).alias("high"),
+        (px - 1).alias("low"),
+        px.alias("close"),
+        F.lit(1.0).alias("volume"),
+    )
+
+
+def test_coverage_probe_agrees_with_full_series_scan(store, spark, tmp_path):
+    """check_data_exists reads only the series' first and last day files.
+    It must agree with the full-series reference — meta_coverage over
+    get_data(symbol, tf) plus the containment/freshness rule written out
+    in Python — on the result and both bounds: requests on the boundary
+    days, interior days, a day with a hole, past the frontier, through the
+    freshness escape, before the first bar; a deleted series; and an
+    adopted legacy layout (undated files, multi-file boundary day)."""
+    from binance_data_framework_spark.operators.coverage import meta_coverage
+
+    utc = timezone.utc
+    day, hour, minute = timedelta(days=1), timedelta(hours=1), timedelta(minutes=1)
+    ms = timedelta(milliseconds=1)
+    t0 = datetime(2024, 1, 1, tzinfo=utc)
+    # 1m: 3 days, a 30-bar hole on day 1; 1h: 6 days, day 3 missing
+    store.save_data(
+        _grid(spark, t0, 3 * 1440, 60, [range(1440 + 600, 1440 + 630)]), "BTCUSDT", "1m"
+    )
+    store.save_data(_grid(spark, t0, 6 * 24, 3600, [range(72, 96)]), "BTCUSDT", "1h")
+    store.save_data(_grid(spark, t0, 48, 3600), "ETHUSDT", "1h")
+    assert store.delete_data("ETHUSDT", "1h")
+    # adopted pre-manifest layout: one series in undated files, one with a
+    # two-file first day
+    legacy = OhlcvStore(spark, str(tmp_path / "legacy"))
+    for k in (0, 2):  # days 0 and 2 of BTCUSDT/1h, outside any dt= dir
+        _grid(spark, t0 + k * day, 24, 3600).coalesce(1).write.mode("append").parquet(
+            f"{legacy.root}/symbol=BTCUSDT/timeframe=1h"
+        )
+    for k in (0, 1):
+        _grid(spark, t0 + k * day, 1440, 60).repartition(1 + k).write.parquet(
+            f"{legacy.root}/symbol=BTCUSDT/timeframe=1m/dt={(t0 + k * day).date()}"
+        )
+
+    far = datetime(2030, 1, 1, tzinfo=utc)
+    series = [  # (store, symbol, timeframe, bar, a day with a hole)
+        (store, "BTCUSDT", "1m", minute, t0 + day),
+        (store, "BTCUSDT", "1h", hour, t0 + 3 * day),
+        (store, "ETHUSDT", "1h", hour, t0),
+        (legacy, "BTCUSDT", "1h", hour, t0 + day),
+        (legacy, "BTCUSDT", "1m", minute, t0 + day),
+    ]
+    for st, sym, tf, bar, hole in series:
+        ref = meta_coverage(st.get_data(sym, tf)).select(
+            "start_ts",
+            "end_ts",
+            F.unix_millis("start_ts").alias("a_ms"),
+            F.unix_millis("end_ts").alias("b_ms"),
+        ).collect()
+        if not ref:
+            assert sym == "ETHUSDT"  # the deleted series
+            got = st.check_data_exists(sym, tf, t0, t0 + hour, now=far)
+            assert got == (False, None)
+            continue
+        (ref,) = ref
+        a = datetime.fromtimestamp(ref["a_ms"] / 1000, tz=utc)
+        b = datetime.fromtimestamp(ref["b_ms"] / 1000, tz=utc)
+        last_day = datetime.combine(b.date(), datetime.min.time(), tzinfo=utc)
+        cases = [  # (name, start, end, now, expected covered)
+            ("first day", a, a + 6 * hour, far, True),
+            ("last day", last_day, b + bar - ms, far, True),
+            ("interior day", a + day + hour, a + day + 5 * hour, far, True),
+            ("day with a hole", hole, hole + day - ms, far, True),
+            ("past the frontier", a, b + 2 * day, far, False),
+            ("freshness escape", a, b + 2 * day, b + bar, True),
+            ("before the first bar", a - day, a + hour, far, False),
+        ]
+        bar_ms = bar // ms
+        for name, s, e, now, want in cases:
+            covered, bounds = st.check_data_exists(sym, tf, s, e, now=now)
+            rule = ref["a_ms"] <= s.timestamp() * 1000 and (
+                ref["b_ms"] + bar_ms - 1 >= e.timestamp() * 1000
+                or abs(now.timestamp() * 1000 - ref["b_ms"]) < 2 * bar_ms
+            )
+            where = f"{sym}/{tf} {name}"
+            assert covered is rule is want, where
+            assert bounds == (ref["start_ts"], ref["end_ts"]), where
+
+
+def test_coverage_probe_runs_one_job(store, spark):
+    """A warm coverage probe is one Spark job over the series' two boundary
+    day files, however many series and days the store holds (no request
+    DataFrame, no broadcast join, no shuffle)."""
+    t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    frames = [
+        _grid(spark, t0, 6 * 24, 3600).select(
+            "*", F.lit(sym).alias("symbol"), F.lit("1h").alias("timeframe")
+        )
+        for sym in ("AAAUSDT", "BBBUSDT", "CCCUSDT")
+    ]
+    store.save_many(frames[0].unionByName(frames[1]).unionByName(frames[2]))
+    args = ("BBBUSDT", "1h", t0 + timedelta(days=2), t0 + timedelta(days=3))
+    now = datetime(2030, 1, 1, tzinfo=timezone.utc)
+    first = store.check_data_exists(*args, now=now)  # warms the schema memo
+    sc = spark.sparkContext
+    sc.setJobGroup("coverage-probe", "warm probe")
+    try:
+        again = store.check_data_exists(*args, now=now)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("coverage-probe")) == 1
+    assert again == first and first[0] is True
