@@ -173,10 +173,21 @@ class CacheOrFetchLoader:
             return self.store.get_data(symbol, timeframe, start, end)
         stored = self.store.get_data(symbol, timeframe, start, end).select("ts")
         # spark.range is partition-distributed by construction: a 10-year 1m
-        # request is ~5M rows spread across tasks, never one exploded array
-        expected = spark.range((hi - lo) // bar_ms + 1).select(
-            F.timestamp_millis(F.lit(lo) + F.col("id") * bar_ms).alias("ts")
+        # request is ~5M rows spread across tasks, never one exploded array.
+        # A request within OhlcvStore.ONE_TASK_MAX_DAYS builds its grid as
+        # ONE partition instead (get_data reads the stored side as one task
+        # too): the anti join, the per-day windows, the group-bys and the
+        # global stitch window then need no exchange, and the planner is a
+        # single job. The merge hint keeps the join off the broadcast path,
+        # whose exchange would cost a job of its own.
+        one_task = self.store.fits_one_task(
+            _as_utc(start).date(), _as_utc(end).date()
         )
+        expected = spark.range(
+            (hi - lo) // bar_ms + 1, numPartitions=1 if one_task else None
+        ).select(F.timestamp_millis(F.lit(lo) + F.col("id") * bar_ms).alias("ts"))
+        if one_task:
+            stored = stored.hint("merge")
         missing = expected.join(stored, on="ts", how="left_anti").withColumn(
             "_day", F.to_date("ts")
         )

@@ -765,6 +765,70 @@ class OhlcvStore(SnapshotStore):
     """Partitioned-Parquet OHLCV store with reference-parity semantics on
     top of the generic snapshot-commit layer (see module docstring)."""
 
+    #: day-span cap for the one-task plan (the measured-size gate pattern of
+    #: DocumentStore.READ_KEYS_PUSHDOWN_MAX): a single-series window of at
+    #: most this many days is ``coalesce(1)``-ed, and SinglePartition
+    #: satisfies every sort/window/aggregate distribution, so the plan has
+    #: no exchange. 1m is the finest timeframe, so a qualifying window holds
+    #: at most 31 x 1,440 = 44,640 bars per side of a merge; a one-day read
+    #: drops from 3 Spark jobs to 1 (timings in CHANGES.md).
+    ONE_TASK_MAX_DAYS = 31
+
+    @classmethod
+    def fits_one_task(cls, lo_d, hi_d) -> bool:
+        """True when the inclusive day window lo_d..hi_d is small enough
+        to plan as one task (see ONE_TASK_MAX_DAYS)."""
+        return (hi_d - lo_d).days + 1 <= cls.ONE_TASK_MAX_DAYS
+
+    def _merge_writer(self, incoming: DataFrame, superseded: list[str], one_task: bool):
+        """Writer of an upsert (save_data, save_many): ``incoming``
+        (OHLCV_COLS + ``_rank`` 0) unioned with the ``superseded`` stored
+        files' rows (rank 1), deduped on KEY keeping the lowest rank, so new
+        rows win. ``one_task`` coalesces the union BEFORE the dedup window,
+        whose clustered distribution the single partition then satisfies:
+        merge and write are one job with no shuffle. Otherwise the window
+        hash-clusters by KEY and the writer repartitions by the partition
+        key."""
+        if superseded:
+            stored = (
+                self._committed_parquet(superseded, base_path=self.root)
+                .select(*OHLCV_COLS)
+                .withColumn("_rank", F.lit(1))
+            )
+            incoming = incoming.unionByName(stored)
+        if one_task:
+            incoming = incoming.coalesce(1)
+        w = Window.partitionBy(*KEY).orderBy("_rank")
+        merged = (
+            incoming.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1)
+            .drop("_rank", "_rn")
+            .withColumn("dt", F.to_date("ts"))
+        )
+        return self._day_file_writer(merged, one_task)
+
+    def _day_file_writer(self, df: DataFrame, one_task: bool):
+        """The one day-file writer of every OHLCV write site: rows of ``df``
+        (OHLCV_COLS + dt) land as ONE ts-sorted zstd file per
+        symbol/timeframe/dt dir. Clustering is the only choice: a one-task
+        frame is ``coalesce(1)``-ed (no shuffle), anything else is
+        repartitioned by the partition key — writing hash-scattered rows
+        directly would spray up to shuffle.partitions small files into
+        every dt dir. The within-partition sort leads with the partition
+        columns, which is the ordering the partitioned writer requires, so
+        Spark adds no second sort; its ts tail keeps row-group ts skipping
+        tight. zstd: ~30-40% smaller than snappy at comparable scan cost,
+        the codec the manifest checkpoints use too."""
+        clustered = (
+            df.coalesce(1) if one_task else df.repartition("symbol", "timeframe", "dt")
+        )
+        return (
+            clustered.sortWithinPartitions("symbol", "timeframe", "dt", "ts")
+            .write.partitionBy("symbol", "timeframe", "dt")
+            .option("compression", "zstd")
+            .mode("overwrite")
+        )
+
     def read_version(self, version: int, with_dt: bool = False) -> DataFrame:
         """Time-travel read (Delta-style VERSION AS OF): the exact file set
         manifest v<version> committed. The retention invariant guarantees
@@ -834,18 +898,21 @@ class OhlcvStore(SnapshotStore):
 
     def _read_series(
         self, symbol: str, timeframe: str, lo_d=None, hi_d=None
-    ) -> DataFrame:
+    ) -> tuple[DataFrame, bool]:
         """Manifest-pruned scan of one series (see _series_window_files);
-        always carries the dt partition column for further filtering."""
+        always carries the dt partition column for further filtering.
+        Returns (scan, undated): ``undated`` is True when the pruned
+        listing holds an undated legacy file, whose rows may span any
+        days."""
         man = self._snapshot()
-        if not man or not man["files"]:
-            return self._empty(with_dt=True)
         files = self._series_window_files(
-            man["files"], symbol, timeframe, lo_d, hi_d, include_undated=True
+            man["files"] if man else [], symbol, timeframe, lo_d, hi_d,
+            include_undated=True,
         )
         if not files:
-            return self._empty(with_dt=True)
-        return self._committed_parquet(files, base_path=self.root)
+            return self._empty(with_dt=True), False
+        undated = any(d is None for d, _ in self._series_days(files, symbol, timeframe))
+        return self._committed_parquet(files, base_path=self.root), undated
 
     def _exists(self) -> bool:
         man = self._snapshot()
@@ -915,35 +982,9 @@ class OhlcvStore(SnapshotStore):
         superseded = self._series_window_files(
             man["files"] if man else [], symbol, timeframe, lo_d, hi_d
         )
-        if superseded:
-            stored = (
-                self._committed_parquet(superseded, base_path=self.root)
-                .select(*OHLCV_COLS)
-                .withColumn("_rank", F.lit(1))
-            )
-            incoming = incoming.unionByName(stored)
-        w = Window.partitionBy(*KEY).orderBy("_rank")
-        merged = (
-            incoming.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rank", "_rn")
-        )
-        writer = (
-            merged.withColumn("dt", F.to_date("ts"))
-            # cluster by the physical partition key before writing: the merge
-            # window leaves rows hash-scattered by (ts,symbol,timeframe), and
-            # writing that directly sprays up to shuffle.partitions small
-            # files into every dt directory — a small-files generator at
-            # scale. One repartition of the (small) batch = one file per day.
-            .repartition("symbol", "timeframe", "dt")
-            .sortWithinPartitions("ts")  # maximize row-group skipping on ts
-            .write.partitionBy("symbol", "timeframe", "dt")
-            # zstd: ~30-40% smaller than snappy at comparable scan cost —
-            # at 100 TB the dominant cost is bytes scanned/stored, and the
-            # manifest checkpoints already standardized on zstd
-            .option("compression", "zstd")
-            .mode("overwrite")
-        )
+        # a merge window within ONE_TASK_MAX_DAYS is merged and written as
+        # one task: one job, no shuffle (see _merge_writer)
+        writer = self._merge_writer(incoming, superseded, self.fits_one_task(lo_d, hi_d))
         # the commit rebases onto the LATEST snapshot: a different series
         # committed since our merge snapshot composes (lock in-process,
         # CAS-retry cross-process); a same-series race is detected and
@@ -1018,27 +1059,8 @@ class OhlcvStore(SnapshotStore):
                 )
             }
         )
-        if superseded:
-            stored = (
-                self._committed_parquet(superseded, base_path=self.root)
-                .select(*OHLCV_COLS)
-                .withColumn("_rank", F.lit(1))
-            )
-            incoming = incoming.unionByName(stored)
-        w = Window.partitionBy(*KEY).orderBy("_rank")
-        merged = (
-            incoming.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rank", "_rn")
-        )
-        writer = (
-            merged.withColumn("dt", F.to_date("ts"))
-            .repartition("symbol", "timeframe", "dt")
-            .sortWithinPartitions("ts")
-            .write.partitionBy("symbol", "timeframe", "dt")
-            .option("compression", "zstd")  # same codec as save_data
-            .mode("overwrite")
-        )
+        # bulk imports keep the distributed plan: no day bound holds here
+        writer = self._merge_writer(incoming, superseded, one_task=False)
         self._staged_commit(
             writer.save, superseded, op="save_many", kind="same-series"
         )
@@ -1058,20 +1080,38 @@ class OhlcvStore(SnapshotStore):
         file-index work O(series ∩ window), not O(store)); the dt
         partition-column predicates prune whatever remains at plan time;
         and the ts predicate reaches the parquet row groups. Naive bounds
-        are pinned UTC before becoming literals (see _utc)."""
+        are pinned UTC before becoming literals (see _utc).
+
+        A fourth tier sizes the plan: when both bounds are given, the day
+        span fits ONE_TASK_MAX_DAYS and the pruned listing holds no undated
+        legacy file (which may hold any day), the scan is coalesced to one
+        task before the sort — a range sort over one partition needs no
+        sampling job and no shuffle, so collecting it is one Spark job.
+        Open or wider windows keep the distributed range sort."""
         s = _utc(start) if start is not None else None
         e = _utc(end) if end is not None else None
-        df = self._read_series(
+        df, undated = self._read_series(
             symbol,
             timeframe,
             s.date() if s is not None else None,
             e.date() if e is not None else None,
-        ).where((F.col("symbol") == symbol) & (F.col("timeframe") == timeframe))
+        )
+        df = df.where((F.col("symbol") == symbol) & (F.col("timeframe") == timeframe))
+        # an undated legacy series scans without a dt column: its exact ts
+        # predicates alone bound it
         if s is not None:
-            df = df.where((F.col("dt") >= F.lit(s.date())) & (F.col("ts") >= F.lit(s)))
+            df = df.where(F.col("ts") >= F.lit(s))
+            if not undated:
+                df = df.where(F.col("dt") >= F.lit(s.date()))
         if e is not None:
-            df = df.where((F.col("dt") <= F.lit(e.date())) & (F.col("ts") <= F.lit(e)))
-        return df.select(*OHLCV_COLS).orderBy("ts")
+            df = df.where(F.col("ts") <= F.lit(e))
+            if not undated:
+                df = df.where(F.col("dt") <= F.lit(e.date()))
+        df = df.select(*OHLCV_COLS)
+        bounded = s is not None and e is not None
+        if bounded and not undated and self.fits_one_task(s.date(), e.date()):
+            df = df.coalesce(1)
+        return df.orderBy("ts")
 
     def check_data_exists(
         self,
@@ -1187,13 +1227,8 @@ class OhlcvStore(SnapshotStore):
         if not todo:
             return 0
         originals = sorted(f for fl in todo.values() for f in fl)
-        df = self._committed_parquet(originals, base_path=self.root)
-        writer = (
-            df.repartition("symbol", "timeframe", "dt")
-            .sortWithinPartitions("ts")  # keep row-group ts skipping tight
-            .write.partitionBy("symbol", "timeframe", "dt")
-            .option("compression", "zstd")  # same codec as fresh writes
-            .mode("overwrite")
+        writer = self._day_file_writer(
+            self._committed_parquet(originals, base_path=self.root), False
         )
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", max_records_per_file)

@@ -1024,6 +1024,31 @@ def test_coverage_probe_runs_one_job(store, spark):
     day files, however many series and days the store holds (no request
     DataFrame, no broadcast join, no shuffle)."""
     t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    _three_series_six_days(store, spark, t0)
+    args = ("BBBUSDT", "1h", t0 + timedelta(days=2), t0 + timedelta(days=3))
+    now = datetime(2030, 1, 1, tzinfo=timezone.utc)
+    first = store.check_data_exists(*args, now=now)  # warms the schema memo
+    n_jobs, again = _jobs_of(
+        spark, "coverage-probe", lambda: store.check_data_exists(*args, now=now)
+    )
+    assert n_jobs == 1
+    assert again == first and first[0] is True
+
+
+def _jobs_of(spark, group: str, fn):
+    """(Spark jobs ``fn()`` launched, its result), counted through a job
+    group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def _three_series_six_days(store, spark, t0):
     frames = [
         _grid(spark, t0, 6 * 24, 3600).select(
             "*", F.lit(sym).alias("symbol"), F.lit("1h").alias("timeframe")
@@ -1031,15 +1056,136 @@ def test_coverage_probe_runs_one_job(store, spark):
         for sym in ("AAAUSDT", "BBBUSDT", "CCCUSDT")
     ]
     store.save_many(frames[0].unionByName(frames[1]).unionByName(frames[2]))
-    args = ("BBBUSDT", "1h", t0 + timedelta(days=2), t0 + timedelta(days=3))
+
+
+def _shuffles(df) -> bool:
+    """True when the physical plan of ``df`` holds an exchange."""
+    return "Exchange" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_one_task_read_and_upsert_job_counts(store, spark):
+    """A one-day window is planned as one task: on a memo-warm store of 3
+    series x 6 days, collecting get_data is exactly 1 Spark job (no
+    range-sort sampling job, no shuffle stage), load_incremental's gap
+    planner over a stored day is 1 (no broadcast job either), and a
+    one-day save_data upsert is at most 3 (its bounds agg plus one
+    merge-and-write job)."""
+    from binance_data_framework_spark.api import CacheOrFetchLoader
+
+    t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    _three_series_six_days(store, spark, t0)
+    args = ("BBBUSDT", "1h", t0 + timedelta(days=2), t0 + timedelta(days=3, milliseconds=-1))
+    want = store.get_data(*args).collect()  # warms the schema memo
+    n_read, rows = _jobs_of(spark, "one-day-read", lambda: store.get_data(*args).collect())
+    assert n_read == 1
+    assert rows == want and len(rows) == 24
+    src = _RecordingSource(None)  # the day is stored: nothing to fetch
+    loader = CacheOrFetchLoader(store, src)
     now = datetime(2030, 1, 1, tzinfo=timezone.utc)
-    first = store.check_data_exists(*args, now=now)  # warms the schema memo
-    sc = spark.sparkContext
-    sc.setJobGroup("coverage-probe", "warm probe")
-    try:
-        again = store.check_data_exists(*args, now=now)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup("coverage-probe")) == 1
-    assert again == first and first[0] is True
+    n_plan, _ = _jobs_of(spark, "gap-planner", lambda: loader.load_incremental(*args, now=now))
+    assert n_plan == 1 and src.ranges == []
+    upsert = _grid(spark, t0 + timedelta(days=2), 24, 3600).withColumn("close", -F.col("close"))
+    n_save, _ = _jobs_of(spark, "one-day-upsert", lambda: store.save_data(upsert, "BBBUSDT", "1h"))
+    assert n_save <= 3
+    rows = store.get_data(*args).collect()
+    assert len(rows) == 24 and all(r["close"] < 0 for r in rows)
+
+
+class _RecordingSource:
+    """Stands in for PagedKlineSource: serves the bars of a fixed grid that
+    fall in each requested [start_ms, end_ms] and records the range."""
+
+    def __init__(self, grid):
+        self.grid = grid
+        self.ranges = []
+
+    def to_ohlcv(self, spark, symbol, timeframe, start_ms, end_ms):
+        self.ranges.append((start_ms, end_ms))
+        return self.grid.where(F.unix_millis("ts").between(start_ms, end_ms))
+
+
+@pytest.mark.parametrize("tf, bar_s", [("1m", 60), ("1h", 3600)])
+def test_one_task_and_distributed_paths_agree(spark, tmp_path, monkeypatch, tf, bar_s):
+    """The one-task plan (default ONE_TASK_MAX_DAYS) and the distributed
+    plan (the bound forced to 0) agree: get_data returns the same rows in
+    the same order (one day, several days with holes, past the frontier,
+    open start, open end); load_incremental fetches the same ranges; a
+    save_data upsert over stored days (new rows win) leaves the same rows,
+    one ts-sorted file per dt dir and the same manifest delta. An adopted
+    legacy series in undated files takes the distributed plan under the
+    default bound and agrees too."""
+    import pyarrow.parquet as pq
+
+    from binance_data_framework_spark.api import CacheOrFetchLoader
+
+    utc = timezone.utc
+    day, hour, ms = timedelta(days=1), timedelta(hours=1), timedelta(milliseconds=1)
+    t0 = datetime(2024, 1, 1, tzinfo=utc)
+    far = datetime(2030, 1, 1, tzinfo=utc)
+    per_day = 86_400 // bar_s
+    gap, n_gap = per_day + per_day // 3, max(3, per_day // 48)
+    full = _grid(spark, t0, 4 * per_day, bar_s)
+    # days 0-3 with a hole inside day 1 and day 2 missing
+    seed = _grid(
+        spark, t0, 4 * per_day, bar_s, [range(gap, gap + n_gap), range(2 * per_day, 3 * per_day)]
+    )
+    windows = [  # (start, end, planned as one task under the default bound)
+        (t0 + day, t0 + 2 * day - ms, True),
+        (t0, t0 + 4 * day - ms, True),
+        (t0 + 3 * day, t0 + 6 * day, True),
+        (None, t0 + day + hour, False),
+        (t0 + 3 * day + hour, None, False),
+    ]
+    legacy = OhlcvStore(spark, str(tmp_path / "legacy"))
+    for k in (0, 2):  # days 0 and 2, outside any dt= dir
+        _grid(spark, t0 + k * day, per_day, bar_s).coalesce(1).write.mode("append").parquet(
+            f"{legacy.root}/symbol=BTCUSDT/timeframe={tf}"
+        )
+    default = OhlcvStore.ONE_TASK_MAX_DAYS
+
+    def run(bound: int) -> dict:
+        monkeypatch.setattr(OhlcvStore, "ONE_TASK_MAX_DAYS", bound)
+        st = OhlcvStore(spark, str(tmp_path / f"bound{bound}"))
+        st.save_data(seed, "BTCUSDT", tf)
+        out = {"reads": []}
+        for s, e, one_task in windows:
+            df = st.get_data("BTCUSDT", tf, s, e)
+            assert _shuffles(df) is not (one_task and bound == default), (s, e)
+            out["reads"].append(df.collect())
+        legacy_day = legacy.get_data("BTCUSDT", tf, t0 + 2 * day, t0 + 3 * day - ms)
+        assert _shuffles(legacy_day)  # an undated file may hold any day
+        out["legacy"] = legacy_day.collect()
+        src = _RecordingSource(full)
+        filled = CacheOrFetchLoader(st, src).load_incremental(
+            "BTCUSDT", tf, t0, t0 + 4 * day - ms, now=far
+        )
+        out["filled"], out["fetched"] = filled.collect(), src.ranges
+        # upsert over the second half of day 0 and the first half of day 1
+        new = _grid(spark, t0 + day / 2, per_day, bar_s).withColumn("close", -F.col("close"))
+        st.save_data(new, "BTCUSDT", tf)
+        man = st._read_manifest(st._manifest_versions()[-1])
+        out["delta"] = (len(man["added"]), len(man["removed"]))
+        out["rows"] = st.get_data("BTCUSDT", tf).collect()
+        files = st._snapshot()["files"]
+        out["dirs"] = sorted(f.rsplit("/", 1)[0] for f in files)
+        for f in files:
+            ts = pq.ParquetFile(f"{st.root}/{f}").read(columns=["ts"]).column("ts").to_pylist()
+            assert ts == sorted(ts), f
+        return out
+
+    one, dist = run(default), run(0)
+    for k in one:
+        assert one[k] == dist[k], k
+    assert [len(r) for r in one["reads"]] == [
+        per_day - n_gap,
+        3 * per_day - n_gap,
+        per_day,
+        per_day + 3600 // bar_s + 1,
+        per_day - 3600 // bar_s,
+    ]
+    assert len(one["legacy"]) == per_day
+    assert len(one["fetched"]) == 2 and len(one["filled"]) == 4 * per_day
+    assert one["delta"] == (2, 2)
+    assert len(one["dirs"]) == len(set(one["dirs"])) == 4  # one file per day
+    assert sum(r["close"] < 0 for r in one["rows"]) == per_day  # new rows win
+    assert len(one["rows"]) == 4 * per_day
