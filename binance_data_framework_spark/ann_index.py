@@ -24,8 +24,8 @@ product-quantized CODES of the corpus — become committed store artifacts:
     micro-batch append lands as ONE (variant, cell)-sorted file instead
     of a near-empty file per touched cell (measured 28.6 s / ~1000 files
     for a 2000-vector batch at 512 cells). Lookups consult runs alongside
-    the bucketed layout; ``maybe_fold_code_deltas`` merges them at a
-    rows-fraction trigger.
+    the bucketed layout; ``maybe_fold_code_deltas`` merges them at the
+    shared SnapshotStore fold trigger (rows fraction or run-file count).
 
 Commits are full-replace snapshots through SnapshotStore (CAS manifest,
 delta log, two-commit vacuum, time travel) — a rebuild publishes a new
@@ -87,16 +87,6 @@ class AnnIndexStore(SnapshotStore):
         super().__init__(spark, root)
         self.id_col = id_col
         self.vec_col = vec_col
-        # footer id-range/row-count cache for the append membership probe
-        # and fold trigger (immutable files; evicted against the live
-        # list per sweep), per handle
-        self._id_bounds_cache: dict = {}
-        # remote-root fold-trigger base_rows, keyed by the bucketed code
-        # file list — the bucketed layout only changes when a commit
-        # rewrites codes/, so between folds the trigger stays metadata-
-        # only instead of re-counting the whole layout per gate batch
-        # (ADVICE r10 #4)
-        self._base_rows_cache: tuple[tuple, int] | None = None
         # model component payloads, keyed by the live model file list:
         # model files are uuid-named and never rewritten, so an unchanged
         # list means an unchanged model and load() reads nothing. The raw
@@ -500,75 +490,6 @@ class AnnIndexStore(SnapshotStore):
             .mode("overwrite")
         )
 
-    # _local_root() is inherited from SnapshotStore (hoisted in review
-    # r10 round 2)
-
-    def _id_bounds(
-        self,
-        relpaths: list[str],
-        local_root: str,
-        live_files: list[str] | None = None,
-    ) -> dict:
-        """(rel -> (id min | None, id max | None, n_rows | None)) from
-        parquet footers, cached per immutable file against the live list
-        (the BandIndexStore footer-cache rule). None bounds = no usable
-        stats: always scan that file. None rows = footer unreadable
-        (e.g. a concurrent writer's vacuum raced the sweep — review r10
-        round 2 #4): the caller degrades to the scan path instead of
-        crashing the append.
-
-        ``live_files`` is the manifest's full file list: eviction keeps
-        every live file's entry, not just this call's subset. Call sites
-        pass different subsets (_committed_ids_among probes only pq codes
-        + deltas; maybe_fold_code_deltas sweeps all codes + deltas), and
-        in the gate both run every micro-batch — evicting against the
-        per-call subset made each caller flush the other's entries,
-        re-opening O(index) footers per batch (ADVICE r10 #1)."""
-        import os
-        from concurrent.futures import ThreadPoolExecutor
-
-        import pyarrow.parquet as pq
-
-        def _one(rel: str):
-            try:
-                md = pq.ParquetFile(os.path.join(local_root, rel)).metadata
-            except Exception:
-                return rel, (None, None, None)
-            leaf = next(
-                (
-                    i
-                    for i in range(len(md.schema))
-                    if md.schema.column(i).name == self.id_col
-                ),
-                None,
-            )
-            if leaf is None:
-                return rel, (None, None, md.num_rows)
-            lo = hi = None
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(leaf).statistics
-                if st is None or not st.has_min_max:
-                    return rel, (None, None, md.num_rows)
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            return rel, (lo, hi, md.num_rows)
-
-        missing = [r for r in relpaths if r not in self._id_bounds_cache]
-        if missing:
-            with ThreadPoolExecutor(max_workers=16) as ex:
-                for rel, b in ex.map(_one, missing):
-                    # don't cache unreadable footers — the file may become
-                    # readable (or vanish from the live list) next sweep
-                    if b[2] is not None:
-                        self._id_bounds_cache[rel] = b
-        keep = set(relpaths) | set(live_files or ())
-        for dead in [k for k in self._id_bounds_cache if k not in keep]:
-            del self._id_bounds_cache[dead]
-        return {
-            r: self._id_bounds_cache.get(r, (None, None, None))
-            for r in relpaths
-        }
-
     def _committed_ids_among(
         self, delta: DataFrame, masked: bool
     ) -> DataFrame | None:
@@ -610,43 +531,28 @@ class AnnIndexStore(SnapshotStore):
         if local_root is not None:
             import bisect
 
-            bounds = self._id_bounds(
-                files, local_root, live_files=man["files"] if man else None
-            )
-            hits = []
-            for rel in files:
-                lo, hi, _n = bounds[rel]
-                if (
-                    lo is None
-                    or hi is None
-                    or bisect.bisect_left(ids, lo) < bisect.bisect_right(ids, hi)
-                ):
-                    hits.append(rel)
-            if not hits:
+            stats = self._footer_stats(files, self.id_col, local_root, man["files"])
+
+            def may_hold(groups) -> bool:
+                # an unreadable footer (None) or a row group without stats
+                # is scanned; otherwise the row groups fold into the
+                # file's id bounds
+                if groups is None or any(g[1] is None for g in groups):
+                    return True
+                return bool(groups) and bisect.bisect_left(
+                    ids, min(g[1] for g in groups)
+                ) < bisect.bisect_right(ids, max(g[2] for g in groups))
+
+            files = [f for f in files if may_hold(stats[f])]
+            if not files:
                 return empty
-            files = hits
-        # two-group read (bucketed vs delta schemas differ in partition
-        # vs data columns); only the id column is needed from either
-        parts = []
-        bucketed = [f for f in files if not self._is_code_delta(f)]
-        deltas = [f for f in files if self._is_code_delta(f)]
-        if bucketed:
-            parts.append(
-                self.spark.read.option("basePath", f"{self.root}/codes")
-                .parquet(*[f"{self.root}/{f}" for f in bucketed])
-                .select(self.id_col)
-            )
-        if deltas:
-            parts.append(
-                self.spark.read.parquet(
-                    *[f"{self.root}/{f}" for f in deltas]
-                ).select(self.id_col)
-            )
-        scan = parts[0]
-        for p in parts[1:]:
-            scan = scan.unionByName(p)
         out = (
-            scan.where(F.col(self.id_col).isin(ids))
+            self._read_code_rows(
+                [f for f in files if not self._is_code_delta(f)],
+                [f for f in files if self._is_code_delta(f)],
+            )
+            .select(self.id_col)
+            .where(F.col(self.id_col).isin(ids))
             .distinct()
         )
         if masked:
@@ -947,8 +853,8 @@ class AnnIndexStore(SnapshotStore):
                 # per touched (variant, cell) — measured 28.6 s / ~1000
                 # files for a 2000-vector batch at 512 cells on the bucketed
                 # path. Lookups consult runs alongside the bucket layout
-                # (codes()); maybe_fold_code_deltas() merges them at a
-                # rows-fraction trigger, amortizing the rewrite to O(delta)
+                # (codes()); maybe_fold_code_deltas() merges them at the
+                # shared fold trigger, amortizing the rewrite to O(delta)
                 # per append.
                 (
                     # repartition, NOT coalesce: coalesce(1) propagates up
@@ -1344,81 +1250,26 @@ class AnnIndexStore(SnapshotStore):
         # folded-deltas-only compactions still did work: report >= 1
         return len(hit) or (1 if folded_deltas else 0)
 
-    #: fold regardless of row fraction once this many delta-run FILES are
-    #: live — without a file-count arm, a stream of tiny batches could
-    #: park thousands of runs below the row floor and every lookup would
-    #: pay O(runs) file overhead again (review r10 round 2 #2)
-    DELTA_FOLD_MAX_FILES = 64
-
     def maybe_fold_code_deltas(self, max_fraction: float = 0.02) -> bool:
-        """Amortized LSM fold trigger for code delta runs (r10, pairs with
-        append()'s delta-run write — the BandIndexStore.maybe_fold_deltas
-        rule applied to the code layout): fold the runs into the bucketed
-        cell layout once their rows reach ``max_fraction`` of the
-        committed base (row floor: 2*CODES_DELTA_MAX_VECTORS code rows =
-        one maximal delta-append's worth, pq+opq), or once
-        DELTA_FOLD_MAX_FILES runs are live regardless of rows. Counts
-        come from the cached footer sweep on local roots (driver-side, no
-        Spark job — the trigger runs every gate batch) and fall back to
-        footer-bound Spark counts elsewhere. The fold itself is
-        compact_codes(fold_deltas=True)'s full rewrite, whose cost
-        amortizes to O(delta) per append at fraction f; lookup overhead
-        between folds is bounded by the same fraction plus the file cap.
-        Returns True iff a fold was committed."""
+        """Amortized LSM fold trigger for code delta runs (pairs with
+        append()'s delta-run write): SnapshotStore._fold_due over the code
+        layout, with a floor of 2*CODES_DELTA_MAX_VECTORS code rows (one
+        maximal delta append's worth, pq+opq). The fold is
+        compact_codes(fold_deltas=True)'s full rewrite. Returns True iff a
+        fold was committed."""
         man = self._snapshot()
-        if not man:
+        files = man["files"] if man else []
+        deltas = [f for f in files if self._is_code_delta(f)]
+        base = [f for f in files if f.startswith("codes/")]
+        if not self._fold_due(
+            deltas,
+            base,
+            2 * self.CODES_DELTA_MAX_VECTORS,
+            max_fraction,
+            self.id_col,
+            f"{self.root}/codes",
+        ):
             return False
-        delta_files = [f for f in man["files"] if self._is_code_delta(f)]
-        if not delta_files:
-            return False
-        bucketed = [f for f in man["files"] if f.startswith("codes/")]
-        if len(delta_files) < self.DELTA_FOLD_MAX_FILES:
-            local_root = self._local_root()
-            delta_rows = base_rows = 0
-            if local_root is not None:
-                bounds = self._id_bounds(
-                    delta_files + bucketed, local_root,
-                    live_files=man["files"],
-                )
-                counts = [b[2] for b in bounds.values()]
-                if all(n is not None for n in counts):
-                    delta_rows = sum(
-                        bounds[f][2] for f in delta_files
-                    )
-                    base_rows = sum(bounds[f][2] for f in bucketed)
-                else:
-                    local_root = None  # unreadable footer: Spark fallback
-            if local_root is None:
-                # remote roots (hdfs/s3a): the delta count scans O(delta
-                # runs) — batch-sized by the append contract — every
-                # trigger, but base_rows over the ENTIRE bucketed layout
-                # is cached against the file list, which only changes
-                # when a fold/compact/build commit rewrites codes/
-                # (ADVICE r10 #4: this was a per-micro-batch O(index)
-                # count job for an 'O(1) driver-side check')
-                delta_rows = self.spark.read.parquet(
-                    *[f"{self.root}/{f}" for f in delta_files]
-                ).count()
-                base_key = tuple(sorted(bucketed))
-                if (
-                    self._base_rows_cache is not None
-                    and self._base_rows_cache[0] == base_key
-                ):
-                    base_rows = self._base_rows_cache[1]
-                else:
-                    base_rows = (
-                        self.spark.read.option(
-                            "basePath", f"{self.root}/codes"
-                        )
-                        .parquet(*[f"{self.root}/{f}" for f in bucketed])
-                        .count()
-                        if bucketed
-                        else 0
-                    )
-                    self._base_rows_cache = (base_key, base_rows)
-            floor = 2 * self.CODES_DELTA_MAX_VECTORS
-            if delta_rows < max(floor, max_fraction * base_rows):
-                return False
         return self.compact_codes(min_files=2, fold_deltas=True) > 0
 
     def maybe_rebuild(

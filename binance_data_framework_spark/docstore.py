@@ -186,14 +186,6 @@ class BandIndexStore(SnapshotStore):
         # keys (the gate) MUST pass them.
         self.params = dict(params) if params else None
         self._layout_checked = False
-        # footer cache for the point-lookup candidate path: committed
-        # files are immutable, so (rel path -> row-group band_hash ranges)
-        # never staleness-checks; entries for superseded files are evicted
-        # against the live manifest on each sweep (review r10 #5 — a
-        # long-lived gate handle folds/compacts thousands of files over a
-        # stream, and "just stop being asked for" leaked them all).
-        # Rebuildable any time — losing it costs one footer sweep.
-        self._footer_cache: dict[str, list[tuple[int, int | None, int | None]]] = {}
 
     def _check_layout(self) -> None:
         """Pin (n_buckets, id_col, band-generation params) like
@@ -340,7 +332,8 @@ class BandIndexStore(SnapshotStore):
           never O(n_buckets files); lookups consult runs (they are
           batch-sized) alongside the bucket layout; maybe_fold_deltas()
           merges runs into the buckets once they reach a fraction of the
-          base — each row is rewritten O(1) amortized times.
+          base (or the run-file cap) — each row is rewritten O(1)
+          amortized times.
         - BUCKETED (corpus-sized appends — initial builds): straight into
           the bucket layout as before; a follow-up rebucket/compact is
           the builder's normal maintenance.
@@ -415,60 +408,6 @@ class BandIndexStore(SnapshotStore):
             )
         return self._read_files(list(man["files"]))
 
-    # _local_root() is inherited from SnapshotStore (hoisted in review
-    # r10 round 2 — three stores grew near-identical copies)
-
-    def _footer_ranges(
-        self,
-        relpaths: list[str],
-        local_root: str,
-        live_files: list[str] | None = None,
-    ) -> dict[str, list[tuple[int, int | None, int | None, int]]]:
-        """(rel -> [(row_group, band_hash min, band_hash max, n_rows)])
-        from the parquet footers, cached per immutable file. Missing
-        statistics surface as (None, None) — the planner then always
-        reads that row group (correct, just unpruned: e.g. files written
-        before the sorted-write change). ``live_files`` (the current
-        manifest's full file list, when the caller has it) drives cache
-        eviction of superseded files."""
-        import os
-        from concurrent.futures import ThreadPoolExecutor
-
-        import pyarrow.parquet as pq
-
-        def _one(rel: str):
-            md = pq.ParquetFile(os.path.join(local_root, rel)).metadata
-            hash_leaf = next(
-                i
-                for i in range(len(md.schema))
-                if md.schema.column(i).name == "band_hash"
-            )
-            out = []
-            for g in range(md.num_row_groups):
-                rg = md.row_group(g)
-                st = rg.column(hash_leaf).statistics
-                if st is not None and st.has_min_max:
-                    out.append((g, int(st.min), int(st.max), rg.num_rows))
-                else:
-                    out.append((g, None, None, rg.num_rows))
-            return rel, out
-
-        missing = [r for r in relpaths if r not in self._footer_cache]
-        if missing:
-            with ThreadPoolExecutor(max_workers=16) as ex:
-                for rel, ranges in ex.map(_one, missing):
-                    self._footer_cache[rel] = ranges
-        out = {r: self._footer_cache[r] for r in relpaths}
-        # evict superseded files (review r10 #5): callers always pass the
-        # live manifest's (touched) files, and folds/compactions replace
-        # the whole layout — keying the cache down to live ∪ just-asked
-        # bounds it at O(live files) across an unbounded stream
-        if live_files is not None:
-            keep = set(live_files) | set(relpaths)
-            for dead in [k for k in self._footer_cache if k not in keep]:
-                del self._footer_cache[dead]
-        return out
-
     def candidates(self, bands: DataFrame) -> DataFrame:
         """(id_new, id_stored) distinct pairs whose (band_idx, band_hash)
         matches a committed row. Empty store -> empty result.
@@ -492,7 +431,8 @@ class BandIndexStore(SnapshotStore):
           file-level pruning could not help (PLANS.md r9 measured the
           inversion: 3600 buckets slower than 360 at 18M rows because
           per-file overhead beats pruning until touched << n_buckets).
-        - JOIN (oversized probe sets, non-local roots): bucket-pruned scan
+        - JOIN (oversized probe sets, non-local roots, an unreadable
+          footer): bucket-pruned scan
           of the touched buckets' committed files joined on the band key —
           the pre-r10 path, still the right plan when the probe side is
           itself corpus-sized (dedup-style self-comparisons)."""
@@ -534,16 +474,6 @@ class BandIndexStore(SnapshotStore):
         if not per_bucket:
             return empty
         touched = {r["bucket"] for r in per_bucket}
-        if (
-            local_root is not None
-            and sum(r["n"] for r in per_bucket) <= self.CANDIDATES_PUSHDOWN_MAX
-        ):
-            probe_rows = (
-                incoming.select("id_new", "band_idx", "band_hash", "bucket")
-                .distinct()
-                .collect()
-            )
-            return self._candidates_point(probe_rows, man, local_root, empty)
         # delta runs are unpruned by bucket (batch-sized by construction —
         # a probe must always consult them)
         files = [
@@ -553,6 +483,19 @@ class BandIndexStore(SnapshotStore):
         ]
         if not files:
             return empty
+        if (
+            local_root is not None
+            and sum(r["n"] for r in per_bucket) <= self.CANDIDATES_PUSHDOWN_MAX
+        ):
+            stats = self._footer_stats(files, "band_hash", local_root, man["files"])
+            # an unreadable footer cannot be planned: take the join path
+            if None not in stats.values():
+                probe_rows = (
+                    incoming.select("id_new", "band_idx", "band_hash", "bucket")
+                    .distinct()
+                    .collect()
+                )
+                return self._candidates_point(probe_rows, stats, local_root, empty)
         stored = self._read_files(files)
         return (
             incoming.join(
@@ -568,12 +511,13 @@ class BandIndexStore(SnapshotStore):
         )
 
     def _candidates_point(
-        self, probe_rows, man: dict, local_root: str, empty: DataFrame
+        self, probe_rows, stats: dict, local_root: str, empty: DataFrame
     ) -> DataFrame:
         """Point-lookup execution of candidates() (see its docstring):
-        driver plans (file, row-group) hits from footer stats; executors
-        pyarrow-read exactly those row groups and pandas-join them to the
-        broadcast probe set, emitting pairs directly."""
+        driver plans (file, row-group) hits from the touched files' footer
+        ``stats`` (SnapshotStore._footer_stats); executors pyarrow-read
+        exactly those row groups and pandas-join them to the broadcast
+        probe set, emitting pairs directly."""
         import bisect
         import os
 
@@ -589,21 +533,11 @@ class BandIndexStore(SnapshotStore):
         for b in by_bucket:
             by_bucket[b] = sorted(set(by_bucket[b]))
         all_keys = sorted({h for ks in by_bucket.values() for h in ks})
-        touched_files = [
-            f
-            for f in man["files"]
+        hits: list[tuple[str, list[int]]] = []
+        for rel, groups in stats.items():
             # delta runs have no bucket directory: plan them against the
             # whole probe key set (they are batch-sized, and their rows
             # are band_hash-sorted so row-group ranges still prune)
-            if self._is_delta(f) or self._bucket_of(f) in by_bucket
-        ]
-        if not touched_files:
-            return empty
-        ranges = self._footer_ranges(
-            touched_files, local_root, live_files=list(man["files"])
-        )
-        hits: list[tuple[str, list[int]]] = []
-        for rel in touched_files:
             keys = (
                 all_keys
                 if self._is_delta(rel)
@@ -611,7 +545,7 @@ class BandIndexStore(SnapshotStore):
             )
             rgs = [
                 g
-                for g, mn, mx, _n in ranges[rel]
+                for g, mn, mx, _n in groups
                 if mn is None
                 or bisect.bisect_left(keys, mn)
                 < bisect.bisect_right(keys, mx)
@@ -775,53 +709,19 @@ class BandIndexStore(SnapshotStore):
         return self.rebucket()
 
     def maybe_fold_deltas(self, max_fraction: float = 0.02) -> bool:
-        """Amortized LSM fold trigger (r10, pairs with append()'s delta
-        runs): merge the delta runs into the bucket layout once their
-        rows reach ``max_fraction`` of the committed base (floor:
-        target_bucket_rows, so a small store folds once runs reach one
-        bucket's worth). The check is driver-side over the manifest +
-        cached footers (row counts come from parquet metadata — no scan);
-        the fold itself is compact()'s full rewrite, whose cost amortizes
-        to O(batch) per append: at fraction f, each row is rewritten
-        ~1/f-amortized once per decade of growth. Lookup overhead between
-        folds is bounded by the same fraction — candidates() reads runs
-        alongside buckets, and runs never exceed f x base rows. Returns
-        True iff a fold was committed."""
+        """Amortized LSM fold trigger (pairs with append()'s delta runs):
+        SnapshotStore._fold_due over the band layout, with a floor of
+        target_bucket_rows (a small store folds once its runs hold one
+        bucket's worth of rows). The fold is compact()'s full rewrite.
+        Returns True iff a fold was committed."""
         self._check_layout()
         man = self._snapshot()
-        if not man or not man["files"]:
-            return False
-        deltas = [f for f in man["files"] if self._is_delta(f)]
-        if not deltas:
-            return False
-        local_root = self._local_root()
-        if local_root is not None:
-            ranges = self._footer_ranges(
-                list(man["files"]), local_root, live_files=list(man["files"])
-            )
-            delta_rows = sum(
-                n for f in deltas for _g, _mn, _mx, n in ranges[f]
-            )
-            base_rows = sum(
-                n
-                for f in man["files"]
-                if not self._is_delta(f)
-                for _g, _mn, _mx, n in ranges[f]
-            )
-        else:  # non-local root: footer-bound spark counts (still no scan)
-            delta_rows = self.spark.read.parquet(
-                *[f"{self.root}/{f}" for f in deltas]
-            ).count()
-            base = [f for f in man["files"] if not self._is_delta(f)]
-            base_rows = (
-                self.spark.read.option("basePath", self.root)
-                .parquet(*[f"{self.root}/{f}" for f in base])
-                .count()
-                if base
-                else 0
-            )
-        threshold = max(self.target_bucket_rows, max_fraction * base_rows)
-        if delta_rows < threshold:
+        files = man["files"] if man else []
+        deltas = [f for f in files if self._is_delta(f)]
+        base = [f for f in files if not self._is_delta(f)]
+        if not self._fold_due(
+            deltas, base, self.target_bucket_rows, max_fraction, "band_hash", self.root
+        ):
             return False
         return self.compact() > 0
 

@@ -165,6 +165,12 @@ class SnapshotStore:
         # still run in parallel outside the lock
         self._commit_lock = _root_commit_lock(self.root)
         self._local_root_cache = _UNSET_LOCAL_ROOT
+        # (rel, column) -> row-group stats of an immutable committed file;
+        # see _footer_stats. Rebuildable any time: losing it costs one sweep
+        self._footer_cache: dict[tuple[str, str], list[tuple]] = {}
+        # (base file list, row count) of the fold trigger's last non-local
+        # base count; see _fold_due
+        self._fold_base_rows: tuple[tuple, int] | None = None
 
     # -- filesystem helpers ----------------------------------------------
     def _local_root(self) -> str | None:
@@ -225,6 +231,112 @@ class SnapshotStore:
         if base_path is not None:
             r = r.option("basePath", base_path)
         return r.parquet(*[f"{self.root}/{f}" for f in rels])
+
+    # -- LSM delta runs ----------------------------------------------------
+    # The derived-layout tiers (BandIndexStore's delta/, AnnIndexStore's
+    # codes_delta/) write each micro-batch as ONE sorted delta-run file
+    # beside their bucketed base and fold the runs into the base later.
+    # The footer stats that plan lookups over those files and the rule that
+    # decides the fold live here once; each tier keeps only its floor and
+    # its fold rewrite.
+
+    #: fold regardless of rows once this many delta runs are live: a stream
+    #: of tiny batches would otherwise park thousands of runs below the row
+    #: floor, and every lookup would pay O(runs) file overhead
+    DELTA_FOLD_MAX_FILES = 64
+
+    def _footer_stats(
+        self, rels: list[str], column: str, local_root: str, live_files: list[str]
+    ) -> dict[str, list[tuple] | None]:
+        """rel -> [(row_group, min, max, n_rows)] of ``column`` from the
+        parquet footers under ``local_root``, or None when a footer is
+        unreadable (e.g. a concurrent vacuum raced the sweep): the caller
+        then takes its Spark-scan path. A row group without min/max stats
+        (or a file without ``column``) reports (None, None) — always read
+        it. Footers are opened by a 16-thread sweep and cached per
+        immutable file, except unreadable ones, which may read next time.
+        Eviction keeps ``live_files`` (the manifest's file list) plus
+        ``rels``: callers ask for different subsets of the live files, and
+        evicting against the per-call subset would flush the other
+        callers' entries every batch, while keeping superseded files would
+        grow the cache without bound over a stream of folds."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        import pyarrow.parquet as pq
+
+        def _one(rel: str):
+            try:
+                md = pq.ParquetFile(os.path.join(local_root, rel)).metadata
+            except (OSError, ValueError):  # missing file / corrupt footer
+                return rel, None
+            leaf = next(
+                (i for i in range(len(md.schema)) if md.schema.column(i).name == column),
+                None,
+            )
+            out = []
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                st = rg.column(leaf).statistics if leaf is not None else None
+                if st is not None and st.has_min_max:
+                    out.append((g, st.min, st.max, rg.num_rows))
+                else:
+                    out.append((g, None, None, rg.num_rows))
+            return rel, out
+
+        cache = self._footer_cache
+        missing = [r for r in rels if (r, column) not in cache]
+        if missing:
+            with ThreadPoolExecutor(max_workers=16) as ex:
+                for rel, stats in ex.map(_one, missing):
+                    if stats is not None:
+                        cache[(rel, column)] = stats
+        keep = set(live_files) | set(rels)
+        for dead in [k for k in cache if k[0] not in keep]:
+            del cache[dead]
+        return {r: cache.get((r, column)) for r in rels}
+
+    def _fold_due(
+        self,
+        deltas: list[str],
+        base: list[str],
+        floor: int,
+        max_fraction: float,
+        column: str,
+        base_path: str,
+    ) -> bool:
+        """The amortized LSM fold trigger: fold once DELTA_FOLD_MAX_FILES
+        runs are live, or once the runs' rows reach ``max_fraction`` of the
+        base's (never below the tier's ``floor``). At fraction f each row
+        is rewritten ~1/f-amortized once per decade of growth, so a fold
+        costs O(batch) per append, and lookups between folds read at most
+        f x base rows plus the file cap in runs. Row counts come from the
+        cached footers on local roots: no Spark job, and the trigger runs
+        every gate batch. Elsewhere (or on an unreadable footer) they are
+        Spark counts: the runs' count is batch-sized, and the base count
+        is cached against the base file list, which only a fold, compact
+        or rebuild commit changes. Every file the tiers cache stats for is
+        a delta run or a base file, so they are the eviction list."""
+        if not deltas:
+            return False
+        if len(deltas) >= self.DELTA_FOLD_MAX_FILES:
+            return True
+        local_root = self._local_root()
+        stats = (
+            self._footer_stats(deltas + base, column, local_root, deltas + base)
+            if local_root is not None
+            else {}
+        )
+        if stats and None not in stats.values():
+            delta_rows = sum(g[3] for f in deltas for g in stats[f])
+            base_rows = sum(g[3] for f in base for g in stats[f])
+        else:
+            delta_rows = self._committed_parquet(deltas).count()
+            key = tuple(sorted(base))
+            if self._fold_base_rows is None or self._fold_base_rows[0] != key:
+                n = self._committed_parquet(base, base_path).count() if base else 0
+                self._fold_base_rows = (key, n)
+            base_rows = self._fold_base_rows[1]
+        return delta_rows >= max(floor, max_fraction * base_rows)
 
     def _fs_path(self, *segments: str):
         """(FileSystem, Path) for root/segments via the Hadoop FS API —
@@ -791,7 +903,7 @@ class OhlcvStore(SnapshotStore):
         key."""
         if superseded:
             stored = (
-                self._committed_parquet(superseded, base_path=self.root)
+                self._read_day_files(superseded)
                 .select(*OHLCV_COLS)
                 .withColumn("_rank", F.lit(1))
             )
@@ -845,18 +957,36 @@ class OhlcvStore(SnapshotStore):
         man = self._resolve(version)
         if not man["files"]:
             return self._empty(with_dt)
-        df = self._committed_parquet(man["files"], base_path=self.root)
+        df = self._read_day_files(man["files"])
         return df if with_dt else df.select(*OHLCV_COLS)
 
     # -- read path --------------------------------------------------------
+    def _read_day_files(self, files: list[str]) -> DataFrame:
+        """Committed OHLCV rows of ``files`` (OHLCV_COLS + dt). Undated
+        legacy files (adopted layouts: rows under symbol=/timeframe= but
+        outside any dt= dir) discover no dt partition, so one spark.read
+        over both kinds fails partition discovery with
+        CONFLICTING_PARTITION_COLUMN_NAMES. They read as a second group
+        whose dt is to_date(ts), the value every day dir holds by
+        construction, unioned with the dated group. A pure-dated listing
+        stays one read."""
+        cols = [*OHLCV_COLS, "dt"]
+        dated = [f for f in files if "/dt=" in f]
+        undated = [f for f in files if "/dt=" not in f]
+        parts = []
+        if dated:
+            parts.append(self._committed_parquet(dated, base_path=self.root).select(*cols))
+        if undated:
+            parts.append(
+                self._committed_parquet(undated, base_path=self.root)
+                .withColumn("dt", F.to_date("ts"))
+                .select(*cols)
+            )
+        return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+
     @staticmethod
     def _series_window_files(
-        files: list[str],
-        symbol: str,
-        timeframe: str,
-        lo_d=None,
-        hi_d=None,
-        include_undated: bool = False,
+        files: list[str], symbol: str, timeframe: str, lo_d=None, hi_d=None
     ) -> list[str]:
         """Prune a manifest file listing to one series (and optionally a
         [lo_d, hi_d] day window) DRIVER-SIDE, before any Spark plan exists.
@@ -869,18 +999,30 @@ class OhlcvStore(SnapshotStore):
         pay that on every single-series read. Pruning here keeps the scan
         O(series ∩ window) end to end.
 
-        ``include_undated``: files under the series prefix but outside a
-        ``dt=`` day dir (possible in adopted legacy layouts) are included
-        for READS (they may hold any days) but excluded for WRITE
-        supersession (save_data only rewrites day-bounded files)."""
-        out = []
-        for d, rel in OhlcvStore._series_days(files, symbol, timeframe):
-            if d is None:
-                if include_undated:
-                    out.append(rel)
-            elif (lo_d is None or d >= lo_d) and (hi_d is None or d <= hi_d):
-                out.append(rel)
-        return out
+        Files under the series prefix but outside a ``dt=`` day dir
+        (adopted legacy layouts) may hold any day, so every window
+        includes them."""
+        return [
+            rel
+            for d, rel in OhlcvStore._series_days(files, symbol, timeframe)
+            if d is None
+            or ((lo_d is None or d >= lo_d) and (hi_d is None or d <= hi_d))
+        ]
+
+    def _upsert_files(
+        self, files: list[str], symbol: str, timeframe: str, lo_d, hi_d
+    ) -> tuple[list[str], bool]:
+        """(superseded, legacy) of an upsert of one series over the day
+        window lo_d..hi_d: the window's day files, or — when the series
+        still holds an undated legacy file (``legacy``), which may hold any
+        day — every file of the series. The merge then rewrites the legacy
+        rows into day files once (stored rows at rank 1, so new rows still
+        win), leaving no series mixed and no ts stored twice."""
+        window = self._series_window_files(files, symbol, timeframe, lo_d, hi_d)
+        legacy = any("/dt=" not in f for f in window)
+        if legacy:
+            return self._series_window_files(files, symbol, timeframe), True
+        return window, False
 
     @staticmethod
     def _series_days(files: list[str], symbol: str, timeframe: str):
@@ -900,19 +1042,17 @@ class OhlcvStore(SnapshotStore):
         self, symbol: str, timeframe: str, lo_d=None, hi_d=None
     ) -> tuple[DataFrame, bool]:
         """Manifest-pruned scan of one series (see _series_window_files);
-        always carries the dt partition column for further filtering.
-        Returns (scan, undated): ``undated`` is True when the pruned
-        listing holds an undated legacy file, whose rows may span any
-        days."""
+        always carries the dt column for further filtering (derived from
+        ts for undated legacy files, see _read_day_files). Returns (scan,
+        undated): ``undated`` is True when the pruned listing holds an
+        undated legacy file, whose rows may span any days."""
         man = self._snapshot()
         files = self._series_window_files(
-            man["files"] if man else [], symbol, timeframe, lo_d, hi_d,
-            include_undated=True,
+            man["files"] if man else [], symbol, timeframe, lo_d, hi_d
         )
         if not files:
             return self._empty(with_dt=True), False
-        undated = any(d is None for d, _ in self._series_days(files, symbol, timeframe))
-        return self._committed_parquet(files, base_path=self.root), undated
+        return self._read_day_files(files), any("/dt=" not in f for f in files)
 
     def _exists(self) -> bool:
         man = self._snapshot()
@@ -928,7 +1068,7 @@ class OhlcvStore(SnapshotStore):
         man = self._snapshot()
         if not man or not man["files"]:
             return self._empty(with_dt)
-        df = self._committed_parquet(man["files"], base_path=self.root)
+        df = self._read_day_files(man["files"])
         return df if with_dt else df.select(*OHLCV_COLS)
 
     # -- reference API surface ------------------------------------------
@@ -945,7 +1085,9 @@ class OhlcvStore(SnapshotStore):
         Days outside the incoming range are never read and never rewritten
         (the reference's SQLite rewrites nothing but holds everything in one
         B-tree; a naive Spark translation rewrote the whole series per
-        batch). The new day files are APPENDED (unique part names), then the
+        batch). The one exception is a series that still holds an undated
+        legacy file: its first upsert rewrites it whole, once, into day
+        files (_upsert_files). The new day files are APPENDED (unique part names), then the
         snapshot manifest swap publishes them and retires the old files —
         concurrent readers see the old or the new day, never neither (see
         module docstring).
@@ -979,12 +1121,15 @@ class OhlcvStore(SnapshotStore):
             return True  # empty batch: nothing to merge or rewrite
         lo_d, hi_d = bounds["lo_d"], bounds["hi_d"]
         man = self._snapshot()
-        superseded = self._series_window_files(
+        superseded, legacy = self._upsert_files(
             man["files"] if man else [], symbol, timeframe, lo_d, hi_d
         )
         # a merge window within ONE_TASK_MAX_DAYS is merged and written as
-        # one task: one job, no shuffle (see _merge_writer)
-        writer = self._merge_writer(incoming, superseded, self.fits_one_task(lo_d, hi_d))
+        # one task: one job, no shuffle (see _merge_writer); a legacy
+        # series' rewrite is unbounded
+        writer = self._merge_writer(
+            incoming, superseded, not legacy and self.fits_one_task(lo_d, hi_d)
+        )
         # the commit rebases onto the LATEST snapshot: a different series
         # committed since our merge snapshot composes (lock in-process,
         # CAS-retry cross-process); a same-series race is detected and
@@ -1054,9 +1199,9 @@ class OhlcvStore(SnapshotStore):
             {
                 f
                 for r in bounds
-                for f in self._series_window_files(
+                for f in self._upsert_files(
                     live, r["symbol"], r["timeframe"], r["lo_d"], r["hi_d"]
-                )
+                )[0]
             }
         )
         # bulk imports keep the distributed plan: no day bound holds here
@@ -1097,16 +1242,10 @@ class OhlcvStore(SnapshotStore):
             e.date() if e is not None else None,
         )
         df = df.where((F.col("symbol") == symbol) & (F.col("timeframe") == timeframe))
-        # an undated legacy series scans without a dt column: its exact ts
-        # predicates alone bound it
         if s is not None:
-            df = df.where(F.col("ts") >= F.lit(s))
-            if not undated:
-                df = df.where(F.col("dt") >= F.lit(s.date()))
+            df = df.where((F.col("ts") >= F.lit(s)) & (F.col("dt") >= F.lit(s.date())))
         if e is not None:
-            df = df.where(F.col("ts") <= F.lit(e))
-            if not undated:
-                df = df.where(F.col("dt") <= F.lit(e.date()))
+            df = df.where((F.col("ts") <= F.lit(e)) & (F.col("dt") <= F.lit(e.date())))
         df = df.select(*OHLCV_COLS)
         bounded = s is not None and e is not None
         if bounded and not undated and self.fits_one_task(s.date(), e.date()):
@@ -1142,7 +1281,7 @@ class OhlcvStore(SnapshotStore):
         if not probe:
             return False, None
         row = (
-            self._committed_parquet(probe, base_path=self.root)
+            self._read_day_files(probe)
             # two day files: one task, so the global agg needs no shuffle
             .coalesce(1)
             .agg(F.min("ts").alias("start_ts"), F.max("ts").alias("end_ts"))
@@ -1227,9 +1366,7 @@ class OhlcvStore(SnapshotStore):
         if not todo:
             return 0
         originals = sorted(f for fl in todo.values() for f in fl)
-        writer = self._day_file_writer(
-            self._committed_parquet(originals, base_path=self.root), False
-        )
+        writer = self._day_file_writer(self._read_day_files(originals), False)
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", max_records_per_file)
         # a concurrent upsert that superseded a compacted file aborts the

@@ -663,7 +663,7 @@ def neardup_gate_batch(
                 # LSM fold leg (r10, mirrors the band index): micro-batch
                 # appends land as code delta runs (O(1) files per batch,
                 # not one per touched cell); fold them into the bucketed
-                # layout at the rows-fraction trigger. A rebuild just
+                # layout at the shared fold trigger. A rebuild just
                 # rewrote the whole layout — nothing to fold.
                 if not rebuilt:
                     rebuilt = ann_store.maybe_fold_code_deltas()

@@ -11,119 +11,24 @@ from binance_data_framework_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.001"
 
-# ---------------------------------------------------------------------------
-# Slow-test gate (VERDICT r13 #3): the full suite takes ~44 min — longer
+# Slow-test gate (VERDICT r13 #3): the full suite takes ~44 min, longer
 # than the external verify budget, so a default `pytest tests/` run must
-# finish in well under 15 min. Tests below were measured >= ~12 s each
-# (r14 per-test duration sweep, /tmp-logged and summarized in
-# OPTIMIZATION_r14.md); they are DESELECTED by default and run with
+# finish in well under 15 min. Tests marked `@pytest.mark.slow` (the marker
+# is registered in pyproject.toml) were measured >= ~12 s each (r14
+# per-test duration sweep, summarized in OPTIMIZATION_r14.md); they are
+# DESELECTED by default and run with
 #   SPARK_GRAFT_FULL_TESTS=1 python -m pytest tests/
-# The default set keeps at least one fast test per module/operator family
-# plus every new-r14 invariant (fingerprint value-identity, CC local
-# finish), so the quick gate still exercises each tier end to end.
-# ---------------------------------------------------------------------------
-SLOW_TESTS = {
-    ("test_plans.py", "test_whole_registry_plan_lint"),
-    ("test_streaming.py", "test_streaming_full_stack_gate"),
-    ("test_properties.py", "test_rebucket_reshard_candidate_and_read_invariance"),
-    ("test_streaming.py", "test_gate_auto_rebuckets_and_compacts_band_index"),
-    ("test_ann_index.py", "test_code_delta_run_lifecycle"),
-    ("test_streaming.py", "test_gated_ingest_rebuilds_outgrown_ann_index"),
-    ("test_ann_index.py", "test_serve_batch_reads_version_consistent_codes"),
-    ("test_ann_index.py", "test_append_purge_never_skips_threshold_purge"),
-    ("test_ann_index.py", "test_maybe_rebuild_rederives_cells_on_grown_corpus"),
-    ("test_ann_index.py", "test_compact_codes_folds_append_fragments"),
-    ("test_ann_index.py", "test_append_purge_modes_and_readd_after_delete"),
-    ("test_ann_index.py", "test_fingerprint_staleness_triggers_rebuild"),
-    ("test_streaming.py", "test_delete_documents_composes_all_three_tiers"),
-    ("test_ingest.py", "test_stream_endurance_restart_exactly_once"),
-    ("test_streaming.py", "test_gated_ingest_folds_code_delta_runs"),
-    ("test_streaming.py", "test_gated_ingest_auto_compacts_fragmented_cells"),
-    ("test_ann_index.py", "test_build_load_roundtrip_and_idempotence"),
-    ("test_streaming.py", "test_streaming_gated_ingest_feeds_ann_index"),
-    ("test_ann_index.py", "test_sampled_build_deterministic_and_encodes_full_corpus"),
-    ("test_ann_index.py", "test_append_rolls_fingerprint_and_encodes_identically"),
-    ("test_ann_index.py", "test_append_auto_purge_threshold"),
-    ("test_streaming.py", "test_gate_replay_crash_windows_and_drifted_resend"),
-    ("test_streaming.py", "test_semantic_gate_batch_stats_and_stages"),
-    ("test_ann_index.py", "test_filtered_search_decision_cache"),
-    ("test_extensions.py", "test_ivfpq_topk_invariants"),
-    ("test_ann_index.py", "test_stream_ann_serve_matches_batch_and_hot_reloads"),
-    ("test_properties.py", "test_read_keys_paths_agree_property"),
-    ("test_ann_index.py", "test_delete_tombstones_masked_search_then_purge"),
-    ("test_properties.py", "test_cross_candidates_equal_union_selfjoin_restricted"),
-    ("test_ann_index.py", "test_build_lsh_param_change_retrains"),
-    ("test_ann_index.py", "test_id_bounds_cache_survives_subset_calls"),
-    ("test_ann_index.py", "test_codes_cell_prune_contract_stable_across_fold"),
-    ("test_streaming.py", "test_streaming_ohlcv_finalized_bars"),
-    ("test_ann_index.py", "test_persisted_search_equals_inplan_trained_search"),
-    ("test_properties.py", "test_asof_matches_bruteforce"),
-    ("test_ann_index.py", "test_purge_is_partition_inference_config_independent"),
-    ("test_properties.py", "test_resample_matches_pandas"),
-    ("test_ann_index.py", "test_remote_root_fold_trigger_caches_base_rows"),
-    ("test_store.py", "test_save_many_single_commit_multi_series"),
-    ("test_extensions.py", "test_minhash_finds_exact_duplicates"),
-    ("test_skew.py", "test_salted_join_matches_plain_inner"),
-    ("test_properties.py", "test_pagerank_matches_bruteforce"),
-    ("test_store.py", "test_save_and_read_roundtrip"),
-    ("test_store.py", "test_delta_log_checkpoint_cadence_and_pruning"),
-    ("test_ann_index.py", "test_serve_probe_cap_raises"),
-    ("test_store.py", "test_vacuum_sweeps_prior_failed_grace_window"),
-    ("test_streaming.py", "test_stream_semantic_ingest_wrapper"),
-    ("test_streaming.py", "test_gate_eval_decontamination"),
-    ("test_extensions.py", "test_opq_rotation_improves_quantization"),
-    ("test_text_retrieval.py", "test_pii_redact_stages_do_not_double_count"),
-    ("test_curation.py", "test_pack_sequences_conserves_docs_and_tokens"),
-    ("test_live_http.py", "test_live_datasource_executor_parallel_http"),
-    ("test_multimodal.py", "test_feature_extraction_schema_and_determinism"),
-    ("test_resample.py", "test_resample_matches_pandas_1h"),
-    ("test_streaming.py", "test_streaming_neardup_gated_ingest"),
-    ("test_extensions.py", "test_blocked_adc_matches_row_form"),
-    ("test_properties.py", "test_substring_dedup_matches_bruteforce"),
-    ("test_extensions.py", "test_topk_filtered_ivfpq_invariants"),
-    ("test_ingest.py", "test_sqlite_migration_roundtrip"),
-    ("test_text_retrieval.py", "test_repetition_matches_counter_reference"),
-    ("test_properties.py", "test_stratified_sampling_is_nested"),
-    ("test_properties.py", "test_range_join_matches_bruteforce_property"),
-    ("test_extensions.py", "test_topk_filtered_ivfpq_selectivity_gate"),
-    ("test_streaming.py", "test_gate_drift_monitoring_detects_boilerplate_wave"),
-    ("test_store.py", "test_vacuum_checkpoint_sweep_reclaims_other_writers_leak"),
-    ("test_streaming.py", "test_build_eval_index_rerun_is_idempotent"),
-    ("test_docstore.py", "test_duplicate_survivor_is_partitioning_invariant"),
-    ("test_docstore.py", "test_gate_auto_reshards_docstore"),
-    ("test_docstore.py", "test_band_delta_runs_and_fold"),
-    ("test_docstore.py", "test_reshard_and_rebucket_detect_concurrent_writes"),
-    ("test_docstore.py", "test_candidates_point_lookup_matches_join_path"),
-    ("test_docstore.py", "test_append_docs_add_only_semantics"),
-    ("test_docstore.py", "test_footer_cache_evicts_superseded_files"),
-    ("test_docstore.py", "test_band_index_auto_rebucket_grows_and_preserves_candidates"),
-    ("test_docstore.py", "test_band_index_pinned_never_rebuckets_and_auto_adopts"),
-    ("test_ingest.py", "test_stream_kline_source_to_store_end_to_end"),
-    ("test_ingest.py", "test_incremental_fetch_ranges_process_tz_independent"),
-    ("test_ingest.py", "test_load_many_fetches_in_parallel"),
-    ("test_ingest.py", "test_kline_datasource_streaming_tail"),
-    ("test_extensions.py", "test_pagerank_deep_iteration_bounded_plan"),
-    ("test_properties.py", "test_pack_sequences_conservation_property"),
-    ("test_docstore.py", "test_docstore_optimize_compacts_multifile_shards"),
-    ("test_ann_index.py", "test_compact_codes_detects_concurrent_append"),
-}
+# The default set keeps at least one fast test per module/operator family,
+# so the quick gate still exercises each tier end to end.
 
 
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
         return
-    deselected = []
-    kept = []
-    for item in items:
-        fname = os.path.basename(str(item.fspath))
-        name = item.name.split("[")[0]
-        if (fname, name) in SLOW_TESTS:
-            deselected.append(item)
-        else:
-            kept.append(item)
+    deselected = [item for item in items if item.get_closest_marker("slow")]
     if deselected:
         config.hook.pytest_deselected(items=deselected)
-        items[:] = kept
+        items[:] = [item for item in items if not item.get_closest_marker("slow")]
 
 
 @pytest.fixture(scope="session")

@@ -39,6 +39,7 @@ def built(spark, tmp_path_factory):
     return st, idx, df
 
 
+@pytest.mark.slow
 def test_build_load_roundtrip_and_idempotence(spark, tmp_path):
     df = _emb(spark)
     st = AnnIndexStore(spark, str(tmp_path / "idx"))
@@ -63,6 +64,7 @@ def test_build_load_roundtrip_and_idempotence(spark, tmp_path):
     assert forced.opq_rotation == idx.opq_rotation
 
 
+@pytest.mark.slow
 def test_fingerprint_staleness_triggers_rebuild(spark, tmp_path):
     root = str(tmp_path / "idx")
     df = _emb(spark)
@@ -164,6 +166,7 @@ def test_codes_layout_and_physical_cell_pruning(built):
         st.codes("nope")
 
 
+@pytest.mark.slow
 def test_persisted_search_equals_inplan_trained_search(built):
     """The whole point of persistence: a search over the committed
     artifact is the SAME computation as the train-in-plan path — equal
@@ -220,6 +223,7 @@ def test_coded_without_books_rejected(built):
         )
 
 
+@pytest.mark.slow
 def test_append_rolls_fingerprint_and_encodes_identically(spark, tmp_path):
     """The third leg of train-once: append() must (a) reuse the committed
     model untouched, (b) roll the sum-decomposable fingerprint forward so
@@ -273,6 +277,7 @@ def test_append_rolls_fingerprint_and_encodes_identically(spark, tmp_path):
         AnnIndexStore(spark, str(tmp_path / "empty")).append(delta)
 
 
+@pytest.mark.slow
 def test_build_lsh_param_change_retrains(spark, tmp_path):
     """ensure-built idempotence must include the pinned LSH params
     (ADVICE r6): a build() requesting different planes/tables is a new
@@ -290,6 +295,7 @@ def test_build_lsh_param_change_retrains(spark, tmp_path):
     assert idx2.lsh["n_planes"] == 6 and idx2.lsh["n_tables"] == 4
 
 
+@pytest.mark.slow
 def test_delete_tombstones_masked_search_then_purge(spark, tmp_path):
     """The fourth leg (VERDICT r6 #2): delete() tombstones ids in one
     model-sized commit — searches exclude them IMMEDIATELY (masked codes),
@@ -354,6 +360,7 @@ def test_delete_tombstones_masked_search_then_purge(spark, tmp_path):
     assert st.purge_tombstones() == 0  # idempotent
 
 
+@pytest.mark.slow
 def test_append_purge_modes_and_readd_after_delete(spark, tmp_path):
     """append(purge=...) semantics (ADVICE r7 #3 — the old unconditional
     purge attached an O(affected-cells) rewrite to the O(delta) op):
@@ -417,6 +424,7 @@ def test_append_purge_modes_and_readd_after_delete(spark, tmp_path):
         st.append(back5, purge="sometimes")
 
 
+@pytest.mark.slow
 def test_append_auto_purge_threshold(spark, tmp_path, monkeypatch):
     """auto's second trigger: a tombstone set past PURGE_APPEND_THRESHOLD
     is reclaimed even for a disjoint delta (the set is supposed to stay
@@ -436,6 +444,7 @@ def test_append_auto_purge_threshold(spark, tmp_path, monkeypatch):
     ).count() == 0
 
 
+@pytest.mark.slow
 def test_append_purge_never_skips_threshold_purge(spark, tmp_path, monkeypatch):
     """purge="never" must not run the PURGE_APPEND_THRESHOLD purge either
     (ADVICE r8 #1): the threshold branch belongs to "auto" — "never" is the
@@ -465,6 +474,7 @@ def test_append_purge_never_skips_threshold_purge(spark, tmp_path, monkeypatch):
     assert st.codes("pq").where(F.col("vec_id").isin(5, 7)).count() == 0
 
 
+@pytest.mark.slow
 def test_purge_is_partition_inference_config_independent(spark, tmp_path):
     """purge_tombstones matches collected (variant, cell) values against
     path-parsed ones; with partition-column type inference DISABLED the
@@ -488,6 +498,7 @@ def test_purge_is_partition_inference_config_independent(spark, tmp_path):
     assert st.codes("pq", masked=False).count() == 59
 
 
+@pytest.mark.slow
 def test_compact_codes_folds_append_fragments(spark, tmp_path, monkeypatch):
     """compact_codes: BULK appends (over the delta threshold) fragment
     each touched cell into one file per append, micro-batch appends land
@@ -564,6 +575,7 @@ def test_compact_codes_folds_append_fragments(spark, tmp_path, monkeypatch):
     )
 
 
+@pytest.mark.slow
 def test_maybe_rebuild_rederives_cells_on_grown_corpus(spark, tmp_path):
     """maybe_rebuild (ADVICE r7 #4): an auto-sized index keeps batch-1's
     cell count through every append; once the auto rule at the CURRENT
@@ -613,6 +625,7 @@ def test_maybe_rebuild_rederives_cells_on_grown_corpus(spark, tmp_path):
     assert st2.load().n_centroids == BUILD["n_centroids"]
 
 
+@pytest.mark.slow
 def test_filtered_search_decision_cache(spark, tmp_path, monkeypatch):
     """VERDICT r9 #7: the filtered search's measured decision
     (selectivity + starved-probe set) persists next to the index model
@@ -670,6 +683,7 @@ def test_filtered_search_decision_cache(spark, tmp_path, monkeypatch):
     assert tent is not None and tent["starved"] == []
 
 
+@pytest.mark.slow
 def test_code_delta_run_lifecycle(spark, tmp_path, monkeypatch):
     """r10 LSM tier end to end: a micro-batch append lands as ONE delta
     run; searches/counts see its rows immediately; delete() reads the
@@ -731,37 +745,7 @@ def test_code_delta_run_lifecycle(spark, tmp_path, monkeypatch):
     assert st.maybe_fold_code_deltas() is False
 
 
-def test_id_bounds_cache_survives_subset_calls(spark, tmp_path):
-    """ADVICE r10 #1: _id_bounds evicts against the LIVE manifest list,
-    not the per-call subset — in the gate the append probe (pq codes +
-    deltas) and the fold trigger (all codes + deltas) alternate every
-    micro-batch, and per-call eviction made each flush the other's
-    footer entries (O(index) footer re-opens per batch)."""
-    df = _emb(spark)
-    st = AnnIndexStore(spark, str(tmp_path / "idx"))
-    st.build(df.where(F.col("vec_id") < 40), **BUILD)
-    st.append(df.where(F.col("vec_id") >= 40))
-    man = st._snapshot()
-    local_root = st._local_root()
-    assert local_root is not None
-    all_code = [
-        f
-        for f in man["files"]
-        if f.startswith("codes/") or f.startswith("codes_delta/")
-    ]
-    st._id_bounds(all_code, local_root, live_files=man["files"])
-    opq = [f for f in all_code if f.startswith("codes/variant=opq/")]
-    assert opq and all(f in st._id_bounds_cache for f in opq)
-    # the append-probe subset (pq + deltas) must NOT evict opq entries
-    pq_subset = [f for f in all_code if not f.startswith("codes/variant=opq/")]
-    st._id_bounds(pq_subset, local_root, live_files=man["files"])
-    assert all(f in st._id_bounds_cache for f in opq)
-    # but a file live in neither the call nor the manifest IS evicted
-    st._id_bounds_cache["ghost/file.parquet"] = (0, 0, 0)
-    st._id_bounds(pq_subset, local_root, live_files=man["files"])
-    assert "ghost/file.parquet" not in st._id_bounds_cache
-
-
+@pytest.mark.slow
 def test_codes_cell_prune_contract_stable_across_fold(spark, tmp_path,
                                                       monkeypatch):
     """ADVICE r10 #3: a cell prune that matches nothing returns an EMPTY
@@ -790,33 +774,6 @@ def test_codes_cell_prune_contract_stable_across_fold(spark, tmp_path,
         st.codes("xyz")
 
 
-def test_remote_root_fold_trigger_caches_base_rows(spark, tmp_path,
-                                                   monkeypatch):
-    """ADVICE r10 #4: on non-local roots the fold trigger's base_rows
-    (a count over the ENTIRE bucketed layout) is cached against the
-    bucketed file list — proven by poisoning the cache with a huge count
-    and observing the trigger trust it (a recount would fold)."""
-    df = _emb(spark)
-    st = AnnIndexStore(spark, str(tmp_path / "idx"))
-    st.build(df.where(F.col("vec_id") < 40), **BUILD)
-    st.append(df.where(F.col("vec_id") >= 40))
-    monkeypatch.setattr(st, "_local_root", lambda: None)  # simulate s3a
-    monkeypatch.setattr(AnnIndexStore, "CODES_DELTA_MAX_VECTORS", 1)
-    man = st._snapshot()
-    key = tuple(sorted(f for f in man["files"] if f.startswith("codes/")))
-    # poisoned cache: base so large the fraction floor can't be met — a
-    # trigger that recounted the layout would see the real ~80 rows and
-    # fold; one that trusts the cache stays quiet
-    st._base_rows_cache = (key, 10**7)
-    assert st.maybe_fold_code_deltas() is False
-    # cache cleared -> recount happens, cache repopulates, fold fires
-    st._base_rows_cache = None
-    assert st.maybe_fold_code_deltas() is True
-    assert not any(
-        f.startswith("codes_delta/") for f in st._snapshot()["files"]
-    )
-
-
 def test_train_sample_deterministic_and_partition_invariant(spark):
     """r11 sampled training: membership is a pure id-hash (no RNG, no
     partition sensitivity); at or below the cap the input passes through
@@ -833,6 +790,7 @@ def test_train_sample_deterministic_and_partition_invariant(spark):
     assert 50 <= len(ids1) <= 150
 
 
+@pytest.mark.slow
 def test_sampled_build_deterministic_and_encodes_full_corpus(
     spark, tmp_path, monkeypatch
 ):
@@ -901,6 +859,7 @@ def test_sampled_build_deterministic_and_encodes_full_corpus(
     assert hits.groupBy("probe_id").count().count() == 3
 
 
+@pytest.mark.slow
 def test_stream_ann_serve_matches_batch_and_hot_reloads(spark, tmp_path):
     """r11 streaming serving leg: (a) per-batch results over the probe
     stream are row-identical to the batch committed-index search for the
@@ -997,6 +956,7 @@ def test_stream_ann_serve_matches_batch_and_hot_reloads(spark, tmp_path):
     assert dupes == 0
 
 
+@pytest.mark.slow
 def test_serve_probe_cap_raises(spark, tmp_path, monkeypatch):
     """VERDICT r11 #1: an unbounded micro-batch must hit SERVE_PROBE_MAX
     instead of silently building an O(probes x dim) driver matrix — the
@@ -1019,6 +979,7 @@ def test_serve_probe_cap_raises(spark, tmp_path, monkeypatch):
     assert out.groupBy("probe_id").count().count() == 6
 
 
+@pytest.mark.slow
 def test_serve_batch_reads_version_consistent_codes(spark, tmp_path):
     """ADVICE r11 #1: a rebuild committing between load() and the batch's
     code read must NOT mix new codes with the stale handle's codebooks —
@@ -1052,6 +1013,7 @@ def test_serve_batch_reads_version_consistent_codes(spark, tmp_path):
     assert got == want and got
 
 
+@pytest.mark.slow
 def test_compact_codes_detects_concurrent_append(spark, tmp_path, monkeypatch):
     """compact_codes races a concurrent append whose tombstone purge
     retires code files the compaction read: the compaction's commit must

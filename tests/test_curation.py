@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from binance_data_framework_spark.operators import curation as CU
@@ -13,6 +14,7 @@ from binance_data_framework_spark.sources.fixtures import load_table
 SF = "/root/testdata/sf0.001"
 
 
+@pytest.mark.slow
 def test_pack_sequences_conserves_docs_and_tokens(spark):
     docs = load_table(spark, SF, "documents")
     n_docs = docs.count()
@@ -164,8 +166,6 @@ def test_chunk_documents_covers_and_overlaps(spark):
     assert len(by_doc[2]) == 1 and by_doc[2][0]["chunk_text"] == "a b"
     assert by_doc[3][0]["n_tokens"] == 1
     # invalid strides raise
-    import pytest
-
     with pytest.raises(ValueError, match="overlap"):
         chunk_documents(df, max_tokens=8, overlap=8)
 
@@ -175,8 +175,6 @@ def test_sample_mixture_hits_target_composition(spark, sf_dir):
     expectation-free integer form: the binding source keeps everything,
     other sources keep floor-ppm fractions, absent-from-target sources are
     dropped, and the filter is deterministic across runs."""
-    import pytest
-
     from binance_data_framework_spark.operators.curation import sample_mixture
     from binance_data_framework_spark.sources.fixtures import load_table
 
@@ -258,8 +256,6 @@ def test_shard_export_round_trip_deterministic(spark, tmp_path):
 
 
 def test_shard_assign_rejects_bad_n(spark):
-    import pytest
-
     from binance_data_framework_spark.operators.curation import shard_assign
 
     docs = spark.createDataFrame([(1, "x")], "doc_id long, text string")

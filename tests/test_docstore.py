@@ -87,6 +87,7 @@ def test_docstore_time_travel_across_curation_runs(spark, tmp_path):
     assert st.history().count() >= 2
 
 
+@pytest.mark.slow
 def test_docstore_optimize_compacts_multifile_shards(spark, tmp_path):
     """Legacy adoption inherits whatever fragmentation the external writer
     left (the _snapshot bootstrap); optimize() must bin-pack each
@@ -252,6 +253,7 @@ def _band_rows(spark, ids, per_doc=4):
     )
 
 
+@pytest.mark.slow
 def test_band_index_auto_rebucket_grows_and_preserves_candidates(
     spark, tmp_path
 ):
@@ -292,6 +294,7 @@ def test_band_index_auto_rebucket_grows_and_preserves_candidates(
     assert st.maybe_rebucket() is False
 
 
+@pytest.mark.slow
 def test_band_index_pinned_never_rebuckets_and_auto_adopts(spark, tmp_path):
     """Provenance rules: a pinned store never auto-rebuckets (the
     ANN pinned-n_centroids rule); reopening an auto store with
@@ -349,6 +352,7 @@ def test_band_index_stale_handle_sees_rebucket(spark, tmp_path):
     assert b.n_buckets == a.n_buckets
 
 
+@pytest.mark.slow
 def test_append_docs_add_only_semantics(spark, tmp_path):
     """append_docs (r9 — the O(batch) gate write path): add-only commit
     of new keys with no stored file rewritten; on_existing picks the
@@ -469,6 +473,7 @@ def test_docstore_auto_reshard_grows_and_preserves_reads(spark, tmp_path):
     assert pin.n_shards == 2
 
 
+@pytest.mark.slow
 def test_gate_auto_reshards_docstore(spark, tmp_path):
     """The gate's doc_reshard_factor leg: an auto-sharded store grows its
     shard count mid-stream; dedup detection and point reads stay correct
@@ -504,6 +509,7 @@ def test_gate_auto_reshards_docstore(spark, tmp_path):
     assert s["dropped_vs_corpus"] == 1 and s["saved"] == 0
 
 
+@pytest.mark.slow
 def test_reshard_and_rebucket_detect_concurrent_writes(spark, tmp_path):
     """A layout remap races a concurrent writer: the remap resolved its
     snapshot, the writer superseded one of those files, and the remap's
@@ -566,6 +572,7 @@ def test_reshard_and_rebucket_detect_concurrent_writes(spark, tmp_path):
     assert ba.candidates(probe).count() > 0  # index intact post-abort
 
 
+@pytest.mark.slow
 def test_duplicate_survivor_is_partitioning_invariant(spark, tmp_path):
     """VERDICT r9 #3: among duplicate incoming keys the survivor is chosen
     by content hash, so the committed bytes are identical no matter how
@@ -614,6 +621,7 @@ def test_duplicate_survivor_is_partitioning_invariant(spark, tmp_path):
     assert a == b
 
 
+@pytest.mark.slow
 def test_candidates_point_lookup_matches_join_path(spark, tmp_path, monkeypatch):
     """VERDICT r9 #2: the point-lookup candidate path (footer-planned
     row-group reads + pandas hash join against the broadcast probe set)
@@ -692,8 +700,6 @@ def test_candidates_point_lookup_prunes_row_groups(spark, tmp_path):
     """The footer plan must actually SKIP row groups: with band_hash-sorted
     multi-row-group files and a one-key probe, the planned hit list reads
     fewer row groups than the store holds."""
-    import pyarrow.parquet as pq
-
     # target_bucket_rows below the append size, so the append takes the
     # BUCKETED write path (a batch-sized append becomes a delta run)
     st = BandIndexStore(
@@ -703,7 +709,7 @@ def test_candidates_point_lookup_prunes_row_groups(spark, tmp_path):
     st.append(_band_rows(spark, range(5000), per_doc=2))
     man = st._snapshot()
     local = st._local_root()
-    ranges = st._footer_ranges(list(man["files"]), local)
+    ranges = st._footer_stats(man["files"], "band_hash", local, man["files"])
     total_rgs = sum(len(v) for v in ranges.values())
     assert total_rgs > 8, f"fixture too small to exercise pruning ({total_rgs} rgs)"
     # sorted writes -> per-row-group min/max present and ordered
@@ -734,6 +740,7 @@ def test_candidates_point_lookup_prunes_row_groups(spark, tmp_path):
     assert hit < total_rgs / 2, f"no pruning: {hit}/{total_rgs} row groups hit"
 
 
+@pytest.mark.slow
 def test_band_delta_runs_and_fold(spark, tmp_path, monkeypatch):
     """r10 LSM append tier: batch-sized appends land as ONE delta run
     (never one file per bucket — the 4.5M gate measured that linear in
@@ -782,24 +789,3 @@ def test_band_delta_runs_and_fold(spark, tmp_path, monkeypatch):
     st.compact(drop_bands=drop)
     gone = {(r["id_new"], r["id_stored"]) for r in st.candidates(drop).collect()}
     assert gone == set()
-
-
-def test_footer_cache_evicts_superseded_files(spark, tmp_path):
-    """Review r10 #5: a long-lived handle's footer cache must not keep
-    entries for files a fold/compact/rebucket superseded — across an
-    unbounded stream the cache stays O(live files)."""
-    st = BandIndexStore(
-        spark, str(tmp_path / "bands"), n_buckets=4, target_bucket_rows=5_000
-    )
-    st.append(_band_rows(spark, range(200)))
-    st.append(_band_rows(spark, range(200, 400)))
-    probe = _band_rows(spark, [3, 250])
-    st.candidates(probe).count()
-    before = set(st._footer_cache)
-    assert before, "point path should have populated the cache"
-    st.compact()  # supersedes every file it rewrote
-    st.candidates(probe).count()
-    live = set(st._snapshot()["files"])
-    dead = set(st._footer_cache) - live
-    assert not dead, f"superseded files still cached: {sorted(dead)[:3]}"
-    assert set(st._footer_cache) <= live

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
+import pytest
 from pyspark.sql import functions as F
 
 from binance_data_framework_spark.operators import dedup as D
@@ -14,6 +15,7 @@ from binance_data_framework_spark.operators.asof import asof_join
 from binance_data_framework_spark.sources.fixtures import load_table
 
 
+@pytest.mark.slow
 def test_minhash_finds_exact_duplicates(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").limit(50)
     # plant an exact duplicate of doc 0 with a fresh id
@@ -240,6 +242,7 @@ def test_cluster_min_label_distributed_rounds_match_local_finish(
     assert local[999] == 999
 
 
+@pytest.mark.slow
 def test_ivfpq_topk_invariants(spark, sf_dir):
     """IVF-PQ with exact re-rank: reported scores are exact cosines (ADC
     approximation only selects the shortlist), ranks are monotone, and
@@ -292,6 +295,7 @@ def test_topk_cosine_candidate_filter(spark, sf_dir):
     assert len(g2) == 5 and (g2["vec_id"].map(labels) % 2 == 1).all()
 
 
+@pytest.mark.slow
 def test_topk_filtered_ivfpq_invariants(spark, sf_dir):
     """Over-fetch/post-filter index search: every survivor satisfies the
     predicate, carries the EXACT cosine, at most k per probe, and recall
@@ -315,6 +319,7 @@ def test_topk_filtered_ivfpq_invariants(spark, sf_dir):
     assert both.mean() > 0.2
 
 
+@pytest.mark.slow
 def test_topk_filtered_ivfpq_selectivity_gate(spark, sf_dir):
     """The selectivity gate (VERDICT r8 #2): below target_factor /
     max_overfetch the filtered index search must return the EXACT
@@ -526,6 +531,7 @@ def test_pq_codes_shape(spark, sf_dir):
     assert codes["_code"].map(max).lt(16).all() and codes["_code"].map(min).ge(0).all()
 
 
+@pytest.mark.slow
 def test_opq_rotation_improves_quantization(spark, sf_dir):
     """OPQ invariants (Ge et al. 2013): the learned R is orthogonal; the
     quantization error of R-rotated residuals under the OPQ codebooks is
@@ -640,8 +646,6 @@ def test_minhash_candidates_rejects_degenerate_bands(spark, sf_dir):
     """Band counts that don't divide the signature (dropped trailing
     slots) or exceed it (zero-length slices -> one constant band key ->
     full O(n^2) cross product) must raise (code-review r4 finding)."""
-    import pytest
-
     sigs = D.minhash_signature(load_table(spark, sf_dir, "documents").limit(10))
     for bad in (5, 20, 0):
         with pytest.raises(ValueError, match="num_bands"):
@@ -690,8 +694,6 @@ def test_minhash_candidates_asserts_signature_width(spark, sf_dir):
     declared num_hashes=32 must raise at execution (zero-length trailing
     slices would otherwise give every doc a constant band key — the
     O(n^2) hole), not silently mis-band."""
-    import pytest
-
     sigs = D.minhash_signature(
         load_table(spark, sf_dir, "documents").limit(10), num_hashes=16
     )
@@ -756,8 +758,6 @@ def test_pagerank_keeps_source_only_nodes(spark):
 
 
 def test_pagerank_rejects_zero_iterations(spark):
-    import pytest
-
     from binance_data_framework_spark.operators import graph as G
 
     pairs = spark.createDataFrame([(0, 1)], "src bigint, dst bigint")
@@ -770,8 +770,6 @@ def test_pagerank_rejects_sink_nodes(spark):
     edge list with a sink node (in-edges only) would silently leak rank
     mass each iteration, so it must raise — and validate=False must keep
     the old trusted-caller behavior."""
-    import pytest
-
     from binance_data_framework_spark.operators import graph as G
 
     edges = spark.createDataFrame([(0, 1), (0, 2)], "src bigint, dst bigint")
@@ -802,8 +800,6 @@ def test_fuzzy_edit_pairs_blocking_semantics(spark):
 
 
 def test_fuzzy_edit_pairs_rejects_negative_dist(spark):
-    import pytest
-
     df = spark.createDataFrame([("a b",)], "p_name string")
     with pytest.raises(ValueError):
         D.fuzzy_edit_pairs(df, "p_name", block_expr=F.col("p_name"), max_dist=-1)
@@ -1107,6 +1103,7 @@ def test_doc_query_counts_match_registry():
         assert int(m) == n, f"ARCHITECTURE diagram says {m}, registry has {n}"
 
 
+@pytest.mark.slow
 def test_pagerank_deep_iteration_bounded_plan(spark):
     """VERDICT r10 #8: n_iter=20 must stay tractable — the rank lineage is
     checkpointed every RANK_CHECKPOINT_EVERY iterations, so the unrolled
@@ -1217,6 +1214,7 @@ def test_dedup_exact_norm_collapses_reformatted_duplicates(spark):
     assert again == norm
 
 
+@pytest.mark.slow
 def test_blocked_adc_matches_row_form(spark, sf_dir):
     """r12 many-probe ADC kernel: the blocked per-cell cogroup path must
     return EXACTLY the row-join path's results (same shortlist under the

@@ -444,6 +444,7 @@ def test_http_exchange_info_fixture(spark):
     assert [r["symbol"] for r in usdt.collect()] == ["BTCUSDT"]
 
 
+@pytest.mark.slow
 def test_sqlite_migration_roundtrip(spark, tmp_path):
     """Migrating a reference-schema SQLite cache moves every series into the
     store with values intact, is idempotent, and batches the cursor read."""
@@ -530,6 +531,7 @@ def test_kline_datasource_executor_parallel(spark):
     assert snapped.count() == 5
 
 
+@pytest.mark.slow
 def test_kline_datasource_streaming_tail(spark, tmp_path):
     """readStream.format('binance_klines'): micro-batches advance the bucket
     cursor, emit only FINALIZED bars (the last, still-open bucket is never
@@ -576,6 +578,7 @@ def test_kline_datasource_streaming_tail(spark, tmp_path):
     assert rows[-1]["ts"].replace(tzinfo=None).isoformat() == "2024-01-01T09:00:00"
 
 
+@pytest.mark.slow
 def test_stream_kline_source_to_store_end_to_end(spark, tmp_path):
     """The full live-ingest path: binance_klines stream reader (finalized
     bars only) -> foreachBatch upsert sink -> store; stored series equals
@@ -677,6 +680,7 @@ def test_stream_reader_bounded_range_emits_final_bar():
     assert list(again) == [] and offset2 == offset
 
 
+@pytest.mark.slow
 def test_incremental_fetch_ranges_process_tz_independent(spark, tmp_path):
     """Hole-fill fetch windows are collected as epoch ms, never via naive
     local datetimes: pre-fix, a non-UTC driver shifted every fetch range by
@@ -725,6 +729,7 @@ def test_kline_stream_reader_rejects_unknown_interval():
         KlineStreamReader({"symbol": "BTCUSDT", "interval": "7x", "start_ms": "0"})
 
 
+@pytest.mark.slow
 def test_load_many_fetches_in_parallel(spark, tmp_path):
     """load_many dispatches per-symbol cache-or-fetch kernels concurrently:
     the recorded fetch intervals of different symbols must OVERLAP (the
@@ -903,6 +908,7 @@ def test_read_klines_many_single_job_union(spark):
         read_klines_many(spark, [], "1h", t0_ms, t0_ms + h)
 
 
+@pytest.mark.slow
 def test_stream_endurance_restart_exactly_once(spark, tmp_path):
     """Live-tail endurance (verdict r4 #7): drive the binance_klines
     stream through 55 one-bar micro-batches into the upsert sink, with a

@@ -185,6 +185,7 @@ def test_live_exchange_info(exchange):
     }
 
 
+@pytest.mark.slow
 def test_live_datasource_executor_parallel_http(spark, exchange):
     """The full DataSource path in http mode against the live server:
     executor worker PROCESSES (not the driver) each page their own

@@ -15,6 +15,7 @@ from binance_data_framework_spark.operators.multimodal import (
 )
 
 
+@pytest.mark.slow
 def test_feature_extraction_schema_and_determinism(spark):
     blobs = synth_blobs(spark, n=32)
     feats = extract_features(blobs)

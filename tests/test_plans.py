@@ -264,6 +264,7 @@ def test_tpch_q22_scalar_subquery_and_anti_join(spark, sf_dir):
     assert re.search(r"PushedFilters: \[[^\]]*GreaterThanOrEqual\(o_orderdate", plan)
 
 
+@pytest.mark.slow
 def test_whole_registry_plan_lint(spark, sf_dir):
     """Every registered query's physical plan is free of scale
     anti-patterns (cartesian products, row-at-a-time Python UDFs,

@@ -9,6 +9,7 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 import pandas as pd
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -26,6 +27,7 @@ _ticks = st.dictionaries(
 ).map(lambda d: sorted(d.items()))
 
 
+@pytest.mark.slow
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(_ticks)
 def test_resample_matches_pandas(spark, data):
@@ -57,6 +59,7 @@ _lr_times = st.tuples(
 )
 
 
+@pytest.mark.slow
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(_lr_times)
 def test_range_join_matches_bruteforce_property(spark, data):
@@ -123,6 +126,7 @@ def test_sessionize_matches_bruteforce(spark, times):
         assert (r["s"], r["e"], r["n"]) == (sess[0], sess[-1], len(sess))
 
 
+@pytest.mark.slow
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(left=_times, right=_times)
 def test_asof_matches_bruteforce(spark, left, right):
@@ -149,6 +153,7 @@ _corpus = st.lists(
 )
 
 
+@pytest.mark.slow
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(_corpus)
 def test_pack_sequences_conservation_property(spark, texts):
@@ -179,6 +184,7 @@ def test_pack_sequences_conservation_property(spark, texts):
             assert 0 <= r["seq_id"]
 
 
+@pytest.mark.slow
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(st.integers(min_value=0, max_value=10_000_000), st.integers(min_value=1, max_value=400))
 def test_stratified_sampling_is_nested(spark, offset, n):
@@ -208,6 +214,7 @@ _graphs = st.sets(
 ).map(lambda s: sorted({(min(a, b), max(a, b)) for a, b in s}))
 
 
+@pytest.mark.slow
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(_graphs)
 def test_pagerank_matches_bruteforce(spark, pairs):
@@ -253,6 +260,7 @@ _doc_texts = st.lists(
 )
 
 
+@pytest.mark.slow
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(_doc_texts)
 def test_substring_dedup_matches_bruteforce(spark, texts):
@@ -303,6 +311,7 @@ def test_substring_dedup_matches_bruteforce(spark, texts):
     assert got == expect
 
 
+@pytest.mark.slow
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(train=_corpus, ev=_corpus)
 def test_cross_candidates_equal_union_selfjoin_restricted(spark, train, ev):
@@ -348,6 +357,7 @@ _keysets = st.lists(
 )
 
 
+@pytest.mark.slow
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(_keysets, _keysets)
 def test_read_keys_paths_agree_property(spark, tmp_path_factory, stored, probe):
@@ -376,6 +386,7 @@ def test_read_keys_paths_agree_property(spark, tmp_path_factory, stored, probe):
     assert st_.read().count() == len(stored)
 
 
+@pytest.mark.slow
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(_keysets, _keysets)
 def test_rebucket_reshard_candidate_and_read_invariance(

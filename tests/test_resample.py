@@ -6,6 +6,7 @@ from __future__ import annotations
 from datetime import datetime
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from binance_data_framework_spark.operators.ohlcv import resample_ohlcv, with_sma
@@ -25,6 +26,7 @@ def _pandas_bars(pdf: pd.DataFrame, rule: str) -> pd.DataFrame:
     return out.sort_values(["symbol", "bucket"]).reset_index(drop=True)
 
 
+@pytest.mark.slow
 def test_resample_matches_pandas_1h(spark, sf_dir):
     bars = (
         ohlcv_view(spark, sf_dir, "1h")

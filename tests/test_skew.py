@@ -3,6 +3,7 @@ unsalted equivalents on skewed data (one hot key dominating)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -17,6 +18,7 @@ def _skewed(spark):
     return spark.createDataFrame(rows, "k string, id long, v double")
 
 
+@pytest.mark.slow
 def test_salted_join_matches_plain_inner(spark):
     left = _skewed(spark)
     right = spark.createDataFrame(
@@ -57,8 +59,6 @@ def test_salted_join_rejects_right_and_full(spark):
     """The replicated right side would surface every unmatched right row
     n_salts times under right/full joins — unsupported modes must raise,
     not silently duplicate (code-review r4 finding)."""
-    import pytest
-
     l = spark.createDataFrame([(1, "a")], "k long, v string")
     r = spark.createDataFrame([(1, "b")], "k long, w string")
     for how in ("right", "full", "full_outer"):

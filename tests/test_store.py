@@ -30,6 +30,7 @@ def store(spark, tmp_path):
 T0 = datetime(2024, 1, 1)
 
 
+@pytest.mark.slow
 def test_save_and_read_roundtrip(store, spark):
     store.save_data(_bars(spark, T0, 24, 100.0), "BTCUSDT", "1h")
     out = store.get_data("BTCUSDT", "1h")
@@ -326,6 +327,7 @@ def test_time_travel_read_version(store, spark):
         store.read_version(1)
 
 
+@pytest.mark.slow
 def test_delta_log_checkpoint_cadence_and_pruning(store, spark):
     """Delta-log metadata at scale: ordinary commits write only their
     added/removed delta; every _CHECKPOINT_EVERY-th commit embeds the full
@@ -694,6 +696,7 @@ def test_failed_same_series_commit_reclaims_staged_files(store, spark, monkeypat
     assert len(rows) == 6 and all(r["open"] >= 500.0 for r in rows)
 
 
+@pytest.mark.slow
 def test_vacuum_sweeps_prior_failed_grace_window(store, spark, monkeypatch):
     """A vacuum that fails (best-effort, swallowed by _commit) must not
     permanently leak its grace version's removed files: the next
@@ -723,6 +726,7 @@ def test_vacuum_sweeps_prior_failed_grace_window(store, spark, monkeypatch):
     assert len(rows) == 3 and all(r["open"] >= 500.0 for r in rows)
 
 
+@pytest.mark.slow
 def test_save_many_single_commit_multi_series(store, spark):
     """save_many merges N series in ONE manifest commit with per-series
     ranged windows: overlapping rows take new-wins precedence, untouched
@@ -846,6 +850,7 @@ def test_long_reader_across_optimize_and_grace_boundary(store, spark):
     assert store.get_data("BTCUSDT", "1h").count() == 30
 
 
+@pytest.mark.slow
 def test_vacuum_checkpoint_sweep_reclaims_other_writers_leak(store, spark, monkeypatch):
     """A vacuum failure in ANOTHER process leaves no in-memory flag here —
     the periodic wide sweep at checkpoint commits (every
@@ -1189,3 +1194,43 @@ def test_one_task_and_distributed_paths_agree(spark, tmp_path, monkeypatch, tf, 
     assert len(one["dirs"]) == len(set(one["dirs"])) == 4  # one file per day
     assert sum(r["close"] < 0 for r in one["rows"]) == per_day  # new rows win
     assert len(one["rows"]) == 4 * per_day
+
+
+def test_mixed_legacy_series_reads_and_upserts(spark, tmp_path):
+    """One series holding both an undated legacy file and a dt= day file
+    (an adopted layout) reads as one series — get_data, the coverage probe
+    and get_stored_info, where one spark.read over both failed partition
+    discovery — and an overlapping save_data rewrites the legacy rows into
+    day files: new rows win, no ts is stored twice, no undated file stays."""
+    from binance_data_framework_spark.operators.coverage import meta_coverage
+
+    utc = timezone.utc
+    day, hour = timedelta(days=1), timedelta(hours=1)
+    t0 = datetime(2024, 1, 1, tzinfo=utc)
+    far = datetime(2030, 1, 1, tzinfo=utc)
+    st = OhlcvStore(spark, str(tmp_path / "mixed"))
+    series = f"{st.root}/symbol=BTCUSDT/timeframe=1h"
+    _grid(spark, t0, 48, 3600).coalesce(1).write.parquet(series)  # days 0-1
+    _grid(spark, t0 + 3 * day, 24, 3600).coalesce(1).write.parquet(
+        f"{series}/dt={(t0 + 3 * day).date()}"
+    )
+
+    rows = st.get_data("BTCUSDT", "1h").collect()
+    assert len(rows) == len({r["ts"] for r in rows}) == 72
+    window = st.get_data("BTCUSDT", "1h", t0 + day + 12 * hour, t0 + 3 * day + 5 * hour)
+    assert window.count() == 12 + 6
+    ref = meta_coverage(st.get_data("BTCUSDT", "1h")).first()
+    covered, bounds = st.check_data_exists("BTCUSDT", "1h", t0, t0 + 3 * day, now=far)
+    assert covered and bounds == (ref["start_ts"], ref["end_ts"])
+    assert [r["n_rows"] for r in st.get_stored_info().collect()] == [72]
+
+    # upsert days 1-2 (overlapping the legacy file) with new prices
+    new = _grid(spark, t0 + day, 36, 3600).withColumn("close", -F.col("close"))
+    st.save_data(new, "BTCUSDT", "1h")
+    files = st._snapshot()["files"]
+    assert all("/dt=" in f for f in files)
+    dirs = [f.rsplit("/", 1)[0] for f in files]
+    assert len(dirs) == len(set(dirs)) == 4  # one file per day
+    rows = st.get_data("BTCUSDT", "1h").collect()
+    assert len(rows) == len({r["ts"] for r in rows}) == 24 + 36 + 24
+    assert sum(r["close"] < 0 for r in rows) == 36  # new rows win

@@ -6,6 +6,7 @@ from __future__ import annotations
 from datetime import datetime
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from binance_data_framework_spark.streaming.incremental import (
@@ -23,6 +24,7 @@ def _write_ticks(path, rows):
     pdf.to_parquet(f"{path}/part0.parquet", index=False)
 
 
+@pytest.mark.slow
 def test_streaming_ohlcv_finalized_bars(spark, tmp_path):
     src = tmp_path / "src"
     src.mkdir()
@@ -376,6 +378,7 @@ def test_streaming_corpus_ingest_watermark_dedup(spark, tmp_path):
     assert sum(1 for r in rows if r["doc_id"] == 1) == 1
 
 
+@pytest.mark.slow
 def test_streaming_neardup_gated_ingest(spark, tmp_path):
     """Continuous curation: each batch is near-dup-checked against the
     committed corpus via the persisted band index (no corpus scan), and
@@ -644,6 +647,7 @@ def test_band_index_compact_drops_bands_and_folds_duplicates(spark, tmp_path):
     assert st.compact() == 0
 
 
+@pytest.mark.slow
 def test_streaming_gated_ingest_feeds_ann_index(spark, tmp_path):
     """The composed continuous pipeline (VERDICT r6 #3), streaming form:
     JSONL tail -> near-dup gate -> DocumentStore + band index + ANN append
@@ -749,6 +753,7 @@ def test_streaming_gated_ingest_feeds_ann_index(spark, tmp_path):
     assert ann.codes("pq").count() == 4
 
 
+@pytest.mark.slow
 def test_gate_eval_decontamination(spark, tmp_path):
     """Ingest-time benchmark decontamination (r8): a persisted eval index
     (build_eval_index) makes the gate drop any batch doc near-duplicating
@@ -857,6 +862,7 @@ def test_gate_eval_stores_both_or_neither(spark, tmp_path):
     assert s["kept"] == 1
 
 
+@pytest.mark.slow
 def test_build_eval_index_rerun_is_idempotent(spark, tmp_path):
     """ADVICE r8 #4: build_eval_index is documented re-runnable, but the
     band leg was add-only — every re-run appended the same band rows
@@ -902,6 +908,7 @@ def test_build_eval_index_rerun_is_idempotent(spark, tmp_path):
     assert ev_store.read().count() == 3
 
 
+@pytest.mark.slow
 def test_gated_ingest_rebuilds_outgrown_ann_index(spark, tmp_path):
     """ADVICE r7 #4: the composed pipeline trains the ANN index on the
     FIRST accepted batch, pinning batch-1's auto-derived cell count and
@@ -975,6 +982,7 @@ def test_gated_ingest_rebuilds_outgrown_ann_index(spark, tmp_path):
     assert ann2.load().n_centroids == 16 and ann2.load().n_vectors == 70
 
 
+@pytest.mark.slow
 def test_gated_ingest_auto_compacts_fragmented_cells(spark, tmp_path, monkeypatch):
     """ann_compact_min_files, BULK regime (delta threshold forced to 0 so
     every append takes the bucketed per-cell write — micro-batch appends
@@ -1040,6 +1048,7 @@ def test_gated_ingest_auto_compacts_fragmented_cells(spark, tmp_path, monkeypatc
     )
 
 
+@pytest.mark.slow
 def test_gated_ingest_folds_code_delta_runs(spark, tmp_path, monkeypatch):
     """r10 LSM tier through the gate: micro-batch appends land as ONE
     code delta run each (no cell fragmentation), lookups see delta rows
@@ -1105,6 +1114,7 @@ def test_gated_ingest_folds_code_delta_runs(spark, tmp_path, monkeypatch):
     assert n_bucketed >= 1  # the build's bucketed layout is still the base
 
 
+@pytest.mark.slow
 def test_streaming_full_stack_gate(spark, tmp_path):
     """Capstone: the COMPLETE self-maintaining pipeline through the
     streaming entry point — JSONL tail -> in-batch dedup -> eval
@@ -1202,6 +1212,7 @@ def test_streaming_full_stack_gate(spark, tmp_path):
     assert ann.codes("pq").count() == 3
 
 
+@pytest.mark.slow
 def test_delete_documents_composes_all_three_tiers(spark, tmp_path):
     """delete_documents (the removal leg of the curated corpus): one call
     drops a doc from the DocumentStore, its bands from the band index
@@ -1263,6 +1274,7 @@ def test_delete_documents_composes_all_three_tiers(spark, tmp_path):
     assert {r["doc_id"] for r in store.read().collect()} == {1, 3}
 
 
+@pytest.mark.slow
 def test_gate_auto_rebuckets_and_compacts_band_index(spark, tmp_path):
     """VERDICT r8 #1/#5: the self-maintaining gate's band-index legs.
     With an AUTO-bucketed band store and a tiny occupancy target, enough
@@ -1339,6 +1351,7 @@ def test_gate_auto_rebuckets_and_compacts_band_index(spark, tmp_path):
     assert s["dropped_vs_corpus"] == 1
 
 
+@pytest.mark.slow
 def test_gate_drift_monitoring_detects_boilerplate_wave(spark, tmp_path):
     """VERDICT r8 #6: the drift-monitoring leg, promoted from pytest
     composition to gate feature. First monitored batch seeds the
@@ -1458,6 +1471,7 @@ def test_gate_append_new_save_path(spark, tmp_path):
     assert store.read().count() == 20
 
 
+@pytest.mark.slow
 def test_gate_replay_crash_windows_and_drifted_resend(spark, tmp_path):
     """Review r9 crash-window fixes, pinned:
 
@@ -1579,6 +1593,7 @@ def test_build_eval_index_band_crash_window_completes(spark, tmp_path):
     assert s["dropped_contaminated"] == 1
 
 
+@pytest.mark.slow
 def test_semantic_gate_batch_stats_and_stages(spark, tmp_path):
     """VERDICT r11 #6 — the streaming SEMANTIC gate (embedding analogue of
     the MinHash band gate): (a) first batch accepts everything distinct
@@ -1662,6 +1677,7 @@ def test_semantic_gate_batch_stats_and_stages(spark, tmp_path):
     assert ann_store.load().version == s2["index_version"]
 
 
+@pytest.mark.slow
 def test_stream_semantic_ingest_wrapper(spark, tmp_path):
     """The foreachBatch wrapper: an availableNow pass over a file-source
     embedding stream lands survivors in both stores and writes one pinned

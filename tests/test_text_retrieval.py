@@ -18,6 +18,7 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+@pytest.mark.slow
 def test_pii_redact_stages_do_not_double_count(spark):
     # the email's digits/dots must not be re-matched by the IP or number
     # stage (they are redacted before those stages see the text)
@@ -142,6 +143,7 @@ def _ref_repetition(tokens: list[str]) -> tuple[int, float, float]:
     return nb, round(top / nb, 6), round(dup / nb, 6)
 
 
+@pytest.mark.slow
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(_corpus)
 def test_repetition_matches_counter_reference(spark, corpus):
