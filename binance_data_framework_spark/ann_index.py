@@ -193,13 +193,14 @@ class AnnIndexStore(SnapshotStore):
 
         return _Bound()
 
-    #: schema of the model sidecar — written by _write_model and supplied
+    #: schema of the model sidecar — written by _commit_model and supplied
     #: to load()'s read, so a cold load runs no schema-inference job
     _MODEL_SCHEMA = "component string, payload string"
 
-    def _write_model(
+    def _commit_model(
         self,
-        path: str,
+        write_data,
+        removed_fn,
         params: dict,
         fp: list[int],
         centroids,
@@ -207,31 +208,50 @@ class AnnIndexStore(SnapshotStore):
         opq_rotation,
         opq_books,
         lsh: dict,
-    ) -> None:
-        """The ONE model-sidecar writer shared by every committing path
-        (build / append / delete) — a single definition of the component
-        set, so a layout change cannot desynchronize the three commit
-        paths (review r7 #6). ``path`` is the commit's staging dir."""
-        model_rows = [
+        run_schema=None,
+    ) -> AnnIndex:
+        """The ONE model-committing write shared by build / append / delete
+        — a single definition of the component set, so a layout change
+        cannot desynchronize the three commit paths (review r7 #6).
+        ``write_data(path)`` stages the commit's data files, the model
+        sidecar is staged beside them, and ``removed_fn`` is the
+        _staged_commit conflict rule. The model memo is primed with the
+        payload just written, keyed by the committed model files, so the
+        closing load() reads nothing; a later commit by another writer
+        changes the live model files and misses the memo.
+        ``run_schema``: the schema of a codes_delta/ run ``write_data``
+        wrote, seeded into the schema memo the same way."""
+        payload = {
+            "meta": json.dumps({**params, "fingerprint": fp, "n_vectors": fp[0]}),
+            "centroids": json.dumps(centroids),
+            "pq_books": json.dumps(pq_books),
+            "opq_rotation": json.dumps(opq_rotation),
+            "opq_books": json.dumps(opq_books),
+            "lsh": json.dumps(lsh),
+        }
+
+        def write(path: str) -> None:
+            write_data(path)
             (
-                "meta",
-                json.dumps(
-                    {**params, "fingerprint": fp, "n_vectors": fp[0]}
-                ),
-            ),
-            ("centroids", json.dumps(centroids)),
-            ("pq_books", json.dumps(pq_books)),
-            ("opq_rotation", json.dumps(opq_rotation)),
-            ("opq_books", json.dumps(opq_books)),
-            ("lsh", json.dumps(lsh)),
-        ]
-        (
-            self.spark.createDataFrame(model_rows, self._MODEL_SCHEMA)
-            .coalesce(1)
-            .write.option("compression", "zstd")
-            .mode("overwrite")
-            .parquet(f"{path}/model")
+                self.spark.createDataFrame(
+                    list(payload.items()), self._MODEL_SCHEMA
+                )
+                .coalesce(1)
+                .write.option("compression", "zstd")
+                .mode("overwrite")
+                .parquet(f"{path}/model")
+            )
+
+        new_files = self._staged_commit(write, removed_fn=removed_fn)
+        if run_schema is not None:
+            for f in new_files:
+                if self._is_code_delta(f):
+                    self._remember_schema(f, run_schema)
+        self._model_memo = (
+            tuple(sorted(f for f in new_files if f.startswith("model/"))),
+            payload,
         )
+        return self.load()
 
     @staticmethod
     def _model_rule(orig_man: dict, op: str):
@@ -435,22 +455,18 @@ class AnnIndexStore(SnapshotStore):
             .withColumnRenamed("_chash", "chash")
         )
 
-        def write(path: str) -> None:
-            self._cell_writer(coded).save(f"{path}/codes")
-            self._write_model(
-                path,
-                params,
-                fp,
-                centroids,
-                pq_books,
-                rotation,
-                opq_books,
-                {"n_planes": lsh_planes, "n_tables": lsh_tables, "seed": 42},
-            )
-
         # full-replace: a rebuild supersedes every prior artifact file
-        self._staged_commit(write, removed_fn=self._live)
-        return self.load(validate_against=None)
+        return self._commit_model(
+            lambda path: self._cell_writer(coded).save(f"{path}/codes"),
+            self._live,
+            params,
+            fp,
+            centroids,
+            pq_books,
+            rotation,
+            opq_books,
+            {"n_planes": lsh_planes, "n_tables": lsh_tables, "seed": 42},
+        )
 
     #: tombstone count above which append(purge="auto") folds the physical
     #: purge into its commit cycle — below it, tombstones stay masked (a
@@ -479,6 +495,12 @@ class AnnIndexStore(SnapshotStore):
     def _is_code_delta(rel: str) -> bool:
         return rel.startswith("codes_delta/")
 
+    @staticmethod
+    def _first_code_file(man: dict, prefix: str) -> str | None:
+        """The manifest's first live file under ``prefix`` (codes/ or
+        codes_delta/): the schema representative of its group."""
+        return next((f for f in man["files"] if f.startswith(prefix)), None)
+
     def _cell_writer(self, rows: DataFrame):
         """Writer of the bucketed code layout: one id-sorted file per
         (variant, cell)."""
@@ -490,32 +512,19 @@ class AnnIndexStore(SnapshotStore):
             .mode("overwrite")
         )
 
-    def _committed_ids_among(
-        self, delta: DataFrame, masked: bool
-    ) -> DataFrame | None:
-        """Delta ids already present in the committed code layout, as a
-        small broadcastable frame — or None meaning "probe set too large,
-        use the join path". Point probe (the DocumentStore.read_keys rule
-        one tier over): collect the delta's distinct ids (micro-batch-
-        sized by the append contract), prune the committed file list
-        DRIVER-SIDE against cached footer id-ranges (code files are
-        id-sorted within each (variant, cell), so the bounds are tight —
-        a batch of genuinely new ids intersects zero files), then push
-        the id list into a scan of only the hit files. The full column-
-        pruned id scan paid ~7 s of per-file open overhead across 1024
-        files per 2000-vector append; the pruned probe reads nothing when
-        nothing matches."""
-        ids = sorted(
-            {
-                r[self.id_col]
-                for r in delta.select(self.id_col)
-                .distinct()
-                .limit(self.APPEND_PROBE_MAX + 1)
-                .collect()
-            }
-        )
-        if len(ids) > self.APPEND_PROBE_MAX:
-            return None
+    def _committed_ids_among(self, ids: list, masked: bool) -> set:
+        """The ids among ``ids`` (a collected, micro-batch-sized delta id
+        list) already present in the committed code layout. Point probe
+        (the DocumentStore.read_keys rule one tier over): prune the
+        committed file list DRIVER-SIDE against cached footer id-ranges
+        (code files are id-sorted within each (variant, cell), so the
+        bounds are tight — a batch of genuinely new ids intersects zero
+        files and the probe runs no job), then push the id list into a
+        scan of only the hit files and collect the hits. A delta run holds
+        an id's pq and opq rows, so a hit may come back twice; the set
+        folds it. The full column-pruned id scan paid ~7 s of per-file
+        open overhead across 1024 files per 2000-vector append."""
+        ids = sorted(set(ids))
         man = self._snapshot()
         files = [
             f
@@ -523,12 +532,7 @@ class AnnIndexStore(SnapshotStore):
             if f.startswith("codes/variant=pq/") or self._is_code_delta(f)
         ]
         local_root = self._local_root()
-        empty = (
-            delta.select(self.id_col).limit(0)
-        )
-        if not files:
-            return empty
-        if local_root is not None:
+        if files and local_root is not None:
             import bisect
 
             stats = self._footer_stats(files, self.id_col, local_root, man["files"])
@@ -544,38 +548,50 @@ class AnnIndexStore(SnapshotStore):
                 ) < bisect.bisect_right(ids, max(g[2] for g in groups))
 
             files = [f for f in files if may_hold(stats[f])]
-            if not files:
-                return empty
+        if not files or not ids:
+            return set()
         out = (
             self._read_code_rows(
                 [f for f in files if not self._is_code_delta(f)],
                 [f for f in files if self._is_code_delta(f)],
+                man,
             )
             .select(self.id_col)
             .where(F.col(self.id_col).isin(ids))
-            .distinct()
         )
         if masked:
             tomb = self._tombstones_from(man)
             if tomb is not None:
                 out = out.join(F.broadcast(tomb), self.id_col, "left_anti")
-        return out
+        return {r[0] for r in out.collect()}
 
     def _read_code_rows(
-        self, bucketed: list[str], deltas: list[str]
+        self, bucketed: list[str], deltas: list[str], man: dict
     ) -> DataFrame:
         """Committed code rows (id, variant, cell, norm, code [, chash])
-        from a mixed file list: bucketed files carry variant/cell as
-        partition directories, delta runs carry them as data columns — one
-        spark.read over both would make partition discovery and the
-        in-file schema disagree (the BandIndexStore._read_files rule)."""
+        from a mixed file list of manifest ``man``: bucketed files carry
+        variant/cell as partition directories, delta runs carry them as
+        data columns — one spark.read over both would make partition
+        discovery and the in-file schema disagree (the
+        BandIndexStore._read_files rule). Each group's files share one
+        schema (every writer keeps the chash column uniform), so the
+        schema memo is keyed on the manifest's first file of the group:
+        probes and cell-pruned reads of different subsets infer once."""
         parts = []
         if bucketed:
             parts.append(
-                self._committed_parquet(bucketed, base_path=f"{self.root}/codes")
+                self._committed_parquet(
+                    bucketed,
+                    base_path=f"{self.root}/codes",
+                    schema_from=self._first_code_file(man, "codes/"),
+                )
             )
         if deltas:
-            parts.append(self._committed_parquet(deltas))
+            parts.append(
+                self._committed_parquet(
+                    deltas, schema_from=self._first_code_file(man, "codes_delta/")
+                )
+            )
         with_chash = all("chash" in p.columns for p in parts)
 
         def _sel(p: DataFrame) -> DataFrame:
@@ -620,10 +636,10 @@ class AnnIndexStore(SnapshotStore):
         so the rolled-forward value is by construction EQUAL to
         ``_fingerprint(full corpus)`` — ``load(validate_against=corpus)``
         still certifies freshness after any number of appends, with no
-        special casing. Delta ids must be disjoint from the indexed ids
-        (``check_duplicates`` verifies with a column-pruned id scan of the
-        committed codes; an id collision would leave two codes for one
-        vector AND break the fingerprint roll-forward). Quantizer drift is
+        special casing. Delta ids must be non-null and disjoint from the
+        indexed ids (``check_duplicates`` verifies against the committed
+        codes; an id collision would leave two codes for one vector AND
+        break the fingerprint roll-forward). Quantizer drift is
         the caller's tradeoff, as in any IVF/PQ deployment: appends reuse
         centroids/codebooks trained on the original distribution; rebuild
         when recall certificates degrade.
@@ -633,6 +649,14 @@ class AnnIndexStore(SnapshotStore):
         racing append/rebuild raises (retry re-reads the rolled-forward
         model) instead of silently losing the other writer's fingerprint
         contribution.
+
+        Two encode paths, one set of numpy kernels (operators.similarity
+        encode_ivfpq and the UDFs that wrap the same functions): a delta of
+        at most min(APPEND_PROBE_MAX, CODES_DELTA_MAX_VECTORS) vectors is
+        collected once and encoded on the driver (_encode_on_driver); a
+        larger one is encoded by pandas UDFs in Spark
+        (_encode_distributed). Both write the same code rows and roll the
+        same fingerprint.
 
         ``purge`` decides when pending tombstones are physically reclaimed
         (ADVICE r7 #3 — the old unconditional purge attached an
@@ -666,10 +690,16 @@ class AnnIndexStore(SnapshotStore):
         # 20M-row corpus per action (14.6 s at 2M); with the checkpoint
         # the op is O(delta plan once + batch work). Bulk-load deltas
         # spill to disk via the default MEMORY_AND_DISK blocks. The
-        # fingerprint rides this job as observe() metrics (re-observed on
-        # the skip_existing re-checkpoint below, whose filtered frame is
-        # the one the fingerprint must describe).
+        # fingerprint rides this job as observe() metrics; both encode
+        # paths recompute it for the frame they actually index.
         delta, dfp, n_ids = self._ckpt_fingerprint(delta)
+        if n_ids != dfp[0]:
+            # a null id cannot be probed, deduplicated or summed into the
+            # fingerprint; the observed counts already tell
+            raise ValueError(
+                f"append: {dfp[0] - n_ids} null id(s) in the delta — every "
+                f"vector needs an id"
+            )
         tomb0 = self._tombstones_from(self._snapshot())
         if tomb0 is not None:
             if purge == "always":
@@ -700,29 +730,6 @@ class AnnIndexStore(SnapshotStore):
             raise ValueError(
                 f"AnnIndexStore at {self.root} is empty — build() before append()"
             )
-        if skip_existing:
-            # replay-idempotent form for streaming compositions: already-
-            # indexed ids are FILTERED, not an error — the same column-
-            # pruned committed-id scan check_duplicates pays, spent on an
-            # anti-join instead of a count. A redelivered micro-batch
-            # (checkpoint replay) converges to a no-op. EAGER checkpoint:
-            # the filtered delta (batch-sized) feeds the fingerprint agg,
-            # the in-delta dup agg, and the encode passes — without the
-            # materialization each action re-runs the committed-id
-            # anti-join scan (review r7 #2).
-            existing = self._committed_ids_among(delta, masked=False)
-            if existing is not None:
-                delta, dfp, n_ids = self._ckpt_fingerprint(
-                    delta.join(F.broadcast(existing), self.id_col, "left_anti")
-                )
-            else:  # oversized delta: the column-pruned join path
-                delta, dfp, n_ids = self._ckpt_fingerprint(
-                    delta.join(
-                        self.codes("pq", masked=False).select(self.id_col),
-                        self.id_col,
-                        "left_anti",
-                    )
-                )
         # orig_man MUST be the manifest idx was parsed from (its version),
         # not a fresh _snapshot(): a rebuild landing between load() and a
         # later snapshot read would make the concurrency check (_model_rule)
@@ -732,6 +739,179 @@ class AnnIndexStore(SnapshotStore):
         orig_man = self._resolve(idx.version)
         if dfp[0] == 0:
             return idx
+        # stores committed before delete support lack the chash column;
+        # keep their code schema uniform (delete stays unsupported there
+        # until a rebuild) instead of writing mixed-schema files
+        first_code = self._first_code_file(orig_man, "codes/")
+        with_chash = first_code is None or "chash" in (
+            self._committed_parquet(
+                [first_code], base_path=f"{self.root}/codes"
+            ).columns
+        )
+        # a delta that the membership probe may collect and that lands as
+        # one delta run is encoded on the driver; bulk loads stay in Spark
+        if dfp[0] <= min(self.APPEND_PROBE_MAX, self.CODES_DELTA_MAX_VECTORS):
+            staged = self._encode_on_driver(
+                delta, idx, check_duplicates, skip_existing, with_chash
+            )
+        else:
+            staged = self._encode_distributed(
+                delta, idx, dfp, n_ids, check_duplicates, skip_existing, with_chash
+            )
+        if staged is None:  # nothing left to index
+            return idx
+        write_codes, dfp, run_schema = staged
+        return self._commit_model(
+            write_codes,
+            self._model_rule(orig_man, "append"),
+            self._rolled_params(idx),
+            [a + b for a, b in zip(idx.fingerprint, dfp)],
+            idx.centroids,
+            idx.pq_books,
+            idx.opq_rotation,
+            idx.opq_books,
+            idx.lsh,
+            run_schema,
+        )
+
+    @staticmethod
+    def _rolled_params(idx: AnnIndex) -> dict:
+        """Index params of a commit that rolls ``idx``'s model forward
+        (append / delete): unchanged quantizer shape, and the cell-count
+        provenance carried forward (a commit that drops it would reset
+        auto_cells to False and silence maybe_rebuild)."""
+        return dict(
+            dim=idx.dim,
+            n_centroids=idx.n_centroids,
+            m_sub=idx.m_sub,
+            ksub=idx.ksub,
+            auto_cells=idx.auto_cells,
+            target_cell=idx.target_cell,
+        )
+
+    @staticmethod
+    def _dup_error(n_dup: int) -> ValueError:
+        return ValueError(
+            f"append: {n_dup} duplicate id(s) WITHIN the delta — each "
+            f"vector must appear once"
+        )
+
+    @staticmethod
+    def _collision_error(n_dup: int) -> ValueError:
+        return ValueError(
+            f"append: {n_dup} delta id(s) already indexed — appends must "
+            f"be disjoint (upsert = delete + rebuild, or rebuild)"
+        )
+
+    def _encode_on_driver(
+        self,
+        delta: DataFrame,
+        idx: AnnIndex,
+        check_duplicates: bool,
+        skip_existing: bool,
+        with_chash: bool,
+    ):
+        """append()'s micro-batch path: (write_codes, delta fingerprint,
+        delta-run schema), or None when skip_existing leaves nothing. The
+        checkpointed delta is collected ONCE through Arrow — id, vector,
+        norm and chash, the last two still Spark expressions, so they are
+        bit-identical to the distributed path — then the membership checks
+        are set operations, the fingerprint is summed as Python ints and
+        the codes come from the same numpy kernels the encode UDFs wrap.
+        The delta run is written in one job, with no JVM->Python UDF
+        crossing."""
+        import numpy as np
+        import pyarrow as pa
+
+        t = (
+            S.with_norm(delta, self.vec_col)
+            .select(self.id_col, "_v", "_norm", self._content_hash().alias("_chash"))
+            .toArrow()
+        )
+        ids = t.column(self.id_col).to_pylist()
+        if skip_existing:
+            existing = self._committed_ids_among(ids, masked=False)
+            if existing:
+                t = t.filter(pa.array([i not in existing for i in ids]))
+                ids = t.column(self.id_col).to_pylist()
+        if not ids:
+            return None
+        if check_duplicates:
+            n_dup = len(ids) - len(set(ids))
+            if n_dup:
+                raise self._dup_error(n_dup)
+            # redundant under skip_existing, which just dropped the
+            # committed ids (review r7 #2)
+            if not skip_existing:
+                n_dup = len(self._committed_ids_among(ids, masked=True))
+                if n_dup:
+                    raise self._collision_error(n_dup)
+        chash = t.column("_chash")
+        dfp = [len(ids), sum(ids), sum(chash.to_pylist())]
+        cells, pq, opq = S.encode_ivfpq(
+            np.vstack(t.column("_v").to_numpy(zero_copy_only=False)),
+            idx.centroids,
+            idx.pq_books,
+            idx.opq_rotation,
+            idx.opq_books,
+        )
+        # the distributed path's row layout: (variant, cell)-sorted, opq
+        # before pq, columns (id, cell, norm[, chash], code, variant)
+        order = np.argsort(cells, kind="stable")
+        cols = {
+            self.id_col: pa.concat_arrays(
+                [t.column(self.id_col).combine_chunks().take(order)] * 2
+            ),
+            "cell": pa.array(np.tile(cells[order], 2)),
+            "norm": pa.array(np.tile(t.column("_norm").to_numpy()[order], 2)),
+        }
+        if with_chash:
+            cols["chash"] = pa.array(np.tile(chash.to_numpy()[order], 2))
+        cols["code"] = pa.array(list(np.concatenate([opq[order], pq[order]])))
+        cols["variant"] = pa.array(["opq"] * len(ids) + ["pq"] * len(ids))
+        run = self.spark.createDataFrame(pa.table(cols))
+
+        def write_codes(path: str) -> None:
+            (
+                run.coalesce(1)
+                .write.option("compression", "zstd")
+                .mode("overwrite")
+                .save(f"{path}/codes_delta")
+            )
+
+        return write_codes, dfp, run.schema
+
+    def _encode_distributed(
+        self,
+        delta: DataFrame,
+        idx: AnnIndex,
+        dfp: list[int],
+        n_ids: int,
+        check_duplicates: bool,
+        skip_existing: bool,
+        with_chash: bool,
+    ):
+        """append()'s bulk path: the same checks and encode as
+        _encode_on_driver, as Spark plans (pandas UDFs over the shared
+        kernels). Same return as _encode_on_driver."""
+        if skip_existing:
+            # replay-idempotent form for streaming compositions: already-
+            # indexed ids are FILTERED, not an error — a redelivered
+            # micro-batch (checkpoint replay) converges to a no-op. EAGER
+            # checkpoint: the filtered delta feeds the in-delta dup agg and
+            # the encode passes — without the materialization each action
+            # re-runs the committed-id anti-join scan (review r7 #2). The
+            # fingerprint is re-observed on it: the filtered frame is the
+            # one the fingerprint must describe.
+            delta, dfp, n_ids = self._ckpt_fingerprint(
+                delta.join(
+                    self.codes("pq", masked=False).select(self.id_col),
+                    self.id_col,
+                    "left_anti",
+                )
+            )
+        if dfp[0] == 0:
+            return None
         if check_duplicates:
             # one agg catches duplicates WITHIN the delta (they would
             # double-encode and inflate the rolled fingerprint — review
@@ -742,19 +922,13 @@ class AnnIndexStore(SnapshotStore):
                 F.count_distinct(self.id_col).alias("nd")
             ).first()["nd"]
             if n_ids != nd:
-                raise ValueError(
-                    f"append: {n_ids - nd} duplicate id(s) WITHIN the "
-                    f"delta — each vector must appear once"
-                )
+                raise self._dup_error(n_ids - nd)
             # the committed-id collision check is a column-pruned semi-join
             # — redundant (and skipped) when skip_existing already
             # anti-joined the same committed ids away (review r7 #2)
             if not skip_existing:
-                existing = self._committed_ids_among(delta, masked=True)
                 n_dup = (
-                    existing.count()
-                    if existing is not None
-                    else delta.select(self.id_col)
+                    delta.select(self.id_col)
                     .join(
                         self.codes("pq").select(self.id_col),
                         self.id_col,
@@ -763,11 +937,7 @@ class AnnIndexStore(SnapshotStore):
                     .count()
                 )
                 if n_dup:
-                    raise ValueError(
-                        f"append: {n_dup} delta id(s) already indexed — "
-                        f"appends must be disjoint (upsert = delete + "
-                        f"rebuild, or rebuild)"
-                    )
+                    raise self._collision_error(n_dup)
         sub_dim = idx.dim // idx.m_sub
         centroids = idx.centroids
         base = (
@@ -812,18 +982,7 @@ class AnnIndexStore(SnapshotStore):
             "_chash",
             S._pq_codes_udf(idx.opq_books, sub_dim)(F.col("_rr")).alias("_code"),
         ).withColumn("variant", F.lit("opq"))
-
-        # stores committed before delete support lack the chash column;
-        # keep their code schema uniform (delete stays unsupported there
-        # until a rebuild) instead of writing mixed-schema cell files
-        first_code = next(
-            (f for f in orig_man["files"] if f.startswith("codes/")), None
-        )
-        if first_code is not None and "chash" not in (
-            self._committed_parquet(
-                [first_code], base_path=f"{self.root}/codes"
-            ).columns
-        ):
+        if not with_chash:
             coded_pq = coded_pq.drop("_chash")
             coded_opq = coded_opq.drop("_chash")
 
@@ -834,19 +993,8 @@ class AnnIndexStore(SnapshotStore):
             .withColumnRenamed("_norm", "norm")
             .withColumnRenamed("_chash", "chash")
         )
-        new_fp = [a + b for a, b in zip(idx.fingerprint, dfp)]
-        params = dict(
-            dim=idx.dim,
-            n_centroids=idx.n_centroids,
-            m_sub=idx.m_sub,
-            ksub=idx.ksub,
-            # carry the cell-count provenance forward (a commit that drops
-            # it would reset auto_cells to False and silence maybe_rebuild)
-            auto_cells=idx.auto_cells,
-            target_cell=idx.target_cell,
-        )
 
-        def write(path: str) -> None:
+        def write_codes(path: str) -> None:
             if dfp[0] <= self.CODES_DELTA_MAX_VECTORS:
                 # delta-run write (r10): a micro-batch append lands as ONE
                 # (variant, cell)-sorted file instead of one near-empty file
@@ -868,19 +1016,8 @@ class AnnIndexStore(SnapshotStore):
                 )
             else:
                 self._cell_writer(coded).save(f"{path}/codes")
-            self._write_model(
-                path,
-                params,
-                new_fp,
-                idx.centroids,
-                idx.pq_books,
-                idx.opq_rotation,
-                idx.opq_books,
-                idx.lsh,
-            )
 
-        self._staged_commit(write, removed_fn=self._model_rule(orig_man, "append"))
-        return self.load()
+        return write_codes, dfp, coded.schema
 
     # -- load / read -------------------------------------------------------
     def load(self, validate_against: DataFrame | None = None) -> AnnIndex | None:
@@ -1004,11 +1141,11 @@ class AnnIndexStore(SnapshotStore):
             # cell prune matched nothing and no delta runs are live:
             # empty frame with the committed schema (one footer read,
             # F.lit(False) prunes every row group — no data scan)
-            df = self._read_code_rows(variant_files[:1], []).where(
+            df = self._read_code_rows(variant_files[:1], [], man).where(
                 F.lit(False)
             )
         else:
-            df = self._read_code_rows(files, deltas).where(
+            df = self._read_code_rows(files, deltas, man).where(
                 F.col("variant") == variant
             )
         if cells is not None:
@@ -1082,39 +1219,24 @@ class AnnIndexStore(SnapshotStore):
             idx.fingerprint[1] - int(agg["s"]),
             idx.fingerprint[2] - int(agg["c"]),
         ]
-        params = dict(
-            dim=idx.dim,
-            n_centroids=idx.n_centroids,
-            m_sub=idx.m_sub,
-            ksub=idx.ksub,
-            # carry the cell-count provenance forward (a commit that drops
-            # it would reset auto_cells to False and silence maybe_rebuild)
-            auto_cells=idx.auto_cells,
-            target_cell=idx.target_cell,
-        )
-
-        def write(path: str) -> None:
-            (
+        # prior tombstone files stay live (they accumulate until purge)
+        return self._commit_model(
+            lambda path: (
                 matched.select(self.id_col)
                 .coalesce(1)
                 .write.option("compression", "zstd")
                 .mode("overwrite")
                 .parquet(f"{path}/tombstones")
-            )
-            self._write_model(
-                path,
-                params,
-                new_fp,
-                idx.centroids,
-                idx.pq_books,
-                idx.opq_rotation,
-                idx.opq_books,
-                idx.lsh,
-            )
-
-        # prior tombstone files stay live (they accumulate until purge)
-        self._staged_commit(write, removed_fn=self._model_rule(orig_man, "delete"))
-        return self.load()
+            ),
+            self._model_rule(orig_man, "delete"),
+            self._rolled_params(idx),
+            new_fp,
+            idx.centroids,
+            idx.pq_books,
+            idx.opq_rotation,
+            idx.opq_books,
+            idx.lsh,
+        )
 
     def purge_tombstones(self) -> int:
         """Physically reclaim tombstoned vectors: rewrite ONLY the
@@ -1139,7 +1261,7 @@ class AnnIndexStore(SnapshotStore):
         )
         code_files = [f for f in man["files"] if f.startswith("codes/")]
         delta_files = [f for f in man["files"] if self._is_code_delta(f)]
-        all_codes = self._read_code_rows(code_files, delta_files)
+        all_codes = self._read_code_rows(code_files, delta_files, man)
         # normalize BOTH sides to (str, int): r["cell"] collects as int only
         # when partition-column type inference is on (the default) — with it
         # disabled the collected value is a string, the set intersection
@@ -1176,7 +1298,7 @@ class AnnIndexStore(SnapshotStore):
         def write(path: str) -> None:
             if affected or affected_deltas:
                 self._cell_writer(
-                    self._read_code_rows(affected, affected_deltas).join(
+                    self._read_code_rows(affected, affected_deltas, man).join(
                         F.broadcast(tomb), self.id_col, "left_anti"
                     )
                 ).save(f"{path}/codes")
@@ -1240,7 +1362,7 @@ class AnnIndexStore(SnapshotStore):
         else:
             affected = [f for f in code_files if _vc(f) in hit]
         folded_deltas = delta_files if folding else []
-        frag = self._read_code_rows(affected, folded_deltas)
+        frag = self._read_code_rows(affected, folded_deltas, man)
         self._staged_commit(
             lambda path: self._cell_writer(frag).save(f"{path}/codes"),
             affected + folded_deltas,

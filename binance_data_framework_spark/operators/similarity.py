@@ -156,18 +156,79 @@ def _probe_cells_udf(centroids: list[list[float]], nprobe: int):
     return probe_cells
 
 
+# -- IVF-PQ encode kernels ----------------------------------------------------
+# Plain numpy functions of row matrices. The pandas UDFs are thin wrappers
+# (one Arrow batch -> one kernel call), and AnnIndexStore.append encodes a
+# collected micro-batch by calling the same kernels on the driver, so the
+# two encode paths run the same arithmetic.
+
+
+def assign_cells(m: np.ndarray, cm: np.ndarray, cn: np.ndarray) -> np.ndarray:
+    """Nearest-centroid (L2) cell of each row of ``m`` (rows x dim) against
+    the centroid matrix ``cm`` (ncent x dim), ``cn`` = ||c||^2 per
+    centroid. Ties break to the lowest cell (np.argmin)."""
+    # argmin ||x-c||^2 = argmin ||c||^2 - 2 x.c  (||x||^2 constant per row)
+    d = cn[None, :] - 2.0 * (m @ cm.T)
+    return np.argmin(d, axis=1).astype(np.int32)
+
+
+def residuals(m: np.ndarray, cm: np.ndarray, cells: np.ndarray) -> np.ndarray:
+    """Each row minus its cell's centroid."""
+    return m - cm[cells]
+
+
+def rotate(m: np.ndarray, rt: np.ndarray) -> np.ndarray:
+    """Rows of ``m`` rotated by R, given ``rt`` = R transposed."""
+    return m @ rt
+
+
+def pq_encode(r: np.ndarray, b3: np.ndarray, bn: np.ndarray) -> np.ndarray:
+    """PQ codes (rows x M int32) of residual rows ``r``: argmin L2 per
+    subspace against ``b3`` (M x ksub x sub_dim codebooks), ``bn`` =
+    ||b||^2 (M x ksub). Ties break to the lowest index, so encoding is
+    deterministic."""
+    m_sub, _, sub_dim = b3.shape
+    rows = r.reshape(len(r), m_sub, sub_dim)
+    out = np.empty((len(r), m_sub), dtype=np.int32)
+    for m in range(m_sub):
+        d = bn[m][None, :] - 2.0 * (rows[:, m, :] @ b3[m].T)
+        out[:, m] = np.argmin(d, axis=1)
+    return out
+
+
+def _sq_norms(a: np.ndarray) -> np.ndarray:
+    """||x||^2 over the last axis (centroid and codebook norms)."""
+    return (a * a).sum(axis=-1)
+
+
+def encode_ivfpq(
+    v: np.ndarray,
+    centroids: list[list[float]],
+    pq_books: list[list[list[float]]],
+    opq_rotation: list[list[float]],
+    opq_books: list[list[list[float]]],
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(cells, PQ codes, OPQ codes) of the rows of ``v`` under a committed
+    IVF-PQ model: the chain build/append run as pandas UDFs (assign,
+    residual, PQ; rotate, PQ), called once over a driver-side matrix."""
+    cm = np.asarray(centroids, dtype=np.float64)
+    cells = assign_cells(v, cm, _sq_norms(cm))
+    r = residuals(v, cm, cells)
+    pq = np.asarray(pq_books, dtype=np.float64)
+    opq = np.asarray(opq_books, dtype=np.float64)
+    rr = rotate(r, np.asarray(opq_rotation, dtype=np.float64).T)
+    return cells, pq_encode(r, pq, _sq_norms(pq)), pq_encode(rr, opq, _sq_norms(opq))
+
+
 def _assign_udf(centroids: list[list[float]]):
-    """Vectorized nearest-centroid assignment (L2): one distance matrix per
-    Arrow batch against the broadcast centroid matrix."""
+    """Vectorized nearest-centroid assignment (L2): one assign_cells call
+    per Arrow batch against the broadcast centroid matrix."""
     cm = np.asarray(centroids, dtype=np.float64)  # ncent x dim
-    cn = (cm * cm).sum(axis=1)  # ||c||^2, precomputed
+    cn = _sq_norms(cm)
 
     @pandas_udf("int")
     def assign(v: pd.Series) -> pd.Series:
-        m = np.vstack(v.to_numpy())  # rows x dim
-        # argmin ||x-c||^2 = argmin ||c||^2 - 2 x.c  (||x||^2 constant per row)
-        d = cn[None, :] - 2.0 * (m @ cm.T)
-        return pd.Series(np.argmin(d, axis=1).astype(np.int32))
+        return pd.Series(assign_cells(np.vstack(v.to_numpy()), cm, cn))
 
     return assign
 
@@ -402,22 +463,14 @@ def topk_cosine_lsh(
 
 
 def _pq_codes_udf(books: list[list[list[float]]], sub_dim: int):
-    """Vectorized PQ encoding: residual -> M codebook indices (argmin L2 per
-    subspace), one Arrow batch at a time. Ties break to the lowest index
-    (np.argmin), so encoding is deterministic."""
-    b3 = np.asarray(books, dtype=np.float64)  # M x ksub x sub_dim
-    bn = (b3 * b3).sum(axis=2)  # M x ksub
-    m_sub = len(books)
+    """Vectorized PQ encoding: residual -> M codebook indices, one
+    pq_encode call per Arrow batch."""
+    b3 = np.asarray(books, dtype=np.float64).reshape(len(books), -1, sub_dim)
+    bn = _sq_norms(b3)  # M x ksub
 
     @pandas_udf("array<int>")
     def codes(r: pd.Series) -> pd.Series:
-        mr = np.vstack(r.to_numpy())
-        rows = mr.reshape(len(mr), m_sub, sub_dim)
-        out = np.empty((len(mr), m_sub), dtype=np.int32)
-        for m in range(m_sub):
-            d = bn[m][None, :] - 2.0 * (rows[:, m, :] @ b3[m].T)
-            out[:, m] = np.argmin(d, axis=1)
-        return pd.Series(list(out))
+        return pd.Series(list(pq_encode(np.vstack(r.to_numpy()), b3, bn)))
 
     return codes
 
@@ -427,8 +480,7 @@ def _residual_udf(centroids: list[list[float]]):
 
     @pandas_udf("array<double>")
     def resid(v: pd.Series, c: pd.Series) -> pd.Series:
-        mv = np.vstack(v.to_numpy())
-        return pd.Series(list(mv - cm[c.to_numpy()]))
+        return pd.Series(list(residuals(np.vstack(v.to_numpy()), cm, c.to_numpy())))
 
     return resid
 
@@ -503,12 +555,12 @@ def pq_train(
 
 
 def _rotate_udf(R: np.ndarray):
-    """Vectorized orthogonal rotation: one batch matmul per Arrow batch."""
+    """Vectorized orthogonal rotation: one rotate call per Arrow batch."""
     Rt = np.asarray(R, dtype=np.float64).T
 
     @pandas_udf("array<double>")
     def rot(v: pd.Series) -> pd.Series:
-        return pd.Series(list(np.vstack(v.to_numpy()) @ Rt))
+        return pd.Series(list(rotate(np.vstack(v.to_numpy()), Rt)))
 
     return rot
 

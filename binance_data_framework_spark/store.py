@@ -199,7 +199,10 @@ class SnapshotStore:
         return self._local_root_cache
 
     def _committed_parquet(
-        self, rels: list[str], base_path: str | None = None
+        self,
+        rels: list[str],
+        base_path: str | None = None,
+        schema_from: str | None = None,
     ) -> DataFrame:
         """``spark.read.parquet`` over committed files with a MEMOIZED
         schema (r14, guide §5 — the driver does no repeatable work): a
@@ -214,23 +217,35 @@ class SnapshotStore:
         written consistently by the store's own writers; supplying the
         schema makes Spark cast partition values to it, which pins the
         str-or-int inference drift the ann code-reader already normalizes.
-        ``rels`` are paths relative to self.root. At the size cap the
-        OLDEST entry is evicted (insertion order), never the whole memo —
-        a wholesale flush made every hot store re-infer at once."""
-        key = (base_path or "", f"{self.root}/{rels[0]}")
+        ``rels`` are paths relative to self.root. ``schema_from`` (default
+        ``rels[0]``) names a committed file whose schema every file of
+        ``rels`` shares: a reader of varying subsets of one uniform group
+        keys the memo on one representative instead of inferring per
+        subset. At the size cap the OLDEST entry is evicted (insertion
+        order), never the whole memo — a wholesale flush made every hot
+        store re-infer at once."""
+        key = (base_path or "", f"{self.root}/{schema_from or rels[0]}")
         schema = _PARQUET_SCHEMA_CACHE.get(key)
         if schema is None:
             r = self.spark.read
             if base_path is not None:
                 r = r.option("basePath", base_path)
             schema = r.parquet(key[1]).schema
-            if len(_PARQUET_SCHEMA_CACHE) >= _PARQUET_SCHEMA_CACHE_MAX:
-                del _PARQUET_SCHEMA_CACHE[next(iter(_PARQUET_SCHEMA_CACHE))]
-            _PARQUET_SCHEMA_CACHE[key] = schema
+            self._remember_schema(schema_from or rels[0], schema, base_path)
         r = self.spark.read.schema(schema)
         if base_path is not None:
             r = r.option("basePath", base_path)
         return r.parquet(*[f"{self.root}/{f}" for f in rels])
+
+    def _remember_schema(
+        self, rel: str, schema, base_path: str | None = None
+    ) -> None:
+        """Memoize ``schema`` as committed file ``rel``'s (the
+        _committed_parquet memo). A writer that knows the schema of the
+        file it just committed seeds the memo, so no read infers it."""
+        if len(_PARQUET_SCHEMA_CACHE) >= _PARQUET_SCHEMA_CACHE_MAX:
+            del _PARQUET_SCHEMA_CACHE[next(iter(_PARQUET_SCHEMA_CACHE))]
+        _PARQUET_SCHEMA_CACHE[(base_path or "", f"{self.root}/{rel}")] = schema
 
     # -- LSM delta runs ----------------------------------------------------
     # The derived-layout tiers (BandIndexStore's delta/, AnnIndexStore's

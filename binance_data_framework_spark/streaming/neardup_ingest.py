@@ -649,6 +649,7 @@ def neardup_gate_batch(
                 ann_store.build(vecs, **(ann_build_kwargs or {}))
             else:
                 ann_store.append(vecs, skip_existing=True)
+                _tick("ann_append")
                 rebuilt = False
                 if ann_rebuild_factor is not None:
                     # rebuild source = the full STORED corpus (deleted docs

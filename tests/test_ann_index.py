@@ -110,9 +110,11 @@ def test_fingerprint_observed_equals_standalone(built):
 def test_load_memoizes_model_until_it_changes(spark, tmp_path, monkeypatch):
     """load() keeps the parsed model per handle, keyed by the live model
     files (immutable, uuid-named): an unchanged model costs no parquet read
-    and no Spark job; an append's new model is read once and carries the
-    rolled-forward fingerprint; a fresh handle parses the same index,
-    field by field."""
+    and no Spark job. A commit primes the memo with the model it wrote, so
+    load() after this handle's own append reads nothing either and carries
+    the rolled-forward fingerprint; another handle's append changes the
+    model files, and the next load() reads them once. A fresh handle
+    parses the same index, field by field."""
     from dataclasses import asdict
 
     from pyspark.sql.readwriter import DataFrameReader
@@ -131,24 +133,146 @@ def test_load_memoizes_model_until_it_changes(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(DataFrameReader, "parquet", counting)
     sc = spark.sparkContext
-    sc.setJobGroup("ann-memo-probe", "second load")
-    try:
-        again = st.load()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert reads == []
-    assert sc.statusTracker().getJobIdsForGroup("ann-memo-probe") == []
-    assert asdict(again) == asdict(first)
-    monkeypatch.undo()
 
-    delta = _emb(spark, n=50).where(F.col("vec_id") >= 40)
-    st.append(delta)
-    rolled = st.load()
+    def traced_load(group):
+        reads.clear()
+        sc.setJobGroup(group, group)
+        try:
+            out = st.load()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, list(reads), sc.statusTracker().getJobIdsForGroup(group)
+
+    again, n_reads, jobs = traced_load("ann-memo-probe")
+    assert n_reads == [] and jobs == []
+    assert asdict(again) == asdict(first)
+
+    st.append(_emb(spark, n=50).where(F.col("vec_id") >= 40))
+    rolled, n_reads, jobs = traced_load("ann-memo-after-append")
+    assert n_reads == [] and jobs == []
     assert rolled.version > first.version
     assert rolled.n_vectors == 50
     assert rolled.fingerprint == st._fingerprint(_emb(spark, n=50))
+
+    # a second handle's append: this handle's memo misses and re-reads
+    AnnIndexStore(spark, root).append(_emb(spark, n=55).where(F.col("vec_id") >= 50))
+    raced, n_reads, _ = traced_load("ann-memo-after-other-append")
+    assert len(n_reads) == 1
+    assert raced.version > rolled.version and raced.n_vectors == 55
+    monkeypatch.undo()
+    assert raced.fingerprint == st._fingerprint(_emb(spark, n=55))
     fresh = AnnIndexStore(spark, root).load()
-    assert asdict(fresh) == asdict(rolled)
+    assert asdict(fresh) == asdict(raced)
+
+
+def test_append_rejects_null_ids(built, monkeypatch):
+    """A null id cannot be probed, deduplicated or summed into the
+    fingerprint: append() raises from the checkpoint's observed counts on
+    both encode paths, with or without skip_existing, and commits
+    nothing."""
+    st, idx, _ = built
+    bad = st.spark.createDataFrame(
+        [(None, [0.5] * DIM), (1000, [1.5] * DIM)],
+        "vec_id bigint, embedding array<double>",
+    )
+    for probe_max in (AnnIndexStore.APPEND_PROBE_MAX, 0):
+        monkeypatch.setattr(AnnIndexStore, "APPEND_PROBE_MAX", probe_max)
+        for skip in (False, True):
+            with pytest.raises(ValueError, match=r"append: 1 null id\(s\)"):
+                st.append(bad, skip_existing=skip)
+    assert st.load().version == idx.version
+
+
+def _code_rows(st):
+    """Every committed code row, as comparable tuples."""
+    man = st._snapshot()
+    rows = st._read_code_rows(
+        [f for f in man["files"] if f.startswith("codes/")],
+        [f for f in man["files"] if f.startswith("codes_delta/")],
+        man,
+    )
+    cols = [c for c in ("vec_id", "variant", "cell", "code", "norm", "chash") if c in rows.columns]
+    return sorted(
+        tuple(tuple(r[c]) if c == "code" else r[c] for c in cols)
+        for r in rows.collect()
+    )
+
+
+def test_append_driver_and_distributed_paths_agree(built, tmp_path, monkeypatch):
+    """append() encodes a bounded delta on the driver and a larger one in
+    Spark (APPEND_PROBE_MAX = 0 forces the latter here). On copies of one
+    build, the two paths must commit identical code rows (id, variant,
+    cell, code, norm, chash), the same fingerprint and the same top-k
+    search results — through a skip_existing append with redelivered ids
+    and the in-delta duplicate and collision errors. On a legacy store
+    without chash, the driver path writes the same rows without it. A
+    warm micro-batch append with one redelivery runs at most 5 Spark jobs
+    on the driver path."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    src, _, _ = built
+    spark = src.spark
+    full = _emb(spark, n=70)
+
+    def ids(lo, hi):
+        return full.where((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
+
+    def copy(name, probe_max):
+        shutil.copytree(src.root, tmp_path / name)
+        monkeypatch.setattr(AnnIndexStore, "APPEND_PROBE_MAX", probe_max)
+        return AnnIndexStore(spark, str(tmp_path / name))
+
+    def run(name, probe_max):
+        st = copy(name, probe_max)
+        st.append(ids(58, 66), skip_existing=True)  # 58, 59 redelivered
+        with pytest.raises(ValueError, match="1 duplicate id"):
+            st.append(ids(66, 68).unionByName(ids(67, 68)))
+        with pytest.raises(ValueError, match="2 delta id"):
+            st.append(ids(64, 68))  # 64, 65 already indexed
+        idx = st.load()
+        hits = {
+            (r["probe_id"], r["vec_id"], round(r["cosine"], 9), r["rank"])
+            for r in S.topk_cosine_ivfpq(
+                full, F.col("vec_id") >= 62, k=3, dim=DIM, n_centroids=4,
+                m_sub=4, ksub=4, centroids=idx.centroids,
+                books=idx.pq_books, coded=st.codes("pq"),
+            ).collect()
+        }
+        return st, (_code_rows(st), idx.fingerprint, hits)
+
+    drv, got_d = run("driver", AnnIndexStore.APPEND_PROBE_MAX)
+    _, got_s = run("spark", 0)
+    assert got_d == got_s
+    assert len(got_d[0]) == 2 * 66 and got_d[2]
+    assert got_d[1] == src._fingerprint(ids(0, 66))
+
+    # warm driver append: one redelivery (65, in the delta run) + 3 new
+    monkeypatch.undo()
+    sc = spark.sparkContext
+    sc.setJobGroup("ann-append-pin", "warm append")
+    try:
+        drv.append(ids(65, 69), skip_existing=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("ann-append-pin")) <= 5
+    assert drv.load().n_vectors == 69
+
+    # legacy store (code files predate chash): the driver path writes the
+    # rows both paths agreed on above, without chash
+    st = copy("legacy", AnnIndexStore.APPEND_PROBE_MAX)
+    for f in st._snapshot()["files"]:
+        if f.startswith("codes/"):
+            path = tmp_path / "legacy" / f
+            t = pq.ParquetFile(path).read().drop_columns(["chash"])
+            # Spark's footer metadata would still list chash
+            pq.write_table(t.replace_schema_metadata(None), path)
+            (path.parent / f".{path.name}.crc").unlink(missing_ok=True)
+    st.append(ids(58, 66), skip_existing=True)
+    assert _code_rows(st) == [r[:5] for r in got_d[0]]
 
 
 def test_codes_layout_and_physical_cell_pruning(built):

@@ -103,8 +103,7 @@ class _Ann:
         return self.st.maybe_fold_code_deltas(**kw)
 
     def lookup(self, ids) -> set:
-        probe = self.spark.createDataFrame([(i,) for i in ids], "vec_id bigint")
-        return {r["vec_id"] for r in self.st._committed_ids_among(probe, masked=False).collect()}
+        return self.st._committed_ids_among(list(ids), masked=False)
 
 
 @pytest.mark.parametrize("tier", [_Band, _Ann], ids=["band", "ann"])

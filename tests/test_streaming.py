@@ -1104,7 +1104,9 @@ def test_gated_ingest_folds_code_delta_runs(spark, tmp_path, monkeypatch):
     # raise the floor so the next run SURVIVES the fold leg: lookups must
     # consult it un-folded
     monkeypatch.setattr(AnnIndexStore, "CODES_DELTA_MAX_VECTORS", 1000)
-    neardup_gate_batch(batch(12, 18), store, bands, **kw)
+    stats = neardup_gate_batch(batch(12, 18), store, bands, **kw)
+    # the ANN append has its own stage, ahead of the maintenance legs
+    assert {"ann_append", "maintenance"} <= set(stats["stage_sec"])
     assert len(files("codes_delta/")) == 1
     assert ann.codes("pq").count() == 18
     assert (
