@@ -208,7 +208,6 @@ class AnnIndexStore(SnapshotStore):
         opq_rotation,
         opq_books,
         lsh: dict,
-        run_schema=None,
     ) -> AnnIndex:
         """The ONE model-committing write shared by build / append / delete
         — a single definition of the component set, so a layout change
@@ -218,9 +217,7 @@ class AnnIndexStore(SnapshotStore):
         _staged_commit conflict rule. The model memo is primed with the
         payload just written, keyed by the committed model files, so the
         closing load() reads nothing; a later commit by another writer
-        changes the live model files and misses the memo.
-        ``run_schema``: the schema of a codes_delta/ run ``write_data``
-        wrote, seeded into the schema memo the same way."""
+        changes the live model files and misses the memo."""
         payload = {
             "meta": json.dumps({**params, "fingerprint": fp, "n_vectors": fp[0]}),
             "centroids": json.dumps(centroids),
@@ -243,10 +240,6 @@ class AnnIndexStore(SnapshotStore):
             )
 
         new_files = self._staged_commit(write, removed_fn=removed_fn)
-        if run_schema is not None:
-            for f in new_files:
-                if self._is_code_delta(f):
-                    self._remember_schema(f, run_schema)
         self._model_memo = (
             tuple(sorted(f for f in new_files if f.startswith("model/"))),
             payload,
@@ -760,7 +753,7 @@ class AnnIndexStore(SnapshotStore):
             )
         if staged is None:  # nothing left to index
             return idx
-        write_codes, dfp, run_schema = staged
+        write_codes, dfp = staged
         return self._commit_model(
             write_codes,
             self._model_rule(orig_man, "append"),
@@ -771,7 +764,6 @@ class AnnIndexStore(SnapshotStore):
             idx.opq_rotation,
             idx.opq_books,
             idx.lsh,
-            run_schema,
         )
 
     @staticmethod
@@ -811,8 +803,8 @@ class AnnIndexStore(SnapshotStore):
         skip_existing: bool,
         with_chash: bool,
     ):
-        """append()'s micro-batch path: (write_codes, delta fingerprint,
-        delta-run schema), or None when skip_existing leaves nothing. The
+        """append()'s micro-batch path: (write_codes, delta fingerprint),
+        or None when skip_existing leaves nothing. The
         checkpointed delta is collected ONCE through Arrow — id, vector,
         norm and chash, the last two still Spark expressions, so they are
         bit-identical to the distributed path — then the membership checks
@@ -848,12 +840,29 @@ class AnnIndexStore(SnapshotStore):
                     raise self._collision_error(n_dup)
         chash = t.column("_chash")
         dfp = [len(ids), sum(ids), sum(chash.to_pylist())]
-        cells, pq, opq = S.encode_ivfpq(
-            np.vstack(t.column("_v").to_numpy(zero_copy_only=False)),
-            idx.centroids,
-            idx.pq_books,
-            idx.opq_rotation,
-            idx.opq_books,
+        # encode in Arrow-batch-sized row blocks: assign_cells allocates
+        # rows x n_centroids distances, so a block bounds driver memory the
+        # way the UDF path's one kernel call per Arrow batch bounds a worker
+        v = np.vstack(t.column("_v").to_numpy(zero_copy_only=False))
+        block = int(
+            self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+        )
+        if block <= 0:  # Spark's "no limit"
+            block = len(v)
+        cells, pq, opq = (
+            np.concatenate(parts)
+            for parts in zip(
+                *(
+                    S.encode_ivfpq(
+                        v[i : i + block],
+                        idx.centroids,
+                        idx.pq_books,
+                        idx.opq_rotation,
+                        idx.opq_books,
+                    )
+                    for i in range(0, len(v), block)
+                )
+            )
         )
         # the distributed path's row layout: (variant, cell)-sorted, opq
         # before pq, columns (id, cell, norm[, chash], code, variant)
@@ -879,7 +888,7 @@ class AnnIndexStore(SnapshotStore):
                 .save(f"{path}/codes_delta")
             )
 
-        return write_codes, dfp, run.schema
+        return write_codes, dfp
 
     def _encode_distributed(
         self,
@@ -1017,7 +1026,7 @@ class AnnIndexStore(SnapshotStore):
             else:
                 self._cell_writer(coded).save(f"{path}/codes")
 
-        return write_codes, dfp, coded.schema
+        return write_codes, dfp
 
     # -- load / read -------------------------------------------------------
     def load(self, validate_against: DataFrame | None = None) -> AnnIndex | None:

@@ -231,21 +231,13 @@ class SnapshotStore:
             if base_path is not None:
                 r = r.option("basePath", base_path)
             schema = r.parquet(key[1]).schema
-            self._remember_schema(schema_from or rels[0], schema, base_path)
+            if len(_PARQUET_SCHEMA_CACHE) >= _PARQUET_SCHEMA_CACHE_MAX:
+                del _PARQUET_SCHEMA_CACHE[next(iter(_PARQUET_SCHEMA_CACHE))]
+            _PARQUET_SCHEMA_CACHE[key] = schema
         r = self.spark.read.schema(schema)
         if base_path is not None:
             r = r.option("basePath", base_path)
         return r.parquet(*[f"{self.root}/{f}" for f in rels])
-
-    def _remember_schema(
-        self, rel: str, schema, base_path: str | None = None
-    ) -> None:
-        """Memoize ``schema`` as committed file ``rel``'s (the
-        _committed_parquet memo). A writer that knows the schema of the
-        file it just committed seeds the memo, so no read infers it."""
-        if len(_PARQUET_SCHEMA_CACHE) >= _PARQUET_SCHEMA_CACHE_MAX:
-            del _PARQUET_SCHEMA_CACHE[next(iter(_PARQUET_SCHEMA_CACHE))]
-        _PARQUET_SCHEMA_CACHE[(base_path or "", f"{self.root}/{rel}")] = schema
 
     # -- LSM delta runs ----------------------------------------------------
     # The derived-layout tiers (BandIndexStore's delta/, AnnIndexStore's

@@ -199,16 +199,20 @@ def _code_rows(st):
     )
 
 
-def test_append_driver_and_distributed_paths_agree(built, tmp_path, monkeypatch):
+def test_append_driver_and_distributed_paths_agree(
+    built, tmp_path, monkeypatch, request
+):
     """append() encodes a bounded delta on the driver and a larger one in
     Spark (APPEND_PROBE_MAX = 0 forces the latter here). On copies of one
     build, the two paths must commit identical code rows (id, variant,
     cell, code, norm, chash), the same fingerprint and the same top-k
     search results — through a skip_existing append with redelivered ids
-    and the in-delta duplicate and collision errors. On a legacy store
-    without chash, the driver path writes the same rows without it. A
-    warm micro-batch append with one redelivery runs at most 5 Spark jobs
-    on the driver path."""
+    and the in-delta duplicate and collision errors. Arrow batches of 3
+    rows make the driver encode its delta in several row blocks, as the
+    UDFs encode several batches. A warm micro-batch append with one
+    redelivery runs at most 5 Spark jobs on the driver path. The
+    distributed copy, stripped of chash, then stands in for a legacy
+    store: the same append writes the same rows without chash."""
     import shutil
 
     import pyarrow.parquet as pq
@@ -216,38 +220,50 @@ def test_append_driver_and_distributed_paths_agree(built, tmp_path, monkeypatch)
     src, _, _ = built
     spark = src.spark
     full = _emb(spark, n=70)
+    batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(batch)
+    spark.conf.set(batch, "3")
+    request.addfinalizer(lambda: spark.conf.set(batch, prev))
 
     def ids(lo, hi):
         return full.where((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
 
-    def copy(name, probe_max):
+    def run(name, probe_max):
         shutil.copytree(src.root, tmp_path / name)
         monkeypatch.setattr(AnnIndexStore, "APPEND_PROBE_MAX", probe_max)
-        return AnnIndexStore(spark, str(tmp_path / name))
-
-    def run(name, probe_max):
-        st = copy(name, probe_max)
+        st = AnnIndexStore(spark, str(tmp_path / name))
         st.append(ids(58, 66), skip_existing=True)  # 58, 59 redelivered
         with pytest.raises(ValueError, match="1 duplicate id"):
             st.append(ids(66, 68).unionByName(ids(67, 68)))
         with pytest.raises(ValueError, match="2 delta id"):
             st.append(ids(64, 68))  # 64, 65 already indexed
-        idx = st.load()
-        hits = {
-            (r["probe_id"], r["vec_id"], round(r["cosine"], 9), r["rank"])
-            for r in S.topk_cosine_ivfpq(
-                full, F.col("vec_id") >= 62, k=3, dim=DIM, n_centroids=4,
-                m_sub=4, ksub=4, centroids=idx.centroids,
-                books=idx.pq_books, coded=st.codes("pq"),
-            ).collect()
-        }
-        return st, (_code_rows(st), idx.fingerprint, hits)
+        return st
 
-    drv, got_d = run("driver", AnnIndexStore.APPEND_PROBE_MAX)
-    _, got_s = run("spark", 0)
-    assert got_d == got_s
-    assert len(got_d[0]) == 2 * 66 and got_d[2]
-    assert got_d[1] == src._fingerprint(ids(0, 66))
+    drv = run("driver", AnnIndexStore.APPEND_PROBE_MAX)
+    dist = run("spark", 0)
+    rows = _code_rows(drv)
+    assert rows == _code_rows(dist) and len(rows) == 2 * 66
+    assert (
+        drv.load().fingerprint
+        == dist.load().fingerprint
+        == src._fingerprint(ids(0, 66))
+    )
+
+    def search(st, path):
+        idx = st.load()
+        return S.topk_cosine_ivfpq(
+            full, F.col("vec_id") >= 62, k=3, dim=DIM, n_centroids=4,
+            m_sub=4, ksub=4, centroids=idx.centroids,
+            books=idx.pq_books, coded=st.codes("pq"),
+        ).withColumn("path", F.lit(path))
+
+    hits = {"driver": set(), "spark": set()}
+    # both searches in one collect
+    for r in search(drv, "driver").unionByName(search(dist, "spark")).collect():
+        hits[r["path"]].add(
+            (r["probe_id"], r["vec_id"], round(r["cosine"], 9), r["rank"])
+        )
+    assert hits["driver"] == hits["spark"] and hits["driver"]
 
     # warm driver append: one redelivery (65, in the delta run) + 3 new
     monkeypatch.undo()
@@ -261,18 +277,21 @@ def test_append_driver_and_distributed_paths_agree(built, tmp_path, monkeypatch)
     assert len(sc.statusTracker().getJobIdsForGroup("ann-append-pin")) <= 5
     assert drv.load().n_vectors == 69
 
-    # legacy store (code files predate chash): the driver path writes the
-    # rows both paths agreed on above, without chash
-    st = copy("legacy", AnnIndexStore.APPEND_PROBE_MAX)
+    # legacy store (code files predate chash): the distributed copy with
+    # chash stripped, under a new root so no memoized schema or footer
+    # of the old one applies. The driver path writes the rows the warm
+    # append above wrote, without chash.
+    (tmp_path / "spark").rename(tmp_path / "legacy")
+    st = AnnIndexStore(spark, str(tmp_path / "legacy"))
     for f in st._snapshot()["files"]:
-        if f.startswith("codes/"):
+        if f.startswith(("codes/", "codes_delta/")):
             path = tmp_path / "legacy" / f
             t = pq.ParquetFile(path).read().drop_columns(["chash"])
             # Spark's footer metadata would still list chash
             pq.write_table(t.replace_schema_metadata(None), path)
             (path.parent / f".{path.name}.crc").unlink(missing_ok=True)
-    st.append(ids(58, 66), skip_existing=True)
-    assert _code_rows(st) == [r[:5] for r in got_d[0]]
+    st.append(ids(65, 69), skip_existing=True)
+    assert _code_rows(st) == [r[:5] for r in _code_rows(drv)]
 
 
 def test_codes_layout_and_physical_cell_pruning(built):
