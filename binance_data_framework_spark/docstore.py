@@ -36,6 +36,8 @@ two-commit vacuum grace for concurrent readers.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
@@ -56,7 +58,224 @@ def _content_tiebreak(df: DataFrame, exclude: tuple[str, ...] = ()):
     return F.xxhash64(*[F.col(c) for c in cols])
 
 
-class BandIndexStore(SnapshotStore):
+def _alias(name: str) -> property:
+    """A tier's public name for one of _HashLayoutStore's attributes."""
+    return property(
+        lambda self: getattr(self, name),
+        lambda self, value: setattr(self, name, value),
+    )
+
+
+class _HashLayoutStore(SnapshotStore):
+    """The auto-sized hash layout of BandIndexStore (``bucket=<k>``) and
+    DocumentStore (``shard=<k>``): rows live under ``<part>=<k>/`` with
+    k = hash(key) mod n, so a write or lookup touches only the partitions
+    its keys route to. Two modes for n:
+
+    - pinned (``n_<part>s=<int>``): the creation-time count is layout,
+      forever; a pinned store never relayouts on its own (the same
+      provenance rule as a pinned n_centroids ANN index).
+    - auto (``n_<part>s=None``): the count is DERIVED state owned by the
+      store — ``_auto_count`` of the committed row count, which the
+      tier's writes keep in the sidecar. The growth trigger
+      (``_maybe_grow``, behind ``maybe_rebucket``/``maybe_reshard``)
+      re-derives it and remaps the layout once the rule asks for
+      >= grow_factor x the current count. Without it, a store started
+      small keeps batch-1's count while the corpus grows 1000x.
+
+    The ``_layout.json`` sidecar pins the count, the key column and its
+    provenance on first write and is validated on every later open. This
+    class owns the count rule, mode setup, that check, the partition-dir
+    parser, the growth trigger and the remap. A tier supplies its data
+    (``_PART``, the clamp bounds, ``_KEY_ATTR``, the remap's commit
+    ``_KIND``) and hooks: ``_remap_rows(files)`` and
+    ``_remap_writer(rows, n)``, the remap's row source and writer, and
+    for sidecar fields of its own, ``_layout_extra``/``_check_extra``.
+
+    Single-maintainer note: a remap swaps the routing (sidecar) and the
+    file layout (manifest) in two steps; auto-mode handles re-read the
+    sidecar on every operation, so any op started after the remap commit
+    sees the new layout. A lookup that reads the sidecar in the
+    microseconds BEFORE a concurrent remap's commit and the manifest
+    after it can prune with the old routing for that one call — run
+    maintenance from the store's single writer (the gate), the same
+    assumption AnnIndexStore.maybe_rebuild's full-layout swap makes."""
+
+    #: partition directory name; the sidecar fields derive from it
+    #: (``n_<part>s``, ``auto_<part>s``, ``target_<part>_rows``)
+    _PART = ""
+    #: clamp bounds of the derived count
+    _MIN_PARTS = 1
+    _MAX_PARTS = 1
+    #: name of the key attribute and of its sidecar field
+    _KEY_ATTR = ""
+    #: staged-commit kind of the remap (its conflict message)
+    _KIND = ""
+
+    @classmethod
+    def _auto_count(cls, n_rows: int, target_rows: int) -> int:
+        """Partition count keeping expected committed occupancy at
+        ~target_rows for n_rows committed rows — the auto_planes/
+        auto_centroids rule (PLANS.md scale rule #1: parameters bounding
+        partition occupancy must be functions of corpus size, never
+        constants), clamped to [_MIN_PARTS, _MAX_PARTS]."""
+        return max(
+            cls._MIN_PARTS,
+            min(cls._MAX_PARTS, math.ceil(max(1, n_rows) / max(1, target_rows))),
+        )
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        key: str,
+        n: int | None,
+        target_rows: int,
+    ):
+        if n is not None and n <= 0:
+            raise ValueError(f"n_{self._PART}s must be positive")
+        super().__init__(spark, root)
+        self._key = key
+        self._target = target_rows
+        self._auto = n is None
+        self._n = n if n is not None else self._auto_count(0, target_rows)
+        self._layout_checked = False
+
+    def _check_layout(self) -> None:
+        """Pin (count, key column, the tier's extra fields) in the sidecar
+        on first write and VALIDATE them on every later open (code-review
+        r6): reopening with a different count would route the same key to
+        a different partition, so upserts would miss the stored copy,
+        deletes and lookups would miss rows — silently. Layout drift is a
+        config error and must raise, exactly like schema drift.
+
+        An auto handle adopts the stored layout wholesale: a reopened auto
+        store keeps its grown count, and opening a PINNED store with None
+        adopts the pinned count and stays pinned (auto provenance is
+        recorded at creation, not re-guessed). Pinning an auto store
+        raises. Auto handles also RE-ADOPT the sidecar's count on every
+        later call (one small driver-side read): a remap — by this handle
+        or another — must be visible to the next operation, not to the
+        next process."""
+        count, auto, target = (
+            f"n_{self._PART}s",
+            f"auto_{self._PART}s",
+            f"target_{self._PART}_rows",
+        )
+        if self._layout_checked:
+            if self._auto:
+                self._n = int(self._read_layout()[count])
+            return
+        name = type(self).__name__
+        fs, p = self._fs_path(self._LAYOUT)
+        if fs.exists(p):
+            stored = self._read_layout()
+            if self._auto:
+                self._n = int(stored[count])
+                self._auto = bool(stored.get(auto, False))
+                if stored.get(target):
+                    self._target = int(stored[target])
+            elif stored.get(auto, False):
+                raise ValueError(
+                    f"{name} at {self.root} is auto-{self._PART}ed (its "
+                    f"count is derived state, currently {stored.get(count)}) "
+                    f"— open it with {count}=None instead of pinning {self._n}"
+                )
+            if stored.get(count) != self._n or stored.get(self._KEY_ATTR) != self._key:
+                raise ValueError(
+                    f"{name} layout mismatch at {self.root}: stored {stored}, "
+                    f"requested {count}={self._n} {self._KEY_ATTR}={self._key!r}"
+                )
+            self._check_extra(stored)
+        else:
+            self._write_layout(
+                {
+                    count: self._n,
+                    self._KEY_ATTR: self._key,
+                    **self._layout_extra(),
+                    auto: self._auto,
+                    target: self._target,
+                    "n_rows": 0,
+                }
+            )
+        self._layout_checked = True
+
+    def _layout_extra(self) -> dict:
+        """The tier's own sidecar fields, written at creation."""
+        return {}
+
+    def _check_extra(self, stored: dict) -> None:
+        """Validate the tier's own sidecar fields on the first open."""
+
+    def _part_of(self, rel: str) -> int | None:
+        """Partition index of a store-relative path; None outside the
+        ``<part>=<k>/`` layout (e.g. a band delta run)."""
+        name, _, k = rel.split("/", 1)[0].partition("=")
+        try:
+            return int(k) if name == self._PART else None
+        except ValueError:
+            return None
+
+    def _files_by_part(self, files: list[str]) -> dict[int, list[str]]:
+        """Partition index -> its files, in listing order (files outside
+        the layout are left out)."""
+        groups: dict[int, list[str]] = {}
+        for f in files:
+            k = self._part_of(f)
+            if k is not None:
+                groups.setdefault(k, []).append(f)
+        return groups
+
+    def _maybe_grow(self, grow_factor: float) -> bool:
+        """The growth trigger: an O(1) sidecar check per call (the row
+        counter the tier's writes maintain); remaps once the count rule
+        at the committed size asks for >= ``grow_factor`` x the current
+        count. Pinned stores never grow. True iff a remap committed."""
+        self._check_layout()
+        if not self._auto:
+            return False
+        stored = self._read_layout()
+        ideal = self._auto_count(
+            int(stored.get("n_rows", 0)),
+            int(stored.get(f"target_{self._PART}_rows", self._target)),
+        )
+        if ideal < grow_factor * int(stored[f"n_{self._PART}s"]):
+            return False
+        return self._remap(None)
+
+    def _remap(self, n: int | None) -> bool:
+        """Rewrite the committed rows under count ``n`` — a narrow remap
+        (one hash mod the new count; no content recompute) superseding
+        every prior file in ONE commit, so readers see the old or the new
+        layout whole, never a mix. ``n=None`` derives the count from the
+        EXACT committed row count, measured on the rewrite's rows (the
+        sidecar counter is best-effort; the rewrite is the authoritative
+        recount and resets it). Also folds multi-file partitions (one file
+        per new partition). True iff the layout changed; an equal count
+        only refreshes an auto store's row counter."""
+        self._check_layout()
+        man = self._snapshot()
+        if not man or not man["files"]:
+            return False
+        rows = self._remap_rows(list(man["files"]))
+        exact = rows.count()
+        final = n if n is not None else self._auto_count(exact, self._target)
+        if final == self._n:
+            if self._auto:
+                self._layout_update(n_rows=exact)
+            return False
+        self._staged_commit(
+            self._remap_writer(rows, final).save,
+            list(man["files"]),
+            op=f"re{self._PART}",
+            kind=self._KIND,
+        )
+        self._layout_update(**{f"n_{self._PART}s": final, "n_rows": exact})
+        self._n = final
+        return True
+
+
+class BandIndexStore(_HashLayoutStore):
     """Append-only LSH band index on the snapshot-commit protocol: rows
     ``(id_col, band_idx int, band_hash long)`` laid out as
     ``bucket=<pmod(band_hash, n_buckets)>/*.parquet``, so a lookup for a
@@ -83,36 +302,25 @@ class BandIndexStore(SnapshotStore):
     ~probe_keys x row-group rows regardless of the bucket/batch-key
     ratio, which is what kills the r9 inversion (per-file overhead beating
     pruning once touched ≈ n_buckets). n_buckets remains the layout knob
-    bounding per-bucket file size and join-path pruning.
-    Two modes (VERDICT r8 #1 — the growth leg the ANN index got in r8):
-
-    - ``n_buckets=<int>`` (pinned): the creation-time count is layout,
-      forever — the pre-r9 behavior, for callers who sized it for the
-      corpus target themselves. Pinned stores never auto-rebucket, the
-      same provenance rule as a pinned n_centroids ANN index.
-    - ``n_buckets=None`` (auto): the count is DERIVED state owned by the
-      store — it starts at auto_buckets(0) and ``maybe_rebucket()``
-      (called by the streaming gate per accepted batch) re-derives it at
-      the CURRENT committed row count, rewriting the layout once the
-      rule asks for >= grow_factor x the committed count. Re-bucketing
-      is a narrow remap of the committed (id, band_idx, band_hash) rows
-      — pmod against the new count; no signature or shingle recompute.
+    bounding per-bucket file size and join-path pruning. Pinned
+    (``n_buckets=<int>``) and auto (``n_buckets=None``) modes, growth
+    (``maybe_rebucket``) and the sidecar check are _HashLayoutStore's;
+    re-bucketing is a narrow remap of the committed (id, band_idx,
+    band_hash) rows — pmod against the new count; no signature or
+    shingle recompute.
 
     The band-GENERATION params (num_hashes/num_bands/shingle_n) stay
     pinned in BOTH modes, deliberately: unlike the bucket count (pure
     physical layout), they define the near-duplicate SEMANTICS — the
     banding recall curve — so growing them with the corpus would silently
     change which documents count as duplicates. Scaling lookup cost is
-    the bucket count's job.
+    the bucket count's job."""
 
-    Single-maintainer note: rebucket swaps the bucket routing (sidecar)
-    and the file layout (manifest) in two steps; auto-mode handles
-    re-read the sidecar on every operation, so any op started after the
-    rebucket commit sees the new layout. A lookup that reads the sidecar
-    in the microseconds BEFORE a concurrent rebucket's commit and the
-    manifest after it can prune with the old routing for that one call —
-    run maintenance from the store's single writer (the gate), the same
-    assumption AnnIndexStore.maybe_rebuild's full-layout swap makes."""
+    _PART, _MIN_PARTS, _MAX_PARTS = "bucket", 8, 1 << 20
+    _KEY_ATTR, _KIND = "id_col", "band-index"
+    id_col = _alias("_key")
+    n_buckets = _alias("_n")
+    target_bucket_rows = _alias("_target")
 
     #: target committed rows per bucket for the auto derivation — ~50k
     #: rows x ~24 B/row ≈ 1.2 MB per bucket file, the same IO-granularity
@@ -138,20 +346,11 @@ class BandIndexStore(SnapshotStore):
 
     @staticmethod
     def auto_buckets(n_rows: int, target_bucket_rows: int = 50_000) -> int:
-        """Bucket count keeping expected committed occupancy at
-        ~target_bucket_rows for n_rows committed band rows — the
-        auto_planes/auto_centroids rule applied to the band index
-        (PLANS.md scale rule #1: LSH/banding parameters bounding bucket
-        occupancy must be functions of corpus size, never constants).
+        """Bucket count for n_rows committed band rows (_auto_count).
         Clamped to [8, 2^20]: 8 keeps a tiny store from degenerating to
         one file, 2^20 x 50k rows ≈ 5e10 band rows before the clamp
         binds."""
-        import math as _math
-
-        return max(
-            8,
-            min(1 << 20, _math.ceil(max(1, n_rows) / max(1, target_bucket_rows))),
-        )
+        return BandIndexStore._auto_count(n_rows, target_bucket_rows)
 
     def __init__(
         self,
@@ -162,21 +361,9 @@ class BandIndexStore(SnapshotStore):
         params: dict | None = None,
         target_bucket_rows: int | None = None,
     ):
-        if n_buckets is not None and n_buckets <= 0:
-            raise ValueError("n_buckets must be positive")
-        super().__init__(spark, root)
-        self.id_col = id_col
-        self.target_bucket_rows = (
-            target_bucket_rows
-            if target_bucket_rows is not None
-            else self.TARGET_BUCKET_ROWS
-        )
-        self._auto = n_buckets is None
-        self.n_buckets = (
-            n_buckets
-            if n_buckets is not None
-            else self.auto_buckets(0, self.target_bucket_rows)
-        )
+        if target_bucket_rows is None:
+            target_bucket_rows = self.TARGET_BUCKET_ROWS
+        super().__init__(spark, root, id_col, n_buckets, target_bucket_rows)
         # band-GENERATION parameters (minhash num_hashes/num_bands/
         # shingle_n for the near-dup gate): band hashes are a pure function
         # of these, so they are part of the layout — reopening with
@@ -185,94 +372,40 @@ class BandIndexStore(SnapshotStore):
         # the store itself is generator-agnostic; callers that derive band
         # keys (the gate) MUST pass them.
         self.params = dict(params) if params else None
-        self._layout_checked = False
 
-    def _check_layout(self) -> None:
-        """Pin (n_buckets, id_col, band-generation params) like
-        DocumentStore._check_layout — reopening with a different bucket
-        count would route the same band key to a different bucket, and
-        different generator params (minhash widths) produce band hashes
-        that never match committed rows; both must raise, not silently
-        miss candidates (ADVICE r6).
+    def _layout_extra(self) -> dict:
+        return {"params": self.params}
 
-        Auto-bucketed stores additionally RE-ADOPT the sidecar's current
-        n_buckets on every call (one small driver-side read): in auto mode
-        the count is derived state owned by the store, and a rebucket —
-        by this handle or another — must be visible to the next lookup,
-        not to the next process."""
-        if self._layout_checked:
-            if self._auto:
-                self.n_buckets = int(self._read_layout()["n_buckets"])
-            return
-
-        fs, p = self._fs_path(self._LAYOUT)
-        if fs.exists(p):
-            stored = self._read_layout()
-            if self._auto:
-                # adopt the stored layout wholesale: in auto mode the
-                # caller pins nothing — a reopened auto store keeps its
-                # grown count, and opening a PINNED store with
-                # n_buckets=None adopts the pinned count (and stays
-                # pinned: auto provenance is recorded at creation, not
-                # re-guessed)
-                self.n_buckets = int(stored["n_buckets"])
-                self._auto = bool(stored.get("auto_buckets", False))
-                if stored.get("target_bucket_rows"):
-                    self.target_bucket_rows = int(stored["target_bucket_rows"])
-            elif stored.get("auto_buckets", False):
+    def _check_extra(self, stored: dict) -> None:
+        """Pin the band-generation params: different generator params
+        (minhash widths) produce band hashes that never match committed
+        rows, so a mismatch must raise, not silently miss candidates
+        (ADVICE r6)."""
+        stored_params = stored.get("params")
+        if self.params is not None and stored_params is None:
+            # a pre-pinning layout sidecar: adopting the caller's
+            # params is only safe while NO bands are committed — on a
+            # populated store the committed band hashes were derived
+            # with UNKNOWN params, and adopting whatever the first
+            # post-upgrade caller passes would legitimize exactly the
+            # drift the pin exists to catch (review r7 #3)
+            man = self._snapshot()
+            if man and man["files"]:
                 raise ValueError(
-                    f"BandIndexStore at {self.root} is auto-bucketed (its "
-                    f"count is derived state, currently "
-                    f"{stored.get('n_buckets')}) — open it with "
-                    f"n_buckets=None instead of pinning "
-                    f"{self.n_buckets}"
+                    f"BandIndexStore at {self.root} holds committed bands "
+                    f"but its layout predates band-param pinning — the "
+                    f"generator params of the stored rows are unknowable; "
+                    f"rebuild the index to pin {self.params}"
                 )
-            if (
-                stored.get("n_buckets") != self.n_buckets
-                or stored.get("id_col") != self.id_col
-            ):
-                raise ValueError(
-                    f"BandIndexStore layout mismatch at {self.root}: stored "
-                    f"{stored}, requested n_buckets={self.n_buckets} "
-                    f"id_col={self.id_col!r}"
-                )
-            stored_params = stored.get("params")
-            if self.params is not None and stored_params is None:
-                # a pre-pinning layout sidecar: adopting the caller's
-                # params is only safe while NO bands are committed — on a
-                # populated store the committed band hashes were derived
-                # with UNKNOWN params, and adopting whatever the first
-                # post-upgrade caller passes would legitimize exactly the
-                # drift the pin exists to catch (review r7 #3)
-                man = self._snapshot()
-                if man and man["files"]:
-                    raise ValueError(
-                        f"BandIndexStore at {self.root} holds committed bands "
-                        f"but its layout predates band-param pinning — the "
-                        f"generator params of the stored rows are unknowable; "
-                        f"rebuild the index to pin {self.params}"
-                    )
-                stored["params"] = self.params
-                self._write_layout(stored)
-            elif self.params is not None and stored_params != self.params:
-                raise ValueError(
-                    f"BandIndexStore band-param mismatch at {self.root}: "
-                    f"stored {stored_params}, requested {self.params} — "
-                    f"band hashes from different generator params never "
-                    f"match committed rows (rebuild the index to change them)"
-                )
-        else:
-            self._write_layout(
-                {
-                    "n_buckets": self.n_buckets,
-                    "id_col": self.id_col,
-                    "params": self.params,
-                    "auto_buckets": self._auto,
-                    "target_bucket_rows": self.target_bucket_rows,
-                    "n_rows": 0,
-                }
+            stored["params"] = self.params
+            self._write_layout(stored)
+        elif self.params is not None and stored_params != self.params:
+            raise ValueError(
+                f"BandIndexStore band-param mismatch at {self.root}: "
+                f"stored {stored_params}, requested {self.params} — "
+                f"band hashes from different generator params never "
+                f"match committed rows (rebuild the index to change them)"
             )
-        self._layout_checked = True
 
     def pin_params(self, params: dict) -> None:
         """Declare the band-generation params this session derives keys
@@ -288,16 +421,6 @@ class BandIndexStore(SnapshotStore):
             )
         self.params = dict(params)
         self._layout_checked = False  # force re-validation vs the sidecar
-
-    @staticmethod
-    def _bucket_of(rel: str) -> int | None:
-        seg = rel.split("/", 1)[0]
-        if not seg.startswith("bucket="):
-            return None
-        try:
-            return int(seg[7:])
-        except ValueError:
-            return None
 
     @staticmethod
     def _is_delta(rel: str) -> bool:
@@ -479,7 +602,7 @@ class BandIndexStore(SnapshotStore):
         files = [
             f
             for f in man["files"]
-            if self._is_delta(f) or self._bucket_of(f) in touched
+            if self._is_delta(f) or self._part_of(f) in touched
         ]
         if not files:
             return empty
@@ -541,7 +664,7 @@ class BandIndexStore(SnapshotStore):
             keys = (
                 all_keys
                 if self._is_delta(rel)
-                else by_bucket[self._bucket_of(rel)]
+                else by_bucket[self._part_of(rel)]
             )
             rgs = [
                 g
@@ -633,7 +756,7 @@ class BandIndexStore(SnapshotStore):
             files = [
                 f
                 for f in man["files"]
-                if self._is_delta(f) or self._bucket_of(f) in touched
+                if self._is_delta(f) or self._part_of(f) in touched
             ]
         elif drop_keys is not None:
             files = list(man["files"])
@@ -646,13 +769,12 @@ class BandIndexStore(SnapshotStore):
             if has_delta:
                 files = list(man["files"])
             else:
-                per_bucket: dict[int, int] = {}
-                for f in man["files"]:
-                    b = self._bucket_of(f)
-                    if b is not None:
-                        per_bucket[b] = per_bucket.get(b, 0) + 1
-                multi = {b for b, n in per_bucket.items() if n > 1}
-                files = [f for f in man["files"] if self._bucket_of(f) in multi]
+                files = [
+                    f
+                    for fl in self._files_by_part(man["files"]).values()
+                    if len(fl) > 1
+                    for f in fl
+                ]
         if not files:
             return 0
         stored = self._read_files(files)
@@ -676,37 +798,19 @@ class BandIndexStore(SnapshotStore):
             op="compact",
             kind="band-index",
         )
-        # delta runs have no bucket directory (_bucket_of -> None); count
+        # delta runs have no bucket directory (_part_of -> None); count
         # the rewritten buckets, with a folded-runs-only rewrite as 1
-        rewritten = {self._bucket_of(f) for f in files}
+        rewritten = {self._part_of(f) for f in files}
         return len(rewritten - {None}) or 1
 
     def maybe_rebucket(self, grow_factor: float = 2.0) -> bool:
-        """Maintenance trigger for an auto-bucketed index grown through
-        appends (VERDICT r8 #1 — the exact ADVICE r7 #4 failure mode one
-        tier over, fixed for IVF cells in r8): a gate started on a small
-        corpus keeps batch-1's bucket count while the corpus grows 1000x,
-        so per-batch candidate reads grow linearly
-        (num_bands x corpus / n_buckets) and the measured-flat gate claim
-        quietly expires. This re-runs the auto_buckets derivation at the
-        CURRENT committed row count (the sidecar counter append maintains
-        — an O(1) driver-side check) and rewrites the layout
-        (``rebucket()``) when the rule asks for >= ``grow_factor`` x the
-        committed count. Pinned-n_buckets stores never auto-rebucket:
-        auto mode is recorded provenance, not a guess — the same rule as
-        AnnIndexStore.maybe_rebuild. Returns True iff a rebucket was
-        committed."""
-        self._check_layout()
-        if not self._auto:
-            return False
-        stored = self._read_layout()
-        ideal = self.auto_buckets(
-            int(stored.get("n_rows", 0)),
-            int(stored.get("target_bucket_rows", self.target_bucket_rows)),
-        )
-        if ideal < grow_factor * int(stored["n_buckets"]):
-            return False
-        return self.rebucket()
+        """Growth trigger of an auto-bucketed index (_maybe_grow): without
+        it a gate started on a small corpus keeps batch-1's bucket count
+        while the corpus grows 1000x, so per-batch candidate reads grow
+        linearly (num_bands x corpus / n_buckets) and the measured-flat
+        gate claim quietly expires (VERDICT r8 #1). Returns True iff a
+        rebucket was committed."""
+        return self._maybe_grow(grow_factor)
 
     def maybe_fold_deltas(self, max_fraction: float = 0.02) -> bool:
         """Amortized LSM fold trigger (pairs with append()'s delta runs):
@@ -726,74 +830,51 @@ class BandIndexStore(SnapshotStore):
         return self.compact() > 0
 
     def rebucket(self, n_buckets: int | None = None) -> bool:
-        """Rewrite the committed band rows under a new bucket count —
-        a narrow remap (one pmod against the new count; no signature or
-        shingle recompute) superseding every prior file in ONE commit, so
-        readers see the old or the new layout whole, never a mix. With
-        ``n_buckets=None`` the new count is auto_buckets() of the EXACT
-        committed row count (measured during the rewrite's first pass —
-        the sidecar counter is best-effort; the rewrite is the
-        authoritative recount and resets it). Also folds redelivery
-        duplicates and multi-file buckets as a side effect (the rewrite
-        is one file per new bucket). Returns True iff the layout changed
-        (an equal derived count just refreshes the row counter)."""
-        self._check_layout()
-        man = self._snapshot()
-        if not man or not man["files"]:
-            return False
-        rows = (
-            self._read_files(list(man["files"]))
+        """Remap the committed band rows to ``n_buckets`` buckets, or to
+        auto_buckets() of the exact committed row count when None
+        (_remap). The rewrite also folds redelivery duplicates and
+        multi-file buckets. Returns True iff the layout changed."""
+        return self._remap(n_buckets)
+
+    def _remap_rows(self, files: list[str]) -> DataFrame:
+        return (
+            self._read_files(files)
             .select(self.id_col, "band_idx", "band_hash")
             .distinct()
         )
-        exact = rows.count()
-        final = (
-            n_buckets
-            if n_buckets is not None
-            else self.auto_buckets(exact, self.target_bucket_rows)
+
+    def _remap_writer(self, rows: DataFrame, n: int):
+        return self._bucketed_writer(
+            rows.withColumn("bucket", F.pmod("band_hash", F.lit(n)))
         )
-        if final == self.n_buckets:
-            if self._auto:
-                self._layout_update(n_rows=exact)
-            return False
-        self._staged_commit(
-            self._bucketed_writer(
-                rows.withColumn("bucket", F.pmod("band_hash", F.lit(final)))
-            ).save,
-            list(man["files"]),
-            op="rebucket",
-            kind="band-index",
-        )
-        self._layout_update(n_buckets=final, n_rows=exact)
-        self.n_buckets = final
-        return True
 
 
-class DocumentStore(SnapshotStore):
+class DocumentStore(_HashLayoutStore):
     """Hash-sharded snapshot store for keyed corpus tables (module
     docstring). ``key_col`` must be an integral id column (the portable
     multiplicative hash is int64 arithmetic — string keys should be
     pre-hashed to an id, e.g. xxhash64, upstream).
 
     Shard-count modes (r9 — the third tier to get the growth leg, after
-    IVF cells in r8 and band buckets earlier in r9):
+    IVF cells in r8 and band buckets earlier in r9; _HashLayoutStore):
 
-    - ``n_shards=<int>`` (pinned, default 16): the pre-r9 behavior — the
-      creation-time count is layout forever, and the deterministic
-      shard = training-shard identity holds across the store's life.
-    - ``n_shards=None`` (auto): the count is DERIVED state —
-      auto_shards(n_rows, target_shard_rows) with sidecar provenance and
-      a row counter maintained exactly by append_docs/delete_docs (the
-      auto-mode write paths; save_docs in auto mode recounts the store
-      after commit — documented there). ``maybe_reshard()`` re-derives
-      the count at the committed size and remaps the layout (a narrow
-      re-hash of the key column — one pmod, one commit) once the rule
-      asks for >= grow_factor x the current count. Without it, an
-      append-only store started small keeps batch-1's shard count while
-      the corpus grows 1000x: each shard becomes corpus/16, compaction
-      rewrites balloon, and the one-file-per-shard write loses all
-      parallelism. Same single-maintainer note as
-      BandIndexStore.rebucket."""
+    - ``n_shards=<int>`` (pinned, default 16): the creation-time count is
+      layout forever, and the deterministic shard = training-shard
+      identity holds across the store's life.
+    - ``n_shards=None`` (auto): the count is derived state, with a row
+      counter maintained exactly by append_docs/delete_docs (save_docs in
+      auto mode recounts the store after commit). ``maybe_reshard()``
+      remaps the layout — a narrow re-hash of the key column, one pmod,
+      one commit — once the rule asks for >= grow_factor x the current
+      count. Without it each shard of an append-only store started small
+      becomes corpus/16, compaction rewrites balloon, and the
+      one-file-per-shard write loses all parallelism."""
+
+    _PART, _MIN_PARTS, _MAX_PARTS = "shard", 4, 1 << 18
+    _KEY_ATTR, _KIND = "key_col", ""
+    key_col = _alias("_key")
+    n_shards = _alias("_n")
+    target_shard_rows = _alias("_target")
 
     #: target committed rows per shard for the auto derivation — ~250k
     #: ~1 KB docs ≈ a 250 MB shard, the "one shard fits an executor
@@ -803,16 +884,8 @@ class DocumentStore(SnapshotStore):
     @staticmethod
     def auto_shards(n_rows: int, target_shard_rows: int = 250_000) -> int:
         """Shard count keeping expected occupancy ~target_shard_rows at
-        n_rows committed docs; clamped to [4, 2^18]."""
-        import math as _math
-
-        return max(
-            4,
-            min(
-                1 << 18,
-                _math.ceil(max(1, n_rows) / max(1, target_shard_rows)),
-            ),
-        )
+        n_rows committed docs (_auto_count); clamped to [4, 2^18]."""
+        return DocumentStore._auto_count(n_rows, target_shard_rows)
 
     def __init__(
         self,
@@ -822,95 +895,16 @@ class DocumentStore(SnapshotStore):
         n_shards: int | None = 16,
         target_shard_rows: int | None = None,
     ):
-        if n_shards is not None and n_shards <= 0:
-            raise ValueError("n_shards must be positive")
-        super().__init__(spark, root)
-        self.key_col = key_col
-        self.target_shard_rows = (
-            target_shard_rows
-            if target_shard_rows is not None
-            else self.TARGET_SHARD_ROWS
-        )
-        self._auto = n_shards is None
-        self.n_shards = (
-            n_shards
-            if n_shards is not None
-            else self.auto_shards(0, self.target_shard_rows)
-        )
-        self._layout_checked = False
-
-    def _check_layout(self) -> None:
-        """Pin (n_shards, key_col) in a _layout.json sidecar on first
-        write and VALIDATE on every later open (code-review r6): reopening
-        a 16-shard store with n_shards=32 would hash keys to different
-        shards, so upserts would miss the stored copy (duplicate keys) and
-        deletes would miss rows entirely — silently. Layout drift is a
-        config error and must raise, exactly like schema drift.
-
-        Auto-sharded stores RE-ADOPT the sidecar's current n_shards on
-        every call (one small driver-side read): in auto mode the count
-        is derived state, and a reshard — by this handle or another —
-        must be visible to the next operation, not the next process."""
-        if self._layout_checked:
-            if self._auto:
-                self.n_shards = int(self._read_layout()["n_shards"])
-            return
-
-        fs, p = self._fs_path(self._LAYOUT)
-        if fs.exists(p):
-            stored = self._read_layout()
-            if self._auto:
-                # adopt the stored layout wholesale (auto stores keep
-                # their grown count; opening a PINNED store with
-                # n_shards=None adopts the pinned count and stays pinned)
-                self.n_shards = int(stored["n_shards"])
-                self._auto = bool(stored.get("auto_shards", False))
-                if stored.get("target_shard_rows"):
-                    self.target_shard_rows = int(stored["target_shard_rows"])
-            elif stored.get("auto_shards", False):
-                raise ValueError(
-                    f"DocumentStore at {self.root} is auto-sharded (its "
-                    f"count is derived state, currently "
-                    f"{stored.get('n_shards')}) — open it with "
-                    f"n_shards=None instead of pinning {self.n_shards}"
-                )
-            if (
-                stored.get("n_shards") != self.n_shards
-                or stored.get("key_col") != self.key_col
-            ):
-                raise ValueError(
-                    f"DocumentStore layout mismatch at {self.root}: stored "
-                    f"{stored}, requested n_shards={self.n_shards} "
-                    f"key_col={self.key_col!r}"
-                )
-        else:
-            self._write_layout(
-                {
-                    "n_shards": self.n_shards,
-                    "key_col": self.key_col,
-                    "auto_shards": self._auto,
-                    "target_shard_rows": self.target_shard_rows,
-                    "n_rows": 0,
-                }
-            )
-        self._layout_checked = True
+        if target_shard_rows is None:
+            target_shard_rows = self.TARGET_SHARD_ROWS
+        super().__init__(spark, root, key_col, n_shards, target_shard_rows)
 
     # -- helpers -----------------------------------------------------------
-    @staticmethod
-    def _shard_of(rel: str) -> int | None:
-        seg = rel.split("/", 1)[0]
-        if not seg.startswith("shard="):
-            return None
-        try:
-            return int(seg[6:])
-        except ValueError:
-            return None
-
     def _shard_files(self, files: list[str], shards: set[int]) -> list[str]:
         """Manifest-level shard pruning (the corpus analogue of
         OhlcvStore._series_window_files): cut the listing driver-side so
         the merge scan is O(touched shards), not O(store)."""
-        return [f for f in files if self._shard_of(f) in shards]
+        return [f for f in files if self._part_of(f) in shards]
 
     def _shard_writer(self, rows: DataFrame):
         """Writer of the shard layout: one file per shard, rows key-sorted
@@ -1047,19 +1041,10 @@ class DocumentStore(SnapshotStore):
         if self._auto:
             # upsert mixes inserts and replacements, so the counter cannot
             # be rolled forward from the delta alone — recount the live
-            # files' footers (auto-mode stores write through append_docs
-            # on the hot path; save_docs here is the rare bulk-load /
-            # correction case, so the O(files) footer count is maintenance
-            # cost, not per-batch cost)
-            man2 = self._snapshot()
-            total = (
-                self.spark.read.option("basePath", self.root)
-                .parquet(*[f"{self.root}/{f}" for f in man2["files"]])
-                .count()
-                if man2 and man2["files"]
-                else 0
-            )
-            self._layout_update(n_rows=int(total))
+            # files (footer row counts on a local root: no Spark job)
+            live = self._live(self._snapshot())
+            total = self._row_count(live, self.key_col, live, self.root)
+            self._layout_update(n_rows=total)
         return len(touched)
 
     def append_docs(self, df: DataFrame, on_existing: str = "raise") -> int:
@@ -1186,22 +1171,13 @@ class DocumentStore(SnapshotStore):
             removed_fn=self._same_shard_rule(superseded, touched, "delete_docs"),
         )
         if self._auto:
-            # exact removed-row delta from parquet footers (the rewritten
-            # shard files are batch-bounded; no plan re-execution)
-            before = (
-                self.spark.read.option("basePath", self.root)
-                .parquet(*[f"{self.root}/{f}" for f in superseded])
-                .count()
+            # exact removed-row delta (footer row counts on a local root)
+            live = man["files"] + new_files
+            self._bump_rows(
+                self._row_count(new_files, self.key_col, live, self.root)
+                - self._row_count(superseded, self.key_col, live, self.root)
             )
-            after = (
-                self.spark.read.option("basePath", self.root)
-                .parquet(*[f"{self.root}/{f}" for f in new_files])
-                .count()
-                if new_files
-                else 0
-            )
-            self._bump_rows(after - before)
-        return len({self._shard_of(f) for f in superseded})
+        return len({self._part_of(f) for f in superseded})
 
     # -- read path ---------------------------------------------------------
     def read(self) -> DataFrame:
@@ -1289,81 +1265,35 @@ class DocumentStore(SnapshotStore):
         man = self._snapshot()
         if not man:
             return 0
-        groups: dict[int, list[str]] = {}
-        for rel in man["files"]:
-            s = self._shard_of(rel)
-            if s is not None:
-                groups.setdefault(s, []).append(rel)
-        todo = {s: fl for s, fl in groups.items() if len(fl) > 1}
+        groups = self._files_by_part(man["files"]).values()
+        todo = [fl for fl in groups if len(fl) > 1]
         if not todo:
             return 0
-        originals = sorted(f for fl in todo.values() for f in fl)
-        df = self.spark.read.option("basePath", self.root).parquet(
-            *[f"{self.root}/{f}" for f in originals]
-        )
-        writer = self._shard_writer(df)
+        originals = sorted(f for fl in todo for f in fl)
+        rows = self._committed_parquet(originals, base_path=self.root)
+        writer = self._shard_writer(rows)
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", max_records_per_file)
         self._staged_commit(writer.save, originals, op="optimize")
         return len(todo)
 
     def maybe_reshard(self, grow_factor: float = 2.0) -> bool:
-        """Maintenance trigger for an AUTO-sharded store grown through
-        appends (the r9 growth-leg rule applied to the third derived
-        layout, after IVF cells and band buckets): re-run the auto_shards
-        derivation at the committed row count (O(1) sidecar check) and
-        remap the layout once the rule asks for >= ``grow_factor`` x the
-        current count. Pinned-n_shards stores never auto-reshard (the
-        recorded-provenance rule). Returns True iff a reshard was
-        committed."""
-        self._check_layout()
-        if not self._auto:
-            return False
-        stored = self._read_layout()
-        ideal = self.auto_shards(
-            int(stored.get("n_rows", 0)),
-            int(stored.get("target_shard_rows", self.target_shard_rows)),
-        )
-        if ideal < grow_factor * int(stored["n_shards"]):
-            return False
-        return self.reshard()
+        """Growth trigger of an AUTO-sharded store grown through appends
+        (_maybe_grow). Returns True iff a reshard was committed."""
+        return self._maybe_grow(grow_factor)
 
     def reshard(self, n_shards: int | None = None) -> bool:
-        """Rewrite the committed rows under a new shard count — a narrow
-        remap (one portable-hash pmod against the new count; no content
-        recompute) superseding every prior file in ONE commit. With
-        ``n_shards=None`` the new count is auto_shards() of the EXACT
-        committed row count (the rewrite recounts; the sidecar counter is
-        best-effort). Also folds multi-file shards as a side effect.
-        NOTE: resharding changes the store-shard <-> training-shard
-        identity (shard = hash mod n); exporters that pinned a shard
-        count should export through curation.shard_assign with their own
-        n, which is independent of the store layout. Returns True iff
-        the layout changed."""
-        self._check_layout()
-        man = self._snapshot()
-        if not man or not man["files"]:
-            return False
-        rows = (
-            self.spark.read.option("basePath", self.root)
-            .parquet(*[f"{self.root}/{f}" for f in man["files"]])
-            .drop("shard")
-        )
-        exact = rows.count()
-        final = (
-            n_shards
-            if n_shards is not None
-            else self.auto_shards(exact, self.target_shard_rows)
-        )
-        if final == self.n_shards:
-            if self._auto:
-                self._layout_update(n_rows=exact)
-            return False
-        self._staged_commit(
-            self._shard_writer(shard_assign(rows, final, self.key_col)).save,
-            list(man["files"]),
-            op="reshard",
-        )
-        self._layout_update(n_shards=final, n_rows=exact)
-        self.n_shards = final
-        return True
+        """Remap the committed rows to ``n_shards`` shards, or to
+        auto_shards() of the exact committed row count when None
+        (_remap); also folds multi-file shards. NOTE: resharding changes
+        the store-shard <-> training-shard identity (shard = hash mod n);
+        exporters that pinned a shard count should export through
+        curation.shard_assign with their own n, which is independent of
+        the store layout. Returns True iff the layout changed."""
+        return self._remap(n_shards)
+
+    def _remap_rows(self, files: list[str]) -> DataFrame:
+        return self._committed_parquet(files, base_path=self.root).drop("shard")
+
+    def _remap_writer(self, rows: DataFrame, n: int):
+        return self._shard_writer(shard_assign(rows, n, self.key_col))

@@ -302,6 +302,24 @@ class SnapshotStore:
             del cache[dead]
         return {r: cache.get((r, column)) for r in rels}
 
+    def _row_count(
+        self,
+        rels: list[str],
+        column: str,
+        live_files: list[str],
+        base_path: str | None = None,
+    ) -> int:
+        """Exact row count of the committed files ``rels``: the sum of
+        their footers' row counts on a local root (_footer_stats, keyed by
+        ``column`` and evicted against ``live_files``; no Spark job), else
+        — or on an unreadable footer — one Spark count."""
+        local_root = self._local_root()
+        if local_root is not None:
+            stats = self._footer_stats(rels, column, local_root, live_files)
+            if None not in stats.values():
+                return sum(g[3] for groups in stats.values() for g in groups)
+        return self._committed_parquet(rels, base_path).count() if rels else 0
+
     def _fold_due(
         self,
         deltas: list[str],
@@ -316,32 +334,28 @@ class SnapshotStore:
         base's (never below the tier's ``floor``). At fraction f each row
         is rewritten ~1/f-amortized once per decade of growth, so a fold
         costs O(batch) per append, and lookups between folds read at most
-        f x base rows plus the file cap in runs. Row counts come from the
-        cached footers on local roots: no Spark job, and the trigger runs
-        every gate batch. Elsewhere (or on an unreadable footer) they are
-        Spark counts: the runs' count is batch-sized, and the base count
-        is cached against the base file list, which only a fold, compact
-        or rebuild commit changes. Every file the tiers cache stats for is
-        a delta run or a base file, so they are the eviction list."""
+        f x base rows plus the file cap in runs. Row counts are
+        _row_count's: cached footers on local roots, so the trigger, which
+        runs every gate batch, runs no Spark job. Elsewhere the runs'
+        Spark count is batch-sized, and the base count is cached against
+        the base file list, which only a fold, compact or rebuild commit
+        changes. Every file the tiers cache stats for is a delta run or a
+        base file, so they are the eviction list."""
         if not deltas:
             return False
         if len(deltas) >= self.DELTA_FOLD_MAX_FILES:
             return True
-        local_root = self._local_root()
-        stats = (
-            self._footer_stats(deltas + base, column, local_root, deltas + base)
-            if local_root is not None
-            else {}
-        )
-        if stats and None not in stats.values():
-            delta_rows = sum(g[3] for f in deltas for g in stats[f])
-            base_rows = sum(g[3] for f in base for g in stats[f])
+        live = deltas + base
+        delta_rows = self._row_count(deltas, column, live)
+        if self._local_root() is not None:
+            base_rows = self._row_count(base, column, live, base_path)
         else:
-            delta_rows = self._committed_parquet(deltas).count()
             key = tuple(sorted(base))
             if self._fold_base_rows is None or self._fold_base_rows[0] != key:
-                n = self._committed_parquet(base, base_path).count() if base else 0
-                self._fold_base_rows = (key, n)
+                self._fold_base_rows = (
+                    key,
+                    self._row_count(base, column, live, base_path),
+                )
             base_rows = self._fold_base_rows[1]
         return delta_rows >= max(floor, max_fraction * base_rows)
 

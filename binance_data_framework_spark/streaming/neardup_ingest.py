@@ -68,6 +68,14 @@ from binance_data_framework_spark.operators.dedup import (
 )
 
 
+def _fragmented(store, min_files: int) -> bool:
+    """Whether any partition of a hash-layout store (DocumentStore,
+    BandIndexStore) holds ``min_files`` or more files."""
+    man = store._snapshot() or {}
+    parts = store._files_by_part(man.get("files", []))
+    return any(len(files) >= min_files for files in parts.values())
+
+
 def _banded_drops(
     sigs: DataFrame,
     docstore,
@@ -587,34 +595,24 @@ def neardup_gate_batch(
             )
         )
         _tick("band_append")
-        # band-index lifecycle, mirroring the ANN legs below (VERDICT r8
-        # #1/#5): an AUTO-bucketed band store re-derives its bucket count
-        # at the grown corpus (O(1) sidecar check per batch; pinned
-        # stores no-op), and append-fragmented buckets fold back to one
-        # file each once any bucket passes the file threshold (a
-        # rebucket just rewrote the whole layout — nothing to fold).
-        # doc-store growth leg (r9): an auto-sharded store re-derives its
-        # shard count at the grown corpus; a reshard just rewrote the
-        # whole layout, so the compaction check below is skipped that
-        # batch (nothing left to fold)
+        # layout lifecycle, mirroring the ANN legs below (VERDICT r8
+        # #1/#5, r9): an AUTO-sharded doc store / AUTO-bucketed band store
+        # re-derives its count at the grown corpus (O(1) sidecar check per
+        # batch; pinned stores no-op), and append-fragmented partitions
+        # fold back to one file each once any passes the file threshold.
+        # A remap just rewrote the whole layout, so that batch skips the
+        # compaction check (nothing left to fold). Folding shards keeps the
+        # store scan-clean, so point reads and corpus scans never
+        # precedence-merge (pairs with save_mode="append_new").
         resharded = False
         if doc_reshard_factor is not None:
             resharded = docstore.maybe_reshard(doc_reshard_factor)
-        # shard-compaction leg (r9, pairs with save_mode="append_new"):
-        # each append fragments its touched shards by one file; fold once
-        # any shard passes the threshold — the store stays scan-clean so
-        # point reads and corpus scans never precedence-merge
-        if doc_compact_min_files is not None and not resharded:
-            from collections import Counter as _C
-
-            dman = docstore._snapshot() or {}
-            sfrag = _C(
-                s
-                for f in dman.get("files", [])
-                if (s := docstore._shard_of(f)) is not None
-            )
-            if sfrag and max(sfrag.values()) >= doc_compact_min_files:
-                docstore.optimize()
+        if (
+            doc_compact_min_files is not None
+            and not resharded
+            and _fragmented(docstore, doc_compact_min_files)
+        ):
+            docstore.optimize()
         band_rebucketed = False
         if band_rebucket_factor is not None:
             band_rebucketed = band_store.maybe_rebucket(band_rebucket_factor)
@@ -626,17 +624,12 @@ def neardup_gate_batch(
         # rebucket just rewrote the whole layout — nothing to fold.
         if not band_rebucketed:
             band_rebucketed = band_store.maybe_fold_deltas()
-        if band_compact_min_files is not None and not band_rebucketed:
-            man = band_store._snapshot() or {}
-            from collections import Counter as _Counter
-
-            frag = _Counter(
-                b
-                for f in man.get("files", [])
-                if (b := band_store._bucket_of(f)) is not None
-            )
-            if frag and max(frag.values()) >= band_compact_min_files:
-                band_store.compact()
+        if (
+            band_compact_min_files is not None
+            and not band_rebucketed
+            and _fragmented(band_store, band_compact_min_files)
+        ):
+            band_store.compact()
         if ann_store is not None:
             # ALL survivors, not just the newly-stored slice (review r9
             # #1): a crash between the band append and this leg leaves a

@@ -51,7 +51,7 @@ def test_docstore_upsert_rewrites_only_touched_shards(spark, tmp_path):
     touched_shard = shard_assign(
         _docs(spark, [(7, "", 0.0)]), 8
     ).collect()[0]["shard"]
-    changed = {st._shard_of(f) for f in before ^ after}
+    changed = {st._part_of(f) for f in before ^ after}
     assert changed == {touched_shard}
     assert {r["text"] for r in st.read().where("doc_id = 7").collect()} == {"NEW"}
     assert st.read().count() == 40
@@ -294,42 +294,6 @@ def test_band_index_auto_rebucket_grows_and_preserves_candidates(
     assert st.maybe_rebucket() is False
 
 
-@pytest.mark.slow
-def test_band_index_pinned_never_rebuckets_and_auto_adopts(spark, tmp_path):
-    """Provenance rules: a pinned store never auto-rebuckets (the
-    ANN pinned-n_centroids rule); reopening an auto store with
-    n_buckets=None adopts the grown count; pinning an auto store raises;
-    reopening a pinned store with None adopts the pinned count and stays
-    pinned."""
-    import pytest as _pytest
-
-    from binance_data_framework_spark.docstore import BandIndexStore
-
-    pinned = BandIndexStore(spark, str(tmp_path / "pinned"), n_buckets=4)
-    pinned.append(_band_rows(spark, range(50)))
-    assert pinned.maybe_rebucket() is False
-    assert pinned.n_buckets == 4
-    # reopen pinned with None: adopts 4, still never rebuckets
-    re_p = BandIndexStore(spark, str(tmp_path / "pinned"), n_buckets=None)
-    assert re_p.maybe_rebucket() is False
-    assert re_p.n_buckets == 4
-
-    auto = BandIndexStore(
-        spark, str(tmp_path / "auto"), n_buckets=None, target_bucket_rows=4
-    )
-    auto.append(_band_rows(spark, range(40)))
-    assert auto.maybe_rebucket() is True
-    grown = auto.n_buckets
-    assert grown > 8
-    # a second handle opened with None sees the grown count
-    re_a = BandIndexStore(spark, str(tmp_path / "auto"), n_buckets=None)
-    re_a._check_layout()
-    assert re_a.n_buckets == grown
-    # pinning an auto store raises
-    with _pytest.raises(ValueError, match="auto-bucketed"):
-        BandIndexStore(spark, str(tmp_path / "auto"), n_buckets=8)._check_layout()
-
-
 def test_band_index_stale_handle_sees_rebucket(spark, tmp_path):
     """Auto-mode handles re-read the layout sidecar per operation: a
     handle opened BEFORE a rebucket routes lookups with the NEW count
@@ -350,6 +314,181 @@ def test_band_index_stale_handle_sees_rebucket(spark, tmp_path):
     got = {(r["id_new"], r["id_stored"]) for r in b.candidates(probe).collect()}
     assert {(1, 1), (2, 2)} <= got
     assert b.n_buckets == a.n_buckets
+
+
+class _BandTier:
+    """BandIndexStore through the shared hash-layout surface: 4 band rows
+    per id, target 8 rows per bucket (40 ids -> 20 buckets)."""
+
+    count, auto, target = "n_buckets", "auto_buckets", "target_bucket_rows"
+    key, extra = "id_col", {"params": {"num_bands": 4}}
+    auto_word, floor, auto_target = "auto-bucketed", 8, 8
+
+    def __init__(self, spark):
+        self.spark = spark
+
+    def open(self, root, n, target=None):
+        return BandIndexStore(
+            self.spark, root, n_buckets=n, params={"num_bands": 4},
+            target_bucket_rows=target,
+        )
+
+    def write(self, st, ids):
+        st.append(_band_rows(self.spark, ids))
+
+    @staticmethod
+    def grow(st):
+        return st.maybe_rebucket()
+
+    @staticmethod
+    def remap(st, n=None):
+        return st.rebucket(n)
+
+    def lookup(self, st, ids) -> set:
+        pairs = st.candidates(_band_rows(self.spark, ids)).collect()
+        assert all(r["id_new"] == r["id_stored"] for r in pairs)
+        return {r["id_stored"] for r in pairs}
+
+    @staticmethod
+    def rows(st) -> int:
+        return st.read().count()
+
+
+class _DocTier:
+    """DocumentStore through the shared hash-layout surface: target 2 rows
+    per shard (40 ids -> 20 shards)."""
+
+    count, auto, target = "n_shards", "auto_shards", "target_shard_rows"
+    key, extra = "key_col", {}
+    auto_word, floor, auto_target = "auto-sharded", 4, 2
+
+    def __init__(self, spark):
+        self.spark = spark
+
+    def open(self, root, n, target=None):
+        return DocumentStore(self.spark, root, n_shards=n, target_shard_rows=target)
+
+    def write(self, st, ids):
+        st.append_docs(_docs(self.spark, [(i, f"t{i}", 0.0) for i in ids]))
+
+    @staticmethod
+    def grow(st):
+        return st.maybe_reshard()
+
+    @staticmethod
+    def remap(st, n=None):
+        return st.reshard(n)
+
+    def lookup(self, st, ids) -> set:
+        keys = self.spark.createDataFrame([(i,) for i in ids], "doc_id bigint")
+        return {r["doc_id"] for r in st.read_keys(keys).collect()}
+
+    @staticmethod
+    def rows(st) -> int:
+        return st.read().count()
+
+
+@pytest.mark.parametrize("tier", [_BandTier, _DocTier], ids=["band", "doc"])
+def test_hash_layout_lifecycle(spark, tmp_path, tier):
+    """The auto-sized hash layout both tiers share: the sidecar written at
+    creation, the pinned/auto provenance rules, growth seen by a stale
+    auto handle, and an equal-count remap that only refreshes n_rows."""
+    t = tier(spark)
+    n_of = lambda st: getattr(st, t.count)  # noqa: E731
+
+    def sidecar(n, auto, target):
+        return {
+            t.count: n, t.key: "doc_id", **t.extra,
+            t.auto: auto, t.target: target, "n_rows": 0,
+        }
+
+    # pinned: the creation sidecar (keys in this order), a pinned reopen
+    # with another count raises, an auto handle adopts and stays pinned
+    proot = str(tmp_path / "pinned")
+    pinned = t.open(proot, 4, target=1)
+    t.write(pinned, range(5))
+    laid = pinned._read_layout()
+    assert list(laid.items()) == list(sidecar(4, False, 1).items())
+    with pytest.raises(ValueError, match="layout mismatch"):
+        t.open(proot, 8)._check_layout()
+    # a row counter far past the growth threshold: pinned never grows
+    pinned._layout_update(n_rows=10**6)
+    adopted = t.open(proot, None)
+    assert t.grow(adopted) is False and t.grow(pinned) is False
+    assert n_of(adopted) == n_of(pinned) == 4 and not adopted._auto
+    assert pinned._read_layout()[t.count] == 4
+
+    # auto: the creation sidecar; a stale handle adopts the floor count
+    aroot = str(tmp_path / "auto")
+    auto = t.open(aroot, None, target=t.auto_target)
+    auto._check_layout()
+    assert list(auto._read_layout().items()) == list(
+        sidecar(t.floor, True, t.auto_target).items()
+    )
+    stale = t.open(aroot, None)
+    stale._check_layout()
+    assert n_of(stale) == t.floor
+    t.write(auto, range(3))
+    assert t.grow(auto) is False  # below 2 x the floor
+    t.write(auto, range(3, 40))
+    assert t.grow(auto) is True
+    grown = n_of(auto)
+    assert grown == 20 and auto._read_layout()[t.count] == grown
+    # the stale handle routes its next op with the grown count
+    assert t.lookup(stale, [1, 2, 999]) == {1, 2}
+    assert n_of(stale) == grown
+    fresh = t.open(aroot, None)
+    fresh._check_layout()
+    assert n_of(fresh) == grown
+    with pytest.raises(ValueError, match=t.auto_word):
+        t.open(aroot, t.floor)._check_layout()
+
+    # an explicit remap to the same count commits nothing and refreshes
+    # the row counter to the exact committed count
+    exact = t.rows(auto)
+    for n in (grown, None):
+        auto._layout_update(n_rows=0)
+        version = auto._snapshot()["version"]
+        assert t.remap(auto, n) is False
+        assert auto._read_layout()["n_rows"] == exact
+        assert auto._snapshot()["version"] == version
+
+
+def _jobs_of(spark, group: str, fn):
+    """(Spark jobs ``fn()`` launched, its result), counted through a job
+    group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_auto_row_counter_runs_no_extra_job(spark, tmp_path):
+    """On a local root the auto-mode row counter reads parquet footers:
+    save_docs and delete_docs on an auto store run exactly the jobs a
+    pinned 4-shard store runs, and n_rows stays exact."""
+    pinned = DocumentStore(spark, str(tmp_path / "pinned"), n_shards=4)
+    auto = DocumentStore(spark, str(tmp_path / "auto"), n_shards=None)
+    rows = _docs(spark, [(i, f"t{i}", 0.0) for i in range(200)])
+    upsert = _docs(spark, [(i, "u", 1.0) for i in range(150, 250)])
+    keys = spark.createDataFrame([(i,) for i in range(0, 250, 3)], "doc_id bigint")
+    ops = [
+        ("save", lambda st: st.save_docs(rows)),
+        ("upsert", lambda st: st.save_docs(upsert)),
+        ("delete", lambda st: st.delete_docs(keys)),
+    ]
+    for label, op in ops:
+        n_pinned, _ = _jobs_of(spark, f"pinned-{label}", lambda: op(pinned))
+        n_auto, _ = _jobs_of(spark, f"auto-{label}", lambda: op(auto))
+        assert n_auto == n_pinned, label
+        # both stores read, so both share the same warm schema memo
+        n_rows = auto._read_layout()["n_rows"]
+        assert n_rows == auto.read().count() == pinned.read().count(), label
+    assert auto.n_shards == 4 and auto.read().count() == 250 - 84
 
 
 @pytest.mark.slow
@@ -731,7 +870,7 @@ def test_candidates_point_lookup_prunes_row_groups(spark, tmp_path):
         by_bucket.setdefault(r["bucket"], []).append(r["band_hash"])
     hit = 0
     for rel, rgs in ranges.items():
-        keys = sorted(by_bucket.get(st._bucket_of(rel), []))
+        keys = sorted(by_bucket.get(st._part_of(rel), []))
         if not keys:
             continue
         for _, mn, mx, _n in rgs:

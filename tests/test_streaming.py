@@ -1344,7 +1344,7 @@ def test_gate_auto_rebuckets_and_compacts_band_index(spark, tmp_path):
     files = bands2._snapshot()["files"]
     assert not any(f.startswith("delta/") for f in files)
     frag = Counter(
-        b for f in files if (b := bands2._bucket_of(f)) is not None
+        b for f in files if (b := bands2._part_of(f)) is not None
     )
     assert frag and max(frag.values()) == 1  # folded to one file per bucket
     # pinned store: the rebucket leg never ran
@@ -1467,7 +1467,7 @@ def test_gate_append_new_save_path(spark, tmp_path):
     frag = Counter(
         s
         for f in store._snapshot()["files"]
-        if (s := store._shard_of(f)) is not None
+        if (s := store._part_of(f)) is not None
     )
     assert max(frag.values()) == 1
     assert store.read().count() == 20
