@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 
 from binance_data_framework_spark.materialize import checkpoint_observed
 from binance_data_framework_spark.operators import similarity as S
-from binance_data_framework_spark.store import SnapshotStore
+from binance_data_framework_spark.store import SnapshotStore, _maintenance
 
 
 @dataclass
@@ -81,6 +81,10 @@ class AnnIndex:
 
 class AnnIndexStore(SnapshotStore):
     """Versioned ANN index artifacts (module docstring)."""
+
+    maintain = _maintenance(
+        "maybe_rebuild", "maybe_fold_code_deltas", "compact_codes"
+    )
 
     def __init__(self, spark: SparkSession, root: str, id_col: str = "vec_id",
                  vec_col: str = "embedding"):
@@ -488,6 +492,17 @@ class AnnIndexStore(SnapshotStore):
     def _is_code_delta(rel: str) -> bool:
         return rel.startswith("codes_delta/")
 
+    def _part_of(self, rel: str) -> tuple[str, int] | None:
+        """(variant, cell) of a ``codes/variant=<v>/cell=<c>/`` file; None
+        for delta runs, tombstones and the model. The cell is an int
+        whatever the reader's partition-type inference does, so it matches
+        a collected ``cell`` value either way."""
+        parts = rel.split("/")
+        if parts[0] != "codes" or len(parts) < 4:
+            return None
+        (vk, _, variant), (ck, _, cell) = (p.partition("=") for p in parts[1:3])
+        return (variant, int(cell)) if (vk, ck) == ("variant", "cell") else None
+
     @staticmethod
     def _first_code_file(man: dict, prefix: str) -> str | None:
         """The manifest's first live file under ``prefix`` (codes/ or
@@ -522,7 +537,7 @@ class AnnIndexStore(SnapshotStore):
         files = [
             f
             for f in (man["files"] if man else [])
-            if f.startswith("codes/variant=pq/") or self._is_code_delta(f)
+            if self._is_code_delta(f) or ((vc := self._part_of(f)) and vc[0] == "pq")
         ]
         local_root = self._local_root()
         if files and local_root is not None:
@@ -1126,8 +1141,9 @@ class AnnIndexStore(SnapshotStore):
         man = self._snapshot() if version is None else self._resolve(int(version))
         if not man:
             raise ValueError(f"AnnIndexStore at {self.root} is empty")
-        prefix = f"codes/variant={variant}/"
-        variant_files = [f for f in man["files"] if f.startswith(prefix)]
+        variant_files = [
+            f for f in man["files"] if (vc := self._part_of(f)) and vc[0] == variant
+        ]
         # delta runs (r10 LSM appends) carry variant/cell as data columns:
         # unpruned at the file level (they are batch-sized by construction,
         # a probe must always consult them), variant/cell-filtered in-scan
@@ -1144,8 +1160,8 @@ class AnnIndexStore(SnapshotStore):
             )
         files = variant_files
         if cells is not None:
-            allowed = {f"cell={c}" for c in cells}
-            files = [f for f in files if f[len(prefix):].split("/", 1)[0] in allowed]
+            allowed = {int(c) for c in cells}
+            files = [f for f in files if self._part_of(f)[1] in allowed]
         if not files and not deltas:
             # cell prune matched nothing and no delta runs are live:
             # empty frame with the committed schema (one footer read,
@@ -1274,7 +1290,7 @@ class AnnIndexStore(SnapshotStore):
         # normalize BOTH sides to (str, int): r["cell"] collects as int only
         # when partition-column type inference is on (the default) — with it
         # disabled the collected value is a string, the set intersection
-        # with _vc's int-cast paths comes out empty, and the commit below
+        # with _part_of's int cells comes out empty, and the commit below
         # would retire the tombstone files WITHOUT rewriting any code rows,
         # physically resurrecting deleted vectors in masked search
         # (ADVICE r7 #1 — make the match config-independent)
@@ -1287,17 +1303,7 @@ class AnnIndexStore(SnapshotStore):
             .distinct()
             .collect()  # tombstone-bounded: <= 2 * |tombstones| pairs
         }
-
-        def _vc(rel: str) -> tuple[str, int] | None:
-            parts = rel.split("/")
-            if len(parts) < 3:
-                return None
-            return (
-                parts[1].split("=", 1)[1],
-                int(parts[2].split("=", 1)[1]),
-            )
-
-        affected = [f for f in code_files if _vc(f) in hit]
+        affected = [f for f in code_files if self._part_of(f) in hit]
         # a tombstoned row can also sit in a delta run (r10 LSM appends) —
         # rewrite them all alongside the hit cells (they are delta-
         # fraction-bounded, and the rewrite folds them into the bucket
@@ -1345,17 +1351,13 @@ class AnnIndexStore(SnapshotStore):
         man = self._snapshot()
         if not man:
             return 0
-        from collections import Counter
-
         code_files = [f for f in man["files"] if f.startswith("codes/")]
         delta_files = [f for f in man["files"] if self._is_code_delta(f)]
-
-        def _vc(rel: str) -> tuple[str, str] | None:
-            parts = rel.split("/")
-            return (parts[1], parts[2]) if len(parts) >= 3 else None
-
-        counts = Counter(vc for f in code_files if (vc := _vc(f)))
-        hit = {vc for vc, n in counts.items() if n >= min_files}
+        hit = {
+            vc
+            for vc, fl in self._files_by_part(code_files).items()
+            if len(fl) >= min_files
+        }
         folding = fold_deltas and bool(delta_files)
         if not hit and not folding:
             return 0
@@ -1369,7 +1371,7 @@ class AnnIndexStore(SnapshotStore):
             # must not silently become an O(index) rewrite).
             affected = list(code_files)
         else:
-            affected = [f for f in code_files if _vc(f) in hit]
+            affected = [f for f in code_files if self._part_of(f) in hit]
         folded_deltas = delta_files if folding else []
         frag = self._read_code_rows(affected, folded_deltas, man)
         self._staged_commit(

@@ -44,7 +44,7 @@ from pyspark.sql import Window
 
 from binance_data_framework_spark.materialize import checkpoint_observed
 from binance_data_framework_spark.operators.curation import shard_assign
-from binance_data_framework_spark.store import SnapshotStore
+from binance_data_framework_spark.store import SnapshotStore, _maintenance
 
 
 def _content_tiebreak(df: DataFrame, exclude: tuple[str, ...] = ()):
@@ -84,10 +84,12 @@ class _HashLayoutStore(SnapshotStore):
       small keeps batch-1's count while the corpus grows 1000x.
 
     The ``_layout.json`` sidecar pins the count, the key column and its
-    provenance on first write and is validated on every later open. This
-    class owns the count rule, mode setup, that check, the partition-dir
-    parser, the growth trigger and the remap. A tier supplies its data
-    (``_PART``, the clamp bounds, ``_KEY_ATTR``, the remap's commit
+    provenance on first write and is validated on every later open. Its
+    ``n_rows`` is the auto-mode row counter: only auto stores maintain
+    it, so a pinned store's stays at its creation value. This class owns
+    the count rule, mode setup, that check, the partition-dir parser
+    (``_part_of``), the growth trigger and the remap. A tier supplies its
+    data (``_PART``, the clamp bounds, ``_KEY_ATTR``, the remap's commit
     ``_KIND``) and hooks: ``_remap_rows(files)`` and
     ``_remap_writer(rows, n)``, the remap's row source and writer, and
     for sidecar fields of its own, ``_layout_extra``/``_check_extra``.
@@ -216,16 +218,6 @@ class _HashLayoutStore(SnapshotStore):
         except ValueError:
             return None
 
-    def _files_by_part(self, files: list[str]) -> dict[int, list[str]]:
-        """Partition index -> its files, in listing order (files outside
-        the layout are left out)."""
-        groups: dict[int, list[str]] = {}
-        for f in files:
-            k = self._part_of(f)
-            if k is not None:
-                groups.setdefault(k, []).append(f)
-        return groups
-
     def _maybe_grow(self, grow_factor: float) -> bool:
         """The growth trigger: an O(1) sidecar check per call (the row
         counter the tier's writes maintain); remaps once the count rule
@@ -252,7 +244,8 @@ class _HashLayoutStore(SnapshotStore):
         sidecar counter is best-effort; the rewrite is the authoritative
         recount and resets it). Also folds multi-file partitions (one file
         per new partition). True iff the layout changed; an equal count
-        only refreshes an auto store's row counter."""
+        only refreshes an auto store's row counter. A pinned store's
+        ``n_rows`` is not written: nothing else maintains it there."""
         self._check_layout()
         man = self._snapshot()
         if not man or not man["files"]:
@@ -260,9 +253,10 @@ class _HashLayoutStore(SnapshotStore):
         rows = self._remap_rows(list(man["files"]))
         exact = rows.count()
         final = n if n is not None else self._auto_count(exact, self._target)
+        counter = {"n_rows": exact} if self._auto else {}
         if final == self._n:
-            if self._auto:
-                self._layout_update(n_rows=exact)
+            if counter:
+                self._layout_update(**counter)
             return False
         self._staged_commit(
             self._remap_writer(rows, final).save,
@@ -270,7 +264,7 @@ class _HashLayoutStore(SnapshotStore):
             op=f"re{self._PART}",
             kind=self._KIND,
         )
-        self._layout_update(**{f"n_{self._PART}s": final, "n_rows": exact})
+        self._layout_update(**{f"n_{self._PART}s": final}, **counter)
         self._n = final
         return True
 
@@ -321,6 +315,7 @@ class BandIndexStore(_HashLayoutStore):
     id_col = _alias("_key")
     n_buckets = _alias("_n")
     target_bucket_rows = _alias("_target")
+    maintain = _maintenance("maybe_rebucket", "maybe_fold_deltas", "compact")
 
     #: target committed rows per bucket for the auto derivation — ~50k
     #: rows x ~24 B/row ≈ 1.2 MB per bucket file, the same IO-granularity
@@ -758,23 +753,16 @@ class BandIndexStore(_HashLayoutStore):
                 for f in man["files"]
                 if self._is_delta(f) or self._part_of(f) in touched
             ]
-        elif drop_keys is not None:
+        elif drop_keys is not None or any(self._is_delta(f) for f in man["files"]):
+            # a key drop rewrites everything, and so does a plain compaction
+            # while delta runs are live: a run's rows belong across the
+            # buckets, so every base file must merge — the fold IS the full
+            # rewrite the amortized trigger schedules
             files = list(man["files"])
         else:
-            # plain compaction: multi-file buckets need a rewrite; any
-            # delta run folds in (its rows belong across the buckets, so
-            # every base file must merge — the fold IS the full rewrite
-            # the amortized trigger schedules)
-            has_delta = any(self._is_delta(f) for f in man["files"])
-            if has_delta:
-                files = list(man["files"])
-            else:
-                files = [
-                    f
-                    for fl in self._files_by_part(man["files"]).values()
-                    if len(fl) > 1
-                    for f in fl
-                ]
+            # plain compaction: only multi-file buckets need a rewrite
+            groups = self._files_by_part(man["files"]).values()
+            files = [f for fl in groups if len(fl) > 1 for f in fl]
         if not files:
             return 0
         stored = self._read_files(files)
@@ -875,6 +863,7 @@ class DocumentStore(_HashLayoutStore):
     key_col = _alias("_key")
     n_shards = _alias("_n")
     target_shard_rows = _alias("_target")
+    maintain = _maintenance("maybe_reshard", None, "optimize")
 
     #: target committed rows per shard for the auto derivation — ~250k
     #: ~1 KB docs ≈ a 250 MB shard, the "one shard fits an executor

@@ -134,6 +134,35 @@ _PARQUET_SCHEMA_CACHE: dict = {}
 _PARQUET_SCHEMA_CACHE_MAX = 512
 
 
+def _maintenance(grow: str, fold: str | None, compact: str):
+    """A gate tier's ``maintain`` method over its own maintenance methods,
+    named here and called through ``self`` at call time: the one
+    grow -> fold -> compact order of every tier."""
+
+    def maintain(
+        self, grow_factor: float | None, compact_min_files: int | None, **grow_kw
+    ) -> bool:
+        """One maintenance step: grow the layout with the corpus
+        (``grow_kw`` passes through, e.g. a rebuild's ``corpus``), else
+        fold due delta runs (a tier without runs has no fold leg), else
+        compact once any partition holds ``compact_min_files`` files. A
+        rewrite supersedes the layout the later legs would look at, so the
+        first leg that commits ends the step; a None factor or threshold
+        skips its leg. True iff a rewrite committed."""
+        if grow_factor is not None and getattr(self, grow)(
+            grow_factor=grow_factor, **grow_kw
+        ):
+            return True
+        if fold is not None and getattr(self, fold)():
+            return True
+        man = self._snapshot() if compact_min_files is not None else None
+        groups = self._files_by_part(man["files"] if man else [])
+        due = any(len(fl) >= compact_min_files for fl in groups.values())
+        return due and getattr(self, compact)() > 0
+
+    return maintain
+
+
 class SnapshotStore:
     """The generic snapshot-commit layer: versioned CAS manifests, delta
     log + parquet checkpoints, two-commit vacuum, time travel, staged-file
@@ -358,6 +387,24 @@ class SnapshotStore:
                 )
             base_rows = self._fold_base_rows[1]
         return delta_rows >= max(floor, max_fraction * base_rows)
+
+    # -- partition layout ------------------------------------------------
+    def _part_of(self, rel: str):
+        """The compaction partition of a store-relative file path, or None
+        for a file outside the compactable layout. A tier that writes a
+        partitioned layout overrides it: its partition directories are
+        parsed there and nowhere else."""
+        return None
+
+    def _files_by_part(self, files: list[str]) -> dict:
+        """Partition -> its files, in listing order (files outside the
+        layout are left out)."""
+        groups: dict = {}
+        for f in files:
+            k = self._part_of(f)
+            if k is not None:
+                groups.setdefault(k, []).append(f)
+        return groups
 
     def _fs_path(self, *segments: str):
         """(FileSystem, Path) for root/segments via the Hadoop FS API —
@@ -1341,6 +1388,13 @@ class OhlcvStore(SnapshotStore):
 
         return self._commit_rebased(_delta) is not None
 
+    def _part_of(self, rel: str) -> str | None:
+        """The day dir of a file under ``symbol=``, ``timeframe=`` and
+        ``dt=``; None for a stray legacy file outside that layout."""
+        day = rel.rpartition("/")[0]
+        keys = {seg.partition("=")[0] for seg in day.split("/") if "=" in seg}
+        return day if {"symbol", "timeframe", "dt"} <= keys else None
+
     def optimize(
         self,
         symbol: str | None = None,
@@ -1370,23 +1424,16 @@ class OhlcvStore(SnapshotStore):
         man = self._snapshot()
         if not man:
             return 0
-        groups: dict[str, list[str]] = {}
-        for rel in man["files"]:
-            dirpart, _, _ = rel.rpartition("/")
-            kv = dict(
-                seg.split("=", 1) for seg in dirpart.split("/") if "=" in seg
-            )
-            if not {"symbol", "timeframe", "dt"} <= kv.keys():
-                continue  # stray legacy file outside the partition layout
-            if symbol is not None and kv.get("symbol") != symbol:
-                continue
-            if timeframe is not None and kv.get("timeframe") != timeframe:
-                continue
-            groups.setdefault(dirpart, []).append(rel)
-        todo = {d: fl for d, fl in groups.items() if len(fl) > 1}
+        pairs = (("symbol", symbol), ("timeframe", timeframe))
+        series = {f"{k}={v}" for k, v in pairs if v is not None}
+        todo = [
+            fl
+            for day, fl in self._files_by_part(man["files"]).items()
+            if len(fl) > 1 and series <= set(day.split("/"))
+        ]
         if not todo:
             return 0
-        originals = sorted(f for fl in todo.values() for f in fl)
+        originals = sorted(f for fl in todo for f in fl)
         writer = self._day_file_writer(self._read_day_files(originals), False)
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", max_records_per_file)

@@ -68,14 +68,6 @@ from binance_data_framework_spark.operators.dedup import (
 )
 
 
-def _fragmented(store, min_files: int) -> bool:
-    """Whether any partition of a hash-layout store (DocumentStore,
-    BandIndexStore) holds ``min_files`` or more files."""
-    man = store._snapshot() or {}
-    parts = store._files_by_part(man.get("files", []))
-    return any(len(files) >= min_files for files in parts.values())
-
-
 def _banded_drops(
     sigs: DataFrame,
     docstore,
@@ -355,14 +347,21 @@ def neardup_gate_batch(
     check, a same-id collision is NOT a redelivery (the ids come from a
     different corpus) — it verifies by content like any candidate.
 
-    ``ann_compact_min_files``: each append fragments its touched cells
-    by one more file; once any (variant, cell) partition holds that many
-    committed files the gate folds the layout back to one file per cell
-    (compact_codes — layout-only, search-invariant). The check is a
-    driver-side manifest count per batch; None disables (explicit
-    maintenance instead). Together with the rebuild trigger below, the
-    composed pipeline is self-maintaining: ingest, dedup, decontaminate,
-    index, rebuild on growth, compact on fragmentation.
+    The six maintenance knobs below are the arguments of one
+    ``maintain(grow_factor, compact_min_files)`` call per tier after each
+    accepted batch (DocumentStore, BandIndexStore and AnnIndexStore
+    .maintain): grow the layout, else fold due delta runs, else compact;
+    a leg that rewrote the layout ends that tier's step.
+
+    ``ann_compact_min_files`` (AnnIndexStore.maintain's compaction leg):
+    each append fragments its touched cells by one more file; once any
+    (variant, cell) partition holds that many committed files the gate
+    folds the layout back to one file per cell (compact_codes —
+    layout-only, search-invariant). The check is a driver-side manifest
+    count per batch; None disables (explicit maintenance instead).
+    Together with the rebuild trigger below, the composed pipeline is
+    self-maintaining: ingest, dedup, decontaminate, index, rebuild on
+    growth, compact on fragmentation.
 
     ``save_mode`` (r9 — the gate scaling finding): how survivors reach
     the DocumentStore.
@@ -385,43 +384,46 @@ def neardup_gate_batch(
       for pipelines whose ids can legitimately re-arrive with updated
       content and that want the replacement.
 
-    ``doc_compact_min_files``: append_new fragments each touched shard
-    by one file per batch; once any shard holds this many committed
-    files the gate folds the store back to one file per shard
-    (DocumentStore.optimize — the shard analogue of the two index
-    compaction legs). None disables.
+    ``doc_compact_min_files`` (DocumentStore.maintain's compaction leg):
+    append_new fragments each touched shard by one file per batch; once
+    any shard holds this many committed files the gate folds the store
+    back to one file per shard (DocumentStore.optimize — the shard
+    analogue of the two index compaction legs). None disables.
 
-    ``doc_reshard_factor``: for an AUTO-sharded DocumentStore
-    (n_shards=None), re-derive the shard count at the grown corpus after
-    each accepted batch (DocumentStore.maybe_reshard — O(1) sidecar
-    check; the reshard itself is a narrow key-hash remap). Completes the
+    ``doc_reshard_factor`` (DocumentStore.maintain's grow leg): for an
+    AUTO-sharded DocumentStore (n_shards=None), re-derive the shard count
+    at the grown corpus after each accepted batch
+    (DocumentStore.maybe_reshard — O(1) sidecar check; the reshard itself
+    is a narrow key-hash remap). Completes the
     growth-leg symmetry: IVF cells (r8), band buckets and doc shards
     (r9) all track the data they index. Pinned stores no-op; None
     disables.
 
     ``band_rebucket_factor`` / ``band_compact_min_files`` (VERDICT r8
-    #1/#5 — band-index lifecycle parity with the ANN legs): when the
-    band store is AUTO-bucketed (created with n_buckets=None), the gate
-    re-derives its bucket count at the grown corpus after each append
-    (BandIndexStore.maybe_rebucket — O(1) sidecar check; the rebucket
-    itself is a narrow remap of committed band rows) so per-batch
-    candidate reads stay flat as the corpus grows; pinned stores no-op.
-    Independently, once any band bucket accumulates that many committed
-    files from streaming appends, the gate folds the layout
-    (BandIndexStore.compact() — also folds redelivery duplicates).
-    None disables either leg (explicit maintenance instead).
+    #1/#5 — band-index lifecycle parity with the ANN legs; the grow and
+    compaction legs of BandIndexStore.maintain, around its delta-run
+    fold): when the band store is AUTO-bucketed (created with
+    n_buckets=None), the gate re-derives its bucket count at the grown
+    corpus after each append (BandIndexStore.maybe_rebucket — O(1)
+    sidecar check; the rebucket itself is a narrow remap of committed
+    band rows) so per-batch candidate reads stay flat as the corpus
+    grows; pinned stores no-op. Otherwise, once any band bucket
+    accumulates that many committed files from streaming appends, the
+    gate folds the layout (BandIndexStore.compact() — also folds
+    redelivery duplicates). None disables either leg (explicit
+    maintenance instead).
 
     ``ann_rebuild_factor`` (ADVICE r7 #4): the batch-1 build pins BOTH
     the cell count (auto_centroids of the first batch's size) and the
     quantizer's training distribution; a corpus grown 1000x through
     appends would otherwise keep them forever, re-growing per-cell
-    candidates linearly. After each append the gate runs
-    ``ann_store.maybe_rebuild(stored corpus, grow_factor)`` — an O(1)
-    sidecar check that force-retrains over the FULL DocumentStore corpus
-    (current distribution, re-derived cell count) once appends have
-    outgrown the committed cells by the factor. None disables (explicit
-    maintenance-cadence rebuilds instead); pinned-n_centroids builds
-    never auto-rebuild regardless."""
+    candidates linearly. After each append AnnIndexStore.maintain's grow
+    leg runs ``ann_store.maybe_rebuild(stored corpus, grow_factor)`` —
+    an O(1) sidecar check that force-retrains over the FULL
+    DocumentStore corpus (current distribution, re-derived cell count)
+    once appends have outgrown the committed cells by the factor. None
+    disables (explicit maintenance-cadence rebuilds instead);
+    pinned-n_centroids builds never auto-rebuild regardless."""
     # band hashes are a pure function of these — pin them in the band
     # store's layout sidecar so a gate reopened with different values
     # raises instead of silently admitting near-duplicates (ADVICE r6)
@@ -595,41 +597,15 @@ def neardup_gate_batch(
             )
         )
         _tick("band_append")
-        # layout lifecycle, mirroring the ANN legs below (VERDICT r8
-        # #1/#5, r9): an AUTO-sharded doc store / AUTO-bucketed band store
-        # re-derives its count at the grown corpus (O(1) sidecar check per
-        # batch; pinned stores no-op), and append-fragmented partitions
-        # fold back to one file each once any passes the file threshold.
-        # A remap just rewrote the whole layout, so that batch skips the
-        # compaction check (nothing left to fold). Folding shards keeps the
-        # store scan-clean, so point reads and corpus scans never
+        # layout lifecycle (VERDICT r8 #1/#5, r9, r10): each tier's
+        # maintain() grows an auto-sized layout with the corpus, else folds
+        # due LSM delta runs, else compacts append-fragmented partitions;
+        # all three checks are driver-side, and a leg that rewrote the
+        # layout ends the step. Folding shards keeps the doc store
+        # scan-clean, so point reads and corpus scans never
         # precedence-merge (pairs with save_mode="append_new").
-        resharded = False
-        if doc_reshard_factor is not None:
-            resharded = docstore.maybe_reshard(doc_reshard_factor)
-        if (
-            doc_compact_min_files is not None
-            and not resharded
-            and _fragmented(docstore, doc_compact_min_files)
-        ):
-            docstore.optimize()
-        band_rebucketed = False
-        if band_rebucket_factor is not None:
-            band_rebucketed = band_store.maybe_rebucket(band_rebucket_factor)
-        # LSM fold leg (r10): batch appends land as delta runs (O(batch
-        # files) instead of one file per bucket per batch — measured 7.6 s
-        # of a 14.6 s gate at 360 buckets, linear in n_buckets); fold them
-        # into the bucket layout once they reach a fraction of the base
-        # (O(1) driver-side check; the fold amortizes to O(batch)). A
-        # rebucket just rewrote the whole layout — nothing to fold.
-        if not band_rebucketed:
-            band_rebucketed = band_store.maybe_fold_deltas()
-        if (
-            band_compact_min_files is not None
-            and not band_rebucketed
-            and _fragmented(band_store, band_compact_min_files)
-        ):
-            band_store.compact()
+        docstore.maintain(doc_reshard_factor, doc_compact_min_files)
+        band_store.maintain(band_rebucket_factor, band_compact_min_files)
         if ann_store is not None:
             # ALL survivors, not just the newly-stored slice (review r9
             # #1): a crash between the band append and this leg leaves a
@@ -643,39 +619,17 @@ def neardup_gate_batch(
             else:
                 ann_store.append(vecs, skip_existing=True)
                 _tick("ann_append")
-                rebuilt = False
+                # rebuild source = the full STORED corpus (deleted docs
+                # excluded by construction), so the retrained quantizer
+                # sees the current distribution, not batch 1's
+                corpus = None
                 if ann_rebuild_factor is not None:
-                    # rebuild source = the full STORED corpus (deleted docs
-                    # excluded by construction), so the retrained quantizer
-                    # sees the current distribution, not batch 1's
-                    rebuilt = ann_store.maybe_rebuild(
-                        docstore.read().select(
-                            ann_store.id_col, ann_store.vec_col
-                        ),
-                        grow_factor=ann_rebuild_factor,
+                    corpus = docstore.read().select(
+                        ann_store.id_col, ann_store.vec_col
                     )
-                # LSM fold leg (r10, mirrors the band index): micro-batch
-                # appends land as code delta runs (O(1) files per batch,
-                # not one per touched cell); fold them into the bucketed
-                # layout at the shared fold trigger. A rebuild just
-                # rewrote the whole layout — nothing to fold.
-                if not rebuilt:
-                    rebuilt = ann_store.maybe_fold_code_deltas()
-                if ann_compact_min_files is not None and not rebuilt:
-                    # each append fragments its touched cells by one file;
-                    # fold once any cell passes the threshold (a rebuild
-                    # just rewrote the whole layout — nothing to fold).
-                    # The check is a driver-side manifest count, O(files).
-                    man = ann_store._snapshot() or {}
-                    from collections import Counter
-
-                    frag = Counter(
-                        tuple(f.split("/")[1:3])
-                        for f in man.get("files", [])
-                        if f.startswith("codes/")
-                    )
-                    if frag and max(frag.values()) >= ann_compact_min_files:
-                        ann_store.compact_codes()
+                ann_store.maintain(
+                    ann_rebuild_factor, ann_compact_min_files, corpus=corpus
+                )
     # monitoring leg (VERDICT r8 #6): at the caller's cadence, diff the
     # stored corpus's term distribution against the last monitored
     # baseline and surface the top movers in the batch stats — a crawler

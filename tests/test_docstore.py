@@ -391,8 +391,9 @@ class _DocTier:
 @pytest.mark.parametrize("tier", [_BandTier, _DocTier], ids=["band", "doc"])
 def test_hash_layout_lifecycle(spark, tmp_path, tier):
     """The auto-sized hash layout both tiers share: the sidecar written at
-    creation, the pinned/auto provenance rules, growth seen by a stale
-    auto handle, and an equal-count remap that only refreshes n_rows."""
+    creation, the pinned/auto provenance rules (a pinned remap leaves the
+    row counter alone), growth seen by a stale auto handle, and an
+    equal-count remap that only refreshes n_rows."""
     t = tier(spark)
     n_of = lambda st: getattr(st, t.count)  # noqa: E731
 
@@ -409,14 +410,18 @@ def test_hash_layout_lifecycle(spark, tmp_path, tier):
     t.write(pinned, range(5))
     laid = pinned._read_layout()
     assert list(laid.items()) == list(sidecar(4, False, 1).items())
+    # an explicit pinned remap moves the count; n_rows, the auto-mode
+    # counter, stays at its creation value
+    assert t.remap(pinned, 6) is True
+    assert list(pinned._read_layout().items()) == list(sidecar(6, False, 1).items())
     with pytest.raises(ValueError, match="layout mismatch"):
         t.open(proot, 8)._check_layout()
     # a row counter far past the growth threshold: pinned never grows
     pinned._layout_update(n_rows=10**6)
     adopted = t.open(proot, None)
     assert t.grow(adopted) is False and t.grow(pinned) is False
-    assert n_of(adopted) == n_of(pinned) == 4 and not adopted._auto
-    assert pinned._read_layout()[t.count] == 4
+    assert n_of(adopted) == n_of(pinned) == 6 and not adopted._auto
+    assert pinned._read_layout()[t.count] == 6
 
     # auto: the creation sidecar; a stale handle adopts the floor count
     aroot = str(tmp_path / "auto")
