@@ -44,13 +44,14 @@ from __future__ import annotations
 
 import json
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from binance_data_framework_spark.materialize import checkpoint_observed
 from binance_data_framework_spark.operators import similarity as S
-from binance_data_framework_spark.store import SnapshotStore, _maintenance
+from binance_data_framework_spark.store import SnapshotStore, _maintenance, _saving
 
 
 @dataclass
@@ -216,12 +217,13 @@ class AnnIndexStore(SnapshotStore):
         """The ONE model-committing write shared by build / append / delete
         — a single definition of the component set, so a layout change
         cannot desynchronize the three commit paths (review r7 #6).
-        ``write_data(path)`` stages the commit's data files, the model
-        sidecar is staged beside them, and ``removed_fn`` is the
-        _staged_commit conflict rule. The model memo is primed with the
-        payload just written, keyed by the committed model files, so the
-        closing load() reads nothing; a later commit by another writer
-        changes the live model files and misses the memo."""
+        ``write_data(path)`` stages the commit's data files (and reports
+        their schemas, see _staged_commit), the model sidecar is staged
+        beside them, and ``removed_fn`` is the _staged_commit conflict
+        rule. The model memo is primed with the payload just written,
+        keyed by the committed model files, so the closing load() reads
+        nothing; a later commit by another writer changes the live model
+        files and misses the memo."""
         payload = {
             "meta": json.dumps({**params, "fingerprint": fp, "n_vectors": fp[0]}),
             "centroids": json.dumps(centroids),
@@ -231,17 +233,11 @@ class AnnIndexStore(SnapshotStore):
             "lsh": json.dumps(lsh),
         }
 
-        def write(path: str) -> None:
-            write_data(path)
-            (
-                self.spark.createDataFrame(
-                    list(payload.items()), self._MODEL_SCHEMA
-                )
-                .coalesce(1)
-                .write.option("compression", "zstd")
-                .mode("overwrite")
-                .parquet(f"{path}/model")
-            )
+        model = self.spark.createDataFrame(list(payload.items()), self._MODEL_SCHEMA)
+        save_model = _saving(model.coalesce(1), "model")
+
+        def write(path: str) -> dict:
+            return {**write_data(path), **save_model(path)}
 
         new_files = self._staged_commit(write, removed_fn=removed_fn)
         self._model_memo = (
@@ -454,7 +450,7 @@ class AnnIndexStore(SnapshotStore):
 
         # full-replace: a rebuild supersedes every prior artifact file
         return self._commit_model(
-            lambda path: self._cell_writer(coded).save(f"{path}/codes"),
+            self._cell_write(coded),
             self._live,
             params,
             fp,
@@ -503,22 +499,17 @@ class AnnIndexStore(SnapshotStore):
         (vk, _, variant), (ck, _, cell) = (p.partition("=") for p in parts[1:3])
         return (variant, int(cell)) if (vk, ck) == ("variant", "cell") else None
 
-    @staticmethod
-    def _first_code_file(man: dict, prefix: str) -> str | None:
-        """The manifest's first live file under ``prefix`` (codes/ or
-        codes_delta/): the schema representative of its group."""
-        return next((f for f in man["files"] if f.startswith(prefix)), None)
-
-    def _cell_writer(self, rows: DataFrame):
-        """Writer of the bucketed code layout: one id-sorted file per
-        (variant, cell)."""
-        return (
+    def _cell_write(self, rows: DataFrame):
+        """Staged write of the bucketed code layout under ``codes/``: one
+        id-sorted file per (variant, cell)."""
+        writer = (
             rows.repartition("variant", "cell")
             .sortWithinPartitions(self.id_col)
             .write.partitionBy("variant", "cell")
             .option("compression", "zstd")
             .mode("overwrite")
         )
+        return _saving(rows, "codes", writer)
 
     def _committed_ids_among(self, ids: list, masked: bool) -> set:
         """The ids among ``ids`` (a collected, micro-batch-sized delta id
@@ -581,25 +572,15 @@ class AnnIndexStore(SnapshotStore):
         variant/cell as partition directories, delta runs carry them as
         data columns — one spark.read over both would make partition
         discovery and the in-file schema disagree (the
-        BandIndexStore._read_files rule). Each group's files share one
-        schema (every writer keeps the chash column uniform), so the
-        schema memo is keyed on the manifest's first file of the group:
-        probes and cell-pruned reads of different subsets infer once."""
+        BandIndexStore._read_files rule). Each is one schema group of
+        ``man``, read with its recorded schema."""
         parts = []
         if bucketed:
             parts.append(
-                self._committed_parquet(
-                    bucketed,
-                    base_path=f"{self.root}/codes",
-                    schema_from=self._first_code_file(man, "codes/"),
-                )
+                self._committed_parquet(bucketed, man, f"{self.root}/codes")
             )
         if deltas:
-            parts.append(
-                self._committed_parquet(
-                    deltas, schema_from=self._first_code_file(man, "codes_delta/")
-                )
-            )
+            parts.append(self._committed_parquet(deltas, man))
         with_chash = all("chash" in p.columns for p in parts)
 
         def _sel(p: DataFrame) -> DataFrame:
@@ -617,10 +598,7 @@ class AnnIndexStore(SnapshotStore):
                 cols.append(F.col("chash"))
             return p.select(*cols)
 
-        out = _sel(parts[0])
-        for p in parts[1:]:
-            out = out.unionByName(_sel(p))
-        return out
+        return reduce(DataFrame.unionByName, map(_sel, parts))
 
     # -- incremental append ------------------------------------------------
     def append(
@@ -750,12 +728,9 @@ class AnnIndexStore(SnapshotStore):
         # stores committed before delete support lack the chash column;
         # keep their code schema uniform (delete stays unsupported there
         # until a rebuild) instead of writing mixed-schema files
-        first_code = self._first_code_file(orig_man, "codes/")
-        with_chash = first_code is None or "chash" in (
-            self._committed_parquet(
-                [first_code], base_path=f"{self.root}/codes"
-            ).columns
-        )
+        with_chash = not any(
+            f.startswith("codes/") for f in orig_man["files"]
+        ) or "chash" in self._group_schema(orig_man, "codes").fieldNames()
         # a delta that the membership probe may collect and that lands as
         # one delta run is encoded on the driver; bulk loads stay in Spark
         if dfp[0] <= min(self.APPEND_PROBE_MAX, self.CODES_DELTA_MAX_VECTORS):
@@ -894,16 +869,7 @@ class AnnIndexStore(SnapshotStore):
         cols["code"] = pa.array(list(np.concatenate([opq[order], pq[order]])))
         cols["variant"] = pa.array(["opq"] * len(ids) + ["pq"] * len(ids))
         run = self.spark.createDataFrame(pa.table(cols))
-
-        def write_codes(path: str) -> None:
-            (
-                run.coalesce(1)
-                .write.option("compression", "zstd")
-                .mode("overwrite")
-                .save(f"{path}/codes_delta")
-            )
-
-        return write_codes, dfp
+        return _saving(run.coalesce(1), "codes_delta"), dfp
 
     def _encode_distributed(
         self,
@@ -1018,30 +984,20 @@ class AnnIndexStore(SnapshotStore):
             .withColumnRenamed("_chash", "chash")
         )
 
-        def write_codes(path: str) -> None:
-            if dfp[0] <= self.CODES_DELTA_MAX_VECTORS:
-                # delta-run write (r10): a micro-batch append lands as ONE
-                # (variant, cell)-sorted file instead of one near-empty file
-                # per touched (variant, cell) — measured 28.6 s / ~1000
-                # files for a 2000-vector batch at 512 cells on the bucketed
-                # path. Lookups consult runs alongside the bucket layout
-                # (codes()); maybe_fold_code_deltas() merges them at the
-                # shared fold trigger, amortizing the rewrite to O(delta)
-                # per append.
-                (
-                    # repartition, NOT coalesce: coalesce(1) propagates up
-                    # and single-threads the whole encode chain (measured
-                    # 10.3 s of the append); the shuffle is batch-sized
-                    coded.repartition(1)
-                    .sortWithinPartitions("variant", "cell")
-                    .write.option("compression", "zstd")
-                    .mode("overwrite")
-                    .save(f"{path}/codes_delta")
-                )
-            else:
-                self._cell_writer(coded).save(f"{path}/codes")
-
-        return write_codes, dfp
+        if dfp[0] <= self.CODES_DELTA_MAX_VECTORS:
+            # delta-run write (r10): a micro-batch append lands as ONE
+            # (variant, cell)-sorted file instead of one near-empty file
+            # per touched (variant, cell) — measured 28.6 s / ~1000 files
+            # for a 2000-vector batch at 512 cells on the bucketed path.
+            # Lookups consult runs alongside the bucket layout (codes());
+            # maybe_fold_code_deltas() merges them at the shared fold
+            # trigger, amortizing the rewrite to O(delta) per append.
+            # repartition, NOT coalesce: coalesce(1) propagates up and
+            # single-threads the whole encode chain (measured 10.3 s of
+            # the append); the shuffle is batch-sized
+            run = coded.repartition(1).sortWithinPartitions("variant", "cell")
+            return _saving(run, "codes_delta"), dfp
+        return self._cell_write(coded), dfp
 
     # -- load / read -------------------------------------------------------
     def load(self, validate_against: DataFrame | None = None) -> AnnIndex | None:
@@ -1061,11 +1017,7 @@ class AnnIndexStore(SnapshotStore):
         if not model_files:
             return None
         if self._model_memo is None or self._model_memo[0] != model_files:
-            rows = (
-                self.spark.read.schema(self._MODEL_SCHEMA)
-                .parquet(*[f"{self.root}/{f}" for f in model_files])
-                .collect()
-            )
+            rows = self._scan(list(model_files), self._MODEL_SCHEMA).collect()
             self._model_memo = (
                 model_files,
                 {r["component"]: r["payload"] for r in rows},
@@ -1102,7 +1054,7 @@ class AnnIndexStore(SnapshotStore):
         tf = [f for f in man["files"] if f.startswith("tombstones/")]
         if not tf:
             return None
-        return self._committed_parquet(tf).select(self.id_col).distinct()
+        return self._committed_parquet(tf, man).select(self.id_col).distinct()
 
     def tombstones(self) -> DataFrame | None:
         return self._tombstones_from(self._snapshot())
@@ -1246,13 +1198,7 @@ class AnnIndexStore(SnapshotStore):
         ]
         # prior tombstone files stay live (they accumulate until purge)
         return self._commit_model(
-            lambda path: (
-                matched.select(self.id_col)
-                .coalesce(1)
-                .write.option("compression", "zstd")
-                .mode("overwrite")
-                .parquet(f"{path}/tombstones")
-            ),
+            _saving(matched.select(self.id_col).coalesce(1), "tombstones"),
             self._model_rule(orig_man, "delete"),
             self._rolled_params(idx),
             new_fp,
@@ -1279,7 +1225,7 @@ class AnnIndexStore(SnapshotStore):
         if not tomb_files:
             return 0
         tomb = (
-            self.spark.read.parquet(*[f"{self.root}/{f}" for f in tomb_files])
+            self._committed_parquet(tomb_files, man)
             .select(self.id_col)
             .distinct()
             .localCheckpoint(eager=True)  # read BEFORE its files retire
@@ -1310,13 +1256,13 @@ class AnnIndexStore(SnapshotStore):
         # layout as a side effect)
         affected_deltas = delta_files
 
-        def write(path: str) -> None:
-            if affected or affected_deltas:
-                self._cell_writer(
-                    self._read_code_rows(affected, affected_deltas, man).join(
-                        F.broadcast(tomb), self.id_col, "left_anti"
-                    )
-                ).save(f"{path}/codes")
+        def write(path: str) -> dict:
+            if not (affected or affected_deltas):
+                return {}
+            rows = self._read_code_rows(affected, affected_deltas, man)
+            return self._cell_write(
+                rows.join(F.broadcast(tomb), self.id_col, "left_anti")
+            )(path)
 
         self._staged_commit(
             write,
@@ -1375,7 +1321,7 @@ class AnnIndexStore(SnapshotStore):
         folded_deltas = delta_files if folding else []
         frag = self._read_code_rows(affected, folded_deltas, man)
         self._staged_commit(
-            lambda path: self._cell_writer(frag).save(f"{path}/codes"),
+            self._cell_write(frag),
             affected + folded_deltas,
             op="compact_codes",
             kind="index",
@@ -1395,6 +1341,7 @@ class AnnIndexStore(SnapshotStore):
         deltas = [f for f in files if self._is_code_delta(f)]
         base = [f for f in files if f.startswith("codes/")]
         if not self._fold_due(
+            man,
             deltas,
             base,
             2 * self.CODES_DELTA_MAX_VECTORS,

@@ -25,9 +25,10 @@ Semantics (mirrors OhlcvStore.save_data, SQLite INSERT-OR-REPLACE parity
 with the reference's upsert, database_handler.py:215-218): incoming rows
 win over stored rows on the key; the merge is precedence-ranked
 (source-rank + row_number), deterministic under shuffle. Schema is
-captured by the first commit; later upserts must carry the identical
-column set (a drifted pipeline fails loudly instead of silently writing a
-mixed-schema table).
+recorded in the manifest by the first commit; later writes must carry the
+identical (name, type) set (a drifted pipeline fails loudly instead of
+silently writing a mixed-schema table), and reads plan from the recorded
+schema without an inference job (store.py SCHEMAS).
 
 Concurrency is inherited: CAS manifest publish, read-rebase-commit for
 disjoint-shard writers, detected-and-raised conflicts for same-shard races,
@@ -37,6 +38,7 @@ two-commit vacuum grace for concurrent readers.
 from __future__ import annotations
 
 import math
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,7 +46,7 @@ from pyspark.sql import Window
 
 from binance_data_framework_spark.materialize import checkpoint_observed
 from binance_data_framework_spark.operators.curation import shard_assign
-from binance_data_framework_spark.store import SnapshotStore, _maintenance
+from binance_data_framework_spark.store import SnapshotStore, _fields, _maintenance, _saving
 
 
 def _content_tiebreak(df: DataFrame, exclude: tuple[str, ...] = ()):
@@ -90,8 +92,8 @@ class _HashLayoutStore(SnapshotStore):
     the count rule, mode setup, that check, the partition-dir parser
     (``_part_of``), the growth trigger and the remap. A tier supplies its
     data (``_PART``, the clamp bounds, ``_KEY_ATTR``, the remap's commit
-    ``_KIND``) and hooks: ``_remap_rows(files)`` and
-    ``_remap_writer(rows, n)``, the remap's row source and writer, and
+    ``_KIND``) and hooks: ``_remap_rows(man)`` and
+    ``_remap_writer(rows, n)``, the remap's row source and staged write, and
     for sidecar fields of its own, ``_layout_extra``/``_check_extra``.
 
     Single-maintainer note: a remap swaps the routing (sidecar) and the
@@ -250,7 +252,7 @@ class _HashLayoutStore(SnapshotStore):
         man = self._snapshot()
         if not man or not man["files"]:
             return False
-        rows = self._remap_rows(list(man["files"]))
+        rows = self._remap_rows(man)
         exact = rows.count()
         final = n if n is not None else self._auto_count(exact, self._target)
         counter = {"n_rows": exact} if self._auto else {}
@@ -259,7 +261,7 @@ class _HashLayoutStore(SnapshotStore):
                 self._layout_update(**counter)
             return False
         self._staged_commit(
-            self._remap_writer(rows, final).save,
+            self._remap_writer(rows, final),
             list(man["files"]),
             op=f"re{self._PART}",
             kind=self._KIND,
@@ -421,12 +423,12 @@ class BandIndexStore(_HashLayoutStore):
     def _is_delta(rel: str) -> bool:
         return rel.startswith("delta/")
 
-    def _bucketed_writer(self, rows: DataFrame):
-        """Writer of the bucket layout (one file per bucket). band_hash-
-        sorted rows + small row groups: the point-lookup path in
+    def _bucketed_write(self, rows: DataFrame):
+        """Staged write of the bucket layout (one file per bucket).
+        band_hash-sorted rows + small row groups: the point-lookup path in
         candidates() skips at ROW-GROUP granularity, so a file's row
         groups must carry tight band_hash min/max stats."""
-        return (
+        writer = (
             rows.repartition("bucket")
             .sortWithinPartitions("bucket", "band_hash")
             .write.partitionBy("bucket")
@@ -434,6 +436,7 @@ class BandIndexStore(_HashLayoutStore):
             .option("parquet.block.size", str(self.BAND_ROWGROUP_BYTES))
             .mode("overwrite")
         )
+        return _saving(rows, writer=writer)
 
     def append(self, bands: DataFrame) -> int:
         """Add-only commit of (id_col, band_idx, band_hash) rows. Returns
@@ -468,19 +471,17 @@ class BandIndexStore(_HashLayoutStore):
         if not n_in:
             return 0
 
-        def write(path: str) -> None:
-            if n_in <= self.target_bucket_rows:
-                (
-                    with_bucket.coalesce(1)
-                    .sortWithinPartitions("band_hash")
-                    .write.option("compression", "zstd")
-                    .option("parquet.block.size", str(self.BAND_ROWGROUP_BYTES))
-                    .mode("overwrite")
-                    .save(f"{path}/delta")
-                )
-            else:
-                self._bucketed_writer(with_bucket).save(path)
-
+        if n_in <= self.target_bucket_rows:
+            run = (
+                with_bucket.coalesce(1)
+                .sortWithinPartitions("band_hash")
+                .write.option("compression", "zstd")
+                .option("parquet.block.size", str(self.BAND_ROWGROUP_BYTES))
+                .mode("overwrite")
+            )
+            write = _saving(with_bucket, "delta", run)
+        else:
+            write = self._bucketed_write(with_bucket)
         new_files = self._staged_commit(write)
         if not new_files:
             return 0
@@ -491,27 +492,24 @@ class BandIndexStore(_HashLayoutStore):
             self._bump_rows(n_in)
         return len(new_files)
 
-    def _read_files(self, files: list[str]) -> DataFrame:
+    def _read_files(self, files: list[str], man: dict) -> DataFrame:
         """Committed band rows (id_col, band_idx, band_hash, bucket) from
-        a mixed file list: bucketed files carry ``bucket`` as a partition
-        directory, delta runs carry it as a data column — the two groups
-        read separately and union (one spark.read over both would make
-        partition discovery and the in-file schema disagree)."""
+        a mixed file list of snapshot ``man``: bucketed files carry
+        ``bucket`` as a partition directory, delta runs carry it as a data
+        column — the two schema groups read separately and union (one
+        spark.read over both would make partition discovery and the
+        in-file schema disagree)."""
         cols = [self.id_col, "band_idx", "band_hash", "bucket"]
         parts = []
         bucketed = [f for f in files if not self._is_delta(f)]
         deltas = [f for f in files if self._is_delta(f)]
         if bucketed:
             parts.append(
-                self._committed_parquet(bucketed, base_path=self.root)
-                .select(*cols)
+                self._committed_parquet(bucketed, man, self.root).select(*cols)
             )
         if deltas:
-            parts.append(self._committed_parquet(deltas).select(*cols))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            parts.append(self._committed_parquet(deltas, man).select(*cols))
+        return reduce(DataFrame.unionByName, parts)
 
     def read(self) -> DataFrame:
         """Full committed band-row scan (id_col, band_idx, band_hash,
@@ -524,7 +522,7 @@ class BandIndexStore(_HashLayoutStore):
                 [],
                 f"{self.id_col} long, band_idx int, band_hash long, bucket int",
             )
-        return self._read_files(list(man["files"]))
+        return self._read_files(list(man["files"]), man)
 
     def candidates(self, bands: DataFrame) -> DataFrame:
         """(id_new, id_stored) distinct pairs whose (band_idx, band_hash)
@@ -614,7 +612,7 @@ class BandIndexStore(_HashLayoutStore):
                     .collect()
                 )
                 return self._candidates_point(probe_rows, stats, local_root, empty)
-        stored = self._read_files(files)
+        stored = self._read_files(files, man)
         return (
             incoming.join(
                 stored.select(
@@ -765,7 +763,7 @@ class BandIndexStore(_HashLayoutStore):
             files = [f for fl in groups if len(fl) > 1 for f in fl]
         if not files:
             return 0
-        stored = self._read_files(files)
+        stored = self._read_files(files, man)
         if drop_bands is not None:
             survivors = stored.join(
                 keyed.select(self.id_col, "band_idx", "band_hash"),
@@ -781,10 +779,7 @@ class BandIndexStore(_HashLayoutStore):
         if fold_duplicates:
             survivors = survivors.distinct()
         self._staged_commit(
-            self._bucketed_writer(survivors).save,
-            files,
-            op="compact",
-            kind="band-index",
+            self._bucketed_write(survivors), files, op="compact", kind="band-index"
         )
         # delta runs have no bucket directory (_part_of -> None); count
         # the rewritten buckets, with a folded-runs-only rewrite as 1
@@ -812,7 +807,7 @@ class BandIndexStore(_HashLayoutStore):
         deltas = [f for f in files if self._is_delta(f)]
         base = [f for f in files if not self._is_delta(f)]
         if not self._fold_due(
-            deltas, base, self.target_bucket_rows, max_fraction, "band_hash", self.root
+            man, deltas, base, self.target_bucket_rows, max_fraction, "band_hash", self.root
         ):
             return False
         return self.compact() > 0
@@ -824,15 +819,15 @@ class BandIndexStore(_HashLayoutStore):
         multi-file buckets. Returns True iff the layout changed."""
         return self._remap(n_buckets)
 
-    def _remap_rows(self, files: list[str]) -> DataFrame:
+    def _remap_rows(self, man: dict) -> DataFrame:
         return (
-            self._read_files(files)
+            self._read_files(list(man["files"]), man)
             .select(self.id_col, "band_idx", "band_hash")
             .distinct()
         )
 
     def _remap_writer(self, rows: DataFrame, n: int):
-        return self._bucketed_writer(
+        return self._bucketed_write(
             rows.withColumn("bucket", F.pmod("band_hash", F.lit(n)))
         )
 
@@ -895,16 +890,20 @@ class DocumentStore(_HashLayoutStore):
         the merge scan is O(touched shards), not O(store)."""
         return [f for f in files if self._part_of(f) in shards]
 
-    def _shard_writer(self, rows: DataFrame):
-        """Writer of the shard layout: one file per shard, rows key-sorted
-        for row-group skipping on point reads."""
-        return (
+    def _shard_write(self, rows: DataFrame, max_records_per_file: int = 0):
+        """Staged write of the shard layout: one file per shard (or
+        size-bounded files), rows key-sorted for row-group skipping on
+        point reads."""
+        writer = (
             rows.repartition("shard")
             .sortWithinPartitions(self.key_col)
             .write.partitionBy("shard")
             .option("compression", "zstd")
             .mode("overwrite")
         )
+        if max_records_per_file:
+            writer = writer.option("maxRecordsPerFile", max_records_per_file)
+        return _saving(rows, writer=writer)
 
     def _same_shard_rule(self, superseded: list[str], touched: set[int], op: str):
         """_staged_commit conflict rule of the shard-merging writes: the
@@ -928,29 +927,18 @@ class DocumentStore(_HashLayoutStore):
         return removed
 
     def _check_schema_against_stored(
-        self, incoming: DataFrame, live: list[str], op: str
+        self, incoming: DataFrame, man: dict | None, op: str
     ) -> None:
         """Identical (name, dataType) pairs required against the TABLE
-        schema (one driver-side footer read), not just the overlapping
-        shards — a write whose keys all hash to untouched shards would
-        otherwise silently commit a drifted-schema shard, and a NAME-only
-        check (ADVICE r6) would let same-name/drifted-type rows (int vs
-        bigint n_chars) commit mixed-type parquet that only explodes at
-        read time, after publish. "shard" is recomputed by shard_assign
-        (always int), so names suffice for it."""
-        if not live:
+        schema of snapshot ``man`` (the recorded one: no file is opened),
+        before any write job — a NAME-only check (ADVICE r6) would let
+        same-name/drifted-type rows (int vs bigint n_chars) through. The
+        commit re-checks the staged files (_staged_commit). "shard" is
+        recomputed by shard_assign and lives in the path, not the data."""
+        if not man or not man["files"]:
             return
-        stored_schema = self._committed_parquet(live[:1], base_path=self.root).schema
-        stored_fields = {
-            (f.name, f.dataType.simpleString())
-            for f in stored_schema.fields
-            if f.name != "shard"
-        }
-        incoming_fields = {
-            (f.name, f.dataType.simpleString())
-            for f in incoming.schema.fields
-            if f.name != "shard"
-        }
+        stored_fields = _fields(self._group_schema(man, ""))
+        incoming_fields = _fields(incoming.drop("shard").schema)
         if incoming_fields != stored_fields:
             raise ValueError(
                 f"{op}: schema drift vs stored table "
@@ -993,7 +981,7 @@ class DocumentStore(_HashLayoutStore):
             return 0
         man = self._snapshot()
         live = man["files"] if man else []
-        self._check_schema_against_stored(incoming, live, "save_docs")
+        self._check_schema_against_stored(incoming, man, "save_docs")
         if full_refresh:
             superseded = list(live)
             ranked = incoming.withColumn("_rank", F.lit(0))
@@ -1002,7 +990,7 @@ class DocumentStore(_HashLayoutStore):
             ranked = incoming.withColumn("_rank", F.lit(0))
             if superseded:
                 stored = self._committed_parquet(
-                    superseded, base_path=self.root
+                    superseded, man, self.root
                 ).withColumn("_rank", F.lit(1))
                 ranked = ranked.unionByName(stored)
         # content-hash tie-break (VERDICT r9 #3): two incoming rows with the
@@ -1017,7 +1005,7 @@ class DocumentStore(_HashLayoutStore):
             .drop("_rank", "_rn")
         )
         self._staged_commit(
-            self._shard_writer(merged).save,
+            self._shard_write(merged),
             # a full refresh replaces whatever is live NOW (a concurrent
             # commit's files are superseded too — last refresh wins,
             # atomically)
@@ -1031,8 +1019,8 @@ class DocumentStore(_HashLayoutStore):
             # upsert mixes inserts and replacements, so the counter cannot
             # be rolled forward from the delta alone — recount the live
             # files (footer row counts on a local root: no Spark job)
-            live = self._live(self._snapshot())
-            total = self._row_count(live, self.key_col, live, self.root)
+            now = self._snapshot()
+            total = self._row_count(now["files"], self.key_col, now, self.root)
             self._layout_update(n_rows=total)
         return len(touched)
 
@@ -1086,7 +1074,7 @@ class DocumentStore(_HashLayoutStore):
             return 0
         man = self._snapshot()
         live = man["files"] if man else []
-        self._check_schema_against_stored(incoming, live, "append_docs")
+        self._check_schema_against_stored(incoming, man, "append_docs")
         if on_existing != "trust" and live:
             existing = self.read_keys(
                 incoming.select(self.key_col).distinct()
@@ -1123,9 +1111,7 @@ class DocumentStore(_HashLayoutStore):
 
         obs = Observation()
         new_files = self._staged_commit(
-            self._shard_writer(
-                deduped.observe(obs, F.count(F.lit(1)).alias("n"))
-            ).save
+            self._shard_write(deduped.observe(obs, F.count(F.lit(1)).alias("n")))
         )
         if not new_files:
             return 0
@@ -1151,17 +1137,17 @@ class DocumentStore(_HashLayoutStore):
         superseded = self._shard_files(man["files"], touched)
         if not superseded:
             return 0
-        stored = self._committed_parquet(superseded, base_path=self.root)
+        stored = self._committed_parquet(superseded, man, self.root)
         survivors = stored.join(
             keyed.select(self.key_col), on=self.key_col, how="left_anti"
         )
         new_files = self._staged_commit(
-            self._shard_writer(survivors).save,
+            self._shard_write(survivors),
             removed_fn=self._same_shard_rule(superseded, touched, "delete_docs"),
         )
         if self._auto:
             # exact removed-row delta (footer row counts on a local root)
-            live = man["files"] + new_files
+            live = {**man, "files": man["files"] + new_files}
             self._bump_rows(
                 self._row_count(new_files, self.key_col, live, self.root)
                 - self._row_count(superseded, self.key_col, live, self.root)
@@ -1171,11 +1157,15 @@ class DocumentStore(_HashLayoutStore):
     # -- read path ---------------------------------------------------------
     def read(self) -> DataFrame:
         """Latest committed snapshot (all shards). Raises on an empty store
-        — there is no schema to fabricate an empty frame from."""
+        — there is no schema to fabricate an empty frame from. An auto
+        handle adopts the layout sidecar (one small read, no Spark job),
+        so its ``n_shards`` is the stored count once it has read."""
         man = self._snapshot()
         if not man or not man["files"]:
             raise ValueError(f"DocumentStore at {self.root} is empty")
-        return self._committed_parquet(man["files"], base_path=self.root)
+        if self._auto:
+            self._check_layout()
+        return self._committed_parquet(man["files"], man, self.root)
 
     #: key sets at or below this take read_keys' pushed-filter path: the
     #: values collect to the driver (bounded: 8k longs) and land on the
@@ -1226,7 +1216,7 @@ class DocumentStore(_HashLayoutStore):
         files = self._shard_files(man["files"], touched)
         if not files:
             return self.read().limit(0)  # store schema, zero rows
-        df = self._committed_parquet(files, base_path=self.root)
+        df = self._committed_parquet(files, man, self.root)
         if small:
             return df.where(F.col(self.key_col).isin(probe))
         return df.join(keyed.select(self.key_col), on=self.key_col, how="left_semi")
@@ -1234,15 +1224,10 @@ class DocumentStore(_HashLayoutStore):
     def read_version(self, version: int) -> DataFrame:
         """Time-travel read (inherited retention rules: the trailing
         two-commit window)."""
-        if version not in self.snapshot_versions():
-            raise ValueError(
-                f"snapshot v{version} is not retained "
-                f"(available: {self.snapshot_versions()})"
-            )
-        man = self._resolve(version)
+        man = self._resolve_retained(version)
         if not man["files"]:
             raise ValueError(f"snapshot v{version} is empty")
-        return self._committed_parquet(man["files"], base_path=self.root)
+        return self._committed_parquet(man["files"], man, self.root)
 
     # -- maintenance -------------------------------------------------------
     def optimize(self, max_records_per_file: int = 0) -> int:
@@ -1259,11 +1244,10 @@ class DocumentStore(_HashLayoutStore):
         if not todo:
             return 0
         originals = sorted(f for fl in todo for f in fl)
-        rows = self._committed_parquet(originals, base_path=self.root)
-        writer = self._shard_writer(rows)
-        if max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        self._staged_commit(writer.save, originals, op="optimize")
+        rows = self._committed_parquet(originals, man, self.root)
+        self._staged_commit(
+            self._shard_write(rows, max_records_per_file), originals, op="optimize"
+        )
         return len(todo)
 
     def maybe_reshard(self, grow_factor: float = 2.0) -> bool:
@@ -1281,8 +1265,8 @@ class DocumentStore(_HashLayoutStore):
         the store layout. Returns True iff the layout changed."""
         return self._remap(n_shards)
 
-    def _remap_rows(self, files: list[str]) -> DataFrame:
-        return self._committed_parquet(files, base_path=self.root).drop("shard")
+    def _remap_rows(self, man: dict) -> DataFrame:
+        return self._committed_parquet(man["files"], man, self.root).drop("shard")
 
     def _remap_writer(self, rows: DataFrame, n: int):
-        return self._shard_writer(shard_assign(rows, n, self.key_col))
+        return self._shard_write(shard_assign(rows, n, self.key_col))

@@ -5757,16 +5757,9 @@ def q_curated_index_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = stored_ids.agg(F.count(F.lit(1)).alias("_nd"))
     pq_ids = ann.codes("pq").select("doc_id")
     opq_ids = ann.codes("opq").select("doc_id")
-    band_man = bands._snapshot()
-    band_ids = (
-        spark.read.option("basePath", bands.root)
-        .parquet(*[f"{bands.root}/{f}" for f in band_man["files"]])
-        .select("doc_id")
-        if band_man and band_man["files"]
-        # an empty/wiped band store is a RED certificate (bands_cover_
-        # corpus=false via zero distinct ids), not a TypeError (review r7)
-        else stored_ids.limit(0)
-    )
+    # an empty/wiped band store reads as zero rows: a RED certificate
+    # (bands_cover_corpus=false via zero distinct ids), not an error
+    band_ids = bands.read().select("doc_id")
 
     def _same_ids(ids: DataFrame, n_col: str, d_col: str) -> DataFrame:
         """(count, distinct-ids-missing-from-store) — equality with the

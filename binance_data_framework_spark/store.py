@@ -42,6 +42,23 @@ manifests (and their checkpoint sidecars) below the newest checkpoint the
 retention window still needs. Commit metadata IO is therefore amortized
 O(delta + files/_CHECKPOINT_EVERY) instead of O(store files) per commit.
 
+SCHEMAS: every store read plans from a schema known without a Spark job
+(a schema-less ``spark.read.parquet`` runs a footer-inference job per
+read). A store's files fall into schema groups — a tier's top-level
+directory (``codes/``, ``delta/``, ``tombstones/``, ...) or the root's
+partitioned layout — each read by one ``spark.read``. OHLCV DECLARES its
+schema in code (``_SCHEMA``, plus ``dt date`` for day files) and every
+OHLCV write casts to it. The other tiers hold caller-typed columns, so
+each commit RECORDS the data schema of every group (partition columns
+stay in the path) from the frames its writes saved: a checkpoint manifest
+carries the full group map, a delta manifest only the groups whose schema
+changed, and snapshot resolution replays the map like the file list. A
+commit whose staged files disagree with the surviving files of their
+group raises before publish, so a group never mixes schemas. A manifest
+written before schemas were recorded has no map: its reads infer each
+group once per resolved snapshot, and the tier's next commit records
+them all.
+
 CONCURRENCY: commits are a read-rebase-commit loop. The manifest publish
 is CREATE-EXCLUSIVE: the fully-written tmp manifest is hard-linked to its
 versioned name on local filesystems (atomic, fails if the version exists
@@ -78,15 +95,20 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
+from pyspark.sql.types import StructType
 
 from binance_data_framework_spark.operators.coverage import covered_expr, meta_coverage
 
 KEY = ["ts", "symbol", "timeframe"]
 OHLCV_COLS = ["ts", "symbol", "timeframe", "open", "high", "low", "close", "volume"]
+#: the declared OHLCV row schema: undated legacy files read with it, day
+#: files with ``_DAY_SCHEMA``, and every write casts to the latter, so no
+#: read of the store infers a schema
 _SCHEMA = (
     "ts timestamp, symbol string, timeframe string, open double, high double, "
     "low double, close double, volume double"
 )
+_DAY_SCHEMA = _SCHEMA + ", dt date"
 _MANIFEST_DIR = "_manifests"
 _CHECKPOINT_EVERY = 8  # every Nth manifest embeds the full file list
 _COMMIT_RETRIES = 5
@@ -127,11 +149,27 @@ def _utc(d: datetime) -> datetime:
     return d.astimezone(timezone.utc)
 
 
-#: process-wide (root-qualified) schema memo for committed parquet files —
-#: see SnapshotStore._committed_parquet. Immutable uuid-named files make
-#: entries permanently valid; the size cap only bounds driver memory.
-_PARQUET_SCHEMA_CACHE: dict = {}
-_PARQUET_SCHEMA_CACHE_MAX = 512
+def _fields(schema) -> set[tuple[str, str]]:
+    """(name, type) pairs of a schema (a StructType or its JSON form): what
+    two writes of one file group must agree on (column order and
+    nullability may differ)."""
+    if isinstance(schema, dict):
+        schema = StructType.fromJson(schema)
+    return {(f.name, f.dataType.simpleString()) for f in schema.fields}
+
+
+def _saving(df: DataFrame, group: str = "", writer=None):
+    """A _staged_commit ``write``: save ``df`` as zstd parquet into
+    ``group``'s directory of the staging path — through ``writer``, a
+    writer of ``df`` with layout options, when given — and report
+    ``df``'s schema for that group."""
+
+    def write(path: str) -> dict:
+        w = writer or df.write.option("compression", "zstd").mode("overwrite")
+        w.parquet(f"{path}/{group}" if group else path)
+        return {group: df.schema}
+
+    return write
 
 
 def _maintenance(grow: str, fold: str | None, compact: str):
@@ -227,46 +265,51 @@ class SnapshotStore:
             self._local_root_cache = None
         return self._local_root_cache
 
-    def _committed_parquet(
-        self,
-        rels: list[str],
-        base_path: str | None = None,
-        schema_from: str | None = None,
+    # -- schema groups (module docstring, SCHEMAS) --------------------------
+
+    @staticmethod
+    def _group_of(rel: str) -> str:
+        """Schema group of a store-relative file: its top-level directory,
+        or "" for a file of the root's ``k=v`` layout or at the root."""
+        head, sep, _ = rel.partition("/")
+        return head if sep and "=" not in head else ""
+
+    def _scan(
+        self, rels: list[str], schema, base_path: str | None = None
     ) -> DataFrame:
-        """``spark.read.parquet`` over committed files with a MEMOIZED
-        schema (r14, guide §5 — the driver does no repeatable work): a
-        schema-less read runs a footer/schema-inference job on EVERY call
-        (~0.35 s and one Spark job per store read at sf0.1; at scale the
-        inference lists and opens footers again for every search/gate
-        batch). Committed files are immutable and uuid-named, so a schema
-        inferred once from a group's first file is valid forever — keyed
-        by (base_path, first file), process-wide, so every handle of the
-        same root shares it. Partition columns (shard=/variant=/cell=/dt=)
-        are part of the inferred schema and their inferred TYPES are
-        written consistently by the store's own writers; supplying the
-        schema makes Spark cast partition values to it, which pins the
-        str-or-int inference drift the ann code-reader already normalizes.
-        ``rels`` are paths relative to self.root. ``schema_from`` (default
-        ``rels[0]``) names a committed file whose schema every file of
-        ``rels`` shares: a reader of varying subsets of one uniform group
-        keys the memo on one representative instead of inferring per
-        subset. At the size cap the OLDEST entry is evicted (insertion
-        order), never the whole memo — a wholesale flush made every hot
-        store re-infer at once."""
-        key = (base_path or "", f"{self.root}/{schema_from or rels[0]}")
-        schema = _PARQUET_SCHEMA_CACHE.get(key)
-        if schema is None:
-            r = self.spark.read
-            if base_path is not None:
-                r = r.option("basePath", base_path)
-            schema = r.parquet(key[1]).schema
-            if len(_PARQUET_SCHEMA_CACHE) >= _PARQUET_SCHEMA_CACHE_MAX:
-                del _PARQUET_SCHEMA_CACHE[next(iter(_PARQUET_SCHEMA_CACHE))]
-            _PARQUET_SCHEMA_CACHE[key] = schema
+        """``spark.read.parquet`` over committed files (``rels`` relative
+        to the root) with a given schema, so planning runs no job.
+        Partition columns the schema leaves out are discovered from the
+        paths under ``base_path``."""
         r = self.spark.read.schema(schema)
         if base_path is not None:
             r = r.option("basePath", base_path)
         return r.parquet(*[f"{self.root}/{f}" for f in rels])
+
+    def _committed_parquet(
+        self, rels: list[str], man: dict, base_path: str | None = None
+    ) -> DataFrame:
+        """The committed files ``rels`` of ONE schema group of snapshot
+        ``man``, read with that group's schema (_group_schema)."""
+        return self._scan(
+            rels, self._group_schema(man, self._group_of(rels[0])), base_path
+        )
+
+    def _infer_schema(self, rel: str) -> dict:
+        """Data schema of one committed file, inferred by Spark (one job):
+        only for groups no manifest records a schema for."""
+        return self.spark.read.parquet(f"{self.root}/{rel}").schema.jsonValue()
+
+    def _group_schema(self, man: dict, group: str) -> StructType:
+        """Data schema of ``group`` in snapshot ``man``: the recorded one,
+        or — for a manifest written before schemas were recorded —
+        inferred from the group's first file, once per resolved
+        snapshot (the tier's next commit records it)."""
+        schema = man["schemas"].get(group)
+        if schema is None:
+            rel = next(f for f in man["files"] if self._group_of(f) == group)
+            schema = man["schemas"][group] = self._infer_schema(rel)
+        return StructType.fromJson(schema)
 
     # -- LSM delta runs ----------------------------------------------------
     # The derived-layout tiers (BandIndexStore's delta/, AnnIndexStore's
@@ -335,22 +378,24 @@ class SnapshotStore:
         self,
         rels: list[str],
         column: str,
-        live_files: list[str],
+        man: dict,
         base_path: str | None = None,
     ) -> int:
-        """Exact row count of the committed files ``rels``: the sum of
-        their footers' row counts on a local root (_footer_stats, keyed by
-        ``column`` and evicted against ``live_files``; no Spark job), else
-        — or on an unreadable footer — one Spark count."""
+        """Exact row count of the committed files ``rels`` (one schema
+        group of snapshot ``man``): the sum of their footers' row counts
+        on a local root (_footer_stats, keyed by ``column`` and evicted
+        against ``man``'s files; no Spark job), else — or on an unreadable
+        footer — one Spark count."""
         local_root = self._local_root()
         if local_root is not None:
-            stats = self._footer_stats(rels, column, local_root, live_files)
+            stats = self._footer_stats(rels, column, local_root, man["files"])
             if None not in stats.values():
                 return sum(g[3] for groups in stats.values() for g in groups)
-        return self._committed_parquet(rels, base_path).count() if rels else 0
+        return self._committed_parquet(rels, man, base_path).count() if rels else 0
 
     def _fold_due(
         self,
+        man: dict,
         deltas: list[str],
         base: list[str],
         floor: int,
@@ -368,22 +413,20 @@ class SnapshotStore:
         runs every gate batch, runs no Spark job. Elsewhere the runs'
         Spark count is batch-sized, and the base count is cached against
         the base file list, which only a fold, compact or rebuild commit
-        changes. Every file the tiers cache stats for is a delta run or a
-        base file, so they are the eviction list."""
+        changes. ``deltas`` and ``base`` are files of snapshot ``man``."""
         if not deltas:
             return False
         if len(deltas) >= self.DELTA_FOLD_MAX_FILES:
             return True
-        live = deltas + base
-        delta_rows = self._row_count(deltas, column, live)
+        delta_rows = self._row_count(deltas, column, man)
         if self._local_root() is not None:
-            base_rows = self._row_count(base, column, live, base_path)
+            base_rows = self._row_count(base, column, man, base_path)
         else:
             key = tuple(sorted(base))
             if self._fold_base_rows is None or self._fold_base_rows[0] != key:
                 self._fold_base_rows = (
                     key,
-                    self._row_count(base, column, live, base_path),
+                    self._row_count(base, column, man, base_path),
                 )
             base_rows = self._fold_base_rows[1]
         return delta_rows >= max(floor, max_fraction * base_rows)
@@ -523,11 +566,12 @@ class SnapshotStore:
         return out
 
     def _resolve(self, version: int) -> dict:
-        """Resolved snapshot {version, files} of manifest v<version>: walk
-        back to the nearest checkpoint manifest (one embedding the full
-        ``files`` list — every _CHECKPOINT_EVERY-th commit, v1, and any
-        legacy full manifest), then replay the delta manifests' removed/
-        added forward. Bounded by the checkpoint cadence, never O(history)."""
+        """Resolved snapshot {version, files, schemas} of manifest
+        v<version>: walk back to the nearest checkpoint manifest (one
+        embedding the full ``files`` list — every _CHECKPOINT_EVERY-th
+        commit, v1, and any legacy full manifest), then replay the delta
+        manifests' removed/added forward, and their group schemas the same
+        way. Bounded by the checkpoint cadence, never O(history)."""
         deltas = []
         v, man = version, self._read_manifest(version)
         while "files" not in man and "checkpoint" not in man:
@@ -538,10 +582,12 @@ class SnapshotStore:
             files = set(self._read_checkpoint(man["checkpoint"]))
         else:  # legacy JSON-embedded checkpoint
             files = set(man["files"])
+        schemas = dict(man.get("schemas", {}))
         for d in reversed(deltas):
             files -= set(d["removed"])
             files |= set(d["added"])
-        return {"version": version, "files": sorted(files)}
+            schemas.update(d.get("schemas", {}))
+        return {"version": version, "files": sorted(files), "schemas": schemas}
 
     def _snapshot(self) -> dict | None:
         """Latest committed snapshot, resolved; bootstraps a v1 checkpoint
@@ -559,7 +605,44 @@ class SnapshotStore:
                 return self._commit(sorted(legacy), [], prev=None)
         return None
 
-    def _commit(self, added: list[str], removed: list[str], prev: dict | None) -> dict:
+    def _next_schemas(
+        self, prev: dict | None, files: list[str], added: list[str], staged: dict | None
+    ) -> dict:
+        """group -> data schema of the snapshot a schema-recording commit
+        publishes (``files``, of which ``added`` are new): ``staged``, the
+        schemas this commit's writes saved, for a group it replaces whole;
+        the group's recorded schema while any of its files survive. A
+        group a manifest written before schemas were recorded does not
+        name is inferred from its first surviving file, once. A staged
+        schema whose (name, type) pairs differ from the surviving files'
+        raises before publish: a group never mixes schemas (a mixed group
+        would read the odd columns as nulls). Without ``staged`` (a tier
+        with a declared schema) the previous map carries over."""
+        if staged is None:
+            return dict(prev["schemas"] if prev else {})
+        old, new, first = prev["schemas"] if prev else {}, set(added), {}
+        for f in files:  # group -> its first surviving file
+            if f not in new:
+                first.setdefault(self._group_of(f), f)
+        out = {}
+        for g in sorted(set(first) | set(staged)):
+            kept = (old.get(g) or self._infer_schema(first[g])) if g in first else None
+            got = staged.get(g)
+            if kept and got and _fields(kept) != _fields(got):
+                raise ValueError(
+                    f"schema drift in {g or 'root'} files of {self.root}: stored "
+                    f"{sorted(_fields(kept))}, staged {sorted(_fields(got))}"
+                )
+            out[g] = kept or got
+        return out
+
+    def _commit(
+        self,
+        added: list[str],
+        removed: list[str],
+        prev: dict | None,
+        schemas: dict | None = None,
+    ) -> dict:
         """Publish one commit atomically, then vacuum what the PREVIOUS
         commit superseded (safe: after this commit, those files are two
         snapshots old) plus manifests below the checkpoint the retention
@@ -568,12 +651,20 @@ class SnapshotStore:
         checkpoint versions also embed the full file list (module
         docstring, DELTA LOG + CHECKPOINTS).
 
+        ``schemas`` (group -> data schema of the staged files) makes this a
+        schema-recording commit (_next_schemas): a checkpoint manifest
+        carries every group's schema, a delta manifest the groups whose
+        schema changed. Without it the previous schemas carry over.
+
         The publish is create-exclusive on every scheme (_publish_manifest):
         a lost race raises ConcurrentCommit for _commit_rebased to retry.
         Returns the new RESOLVED snapshot."""
         version = (prev["version"] + 1) if prev else 1
         files = sorted((set(prev["files"]) if prev else set()) - set(removed) | set(added))
         man = {"version": version, "added": sorted(added), "removed": sorted(removed)}
+        old = prev["schemas"] if prev else {}
+        known = self._next_schemas(prev, files, added, schemas)
+        changed = {g: s for g, s in known.items() if old.get(g) != s}
         ckpt_name = None
         if version == 1 or version % _CHECKPOINT_EVERY == 0:
             # uuid-unique sidecar name: two writers racing the same version
@@ -582,6 +673,9 @@ class SnapshotStore:
             ckpt_name = f"v{version:012d}-{uuid.uuid4().hex}.checkpoint.parquet"
             self._write_checkpoint(ckpt_name, files)
             man["checkpoint"] = ckpt_name
+            changed = known
+        if changed:
+            man["schemas"] = changed
         try:
             self._publish_manifest(version, json.dumps(man).encode())
         except BaseException:
@@ -607,7 +701,7 @@ class SnapshotStore:
             # retained-window sweep (see _vacuum); checkpoint commits sweep
             # unconditionally, covering failures in other processes
             self._vacuum_failed = True
-        return {"version": version, "files": files}
+        return {"version": version, "files": files, "schemas": known}
 
     def _publish_manifest(self, version: int, data: bytes) -> None:
         """Create-exclusive manifest publish (the commit CAS). The content
@@ -654,10 +748,11 @@ class SnapshotStore:
                     f"manifest v{version} was published by a concurrent writer"
                 )
 
-    def _commit_rebased(self, delta_fn) -> dict | None:
+    def _commit_rebased(self, delta_fn, schemas: dict | None = None) -> dict | None:
         """Read-rebase-commit loop: resolve the CURRENT head, ask
         ``delta_fn(latest_resolved_or_None)`` for this write's
-        (added, removed) — or None to abort with no commit — and publish.
+        (added, removed) — or None to abort with no commit — and publish
+        (with the staged files' ``schemas``, see _commit).
         If the publish loses the rename CAS to a concurrent PROCESS, rebase
         onto the new head and retry (bounded); concurrent threads on this
         instance are serialized by the lock outright. delta_fn is
@@ -675,7 +770,7 @@ class SnapshotStore:
                     return None
                 added, removed = delta
                 try:
-                    return self._commit(added, removed, prev=latest)
+                    return self._commit(added, removed, latest, schemas)
                 except ConcurrentCommit as e:
                     last_err = e
             raise last_err
@@ -785,6 +880,16 @@ class SnapshotStore:
             return []
         return [v for v in versions if v >= versions[-1] - 2]
 
+    def _resolve_retained(self, version: int) -> dict:
+        """Resolved snapshot of a version still readable (snapshot_versions);
+        any other version raises."""
+        if version not in self.snapshot_versions():
+            raise ValueError(
+                f"snapshot v{version} is not retained "
+                f"(available: {self.snapshot_versions()})"
+            )
+        return self._resolve(version)
+
     def history(self) -> DataFrame:
         """Commit log as a DataFrame (Delta ``DESCRIBE HISTORY`` parity):
         one row per retained manifest — version, delta sizes, checkpoint
@@ -834,7 +939,9 @@ class SnapshotStore:
         fs.delete(staging_path, True)
         return new_files
 
-    def _commit_or_reclaim(self, new_files: list[str], delta_fn) -> dict | None:
+    def _commit_or_reclaim(
+        self, new_files: list[str], delta_fn, schemas: dict | None = None
+    ) -> dict | None:
         """_commit_rebased, but a failed commit (same-series conflict,
         exhausted CAS retries) must not leak the already-placed files into
         the live layout: no manifest references them, so vacuum would never
@@ -843,15 +950,16 @@ class SnapshotStore:
 
         Reclaim triggers on `Exception` ONLY, and every exception _commit
         can raise escapes strictly BEFORE the manifest publish (delta_fn
-        conflicts, head-resolution IO, exhausted CAS retries; post-publish
-        vacuum is best-effort inside _commit). A BaseException (e.g.
-        KeyboardInterrupt) can land AFTER a successful publish, where
-        deleting new_files would corrupt the committed snapshot — so it is
-        deliberately NOT caught here; a killed pre-publish writer leaves
+        conflicts, schema drift, head-resolution IO, exhausted CAS
+        retries; post-publish vacuum is best-effort inside _commit). A
+        BaseException (e.g. KeyboardInterrupt) can land AFTER a successful
+        publish, where deleting new_files would corrupt the committed
+        snapshot — so it is deliberately NOT caught here; a killed
+        pre-publish writer leaves
         unreferenced files reclaimable by a future optimize/manual sweep,
         which is recoverable, unlike deleting published data."""
         try:
-            return self._commit_rebased(delta_fn)
+            return self._commit_rebased(delta_fn, schemas)
         except Exception:
             fs, _ = self._fs_path()
             for rel in new_files:
@@ -884,7 +992,11 @@ class SnapshotStore:
            FileOutputCommitter stages every job under <out>/_temporary, so
            concurrent writers cannot share one output root; underscore-
            prefixed, so a crashed writer's orphans are invisible to readers
-           and manifests and never adopted by a later commit.
+           and manifests and never adopted by a later commit. It returns
+           the schema of each frame it saved, keyed by schema group (the
+           staging subdir it saved under, _group_of), or None for a tier
+           with a declared schema; the commit records them without the
+           partition columns the staged paths carry (_commit).
         2. _publish_staged renames the staged files into the layout — the
            staging listing IS the exact new file set. Driver-side metadata
            ops; reader visibility is gated by the manifest, not the renames.
@@ -902,8 +1014,15 @@ class SnapshotStore:
         which raises on its own conflicts. Returns the staged files'
         store-relative paths."""
         staging = f"_staging-{uuid.uuid4().hex}"
-        write(f"{self.root}/{staging}")
+        saved = write(f"{self.root}/{staging}")
         new_files = self._publish_staged(staging)
+        schemas = None if saved is None else {}
+        for g, schema in (saved or {}).items():
+            rel = next((f for f in new_files if self._group_of(f) == g), None)
+            if rel is not None:  # partition columns live in the path
+                parts = {d.split("=")[0] for d in rel.split("/")[:-1] if "=" in d}
+                data = [f for f in schema.fields if f.name not in parts]
+                schemas[g] = StructType(data).jsonValue()
         if removed_fn is None:
             if not new_files and not superseded:
                 return new_files
@@ -920,7 +1039,7 @@ class SnapshotStore:
                 return list(superseded)
 
         self._commit_or_reclaim(
-            new_files, lambda latest: (new_files, removed_fn(latest))
+            new_files, lambda latest: (new_files, removed_fn(latest)), schemas
         )
         return new_files
 
@@ -998,7 +1117,11 @@ class OhlcvStore(SnapshotStore):
         columns, which is the ordering the partitioned writer requires, so
         Spark adds no second sort; its ts tail keeps row-group ts skipping
         tight. zstd: ~30-40% smaller than snappy at comparable scan cost,
-        the codec the manifest checkpoints use too."""
+        the codec the manifest checkpoints use too. Columns are cast to
+        ``_DAY_SCHEMA``, the schema every read declares."""
+        df = df.select(
+            *[F.col(c).cast(t) for c, t in (f.split() for f in _DAY_SCHEMA.split(", "))]
+        )
         clustered = (
             df.coalesce(1) if one_task else df.repartition("symbol", "timeframe", "dt")
         )
@@ -1017,16 +1140,7 @@ class OhlcvStore(SnapshotStore):
         v(K-1) — the last one referencing it — has been pruned), so this is
         a consistent snapshot, not best-effort. Versions outside the
         retention window raise."""
-        if version not in self.snapshot_versions():
-            raise ValueError(
-                f"snapshot v{version} is not retained "
-                f"(available: {self.snapshot_versions()})"
-            )
-        man = self._resolve(version)
-        if not man["files"]:
-            return self._empty(with_dt)
-        df = self._read_day_files(man["files"])
-        return df if with_dt else df.select(*OHLCV_COLS)
+        return self._read_all(with_dt, self._resolve_retained(version))
 
     # -- read path --------------------------------------------------------
     def _read_day_files(self, files: list[str]) -> DataFrame:
@@ -1037,16 +1151,16 @@ class OhlcvStore(SnapshotStore):
         CONFLICTING_PARTITION_COLUMN_NAMES. They read as a second group
         whose dt is to_date(ts), the value every day dir holds by
         construction, unioned with the dated group. A pure-dated listing
-        stays one read."""
+        stays one read. Both plan from the declared schema: no job."""
         cols = [*OHLCV_COLS, "dt"]
         dated = [f for f in files if "/dt=" in f]
         undated = [f for f in files if "/dt=" not in f]
         parts = []
         if dated:
-            parts.append(self._committed_parquet(dated, base_path=self.root).select(*cols))
+            parts.append(self._scan(dated, _DAY_SCHEMA, self.root).select(*cols))
         if undated:
             parts.append(
-                self._committed_parquet(undated, base_path=self.root)
+                self._scan(undated, _SCHEMA, self.root)
                 .withColumn("dt", F.to_date("ts"))
                 .select(*cols)
             )
@@ -1127,13 +1241,14 @@ class OhlcvStore(SnapshotStore):
         return bool(man and man["files"])
 
     def _empty(self, with_dt: bool) -> DataFrame:
-        schema = _SCHEMA + (", dt date" if with_dt else "")
+        schema = _DAY_SCHEMA if with_dt else _SCHEMA
         return self.spark.createDataFrame([], schema).select(
             *(OHLCV_COLS + ["dt"] if with_dt else OHLCV_COLS)
         )
 
-    def _read_all(self, with_dt: bool = False) -> DataFrame:
-        man = self._snapshot()
+    def _read_all(self, with_dt: bool = False, man: dict | None = None) -> DataFrame:
+        """Every row of snapshot ``man`` (default: the latest)."""
+        man = man or self._snapshot()
         if not man or not man["files"]:
             return self._empty(with_dt)
         df = self._read_day_files(man["files"])

@@ -41,3 +41,31 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def jobs_of(spark, group: str, fn):
+    """(Spark jobs ``fn()`` launched, its result), counted through a job
+    group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def drop_recorded_schemas(root: str) -> None:
+    """Strip the group schemas from every manifest of the store at
+    ``root``: the manifests of a store committed before schemas were
+    recorded."""
+    import glob
+    import json
+
+    for path in glob.glob(os.path.join(root, "_manifests", "v*.json")):
+        with open(path) as f:
+            man = json.load(f)
+        man.pop("schemas", None)
+        with open(path, "w") as f:
+            json.dump(man, f)

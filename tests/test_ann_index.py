@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from binance_data_framework_spark.ann_index import AnnIndexStore, ensure_index
 from binance_data_framework_spark.operators import similarity as S
+from conftest import drop_recorded_schemas, jobs_of
 
 DIM = 8
 BUILD = dict(dim=DIM, n_centroids=4, m_sub=4, ksub=4)
@@ -132,25 +133,19 @@ def test_load_memoizes_model_until_it_changes(spark, tmp_path, monkeypatch):
         return orig(self, *paths, **kw)
 
     monkeypatch.setattr(DataFrameReader, "parquet", counting)
-    sc = spark.sparkContext
 
     def traced_load(group):
         reads.clear()
-        sc.setJobGroup(group, group)
-        try:
-            out = st.load()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return out, list(reads), sc.statusTracker().getJobIdsForGroup(group)
+        jobs, out = jobs_of(spark, group, st.load)
+        return out, list(reads), jobs
 
     again, n_reads, jobs = traced_load("ann-memo-probe")
-    assert n_reads == [] and jobs == []
+    assert n_reads == [] and jobs == 0
     assert asdict(again) == asdict(first)
 
     st.append(_emb(spark, n=50).where(F.col("vec_id") >= 40))
     rolled, n_reads, jobs = traced_load("ann-memo-after-append")
-    assert n_reads == [] and jobs == []
+    assert n_reads == [] and jobs == 0
     assert rolled.version > first.version
     assert rolled.n_vectors == 50
     assert rolled.fingerprint == st._fingerprint(_emb(spark, n=50))
@@ -267,21 +262,18 @@ def test_append_driver_and_distributed_paths_agree(
 
     # warm driver append: one redelivery (65, in the delta run) + 3 new
     monkeypatch.undo()
-    sc = spark.sparkContext
-    sc.setJobGroup("ann-append-pin", "warm append")
-    try:
-        drv.append(ids(65, 69), skip_existing=True)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup("ann-append-pin")) <= 5
+    n_jobs, _ = jobs_of(
+        spark, "ann-append-pin", lambda: drv.append(ids(65, 69), skip_existing=True)
+    )
+    assert n_jobs <= 5
     assert drv.load().n_vectors == 69
 
-    # legacy store (code files predate chash): the distributed copy with
-    # chash stripped, under a new root so no memoized schema or footer
-    # of the old one applies. The driver path writes the rows the warm
-    # append above wrote, without chash.
+    # legacy store (code files predate chash, and so do its manifests'
+    # recorded schemas): the distributed copy with chash stripped, under
+    # a new root so no cached footer of the old one applies. The driver
+    # path writes the rows the warm append above wrote, without chash.
     (tmp_path / "spark").rename(tmp_path / "legacy")
+    drop_recorded_schemas(str(tmp_path / "legacy"))
     st = AnnIndexStore(spark, str(tmp_path / "legacy"))
     for f in st._snapshot()["files"]:
         if f.startswith(("codes/", "codes_delta/")):

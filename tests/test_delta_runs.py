@@ -14,7 +14,7 @@ import pytest
 
 from binance_data_framework_spark.ann_index import AnnIndexStore
 from binance_data_framework_spark.docstore import BandIndexStore
-from binance_data_framework_spark.store import SnapshotStore
+from binance_data_framework_spark.store import SnapshotStore, _saving
 
 
 class _Band:
@@ -77,17 +77,10 @@ class _Ann:
             "chash long",
         )
         if delta:
-            def w(path):
-                (
-                    df.coalesce(1)
-                    .sortWithinPartitions("variant", "cell")
-                    .write.mode("overwrite")
-                    .save(f"{path}/codes_delta")
-                )
+            run = df.coalesce(1).sortWithinPartitions("variant", "cell")
+            self.st._staged_commit(_saving(run, "codes_delta"))
         else:
-            def w(path):
-                self.st._cell_writer(df).save(f"{path}/codes")
-        self.st._staged_commit(w)
+            self.st._staged_commit(self.st._cell_write(df))
 
     @staticmethod
     def is_delta(rel: str) -> bool:

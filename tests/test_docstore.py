@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from binance_data_framework_spark.docstore import BandIndexStore, DocumentStore
 from binance_data_framework_spark.operators.curation import shard_assign
+from conftest import jobs_of
 
 
 def _docs(spark, rows):
@@ -392,8 +393,9 @@ class _DocTier:
 def test_hash_layout_lifecycle(spark, tmp_path, tier):
     """The auto-sized hash layout both tiers share: the sidecar written at
     creation, the pinned/auto provenance rules (a pinned remap leaves the
-    row counter alone), growth seen by a stale auto handle, and an
-    equal-count remap that only refreshes n_rows."""
+    row counter alone), growth seen by a stale auto handle and by a
+    reopened one after read(), and an equal-count remap that only
+    refreshes n_rows."""
     t = tier(spark)
     n_of = lambda st: getattr(st, t.count)  # noqa: E731
 
@@ -442,9 +444,11 @@ def test_hash_layout_lifecycle(spark, tmp_path, tier):
     # the stale handle routes its next op with the grown count
     assert t.lookup(stale, [1, 2, 999]) == {1, 2}
     assert n_of(stale) == grown
+    # a reopened auto handle reports the grown count once it has read
+    # (planning the read runs no Spark job)
     fresh = t.open(aroot, None)
-    fresh._check_layout()
-    assert n_of(fresh) == grown
+    n_jobs, _ = jobs_of(spark, f"reopened-read-{t.count}", fresh.read)
+    assert n_jobs == 0 and n_of(fresh) == grown
     with pytest.raises(ValueError, match=t.auto_word):
         t.open(aroot, t.floor)._check_layout()
 
@@ -459,17 +463,64 @@ def test_hash_layout_lifecycle(spark, tmp_path, tier):
         assert auto._snapshot()["version"] == version
 
 
-def _jobs_of(spark, group: str, fn):
-    """(Spark jobs ``fn()`` launched, its result), counted through a job
-    group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+def test_reads_plan_from_recorded_schema_after_each_commit(
+    spark, tmp_path, monkeypatch
+):
+    """Every commit records the table schema in the manifest, so building
+    DocumentStore.read() runs no Spark job and read_keys the same jobs
+    after each of 8 commits, whichever uuid-named file sorts first. The
+    commits add one pyarrow-written file each (no Spark job), and
+    read_keys takes its semi-join path (one planning agg; the pushdown
+    path adds a key collect and reads files the same way), so the loop
+    stays short."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    st = DocumentStore(spark, str(tmp_path / "ds"), n_shards=2)
+    first = _docs(spark, [(i, f"t{i}", 0.5) for i in range(4)])
+    st.save_docs(first)
+    keys = spark.createDataFrame([(0,), (3,)], "doc_id bigint")
+    monkeypatch.setattr(DocumentStore, "READ_KEYS_PUSHDOWN_MAX", 0)
+
+    def add_file(k):
+        def write(path):
+            os.makedirs(f"{path}/shard={k % 2}")
+            pq.write_table(
+                pa.table({"doc_id": [100 + k], "text": ["x"], "quality": [1.0]}),
+                f"{path}/shard={k % 2}/part-{uuid.uuid4().hex}.parquet",
+            )
+            return {"": first.schema}
+
+        return write
+
+    counts = set()
+    for k in range(8):
+        st._staged_commit(add_file(k))
+        n_read, _ = jobs_of(spark, f"read-{k}", st.read)
+        n_keys, found = jobs_of(spark, f"read-keys-{k}", lambda: st.read_keys(keys))
+        assert n_read == 0, k
+        counts.add(n_keys)
+    assert len(counts) == 1
+    assert {r["doc_id"] for r in found.collect()} == {0, 3}
+    assert st.read().count() == 12
+
+
+def test_drifted_schema_commit_raises_before_publish(spark, tmp_path):
+    """A staged file group whose (name, type) pairs differ from the files
+    of the group that stay live raises before the manifest publish and
+    leaves no staged file behind: here a band delta run whose id column
+    is int where the committed runs hold bigint."""
+    st = BandIndexStore(spark, str(tmp_path / "bands"), n_buckets=4)
+    schema = "doc_id {}, band_idx int, band_hash long"
+    st.append(spark.createDataFrame([(1, 0, 7)], schema.format("bigint")))
+    version = st._snapshot()["version"]
+    with pytest.raises(ValueError, match="schema drift in delta files"):
+        st.append(spark.createDataFrame([(2, 0, 9)], schema.format("int")))
+    man = st._snapshot()
+    assert man["version"] == version
+    assert sorted(st._list_data_files()) == man["files"]
 
 
 def test_auto_row_counter_runs_no_extra_job(spark, tmp_path):
@@ -487,10 +538,9 @@ def test_auto_row_counter_runs_no_extra_job(spark, tmp_path):
         ("delete", lambda st: st.delete_docs(keys)),
     ]
     for label, op in ops:
-        n_pinned, _ = _jobs_of(spark, f"pinned-{label}", lambda: op(pinned))
-        n_auto, _ = _jobs_of(spark, f"auto-{label}", lambda: op(auto))
+        n_pinned, _ = jobs_of(spark, f"pinned-{label}", lambda: op(pinned))
+        n_auto, _ = jobs_of(spark, f"auto-{label}", lambda: op(auto))
         assert n_auto == n_pinned, label
-        # both stores read, so both share the same warm schema memo
         n_rows = auto._read_layout()["n_rows"]
         assert n_rows == auto.read().count() == pinned.read().count(), label
     assert auto.n_shards == 4 and auto.read().count() == 250 - 84

@@ -15,6 +15,7 @@ from binance_data_framework_spark.ann_index import AnnIndexStore
 from binance_data_framework_spark.docstore import BandIndexStore, DocumentStore
 from binance_data_framework_spark.operators.curation import shard_assign
 from binance_data_framework_spark.store import OhlcvStore, SnapshotStore
+from conftest import jobs_of
 
 #: one manifest listing holding every tier's layout files plus the files
 #: each tier must leave out of its partitions
@@ -66,18 +67,6 @@ EXPECTED = {
 }
 
 
-def _jobs_of(spark, group: str, fn):
-    """(Spark jobs ``fn()`` launched, its result), counted through a job
-    group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
-
 
 def test_partition_key_table_across_tiers(spark, tmp_path):
     """Every tier groups the same listing into its own partitions, in
@@ -85,7 +74,7 @@ def test_partition_key_table_across_tiers(spark, tmp_path):
     legacy OHLCV files and stray root files; planning is driver-side."""
     for cls, expected in EXPECTED.items():
         st = cls(spark, str(tmp_path / cls.__name__))
-        jobs, groups = _jobs_of(
+        jobs, groups = jobs_of(
             spark, f"parts-{cls.__name__}", lambda: st._files_by_part(LISTING)
         )
         assert groups == expected, cls.__name__

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from binance_data_framework_spark.store import OhlcvStore
+from conftest import jobs_of
 
 
 def _bars(spark, start: datetime, n: int, base: float):
@@ -373,7 +374,7 @@ def test_commit_rebase_retries_on_lost_cas(store, spark, monkeypatch):
     real_commit = store._commit
     state = {"raced": False}
 
-    def racy_commit(added, removed, prev):
+    def racy_commit(*args):
         if not state["raced"]:
             state["raced"] = True
             # a concurrent PROCESS (separate instance = separate lock)
@@ -382,7 +383,7 @@ def test_commit_rebase_retries_on_lost_cas(store, spark, monkeypatch):
             other.save_data(_bars(spark, T0, 4, 5.0), "ETHUSDT", "1h")
             # ...and this writer's own v2 publish loses the rename CAS
             raise store_mod.ConcurrentCommit("simulated lost rename race")
-        return real_commit(added, removed, prev)
+        return real_commit(*args)
 
     monkeypatch.setattr(store, "_commit", racy_commit)
     store.save_data(_bars(spark, T0, 6, 200.0), "BTCUSDT", "1h")
@@ -443,7 +444,7 @@ def test_optimize_aborts_on_concurrent_write_and_reclaims(store, spark, monkeypa
     real_commit = store._commit
     state = {"raced": False}
 
-    def racy_commit(added, removed, prev):
+    def racy_commit(*args):
         if not state["raced"]:
             state["raced"] = True
             # an upsert replaces the day being compacted...
@@ -451,7 +452,7 @@ def test_optimize_aborts_on_concurrent_write_and_reclaims(store, spark, monkeypa
                 _bars(spark, datetime(2024, 1, 1), 24, 900.0), "BTCUSDT", "1h"
             )
             raise store_mod.ConcurrentCommit("simulated lost race")
-        return real_commit(added, removed, prev)
+        return real_commit(*args)
 
     monkeypatch.setattr(store, "_commit", racy_commit)
     with pytest.raises(RuntimeError, match="optimize"):
@@ -672,7 +673,7 @@ def test_failed_same_series_commit_reclaims_staged_files(store, spark, monkeypat
     real_commit = store._commit
     state = {"raced": False}
 
-    def racy_commit(added, removed, prev):
+    def racy_commit(*args):
         if not state["raced"]:
             state["raced"] = True
             # a concurrent writer lands the SAME series first...
@@ -681,7 +682,7 @@ def test_failed_same_series_commit_reclaims_staged_files(store, spark, monkeypat
             )
             # ...and this writer's publish loses the CAS
             raise store_mod.ConcurrentCommit("simulated lost race")
-        return real_commit(added, removed, prev)
+        return real_commit(*args)
 
     monkeypatch.setattr(store, "_commit", racy_commit)
     files_after_race = set(store._list_data_files())
@@ -908,24 +909,122 @@ def test_save_rejects_null_timestamps_and_keys(store, spark):
     assert store._snapshot() is None  # nothing landed
 
 
-def test_schema_memo_evicts_oldest_entry_only(store, spark, monkeypatch):
-    """At its 512-entry cap the committed-parquet schema memo drops only
-    its OLDEST entry (ADVICE r14: a wholesale clear() made every hot store
-    re-pay schema inference at once)."""
-    from binance_data_framework_spark import store as store_mod
+_CODES = "vec_id bigint, variant string, cell int, norm double, code array<int>, chash long"
 
-    store.save_data(_bars(spark, T0, 5, 100.0), "BTCUSDT", "1h")
-    (rel,) = store._snapshot()["files"]
-    dummies = [("dummy", f"file-{i}") for i in range(512)]
-    monkeypatch.setattr(
-        store_mod, "_PARQUET_SCHEMA_CACHE", {k: None for k in dummies}
+
+def _tier_store(spark, root: str, tier: str):
+    """A small store of one tier with every schema group its writers make,
+    committed at least once: (store, group -> basePath of its read)."""
+    from binance_data_framework_spark.ann_index import AnnIndexStore
+    from binance_data_framework_spark.docstore import BandIndexStore, DocumentStore
+    from binance_data_framework_spark.store import _saving
+
+    if tier == "ohlcv":
+        st = OhlcvStore(spark, root)
+        st.save_data(_bars(spark, T0, 30, 100.0), "BTCUSDT", "1h")
+        return st, {"": root}
+    if tier == "doc":
+        st = DocumentStore(spark, root, n_shards=4)
+        st.save_docs(
+            spark.createDataFrame(
+                [(i, f"t{i}", [i, 2 * i]) for i in range(12)],
+                "doc_id bigint, text string, sig array<int>",
+            )
+        )
+        return st, {"": root}
+    if tier == "band":
+        st = BandIndexStore(spark, root, n_buckets=4, target_bucket_rows=20)
+        rows = [(i, b, i * 7919 + b) for i in range(8) for b in range(4)]
+        schema = "doc_id bigint, band_idx int, band_hash long"
+        st.append(spark.createDataFrame(rows, schema))  # bucketed
+        st.append(spark.createDataFrame(rows[:8], schema))  # a delta run
+        return st, {"": root, "delta": None}
+    st = AnnIndexStore(spark, root)
+    codes = spark.createDataFrame(
+        [(i, v, i % 3, 1.0, [i % 4] * 4, i) for i in range(9) for v in ("pq", "opq")],
+        _CODES,
     )
-    rows = store.get_data("BTCUSDT", "1h").collect()  # one real memoized read
-    memo = store_mod._PARQUET_SCHEMA_CACHE
-    assert len(memo) == 512
-    assert dummies[0] not in memo and dummies[1] in memo
-    assert (store.root, f"{store.root}/{rel}") in memo
-    assert [r["open"] for r in rows] == [100.0 + i for i in range(5)]
+    dead = codes.select("vec_id").where("vec_id = 4").distinct().coalesce(1)
+    st._staged_commit(
+        lambda path: {
+            **st._cell_write(codes)(path),
+            **_saving(codes.where("vec_id < 3").coalesce(1), "codes_delta")(path),
+            **_saving(dead, "tombstones")(path),
+        }
+    )
+    return st, {"codes": f"{root}/codes", "codes_delta": None, "tombstones": None}
+
+
+def _next_commit(st, spark, tier: str):
+    """One more commit on a store of _tier_store."""
+    if tier == "ohlcv":
+        st.save_data(_bars(spark, T0 + timedelta(days=3), 4, 300.0), "BTCUSDT", "1h")
+    elif tier == "doc":
+        st.append_docs(
+            spark.createDataFrame(
+                [(99, "new", [1, 1])], "doc_id bigint, text string, sig array<int>"
+            )
+        )
+    elif tier == "band":
+        st.append(
+            spark.createDataFrame([(99, 0, 5)], "doc_id bigint, band_idx int, band_hash long")
+        )
+    else:
+        run = spark.createDataFrame([(99, "pq", 0, 1.0, [0] * 4, 9)], _CODES)
+        from binance_data_framework_spark.store import _saving
+
+        st._staged_commit(_saving(run.coalesce(1), "codes_delta"))
+
+
+@pytest.mark.parametrize("tier", ["ohlcv", "doc", "band", "ann"])
+def test_store_reads_agree_with_inferred_schema(spark, tmp_path, tier):
+    """Each store tier reads every file group with the schema and rows
+    Spark infers from the files — names, types, order — also for a store
+    whose manifests predate recorded schemas and that then took one
+    commit: that commit records every group's schema, so no later read
+    infers. OHLCV reads from its declared schema and records none. Before
+    the commit such a store still reads, inferring a group once per
+    resolved snapshot."""
+    from binance_data_framework_spark.store import _DAY_SCHEMA
+    from conftest import drop_recorded_schemas
+
+    st, groups = _tier_store(spark, str(tmp_path / tier), tier)
+    drop_recorded_schemas(st.root)
+    man = st._snapshot()
+    assert man["schemas"] == {}
+    group, base = next(iter(groups.items()))
+    if tier != "ohlcv":
+        files = [f for f in man["files"] if st._group_of(f) == group]
+        n_jobs, _ = jobs_of(
+            spark,
+            f"legacy-{tier}",
+            lambda: [st._committed_parquet(files, man, base) for _ in range(2)],
+        )
+        assert n_jobs == 1
+    _next_commit(st, spark, tier)
+    man = st._snapshot()
+    assert set(man["schemas"]) == (set() if tier == "ohlcv" else set(groups))
+    for group, base in groups.items():
+        files = [f for f in man["files"] if st._group_of(f) == group]
+        n_jobs, ours = jobs_of(
+            spark,
+            f"planned-{tier}-{group}",
+            lambda: st._scan(files, _DAY_SCHEMA, base)
+            if tier == "ohlcv"
+            else st._committed_parquet(files, man, base),
+        )
+        assert n_jobs == 0, group
+        reader = spark.read if base is None else spark.read.option("basePath", base)
+        inferred = reader.parquet(*[f"{st.root}/{f}" for f in files])
+        assert [(f.name, f.dataType) for f in ours.schema] == [
+            (f.name, f.dataType) for f in inferred.schema
+        ], group
+        # one collect: the two reads side by side
+        both = ours.withColumn("_side", F.lit(0)).unionByName(
+            inferred.withColumn("_side", F.lit(1))
+        ).collect()
+        rows = [sorted(tuple(r)[:-1] for r in both if r["_side"] == k) for k in (0, 1)]
+        assert rows[0] == rows[1] and rows[0], group
 
 
 def _grid(spark, start: datetime, n: int, bar_s: int, holes=()):
@@ -1025,32 +1124,26 @@ def test_coverage_probe_agrees_with_full_series_scan(store, spark, tmp_path):
 
 
 def test_coverage_probe_runs_one_job(store, spark):
-    """A warm coverage probe is one Spark job over the series' two boundary
-    day files, however many series and days the store holds (no request
-    DataFrame, no broadcast join, no shuffle)."""
+    """A coverage probe is one Spark job over the series' two boundary day
+    files, however many series and days the store holds (no request
+    DataFrame, no broadcast join, no shuffle) — also right after each
+    commit, whose new day files a read must not infer a schema from."""
     t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
     _three_series_six_days(store, spark, t0)
     args = ("BBBUSDT", "1h", t0 + timedelta(days=2), t0 + timedelta(days=3))
     now = datetime(2030, 1, 1, tzinfo=timezone.utc)
-    first = store.check_data_exists(*args, now=now)  # warms the schema memo
-    n_jobs, again = _jobs_of(
+    n_jobs, first = jobs_of(
         spark, "coverage-probe", lambda: store.check_data_exists(*args, now=now)
     )
-    assert n_jobs == 1
-    assert again == first and first[0] is True
+    assert n_jobs == 1 and first[0] is True
+    # an upsert of the first and last days writes new boundary files
+    for day in (0, 5):
+        store.save_data(_grid(spark, t0 + timedelta(days=day), 24, 3600), "BBBUSDT", "1h")
+        n_jobs, again = jobs_of(
+            spark, f"coverage-probe-{day}", lambda: store.check_data_exists(*args, now=now)
+        )
+        assert n_jobs == 1 and again == first
 
-
-def _jobs_of(spark, group: str, fn):
-    """(Spark jobs ``fn()`` launched, its result), counted through a job
-    group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
 
 def _three_series_six_days(store, spark, t0):
@@ -1069,28 +1162,28 @@ def _shuffles(df) -> bool:
 
 
 def test_one_task_read_and_upsert_job_counts(store, spark):
-    """A one-day window is planned as one task: on a memo-warm store of 3
-    series x 6 days, collecting get_data is exactly 1 Spark job (no
-    range-sort sampling job, no shuffle stage), load_incremental's gap
-    planner over a stored day is 1 (no broadcast job either), and a
-    one-day save_data upsert is at most 3 (its bounds agg plus one
-    merge-and-write job)."""
+    """A one-day window is planned as one task: right after a commit of 3
+    series x 6 days, building get_data runs no Spark job and collecting it
+    is exactly 1 (no range-sort sampling job, no shuffle stage),
+    load_incremental's gap planner over a stored day is 1 (no broadcast
+    job either), and a one-day save_data upsert is at most 3 (its bounds
+    agg plus one merge-and-write job)."""
     from binance_data_framework_spark.api import CacheOrFetchLoader
 
     t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
     _three_series_six_days(store, spark, t0)
     args = ("BBBUSDT", "1h", t0 + timedelta(days=2), t0 + timedelta(days=3, milliseconds=-1))
-    want = store.get_data(*args).collect()  # warms the schema memo
-    n_read, rows = _jobs_of(spark, "one-day-read", lambda: store.get_data(*args).collect())
-    assert n_read == 1
-    assert rows == want and len(rows) == 24
+    n_plan, df = jobs_of(spark, "one-day-plan", lambda: store.get_data(*args))
+    assert n_plan == 0
+    n_read, rows = jobs_of(spark, "one-day-read", df.collect)
+    assert n_read == 1 and len(rows) == 24
     src = _RecordingSource(None)  # the day is stored: nothing to fetch
     loader = CacheOrFetchLoader(store, src)
     now = datetime(2030, 1, 1, tzinfo=timezone.utc)
-    n_plan, _ = _jobs_of(spark, "gap-planner", lambda: loader.load_incremental(*args, now=now))
+    n_plan, _ = jobs_of(spark, "gap-planner", lambda: loader.load_incremental(*args, now=now))
     assert n_plan == 1 and src.ranges == []
     upsert = _grid(spark, t0 + timedelta(days=2), 24, 3600).withColumn("close", -F.col("close"))
-    n_save, _ = _jobs_of(spark, "one-day-upsert", lambda: store.save_data(upsert, "BBBUSDT", "1h"))
+    n_save, _ = jobs_of(spark, "one-day-upsert", lambda: store.save_data(upsert, "BBBUSDT", "1h"))
     assert n_save <= 3
     rows = store.get_data(*args).collect()
     assert len(rows) == 24 and all(r["close"] < 0 for r in rows)

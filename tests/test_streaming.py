@@ -506,6 +506,55 @@ def test_neardup_gate_batch_stats_and_band_layout(spark, tmp_path):
         )
 
 
+def test_gate_stage_sec_times_each_stage_alone(spark, tmp_path, monkeypatch):
+    """stage_sec["ann_append"] times the ANN append alone: the doc and
+    band maintain calls and the ANN maintain call land in "maintenance",
+    which reports the sum of both pieces. The ANN leg is a stub whose
+    calls and the doc-store maintain step take known times."""
+    import time
+
+    from binance_data_framework_spark.docstore import BandIndexStore, DocumentStore
+    from binance_data_framework_spark.streaming.neardup_ingest import (
+        neardup_gate_batch,
+    )
+
+    class _Ann:
+        id_col, vec_col = "doc_id", "text"
+
+        def load(self):
+            return object()  # an index exists: the append branch
+
+        def append(self, vecs, skip_existing):
+            time.sleep(0.05)
+
+        def maintain(self, grow_factor, compact_min_files, corpus):
+            time.sleep(0.3)
+
+    store = DocumentStore(spark, str(tmp_path / "store"), n_shards=2)
+    bands = BandIndexStore(spark, str(tmp_path / "bands"), n_buckets=4)
+    real = DocumentStore.maintain
+    monkeypatch.setattr(
+        DocumentStore,
+        "maintain",
+        lambda self, *a, **kw: (time.sleep(0.6), real(self, *a, **kw))[1],
+    )
+    batch = spark.createDataFrame(
+        [(1, "a short document about one subject"), (2, "another text")],
+        "doc_id bigint, text string",
+    )
+    stages = neardup_gate_batch(batch, store, bands, ann_store=_Ann())["stage_sec"]
+    assert set(stages) == {
+        "sig_selfdedup",
+        "corpus_check",
+        "save_docs",
+        "band_append",
+        "ann_append",
+        "maintenance",
+    }
+    assert 0.05 <= stages["ann_append"] < 0.3
+    assert stages["maintenance"] >= 0.9
+
+
 def test_gate_batch_reads_docstore_once(spark, tmp_path, monkeypatch):
     """Per-batch read budget: against a non-empty store the corpus check's
     signature verification and the append-new save split share ONE
