@@ -141,6 +141,15 @@ class AnnIndexStore(SnapshotStore):
         without touching the corpus."""
         return F.pmod(F.xxhash64(self.vec_col), F.lit(2147483648))
 
+    def _delta_projection(self, df: DataFrame) -> DataFrame:
+        """The driver encode's input columns of a delta frame: id, the
+        vector as doubles (_v), its norm and its content hash (_chash) —
+        Spark expressions, so every append path normalizes and hashes a
+        vector identically."""
+        return S.with_norm(df, self.vec_col).select(
+            self.id_col, "_v", "_norm", self._content_hash().alias("_chash")
+        )
+
     # -- filtered-search decision cache -------------------------------------
     # VERDICT r9 #7: the selectivity-gated filtered search re-measures
     # predicate selectivity and re-collects per-probe completeness on every
@@ -233,8 +242,12 @@ class AnnIndexStore(SnapshotStore):
             "lsh": json.dumps(lsh),
         }
 
-        model = self.spark.createDataFrame(list(payload.items()), self._MODEL_SCHEMA)
-        save_model = _saving(model.coalesce(1), "model")
+        import pyarrow as pa
+
+        save_model = self._arrow_saving(
+            pa.table({"component": list(payload), "payload": list(payload.values())}),
+            "model",
+        )
 
         def write(path: str) -> dict:
             return {**write_data(path), **save_model(path)}
@@ -514,15 +527,18 @@ class AnnIndexStore(SnapshotStore):
     def _committed_ids_among(self, ids: list, masked: bool) -> set:
         """The ids among ``ids`` (a collected, micro-batch-sized delta id
         list) already present in the committed code layout. Point probe
-        (the DocumentStore.read_keys rule one tier over): prune the
-        committed file list DRIVER-SIDE against cached footer id-ranges
-        (code files are id-sorted within each (variant, cell), so the
-        bounds are tight — a batch of genuinely new ids intersects zero
-        files and the probe runs no job), then push the id list into a
-        scan of only the hit files and collect the hits. A delta run holds
-        an id's pq and opq rows, so a hit may come back twice; the set
-        folds it. The full column-pruned id scan paid ~7 s of per-file
-        open overhead across 1024 files per 2000-vector append."""
+        (the DocumentStore.read_keys rule one tier over): on a local root
+        the cached footer id-ranges plan the row groups that can hold an
+        id (code files are id-sorted within each (variant, cell), so the
+        bounds are tight — a batch of genuinely new ids hits nothing) and
+        pyarrow reads just their id column on the driver, no Spark job.
+        Elsewhere, or on an unreadable footer, the id list is pushed into
+        a Spark scan of the candidate files. A delta run holds an id's pq
+        and opq rows, so a hit may come back twice; the set folds it. The
+        full column-pruned id scan paid ~7 s of per-file open overhead
+        across 1024 files per 2000-vector append."""
+        import pyarrow.parquet as pq
+
         ids = sorted(set(ids))
         man = self._snapshot()
         files = [
@@ -530,25 +546,22 @@ class AnnIndexStore(SnapshotStore):
             for f in (man["files"] if man else [])
             if self._is_code_delta(f) or ((vc := self._part_of(f)) and vc[0] == "pq")
         ]
-        local_root = self._local_root()
-        if files and local_root is not None:
-            import bisect
-
-            stats = self._footer_stats(files, self.id_col, local_root, man["files"])
-
-            def may_hold(groups) -> bool:
-                # an unreadable footer (None) or a row group without stats
-                # is scanned; otherwise the row groups fold into the
-                # file's id bounds
-                if groups is None or any(g[1] is None for g in groups):
-                    return True
-                return bool(groups) and bisect.bisect_left(
-                    ids, min(g[1] for g in groups)
-                ) < bisect.bisect_right(ids, max(g[2] for g in groups))
-
-            files = [f for f in files if may_hold(stats[f])]
         if not files or not ids:
             return set()
+        local_root = self._local_root()
+        stats = local_root and self._footer_stats(
+            files, self.id_col, local_root, man["files"]
+        )
+        if stats is not None and None not in stats.values():
+            found = set()
+            for path, rgs in self._row_group_hits(stats, lambda rel: ids, local_root):
+                got = pq.ParquetFile(path).read_row_groups(rgs, columns=[self.id_col])
+                found.update(got.column(0).to_pylist())
+            found.intersection_update(ids)
+            tomb = self._tombstones_from(man) if masked and found else None
+            if tomb is not None:
+                found -= {r[0] for r in tomb.collect()}
+            return found
         out = (
             self._read_code_rows(
                 [f for f in files if not self._is_code_delta(f)],
@@ -603,7 +616,7 @@ class AnnIndexStore(SnapshotStore):
     # -- incremental append ------------------------------------------------
     def append(
         self,
-        delta: DataFrame,
+        delta,
         check_duplicates: bool = True,
         skip_existing: bool = False,
         purge: str = "auto",
@@ -664,9 +677,23 @@ class AnnIndexStore(SnapshotStore):
           (call purge_tombstones() first). The explicit-maintenance mode.
 
         Deferred tombstones are a correctness no-op either way: every
-        search path reads codes() masked."""
+        search path reads codes() masked.
+
+        ``delta`` may also be a driver-side pyarrow Table of (id, vector)
+        rows: it takes the driver encode whatever its size, its encode
+        inputs come from _eval_local and its fingerprint is summed from
+        them — no checkpoint or fingerprint job."""
         if purge not in ("auto", "always", "never"):
             raise ValueError(f"append: unknown purge mode {purge!r}")
+        table = None
+        if not isinstance(delta, DataFrame):
+            table = self._eval_local(
+                delta.select([self.id_col, self.vec_col]), self._delta_projection
+            )
+            n_ids = table.num_rows - table[self.id_col].null_count
+            dfp = [table.num_rows]
+            # the tombstone re-add check below joins the delta's ids
+            delta = self.spark.createDataFrame(table.select([self.id_col]))
         # The delta plan feeds up to five separate ACTIONS below (re-add
         # check, fingerprint, in-delta dup agg, membership probe, encode +
         # write) — materialize it ONCE. Without this every action re-runs
@@ -678,7 +705,8 @@ class AnnIndexStore(SnapshotStore):
         # spill to disk via the default MEMORY_AND_DISK blocks. The
         # fingerprint rides this job as observe() metrics; both encode
         # paths recompute it for the frame they actually index.
-        delta, dfp, n_ids = self._ckpt_fingerprint(delta)
+        else:
+            delta, dfp, n_ids = self._ckpt_fingerprint(delta)
         if n_ids != dfp[0]:
             # a null id cannot be probed, deduplicated or summed into the
             # fingerprint; the observed counts already tell
@@ -733,9 +761,13 @@ class AnnIndexStore(SnapshotStore):
         ) or "chash" in self._group_schema(orig_man, "codes").fieldNames()
         # a delta that the membership probe may collect and that lands as
         # one delta run is encoded on the driver; bulk loads stay in Spark
-        if dfp[0] <= min(self.APPEND_PROBE_MAX, self.CODES_DELTA_MAX_VECTORS):
+        if table is not None or dfp[0] <= min(
+            self.APPEND_PROBE_MAX, self.CODES_DELTA_MAX_VECTORS
+        ):
+            if table is None:
+                table = self._delta_projection(delta).toArrow()
             staged = self._encode_on_driver(
-                delta, idx, check_duplicates, skip_existing, with_chash
+                table, idx, check_duplicates, skip_existing, with_chash
             )
         else:
             staged = self._encode_distributed(
@@ -787,29 +819,23 @@ class AnnIndexStore(SnapshotStore):
 
     def _encode_on_driver(
         self,
-        delta: DataFrame,
+        t,
         idx: AnnIndex,
         check_duplicates: bool,
         skip_existing: bool,
         with_chash: bool,
     ):
-        """append()'s micro-batch path: (write_codes, delta fingerprint),
-        or None when skip_existing leaves nothing. The
-        checkpointed delta is collected ONCE through Arrow — id, vector,
-        norm and chash, the last two still Spark expressions, so they are
-        bit-identical to the distributed path — then the membership checks
-        are set operations, the fingerprint is summed as Python ints and
-        the codes come from the same numpy kernels the encode UDFs wrap.
-        The delta run is written in one job, with no JVM->Python UDF
-        crossing."""
+        """append()'s micro-batch path over ``t``, the delta's
+        _delta_projection collected through Arrow (norm and chash are
+        Spark expressions, so they are bit-identical to the distributed
+        path): (write_codes, delta fingerprint), or None when
+        skip_existing leaves nothing. The membership checks are set
+        operations, the fingerprint is summed as Python ints, the codes
+        come from the same numpy kernels the encode UDFs wrap, and
+        pyarrow writes the delta run — no JVM->Python UDF crossing."""
         import numpy as np
         import pyarrow as pa
 
-        t = (
-            S.with_norm(delta, self.vec_col)
-            .select(self.id_col, "_v", "_norm", self._content_hash().alias("_chash"))
-            .toArrow()
-        )
         ids = t.column(self.id_col).to_pylist()
         if skip_existing:
             existing = self._committed_ids_among(ids, masked=False)
@@ -868,8 +894,7 @@ class AnnIndexStore(SnapshotStore):
             cols["chash"] = pa.array(np.tile(chash.to_numpy()[order], 2))
         cols["code"] = pa.array(list(np.concatenate([opq[order], pq[order]])))
         cols["variant"] = pa.array(["opq"] * len(ids) + ["pq"] * len(ids))
-        run = self.spark.createDataFrame(pa.table(cols))
-        return _saving(run.coalesce(1), "codes_delta"), dfp
+        return self._arrow_saving(pa.table(cols), "codes_delta"), dfp
 
     def _encode_distributed(
         self,

@@ -429,22 +429,17 @@ def _validate_banding(num_bands: int, num_hashes: int) -> None:
         )
 
 
-def _band_explode(
-    sigs: DataFrame,
-    id_col: str,
-    num_bands: int,
-    band_on_slice: bool,
-    num_hashes: int,
-) -> DataFrame:
-    """One (_i, _s, band_idx, band_hash) row per (doc, band) — the shared
-    band-key arithmetic (slot slice or its xxhash64) plus the unprunable
-    runtime signature-width assert (a sigs frame generated with a
-    different num_hashes would either drop trailing slots — recall loss —
-    or band on empty slices: one constant key => the O(n²) join banding
+def _band_keys(num_bands: int, band_on_slice: bool, num_hashes: int) -> Column:
+    """The num_bands band keys of the ``sig`` column as one array — the
+    shared band-key arithmetic (slot slice or its xxhash64) plus the
+    unprunable runtime signature-width assert (a sigs frame generated with
+    a different num_hashes would either drop trailing slots — recall loss
+    — or band on empty slices: one constant key => the O(n²) join banding
     exists to avoid; assert_true lives inside the band-key expression so
-    Catalyst cannot prune it). Factored out so the self-join bucket plan
-    and the cross-corpus join key bands IDENTICALLY (a drifted copy would
-    silently miss every cross match)."""
+    Catalyst cannot prune it). Every band key of the engine comes from
+    here: the self-join bucket plan, the cross-corpus join, the persisted
+    band index and the near-dup gate's driver-side batch collect band
+    IDENTICALLY (a drifted copy would silently miss every cross match)."""
     rows_per_band = num_hashes // num_bands
     slice_of = lambda b: F.slice("sig", b * rows_per_band + 1, rows_per_band)  # noqa: E731
     band_key = (
@@ -457,16 +452,55 @@ def _band_explode(
             F.size("sig").cast("string"),
         ),
     )
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(num_bands - 1)),
+        lambda b: F.when(sig_len_ok.isNull(), band_key(b)),
+    )
+
+
+def _band_explode(
+    sigs: DataFrame,
+    id_col: str,
+    num_bands: int,
+    band_on_slice: bool,
+    num_hashes: int,
+) -> DataFrame:
+    """One (_i, _s, band_idx, band_hash) row per (doc, band) of _band_keys."""
     return sigs.select(
         F.col(id_col).alias("_i"),
         F.col("sig").alias("_s"),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(num_bands - 1)),
-                lambda b: F.when(sig_len_ok.isNull(), band_key(b)),
-            )
-        ).alias("band_idx", "band_hash"),
+        F.posexplode(_band_keys(num_bands, band_on_slice, num_hashes)).alias(
+            "band_idx", "band_hash"
+        ),
     )
+
+
+def _bucket_pairs(
+    ids: np.ndarray,
+    sig: np.ndarray,
+    threshold: float,
+    num_hashes: int,
+    chunk: int = 512,
+):
+    """The pair kernel of one band bucket: yields ``(id_a, id_b, est)``
+    arrays of every member pair with id_a < id_b (by value) and est =
+    equal slots / num_hashes >= threshold — the SQL oracle's arithmetic.
+    ``sig`` holds one signature per row of ``ids`` (a NaN slot equals
+    nothing). Chunked over rows so peak memory is O(chunk x bucket) int32
+    and only threshold-passing pairs materialize. Shared by
+    minhash_candidates' large-bucket UDF and the near-dup gate's
+    driver-side self-dedup."""
+    n = len(ids)
+    for lo in range(0, n, chunk):
+        hi = min(lo + chunk, n)
+        eq = np.zeros((hi - lo, n), dtype=np.int32)
+        for s in range(sig.shape[1]):  # slot loop keeps temps 2-D
+            eq += sig[lo:hi, s, None] == sig[None, :, s]
+        est = eq / float(num_hashes)
+        keep = (est >= threshold) & (ids[None, :] > ids[lo:hi, None])
+        ai, bi = np.nonzero(keep)
+        if len(ai):
+            yield ids[lo:hi][ai], ids[bi], est[ai, bi]
 
 
 def minhash_candidates(
@@ -533,7 +567,6 @@ def minhash_candidates(
     # via _minhash_bucket_plan).
     buckets = lazy_buckets.localCheckpoint(eager=True)
     id_type = sigs.schema[id_col].dataType.simpleString()
-    nh = float(num_hashes)
     out_schema = f"id_a {id_type}, id_b {id_type}, est_jaccard double"
 
     arr = F.col("_arr")
@@ -570,31 +603,12 @@ def minhash_candidates(
     )
 
     def _big_bucket_pairs(batches):
-        import numpy as np
-        import pandas as pd
-
         for pdf in batches:
             for arr_rows in pdf["_arr"]:
                 ids = np.array([r["_i"] for r in arr_rows])
-                S = np.array([list(r["_s"]) for r in arr_rows])
-                n = len(ids)
-                chunk = 512
-                for lo in range(0, n, chunk):
-                    hi = min(lo + chunk, n)
-                    eq = np.zeros((hi - lo, n), dtype=np.int32)
-                    for s in range(S.shape[1]):  # slot loop keeps temps 2-D
-                        eq += S[lo:hi, s, None] == S[None, :, s]
-                    est = eq / nh  # same arithmetic as the SQL oracle
-                    keep = (est >= threshold) & (ids[None, :] > ids[lo:hi, None])
-                    ai, bi = np.nonzero(keep)
-                    if len(ai):
-                        yield pd.DataFrame(
-                            {
-                                "id_a": ids[lo:hi][ai],
-                                "id_b": ids[bi],
-                                "est_jaccard": est[ai, bi],
-                            }
-                        )
+                sig = np.array([list(r["_s"]) for r in arr_rows])
+                for a, b, est in _bucket_pairs(ids, sig, threshold, num_hashes):
+                    yield pd.DataFrame({"id_a": a, "id_b": b, "est_jaccard": est})
 
     large_pairs = buckets.where(F.size(arr) > _BUCKET_HOF_CAP).mapInPandas(
         _big_bucket_pairs, out_schema
@@ -672,37 +686,16 @@ def minhash_bands(
     num_bands: int = 4,
     num_hashes: int = 16,
 ) -> DataFrame:
-    """(id, band_idx, band_hash) — one row per (doc, band), with the SAME
-    banding arithmetic as ``minhash_candidates``'s production path
-    (xxhash64 over the band's slot slice), exposed standalone so an
-    INCREMENTAL consumer (the streaming near-dup gate's persisted band
-    index) keys new documents identically across batches and sessions.
-    Validation mirrors minhash_candidates: divisibility at plan time plus
-    the unprunable runtime signature-width assert."""
-    if num_bands <= 0 or num_hashes % num_bands != 0:
-        raise ValueError(
-            f"num_bands={num_bands} must be a positive divisor of "
-            f"num_hashes={num_hashes} (equal bands, no empty slices)"
-        )
-    rows_per_band = num_hashes // num_bands
-    sig_len_ok = F.assert_true(
-        F.size("sig") == num_hashes,
-        F.concat(
-            F.lit(f"minhash_bands: signature width != num_hashes={num_hashes}: "),
-            F.size("sig").cast("string"),
-        ),
-    )
-    return sigs.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(num_bands - 1)),
-                lambda b: F.when(
-                    sig_len_ok.isNull(),
-                    F.xxhash64(F.slice("sig", b * rows_per_band + 1, rows_per_band)),
-                ),
-            )
-        ).alias("band_idx", "band_hash"),
+    """(id, band_idx, band_hash) — one row per (doc, band): the projection
+    of ``minhash_candidates``'s production banding (_band_explode, xxhash64
+    over the band's slot slice), exposed standalone so an INCREMENTAL
+    consumer (the streaming near-dup gate's persisted band index) keys new
+    documents identically across batches and sessions. Validation mirrors
+    minhash_candidates: divisibility at plan time plus the unprunable
+    runtime signature-width assert."""
+    _validate_banding(num_bands, num_hashes)
+    return _band_explode(sigs, id_col, num_bands, False, num_hashes).select(
+        F.col("_i").alias(id_col), "band_idx", "band_hash"
     )
 
 

@@ -265,6 +265,115 @@ class SnapshotStore:
             self._local_root_cache = None
         return self._local_root_cache
 
+    # -- driver-side tables -------------------------------------------------
+    # A micro-batch small enough to live on the driver (the near-dup gate's
+    # bounded batches) skips the engine: its layout columns come from Spark
+    # expressions evaluated without a job (_eval_local), its lookups read
+    # planned row groups with pyarrow (_row_group_hits) and its commits
+    # write parquet with pyarrow (_arrow_saving). Each needs a local root.
+
+    def _eval_local(self, table, fn):
+        """pyarrow ``table`` through ``fn``, a DataFrame -> DataFrame
+        projection of Spark column expressions. Spark's optimizer
+        evaluates a projection of a local relation in place, so this runs
+        no job, and a shard, bucket or content hash computed here is the
+        one Spark implementation a frame's rows get."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        df = fn(self.spark.createDataFrame(table))
+        return pa.Table.from_pylist(
+            [r.asDict() for r in df.collect()], schema=to_arrow_schema(df.schema)
+        )
+
+    @staticmethod
+    def _row_group_hits(stats: dict, keys_of, local_root: str) -> list:
+        """(OS path, row groups) of each file of footer ``stats``
+        (_footer_stats) with a row group whose [min, max] can hold a key
+        of ``keys_of(rel)``, a sorted list; a row group without stats is
+        always read."""
+        import bisect
+
+        hits = []
+        for rel, groups in stats.items():
+            keys = keys_of(rel)
+            rgs = [
+                g
+                for g, mn, mx, _n in groups
+                if mn is None
+                or bisect.bisect_left(keys, mn) < bisect.bisect_right(keys, mx)
+            ]
+            if rgs:
+                hits.append((os.path.join(local_root, rel), rgs))
+        return hits
+
+    def _arrow_saving(
+        self,
+        table,
+        group: str = "",
+        partition_by: str | None = None,
+        sort_by: tuple[str, ...] = (),
+        row_group_bytes: int | None = None,
+    ):
+        """The pyarrow counterpart of _saving, for a local root: a
+        _staged_commit ``write`` of ``table`` as zstd
+        ``part-<uuid>.parquet`` files in ``group``'s staging directory —
+        one per ``<partition_by>=<v>`` directory, the partition column
+        moved into the path as Spark's partitionBy does — rows sorted by
+        ``sort_by``, row groups of about ``row_group_bytes``. It reports
+        the table's Spark schema, so the manifest records the types a
+        Spark write of the same rows records. Min/max statistics cover the
+        fixed-width columns only: lookups plan on keys, and string or list
+        bounds would outweigh a batch-sized file's data (as would
+        dictionary pages of unique values, and an Arrow schema blob the
+        manifest already holds). On another root an unpartitioned table is
+        written through _saving."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        if self._local_root() is None and partition_by is None:
+            return _saving(self.spark.createDataFrame(table).coalesce(1), group)
+
+        def write(path: str) -> dict:
+            from urllib.parse import urlparse
+
+            import pyarrow.compute as pc
+            import pyarrow.parquet as pq
+
+            base = urlparse(f"{path}/{group}" if group else path).path
+            t = table.sort_by([(c, "ascending") for c in sort_by]) if sort_by else table
+            stats = [
+                f.name
+                for f in t.schema
+                if pa.types.is_integer(f.type) or pa.types.is_floating(f.type)
+            ]
+            rows = None
+            if row_group_bytes and t.num_rows:
+                rows = max(1, row_group_bytes * t.num_rows // max(1, t.nbytes))
+            parts = [("", t)]
+            if partition_by is not None:
+                col, rest = t[partition_by], t.drop_columns([partition_by])
+                parts = [
+                    (f"{partition_by}={v}", rest.filter(pc.equal(col, v)))
+                    for v in pc.unique(col).to_pylist()
+                ]
+            for sub, part in parts:
+                if part.num_rows:
+                    out = os.path.join(base, sub)
+                    os.makedirs(out, exist_ok=True)
+                    pq.write_table(
+                        part,
+                        os.path.join(out, f"part-{uuid.uuid4().hex}.parquet"),
+                        compression="zstd",
+                        row_group_size=rows,
+                        use_dictionary=False,
+                        store_schema=False,
+                        write_statistics=stats,
+                    )
+            return {group: from_arrow_schema(table.schema)}
+
+        return write
+
     # -- schema groups (module docstring, SCHEMAS) --------------------------
 
     @staticmethod

@@ -15,6 +15,17 @@ from binance_data_framework_spark.streaming.incremental import (
 )
 
 
+@pytest.fixture(params=["spark", "driver"])
+def gate_path(request, monkeypatch):
+    """Forces the near-dup gate's path through its row bound: the Spark
+    plans, or the driver-side batch."""
+    from binance_data_framework_spark.streaming import neardup_ingest
+
+    bound = 0 if request.param == "spark" else 1 << 20
+    monkeypatch.setattr(neardup_ingest, "GATE_DRIVER_MAX_ROWS", bound)
+    return request.param
+
+
 def _write_ticks(path, rows):
     pdf = pd.DataFrame(rows, columns=["symbol", "ts", "price"])
     # write micro-second timestamps: the engine session reads TIMESTAMP(NANOS)
@@ -506,11 +517,12 @@ def test_neardup_gate_batch_stats_and_band_layout(spark, tmp_path):
         )
 
 
-def test_gate_stage_sec_times_each_stage_alone(spark, tmp_path, monkeypatch):
+def test_gate_stage_sec_times_each_stage_alone(spark, tmp_path, monkeypatch, gate_path):
     """stage_sec["ann_append"] times the ANN append alone: the doc and
     band maintain calls and the ANN maintain call land in "maintenance",
-    which reports the sum of both pieces. The ANN leg is a stub whose
-    calls and the doc-store maintain step take known times."""
+    which reports the sum of both pieces — on both gate paths. The ANN
+    leg is a stub whose calls and the doc-store maintain step take known
+    times."""
     import time
 
     from binance_data_framework_spark.docstore import BandIndexStore, DocumentStore
@@ -519,7 +531,7 @@ def test_gate_stage_sec_times_each_stage_alone(spark, tmp_path, monkeypatch):
     )
 
     class _Ann:
-        id_col, vec_col = "doc_id", "text"
+        id_col, vec_col = "doc_id", "embedding"
 
         def load(self):
             return object()  # an index exists: the append branch
@@ -539,8 +551,8 @@ def test_gate_stage_sec_times_each_stage_alone(spark, tmp_path, monkeypatch):
         lambda self, *a, **kw: (time.sleep(0.6), real(self, *a, **kw))[1],
     )
     batch = spark.createDataFrame(
-        [(1, "a short document about one subject"), (2, "another text")],
-        "doc_id bigint, text string",
+        [(1, "a short document about one subject", [1.0]), (2, "another text", [2.0])],
+        "doc_id bigint, text string, embedding array<float>",
     )
     stages = neardup_gate_batch(batch, store, bands, ann_store=_Ann())["stage_sec"]
     assert set(stages) == {
@@ -555,11 +567,12 @@ def test_gate_stage_sec_times_each_stage_alone(spark, tmp_path, monkeypatch):
     assert stages["maintenance"] >= 0.9
 
 
-def test_gate_batch_reads_docstore_once(spark, tmp_path, monkeypatch):
+def test_gate_batch_reads_docstore_once(spark, tmp_path, monkeypatch, gate_path):
     """Per-batch read budget: against a non-empty store the corpus check's
     signature verification and the append-new save split share ONE
     DocumentStore.read_keys point read (batch ids plus candidate ids), and
-    the split still classifies copy / redelivery / fresh correctly."""
+    the split still classifies copy / redelivery / fresh correctly — on
+    both gate paths."""
     from binance_data_framework_spark.docstore import BandIndexStore, DocumentStore
     from binance_data_framework_spark.streaming.neardup_ingest import (
         neardup_gate_batch,
@@ -599,6 +612,181 @@ def test_gate_batch_reads_docstore_once(spark, tmp_path, monkeypatch):
         "drift": None,
     }
     assert {r["doc_id"] for r in store.read().collect()} == {0, 1, 3}
+
+
+def test_minhash_band_hashes_are_pinned(spark):
+    """Band keys are persisted: minhash_bands (a projection of the shared
+    band-key expression) must keep producing these values for fixed
+    signatures, or stored band indexes stop matching new batches."""
+    from binance_data_framework_spark.operators.dedup import minhash_bands
+
+    sigs = spark.createDataFrame(
+        [
+            (1, list(range(16))),
+            (2, [7 * i + 3 for i in range(16)]),
+            (3, [2147483646 - i for i in range(16)]),
+        ],
+        "doc_id long, sig array<long>",
+    )
+    want = {
+        4: [
+            (1, 0, -8049335162788590053), (1, 1, 4653968472863061753),
+            (1, 2, 227239590039837853), (1, 3, -97467469479864981),
+            (2, 0, 5546073327761964618), (2, 1, 7403345278170476056),
+            (2, 2, 6747936872216583836), (2, 3, 5136904659632428210),
+            (3, 0, -8056491842077909971), (3, 1, -2875897941824350422),
+            (3, 2, 6768663902480765063), (3, 3, -8977258017994018759),
+        ],
+        2: [
+            (1, 0, -3250204697247249463), (1, 1, -855388994210037763),
+            (2, 0, 6469017287606272647), (2, 1, 4876291205440441415),
+            (3, 0, 5274398642338906819), (3, 1, 4265553472872526913),
+        ],
+    }
+    for num_bands, rows in want.items():
+        got = minhash_bands(sigs, "doc_id", num_bands, 16).collect()
+        assert sorted(tuple(r) for r in got) == rows
+
+
+def _gate_docs(seed: int, n: int, dim: int = 8):
+    """Seeded (id, text, embedding) documents of distinct random texts."""
+    import random
+
+    rnd = random.Random(seed)
+    vocab = [f"tok{i}" for i in range(400)]
+    return [
+        (
+            i,
+            " ".join(rnd.choice(vocab) for _ in range(24)),
+            [rnd.uniform(-1.0, 1.0) for _ in range(dim)],
+        )
+        for i in range(n)
+    ]
+
+
+def _hand_made_ann(spark, root: str):
+    """An AnnIndexStore at ``root`` holding an untrained but valid IVF-PQ
+    model (dim 8, 2 cells, 4 x 4-code sub-quantizers) and no codes,
+    committed with no Spark job: append paths can be compared without
+    paying for a build."""
+    import numpy as np
+
+    from binance_data_framework_spark.ann_index import AnnIndexStore
+
+    ann = AnnIndexStore(spark, root, id_col="doc_id", vec_col="embedding")
+    books = np.random.default_rng(0).normal(size=(4, 4, 2)).tolist()
+    ann._commit_model(
+        lambda path: {},
+        ann._live,
+        dict(dim=8, n_centroids=2, m_sub=4, ksub=4),
+        [0, 0, 0],
+        [[0.5] * 8, [-0.5] * 8],
+        books,
+        np.eye(8).tolist(),
+        books,
+        {"n_planes": 4, "n_tables": 6, "seed": 42},
+    )
+    return ann
+
+
+def _committed_rows(st, prefix: str) -> list:
+    """The rows of a store's committed files under ``prefix``, read with
+    pyarrow: a physical comparison of two stores with no Spark job."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    root = st._local_root()
+    return sorted(
+        tuple(sorted((k, tuple(v) if isinstance(v, list) else v) for k, v in r.items()))
+        for f in st._snapshot()["files"]
+        if f.startswith(prefix)
+        for r in pq.ParquetFile(os.path.join(root, f)).read().to_pylist()
+    )
+
+
+def test_gate_paths_agree(spark, tmp_path, monkeypatch):
+    """The driver-side gate batch and the Spark plans give identical stats
+    and commit identical rows to every tier — docs, band rows, ANN codes
+    and the fingerprint — over a seeded sequence: an in-batch copy,
+    planted copies, redeliveries, eval contamination, a drifted same-id
+    resend and a crash-replayed batch (its first attempt committed part
+    of its docs, then died before the band and ANN commits). Two stores
+    take the paths in opposite order, so each store also takes a batch
+    through the path that did not write it. The job budget: a driver-path
+    batch with the ANN leg runs 2 Spark jobs, the batch checkpoint and its
+    one Arrow collect; every probe and commit runs on the driver."""
+    from conftest import jobs_of
+
+    from binance_data_framework_spark.docstore import BandIndexStore, DocumentStore
+    from binance_data_framework_spark.operators.dedup import minhash_signature
+    from binance_data_framework_spark.streaming import neardup_ingest as gate
+
+    mk = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows, "doc_id bigint, text string, embedding array<float>"
+    )
+    docs = _gate_docs(11, 45)
+    ev_docs = DocumentStore(spark, str(tmp_path / "ev_docs"), n_shards=2)
+    ev_bands = BandIndexStore(spark, str(tmp_path / "ev_bands"), n_buckets=4)
+    gate.build_eval_index(
+        spark.createDataFrame([(900, docs[30][1])], "doc_id bigint, text string"),
+        ev_docs,
+        ev_bands,
+    )
+    _, drifted_text, drifted_vec = _gate_docs(12, 1)[0]
+    b1 = docs[:20] + [(20, docs[3][1], docs[3][2])]  # 20 copies 3
+    b2 = (
+        docs[21:31]  # 30 is eval-contaminated
+        + docs[40:45]
+        + [(100, docs[0][1], docs[0][2]), (101, docs[1][1], docs[1][2])]  # copies
+        + [docs[2], docs[5]]  # redeliveries
+        + [(4, drifted_text, drifted_vec)]  # drifted same-id resend
+    )
+    # the docs b2's crashed first attempt committed, with their signatures
+    crashed = mk(docs[21:24])
+    crashed = crashed.join(minhash_signature(crashed), "doc_id").select(
+        "doc_id", "sig", "text", "embedding"
+    ).toArrow()
+    tiers, jobs = {}, []
+    for name, order in (("a", ("spark", "driver")), ("b", ("driver", "spark"))):
+        store = DocumentStore(spark, str(tmp_path / name / "docs"), n_shards=2)
+        bands = BandIndexStore(spark, str(tmp_path / name / "bands"), n_buckets=4)
+        ann = _hand_made_ann(spark, str(tmp_path / name / "ann"))
+        stats = []
+        for path, batch in zip(order, (b1, b2)):
+            evals = {}
+            if batch is b2:
+                store.append_docs(crashed, on_existing="trust")
+                evals = dict(eval_docstore=ev_docs, eval_band_store=ev_bands)
+            monkeypatch.setattr(
+                gate, "GATE_DRIVER_MAX_ROWS", 0 if path == "spark" else 1 << 20
+            )
+            n_jobs, s = jobs_of(
+                spark,
+                f"gate-{name}-{path}",
+                lambda: gate.neardup_gate_batch(
+                    mk(batch), store, bands, ann_store=ann, **evals
+                ),
+            )
+            if path == "driver":
+                jobs.append(n_jobs)
+            s.pop("stage_sec")
+            stats.append(s)
+        tiers[name] = (
+            stats,
+            _committed_rows(store, "shard="),
+            _committed_rows(bands, ""),
+            _committed_rows(ann, "codes"),
+            ann.load().fingerprint,
+        )
+    stats = tiers["a"][0]
+    assert stats[0]["dropped_in_batch"] == 1
+    assert stats[1]["dropped_contaminated"] == 1 and stats[1]["dropped_vs_corpus"] == 2
+    assert stats[1]["saved"] == 11  # 21-23 landed on the crashed attempt
+    assert tiers["a"] == tiers["b"]
+    stored = {dict(r)["doc_id"] for r in tiers["a"][1]}
+    assert stored == set(range(30)) - {20} | set(range(40, 45))
+    assert jobs == [2, 2]
 
 
 def test_neardup_gate_band_param_drift_raises(spark, tmp_path):
@@ -1454,6 +1642,39 @@ def test_gate_drift_monitoring_detects_boilerplate_wave(spark, tmp_path):
     # baseline advanced: a dry-run probe on the unchanged corpus is flat
     probe = corpus_drift_report(store, k=1, update_baseline=False)
     assert abs(probe[0]["drift"]) < 0.05
+
+
+def test_drift_baseline_read_runs_no_job(spark, tmp_path, monkeypatch):
+    """A monitored batch reads its term-count baseline with the schema of
+    corpus_term_counts' rows: planning the read runs no schema-inference
+    job."""
+    from conftest import jobs_of
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from binance_data_framework_spark.docstore import BandIndexStore, DocumentStore
+    from binance_data_framework_spark.streaming.neardup_ingest import (
+        neardup_gate_batch,
+    )
+
+    store = DocumentStore(spark, str(tmp_path / "store"), n_shards=2)
+    bands = BandIndexStore(spark, str(tmp_path / "bands"), n_buckets=4)
+    mk = lambda rows: spark.createDataFrame(  # noqa: E731
+        [r[:2] for r in rows], "doc_id bigint, text string"
+    )
+    docs = _gate_docs(5, 8)
+    assert neardup_gate_batch(mk(docs[:4]), store, bands, drift_report=True)["drift"] is None
+    reads = []
+    orig = DataFrameReader.parquet
+
+    def counting(self, *paths, **kw):
+        n, df = jobs_of(spark, "parquet-read", lambda: orig(self, *paths, **kw))
+        reads.append((paths[0], n))
+        return df
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    stats = neardup_gate_batch(mk(docs[4:]), store, bands, drift_report=True)
+    assert stats["drift"]
+    assert [n for path, n in reads if "/_drift_baseline-" in path] == [0]
 
 
 def test_gate_append_new_save_path(spark, tmp_path):
