@@ -142,13 +142,10 @@ class AnnIndexStore(SnapshotStore):
         return F.pmod(F.xxhash64(self.vec_col), F.lit(2147483648))
 
     def _delta_projection(self, df: DataFrame) -> DataFrame:
-        """The driver encode's input columns of a delta frame: id, the
-        vector as doubles (_v), its norm and its content hash (_chash) —
-        Spark expressions, so every append path normalizes and hashes a
-        vector identically."""
-        return S.with_norm(df, self.vec_col).select(
-            self.id_col, "_v", "_norm", self._content_hash().alias("_chash")
-        )
+        """``df`` plus the driver encode's inputs: the vector as doubles
+        (_v), its norm and its content hash (_chash) — Spark expressions,
+        so every append path normalizes and hashes a vector identically."""
+        return S.with_norm(df, self.vec_col).withColumn("_chash", self._content_hash())
 
     # -- filtered-search decision cache -------------------------------------
     # VERDICT r9 #7: the selectivity-gated filtered search re-measures
@@ -532,11 +529,12 @@ class AnnIndexStore(SnapshotStore):
         id (code files are id-sorted within each (variant, cell), so the
         bounds are tight — a batch of genuinely new ids hits nothing) and
         pyarrow reads just their id column on the driver, no Spark job.
-        Elsewhere, or on an unreadable footer, the id list is pushed into
-        a Spark scan of the candidate files. A delta run holds an id's pq
-        and opq rows, so a hit may come back twice; the set folds it. The
-        full column-pruned id scan paid ~7 s of per-file open overhead
-        across 1024 files per 2000-vector append."""
+        The files whose footer cannot be read (a concurrent vacuum), or
+        every file on another root, take a Spark scan with the id list
+        pushed in. A delta run holds an id's pq and opq rows, so a hit may
+        come back twice; the set folds it. The full column-pruned id scan
+        paid ~7 s of per-file open overhead across 1024 files per
+        2000-vector append."""
         import pyarrow.parquet as pq
 
         ids = sorted(set(ids))
@@ -549,33 +547,33 @@ class AnnIndexStore(SnapshotStore):
         if not files or not ids:
             return set()
         local_root = self._local_root()
-        stats = local_root and self._footer_stats(
-            files, self.id_col, local_root, man["files"]
-        )
-        if stats is not None and None not in stats.values():
-            found = set()
-            for path, rgs in self._row_group_hits(stats, lambda rel: ids, local_root):
-                got = pq.ParquetFile(path).read_row_groups(rgs, columns=[self.id_col])
-                found.update(got.column(0).to_pylist())
-            found.intersection_update(ids)
-            tomb = self._tombstones_from(man) if masked and found else None
-            if tomb is not None:
-                found -= {r[0] for r in tomb.collect()}
-            return found
-        out = (
-            self._read_code_rows(
-                [f for f in files if not self._is_code_delta(f)],
-                [f for f in files if self._is_code_delta(f)],
+        stats = {}
+        if local_root is not None:
+            stats = self._footer_stats(files, self.id_col, local_root, man["files"])
+            stats = {f: g for f, g in stats.items() if g is not None}
+        found = set()
+        for path, rgs in self._row_group_hits(stats, lambda rel: ids, local_root):
+            got = pq.ParquetFile(path).read_row_groups(rgs, columns=[self.id_col])
+            found.update(got.column(0).to_pylist())
+        found.intersection_update(ids)
+        rest = [f for f in files if f not in stats]
+        if rest:
+            scan = self._read_code_rows(
+                [f for f in rest if not self._is_code_delta(f)],
+                [f for f in rest if self._is_code_delta(f)],
                 man,
             )
-            .select(self.id_col)
-            .where(F.col(self.id_col).isin(ids))
-        )
-        if masked:
-            tomb = self._tombstones_from(man)
-            if tomb is not None:
-                out = out.join(F.broadcast(tomb), self.id_col, "left_anti")
-        return {r[0] for r in out.collect()}
+            found.update(
+                r[0]
+                for r in scan.select(self.id_col)
+                .where(F.col(self.id_col).isin(ids))
+                .collect()
+            )
+        tomb = self._tombstones_from(man) if masked and found else None
+        if tomb is not None:
+            hit = tomb.where(F.col(self.id_col).isin(sorted(found)))
+            found -= {r[0] for r in hit.collect()}
+        return found
 
     def _read_code_rows(
         self, bucketed: list[str], deltas: list[str], man: dict
@@ -679,17 +677,15 @@ class AnnIndexStore(SnapshotStore):
         Deferred tombstones are a correctness no-op either way: every
         search path reads codes() masked.
 
-        ``delta`` may also be a driver-side pyarrow Table of (id, vector)
-        rows: it takes the driver encode whatever its size, its encode
-        inputs come from _eval_local and its fingerprint is summed from
-        them — no checkpoint or fingerprint job."""
+        ``delta`` may also be a driver-side pyarrow Table of id and
+        _delta_projection columns (a collect of the caller's batch): it
+        takes the driver encode whatever its size and its fingerprint is
+        summed from it — no checkpoint or fingerprint job."""
         if purge not in ("auto", "always", "never"):
             raise ValueError(f"append: unknown purge mode {purge!r}")
         table = None
         if not isinstance(delta, DataFrame):
-            table = self._eval_local(
-                delta.select([self.id_col, self.vec_col]), self._delta_projection
-            )
+            table = delta
             n_ids = table.num_rows - table[self.id_col].null_count
             dfp = [table.num_rows]
             # the tombstone re-add check below joins the delta's ids
@@ -765,7 +761,11 @@ class AnnIndexStore(SnapshotStore):
             self.APPEND_PROBE_MAX, self.CODES_DELTA_MAX_VECTORS
         ):
             if table is None:
-                table = self._delta_projection(delta).toArrow()
+                table = (
+                    self._delta_projection(delta)
+                    .select(self.id_col, "_v", "_norm", "_chash")
+                    .toArrow()
+                )
             staged = self._encode_on_driver(
                 table, idx, check_duplicates, skip_existing, with_chash
             )
@@ -881,20 +881,19 @@ class AnnIndexStore(SnapshotStore):
             )
         )
         # the distributed path's row layout: (variant, cell)-sorted, opq
-        # before pq, columns (id, cell, norm[, chash], code, variant)
-        order = np.argsort(cells, kind="stable")
+        # before pq, columns (id, cell, norm[, chash], code, variant); the
+        # id sort key keeps the id column's footer statistics
         cols = {
-            self.id_col: pa.concat_arrays(
-                [t.column(self.id_col).combine_chunks().take(order)] * 2
-            ),
-            "cell": pa.array(np.tile(cells[order], 2)),
-            "norm": pa.array(np.tile(t.column("_norm").to_numpy()[order], 2)),
+            self.id_col: pa.concat_arrays([t.column(self.id_col).combine_chunks()] * 2),
+            "cell": pa.array(np.tile(cells, 2)),
+            "norm": pa.array(np.tile(t.column("_norm").to_numpy(), 2)),
         }
         if with_chash:
-            cols["chash"] = pa.array(np.tile(chash.to_numpy()[order], 2))
-        cols["code"] = pa.array(list(np.concatenate([opq[order], pq[order]])))
+            cols["chash"] = pa.array(np.tile(chash.to_numpy(), 2))
+        cols["code"] = pa.array(list(np.concatenate([opq, pq])))
         cols["variant"] = pa.array(["opq"] * len(ids) + ["pq"] * len(ids))
-        return self._arrow_saving(pa.table(cols), "codes_delta"), dfp
+        sort_by = ("variant", "cell", self.id_col)
+        return self._arrow_saving(pa.table(cols), "codes_delta", sort_by=sort_by), dfp
 
     def _encode_distributed(
         self,

@@ -267,24 +267,9 @@ class SnapshotStore:
 
     # -- driver-side tables -------------------------------------------------
     # A micro-batch small enough to live on the driver (the near-dup gate's
-    # bounded batches) skips the engine: its layout columns come from Spark
-    # expressions evaluated without a job (_eval_local), its lookups read
-    # planned row groups with pyarrow (_row_group_hits) and its commits
-    # write parquet with pyarrow (_arrow_saving). Each needs a local root.
-
-    def _eval_local(self, table, fn):
-        """pyarrow ``table`` through ``fn``, a DataFrame -> DataFrame
-        projection of Spark column expressions. Spark's optimizer
-        evaluates a projection of a local relation in place, so this runs
-        no job, and a shard, bucket or content hash computed here is the
-        one Spark implementation a frame's rows get."""
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        df = fn(self.spark.createDataFrame(table))
-        return pa.Table.from_pylist(
-            [r.asDict() for r in df.collect()], schema=to_arrow_schema(df.schema)
-        )
+    # bounded batches) skips the engine: its lookups read planned row
+    # groups with pyarrow (_row_group_hits) and its commits write parquet
+    # with pyarrow (_arrow_saving). Each needs a local root.
 
     @staticmethod
     def _row_group_hits(stats: dict, keys_of, local_root: str) -> list:
@@ -323,16 +308,18 @@ class SnapshotStore:
         ``sort_by``, row groups of about ``row_group_bytes``. It reports
         the table's Spark schema, so the manifest records the types a
         Spark write of the same rows records. Min/max statistics cover the
-        fixed-width columns only: lookups plan on keys, and string or list
-        bounds would outweigh a batch-sized file's data (as would
-        dictionary pages of unique values, and an Arrow schema blob the
-        manifest already holds). On another root an unpartitioned table is
-        written through _saving."""
+        ``sort_by`` columns — the lookup keys, whatever their type — and
+        the other fixed-width columns: bounds of a text or list payload
+        would outweigh a batch-sized file's data (as would dictionary
+        pages of unique values, and an Arrow schema blob the manifest
+        already holds). On another root an unpartitioned table is written
+        through _saving."""
         import pyarrow as pa
         from pyspark.sql.pandas.types import from_arrow_schema
 
+        t = table.sort_by([(c, "ascending") for c in sort_by]) if sort_by else table
         if self._local_root() is None and partition_by is None:
-            return _saving(self.spark.createDataFrame(table).coalesce(1), group)
+            return _saving(self.spark.createDataFrame(t).coalesce(1), group)
 
         def write(path: str) -> dict:
             from urllib.parse import urlparse
@@ -341,11 +328,12 @@ class SnapshotStore:
             import pyarrow.parquet as pq
 
             base = urlparse(f"{path}/{group}" if group else path).path
-            t = table.sort_by([(c, "ascending") for c in sort_by]) if sort_by else table
             stats = [
                 f.name
                 for f in t.schema
-                if pa.types.is_integer(f.type) or pa.types.is_floating(f.type)
+                if f.name in sort_by
+                or pa.types.is_integer(f.type)
+                or pa.types.is_floating(f.type)
             ]
             rows = None
             if row_group_bytes and t.num_rows:

@@ -58,19 +58,21 @@ Two paths run those stages. The batch is checkpointed first (one Spark
 job), which also counts its rows and its text and vector bytes. A batch
 within GATE_DRIVER_MAX_ROWS and GATE_DRIVER_MAX_BYTES, with
 save_mode="append_new" and every doc and band store on a local root,
-runs on the DRIVER: one more Spark job computes each row's signature and
-band keys and collects the batch through Arrow; self-dedup runs the
-dedup tier's pair kernel per band bucket over numpy rows; the eval and
-corpus checks call the pyarrow-Table forms of BandIndexStore.candidates
-and DocumentStore.read_keys, which plan row groups from cached footers
-and read them with pyarrow; and the doc, band and ANN commits write
-parquet with pyarrow. Every hash and layout column (signature, band key,
-shard, bucket, vector norm and content hash) is still a Spark
-expression — evaluated in that collect, or over a local relation without
-a job — so both paths share one implementation of each and commit the
-same rows. A micro-batch thus costs two Spark jobs plus whatever a
-maintenance leg rewrites. Larger batches, other roots, save_mode="upsert"
-and batches with a null or repeated id run the Spark plans.
+runs on the DRIVER: one more Spark job computes each row's signature,
+band keys, doc shard, band buckets and ANN encode inputs and collects
+the batch through Arrow; self-dedup runs the dedup tier's pair kernel
+per band bucket over numpy rows; the eval and corpus checks call the
+pyarrow-Table forms of BandIndexStore.candidates and
+DocumentStore.read_keys, which plan row groups from cached footers and
+read them with pyarrow; and the doc, band and ANN commits write parquet
+with pyarrow. Every hash and layout column is still a Spark expression —
+evaluated in that collect, or (the shards of stored keys read_keys
+looks up) over a local relation without a job — so both paths share one
+implementation of each and commit the same rows. A micro-batch thus
+costs two Spark jobs plus whatever a maintenance leg rewrites. The
+bounds are the largest batch measured on the driver path; larger
+batches, other roots, save_mode="upsert" and batches with a null or
+repeated id run the Spark plans.
 """
 
 from __future__ import annotations
@@ -79,6 +81,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from binance_data_framework_spark.materialize import checkpoint_observed
+from binance_data_framework_spark.operators.curation import shard_assign
 from binance_data_framework_spark.operators.dedup import (
     _band_keys,
     _bucket_pairs,
@@ -88,13 +91,15 @@ from binance_data_framework_spark.operators.dedup import (
     minhash_signature,
 )
 
-#: the driver-path bound (module docstring, "Scale shape"): a batch of at
+#: the driver-path bound (module docstring, "Two paths"): a batch of at
 #: most this many documents, whose text and vector bytes total at most
 #: GATE_DRIVER_MAX_BYTES, runs on the driver; larger batches keep the Spark
-#: plans. Rows match AnnIndexStore.APPEND_PROBE_MAX, the driver encode's
-#: bound; the bytes bound keeps the collected batch a small driver buffer.
-GATE_DRIVER_MAX_ROWS = 16_384
-GATE_DRIVER_MAX_BYTES = 64 << 20
+#: plans. Both are the largest batch measured on the driver path:
+#: perfbench's ingest_gate seed batch, 150 documents of 122-131 KB over
+#: seeds 0-199. Where larger batches cross over to the Spark plans is not
+#: measured.
+GATE_DRIVER_MAX_ROWS = 150
+GATE_DRIVER_MAX_BYTES = 128 << 10
 
 
 def _banded_drops(
@@ -490,11 +495,14 @@ def _driver_checks(
 ):
     """Gate stages 1-3 on the driver, _spark_checks' result as pyarrow
     Tables, after ONE Spark job: a projection of the checkpointed batch
-    computes each row's signature and band keys (the Spark expressions
-    of the frame path) and is collected through Arrow. Self-dedup runs
-    the large-bucket UDF's pair kernel per band bucket; the eval and
-    corpus checks are _table_drops. None when an id is null or repeats:
-    such a batch takes _spark_checks, whose joins define what it keeps."""
+    computes each row's signature, band keys, doc shard, band buckets
+    (per band store) and, with an ANN leg, the encode inputs — the Spark
+    expressions of the frame paths, under each tier's current layout —
+    and is collected through Arrow; the Table forms of the tier methods
+    take those columns. Self-dedup runs the large-bucket UDF's pair
+    kernel per band bucket; the eval and corpus checks are _table_drops.
+    None when an id is null or repeats: such a batch takes _spark_checks,
+    whose joins define what it keeps."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -503,22 +511,31 @@ def _driver_checks(
     cols = batch_df.columns
     # the row rides through minhash_signature as its id column
     packed = batch_df.select(F.struct(*cols).alias("_row"), text_col)
-    t = (
+    frame = (
         minhash_signature(packed, text_col, "_row", num_hashes, shingle_n)
         .select("_row.*", "sig")
         .withColumn("_bands", _band_keys(num_bands, False, num_hashes))
-        .toArrow()
     )
+    docstore._check_layout()
+    frame = shard_assign(frame, docstore.n_shards, docstore.key_col)
+    for name, st in (("_bucket", band_store), ("_ev_bucket", eval_band_store)):
+        if st is not None:
+            st._check_layout()
+            frame = frame.withColumn(name, F.transform("_bands", st._bucket_of))
+    if ann_store is not None:
+        frame = ann_store._delta_projection(frame)
+    t = frame.toArrow()
     n = t.num_rows
     if t[id_col].null_count or len(pc.unique(t[id_col])) < n:
         return None
     ids = t[id_col].to_numpy()
-    # a null slot reads as NaN, which equals nothing (the frame path's
-    # null comparison never counts either)
-    sig = pc.list_flatten(t["sig"]).to_numpy().reshape(n, num_hashes)
-    keys = pc.list_flatten(t["_bands"]).to_numpy().reshape(n, num_bands)
+    # one row per document; a null signature slot reads as NaN, which
+    # equals nothing (the frame path's null comparison never counts either)
+    flat = lambda c: pc.list_flatten(t[c]).to_numpy().reshape(n, -1)  # noqa: E731
+    sig, keys = flat("sig"), flat("_bands")
 
-    def bands_of(rows):
+    def bands_of(rows, bucket: str):
+        """The band rows of ``rows`` with their buckets' column."""
         rows = np.flatnonzero(rows)
         return pa.table(
             {
@@ -527,16 +544,17 @@ def _driver_checks(
                     np.tile(np.arange(num_bands, dtype=np.int32), len(rows))
                 ),
                 "band_hash": pa.array(keys[rows].ravel()),
+                "bucket": pa.array(flat(bucket)[rows].ravel()),
             }
         )
 
     # 1. self-dedup: each band bucket's pairs through the shared kernel
-    buckets: dict[tuple[int, int], list[int]] = {}
+    groups: dict[tuple[int, int], list[int]] = {}
     for b in range(num_bands):
         for i, h in enumerate(keys[:, b].tolist()):
-            buckets.setdefault((b, h), []).append(i)
+            groups.setdefault((b, h), []).append(i)
     losers: set = set()
-    for rows in buckets.values():
+    for rows in groups.values():
         if len(rows) > 1:
             pairs = _bucket_pairs(ids[rows], sig[rows], threshold, num_hashes)
             losers.update(i for _, id_b, _ in pairs for i in id_b.tolist())
@@ -546,16 +564,16 @@ def _driver_checks(
     # 2. eval decontamination, 3. corpus check (_spark_checks' order)
     if eval_band_store is not None:
         drops, _, _ = _table_drops(
-            bands_of(alive), ids, sig, eval_docstore, eval_band_store,
-            num_hashes, eval_threshold, False,
+            bands_of(alive, "_ev_bucket"), ids, sig, eval_docstore,
+            eval_band_store, num_hashes, eval_threshold, False,
         )
         alive &= ~np.isin(ids, list(drops))
         n_eval = int(alive.sum())
         tick("eval_check")
     dman = docstore._snapshot()
     dropped, redelivered, stored = _table_drops(
-        bands_of(alive), ids, sig, docstore, band_store, num_hashes, threshold,
-        True, own=ids[alive] if dman and dman["files"] else None,
+        bands_of(alive, "_bucket"), ids, sig, docstore, band_store, num_hashes,
+        threshold, True, own=ids[alive] if dman and dman["files"] else None,
     )
     alive &= ~np.isin(ids, list(dropped))
     # the redelivery split of _spark_checks, over the same point read
@@ -565,16 +583,17 @@ def _driver_checks(
     same = [h is not None and h == s for h, s in zip(held, t["sig"].to_pylist())]
     to_band = to_store | (new & np.array(same, dtype=bool))
     tick("corpus_check")
-    docs = t.select([id_col, "sig", *(c for c in cols if c != id_col)])
+    docs = t.select([id_col, "sig", *(c for c in cols if c != id_col), "shard"])
     vecs = None
     if ann_store is not None:
-        vecs = t.select([ann_store.id_col, ann_store.vec_col]).filter(alive)
+        ann = [ann_store.id_col, ann_store.vec_col, "_v", "_norm", "_chash"]
+        vecs = t.select(ann).filter(alive)
     return (
         n_self,
         n_eval,
         int(alive.sum()),
         docs.filter(pa.array(to_store)),
-        bands_of(to_band),
+        bands_of(to_band, "_bucket"),
         vecs,
     )
 
@@ -828,7 +847,9 @@ def neardup_gate_batch(
             # makes the already-appended ids a no-op, so this converges.
             if ann_store.load() is None:
                 if not isinstance(vecs, DataFrame):
-                    vecs = batch_df.sparkSession.createDataFrame(vecs)
+                    vecs = batch_df.sparkSession.createDataFrame(
+                        vecs.select([ann_store.id_col, ann_store.vec_col])
+                    )
                 ann_store.build(vecs, **(ann_build_kwargs or {}))
             else:
                 ann_store.append(vecs, skip_existing=True)

@@ -1327,3 +1327,36 @@ def test_mixed_legacy_series_reads_and_upserts(spark, tmp_path):
     rows = st.get_data("BTCUSDT", "1h").collect()
     assert len(rows) == len({r["ts"] for r in rows}) == 24 + 36 + 24
     assert sum(r["close"] < 0 for r in rows) == 36  # new rows win
+
+
+def test_arrow_writer_keeps_sort_key_statistics_of_any_type(store, tmp_path):
+    """The pyarrow writer (_arrow_saving) records min/max statistics for
+    its sort key whatever the key's type, so a string- or timestamp-keyed
+    file written on the driver plans row groups from its footer like an
+    integer-keyed one; a text payload gets none."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = 40
+    t = pa.table(
+        {
+            "name": [f"k{i:03d}" for i in range(n, 0, -1)],
+            "ts": pa.array(
+                [T0 + timedelta(hours=i) for i in range(n)], pa.timestamp("us")
+            ),
+            "text": ["a payload of some words " * 8] * n,
+        }
+    )
+    out = str(tmp_path / "arrow")
+    for key, probe in (("name", "k007"), ("ts", T0 + timedelta(hours=30))):
+        store._arrow_saving(t, key, sort_by=(key,), row_group_bytes=t.nbytes // 4)(out)
+        rel = os.path.join(key, os.listdir(os.path.join(out, key))[0])
+        stats = store._footer_stats([rel], key, out, [rel])
+        assert len(stats[rel]) > 1
+        assert all(mn is not None for _, mn, _, _ in stats[rel])
+        hits = store._row_group_hits(stats, lambda rel: [probe], out)
+        assert [len(rgs) for _, rgs in hits] == [1]
+        text = pq.ParquetFile(os.path.join(out, rel)).metadata.row_group(0).column(2)
+        assert text.statistics is None or not text.statistics.has_min_max

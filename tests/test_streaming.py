@@ -525,6 +525,7 @@ def test_gate_stage_sec_times_each_stage_alone(spark, tmp_path, monkeypatch, gat
     times."""
     import time
 
+    from binance_data_framework_spark.ann_index import AnnIndexStore
     from binance_data_framework_spark.docstore import BandIndexStore, DocumentStore
     from binance_data_framework_spark.streaming.neardup_ingest import (
         neardup_gate_batch,
@@ -532,6 +533,9 @@ def test_gate_stage_sec_times_each_stage_alone(spark, tmp_path, monkeypatch, gat
 
     class _Ann:
         id_col, vec_col = "doc_id", "embedding"
+        # the driver path's batch collect computes the encode inputs
+        _delta_projection = AnnIndexStore._delta_projection
+        _content_hash = AnnIndexStore._content_hash
 
         def load(self):
             return object()  # an index exists: the append branch
