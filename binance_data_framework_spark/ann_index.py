@@ -43,6 +43,7 @@ identical model — build idempotence is testable equality, not luck.
 from __future__ import annotations
 
 import json
+import os
 from dataclasses import dataclass
 from functools import reduce
 
@@ -1033,7 +1034,8 @@ class AnnIndexStore(SnapshotStore):
 
         The model components are memoized per handle against the live
         model file list (see ``_model_memo``): only a commit that replaced
-        the model costs a read (one collect, no schema inference)."""
+        the model costs a read — pyarrow on a local root, else one collect
+        with no schema inference."""
         man = self._snapshot()
         if not man or not man["files"]:
             return None
@@ -1041,7 +1043,19 @@ class AnnIndexStore(SnapshotStore):
         if not model_files:
             return None
         if self._model_memo is None or self._model_memo[0] != model_files:
-            rows = self._scan(list(model_files), self._MODEL_SCHEMA).collect()
+            local_root = self._local_root()
+            if local_root is not None:  # a two-column sidecar: no Spark job
+                import pyarrow.parquet as pq
+
+                rows = [
+                    r
+                    for f in model_files
+                    for r in pq.ParquetFile(os.path.join(local_root, f))
+                    .read(["component", "payload"])
+                    .to_pylist()
+                ]
+            else:
+                rows = self._scan(list(model_files), self._MODEL_SCHEMA).collect()
             self._model_memo = (
                 model_files,
                 {r["component"]: r["payload"] for r in rows},

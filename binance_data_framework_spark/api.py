@@ -175,11 +175,11 @@ class CacheOrFetchLoader:
         # spark.range is partition-distributed by construction: a 10-year 1m
         # request is ~5M rows spread across tasks, never one exploded array.
         # A request within OhlcvStore.ONE_TASK_MAX_DAYS builds its grid as
-        # ONE partition instead (get_data reads the stored side as one task
-        # too): the anti join, the per-day windows, the group-bys and the
-        # global stitch window then need no exchange, and the planner is a
-        # single job. The merge hint keeps the join off the broadcast path,
-        # whose exchange would cost a job of its own.
+        # ONE partition instead, and the stored side is one partition too:
+        # the anti join, the per-day windows, the group-bys and the global
+        # stitch window then need no exchange, and the planner is a single
+        # job. The merge hint keeps the join off the broadcast path, whose
+        # exchange would cost a job of its own.
         one_task = self.store.fits_one_task(
             _as_utc(start).date(), _as_utc(end).date()
         )
@@ -187,7 +187,7 @@ class CacheOrFetchLoader:
             (hi - lo) // bar_ms + 1, numPartitions=1 if one_task else None
         ).select(F.timestamp_millis(F.lit(lo) + F.col("id") * bar_ms).alias("ts"))
         if one_task:
-            stored = stored.hint("merge")
+            stored = stored.coalesce(1).hint("merge")
         missing = expected.join(stored, on="ts", how="left_anti").withColumn(
             "_day", F.to_date("ts")
         )
@@ -322,13 +322,13 @@ class CacheOrFetchLoader:
         intersecting [start, end] is built from its full base range."""
         from pyspark.sql import functions as F
 
-        base = self.load(
-            symbol,
-            base_timeframe,
-            _bucket_floor(start, target_timeframe),
-            _bucket_end(end, target_timeframe),
-            now=now,
-        )
+        lo = _bucket_floor(start, target_timeframe)
+        hi = _bucket_end(end, target_timeframe)
+        base = self.load(symbol, base_timeframe, lo, hi, now=now)
+        if self.store.fits_one_task(lo.date(), hi.date()):
+            # one partition (a driver-path read is a local relation of
+            # several): the resample's aggregate then needs no exchange
+            base = base.coalesce(1)
         bars = base.select(
             "symbol",
             base["ts"].alias("bucket"),

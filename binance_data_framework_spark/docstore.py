@@ -507,7 +507,7 @@ class BandIndexStore(_HashLayoutStore):
             write = self._arrow_saving(
                 with_bucket,
                 "delta" if run else "",
-                partition_by=None if run else "bucket",
+                partition_by=() if run else ("bucket",),
                 sort_by=("band_hash",),
                 row_group_bytes=rg,
             )
@@ -1212,7 +1212,7 @@ class DocumentStore(_HashLayoutStore):
             "append_docs",
         )
         new_files = self._staged_commit(
-            self._arrow_saving(t, partition_by="shard", sort_by=(key,))
+            self._arrow_saving(t, partition_by=("shard",), sort_by=(key,))
         )
         if not new_files:
             return 0

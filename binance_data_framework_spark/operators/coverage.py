@@ -12,7 +12,8 @@ onto the coverage aggregate. The store's single-series probe
 (``OhlcvStore.check_data_exists``) applies it to a one-row aggregate over
 the series' first and last day files only: ``dt`` is ``to_date(ts)``, so
 those two files hold the series' min and max ts. That is one Spark job over
-at most two day files, whatever the store size.
+at most two day files, whatever the store size, and none on a local root,
+where pyarrow reads them and the rule runs over a one-row local relation.
 """
 
 from __future__ import annotations

@@ -160,14 +160,25 @@ class PagedKlineSource:
     ) -> DataFrame:
         """Fetched pages -> analysis-ready OHLCV DataFrame: string->double
         casts + ms->timestamp + 12->6 column projection (api_connector.py:
-        288-310), all as built-in column expressions."""
+        288-310), all as built-in column expressions. The raw frame is
+        built from an Arrow table, so it is a local relation the casts fold
+        into: the rows stay in driver memory and collecting them (e.g. in
+        OhlcvStore.save_data) runs no Spark job."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         from binance_data_framework_spark.functions.casts import (
             ms_to_ts,
             str_to_double,
         )
 
         rows = self.fetch_range(symbol, interval, start_ms, end_ms)
-        raw = spark.createDataFrame(rows, RAW_KLINES)
+        schema = to_arrow_schema(RAW_KLINES)
+        cols = list(zip(*rows)) or [()] * len(schema)
+        raw = spark.createDataFrame(
+            pa.table([pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema),
+            RAW_KLINES,
+        )
         return raw.select(
             ms_to_ts("timestamp").alias("ts"),
             *[str_to_double(c).alias(c) for c in ("open", "high", "low", "close", "volume")],

@@ -3,9 +3,11 @@ database_handler.py, re-expressed as a partitioned-Parquet lakehouse).
 
 Physical layout: ``root/symbol=<s>/timeframe=<tf>/dt=<date>/*.parquet`` with
 rows sorted by ts inside each file — partition pruning replaces the
-reference's idx_symbol/idx_timeframe, the ``dt`` date partition bounds every
-rewrite to the touched days, and row-group min/max stats replace
-idx_timestamp (database_handler.py:120-125). Upsert = union-with-overlapping-
+reference's idx_symbol/idx_timeframe, and the ``dt`` date partition replaces
+idx_timestamp (database_handler.py:120-125) and bounds every rewrite to the
+touched days. Row-group ``ts`` statistics do not: Spark writes ``ts`` as
+INT96, which carries none, so only the day files the driver path writes with
+pyarrow (OhlcvStore) hold ``ts`` min/max. Upsert = union-with-overlapping-
 days + precedence-aware dedup, replacing SQLite ``INSERT OR REPLACE``
 (database_handler.py:215-218) WITHOUT the whole-partition write
 amplification: appending one day to a multi-year series reads and rewrites
@@ -85,12 +87,13 @@ layouts a 100 TB deployment actually lives on.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import threading
 import time
 import uuid
-from datetime import datetime, timezone
+from datetime import date, datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -109,6 +112,10 @@ _SCHEMA = (
     "low double, close double, volume double"
 )
 _DAY_SCHEMA = _SCHEMA + ", dt date"
+#: (name, type) of each _DAY_SCHEMA column
+_DAY_FIELDS = [tuple(f.split()) for f in _DAY_SCHEMA.split(", ")]
+#: the columns a day file stores (symbol, timeframe and dt live in its path)
+_FILE_COLS = ["ts", "open", "high", "low", "close", "volume"]
 _MANIFEST_DIR = "_manifests"
 _CHECKPOINT_EVERY = 8  # every Nth manifest embeds the full file list
 _COMMIT_RETRIES = 5
@@ -147,6 +154,21 @@ def _utc(d: datetime) -> datetime:
     if d.tzinfo is None:
         return d.replace(tzinfo=timezone.utc)
     return d.astimezone(timezone.utc)
+
+
+def _arrow_schema(names: list[str]):
+    """The declared types of columns ``names`` as an Arrow schema. ``ts``
+    is UTC microseconds, which Spark reads back as its timestamp."""
+    import pyarrow as pa
+
+    types = {
+        "timestamp": pa.timestamp("us", tz="UTC"),
+        "string": pa.string(),
+        "double": pa.float64(),
+        "date": pa.date32(),
+    }
+    declared = dict(_DAY_FIELDS)
+    return pa.schema([(n, types[declared[n]]) for n in names])
 
 
 def _fields(schema) -> set[tuple[str, str]]:
@@ -232,6 +254,7 @@ class SnapshotStore:
         # still run in parallel outside the lock
         self._commit_lock = _root_commit_lock(self.root)
         self._local_root_cache = _UNSET_LOCAL_ROOT
+        self._fs = self._path_cls = None  # see _fs_path
         # (rel, column) -> row-group stats of an immutable committed file;
         # see _footer_stats. Rebuildable any time: losing it costs one sweep
         self._footer_cache: dict[tuple[str, str], list[tuple]] = {}
@@ -296,15 +319,15 @@ class SnapshotStore:
         self,
         table,
         group: str = "",
-        partition_by: str | None = None,
+        partition_by: tuple[str, ...] = (),
         sort_by: tuple[str, ...] = (),
         row_group_bytes: int | None = None,
     ):
         """The pyarrow counterpart of _saving, for a local root: a
         _staged_commit ``write`` of ``table`` as zstd
         ``part-<uuid>.parquet`` files in ``group``'s staging directory —
-        one per ``<partition_by>=<v>`` directory, the partition column
-        moved into the path as Spark's partitionBy does — rows sorted by
+        one per ``<c>=<v>/...`` directory of the ``partition_by`` columns,
+        which move into the path as Spark's partitionBy does — rows sorted by
         ``sort_by``, row groups of about ``row_group_bytes``. It reports
         the table's Spark schema, so the manifest records the types a
         Spark write of the same rows records. Min/max statistics cover the
@@ -318,7 +341,7 @@ class SnapshotStore:
         from pyspark.sql.pandas.types import from_arrow_schema
 
         t = table.sort_by([(c, "ascending") for c in sort_by]) if sort_by else table
-        if self._local_root() is None and partition_by is None:
+        if self._local_root() is None and not partition_by:
             return _saving(self.spark.createDataFrame(t).coalesce(1), group)
 
         def write(path: str) -> dict:
@@ -339,11 +362,19 @@ class SnapshotStore:
             if row_group_bytes and t.num_rows:
                 rows = max(1, row_group_bytes * t.num_rows // max(1, t.nbytes))
             parts = [("", t)]
-            if partition_by is not None:
-                col, rest = t[partition_by], t.drop_columns([partition_by])
+            if partition_by:
+                rest = t.drop_columns(list(partition_by))
+                keys = t.group_by(list(partition_by), use_threads=False).aggregate([])
                 parts = [
-                    (f"{partition_by}={v}", rest.filter(pc.equal(col, v)))
-                    for v in pc.unique(col).to_pylist()
+                    (
+                        "/".join(f"{c}={v}" for c, v in key.items()),
+                        rest.filter(
+                            functools.reduce(
+                                pc.and_, [pc.equal(t[c], v) for c, v in key.items()]
+                            )
+                        ),
+                    )
+                    for key in keys.to_pylist()
                 ]
             for sub, part in parts:
                 if part.num_rows:
@@ -548,12 +579,18 @@ class SnapshotStore:
 
     def _fs_path(self, *segments: str):
         """(FileSystem, Path) for root/segments via the Hadoop FS API —
-        works identically for file://, hdfs://, s3a:// roots."""
-        jvm = self.spark._jvm
-        uri = "/".join([self.root, *segments])
-        path = jvm.org.apache.hadoop.fs.Path(uri)
-        fs = path.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs, path
+        works identically for file://, hdfs://, s3a:// roots. Every path
+        lies under the root, so the Path class and the root's FileSystem
+        are resolved once per handle: each costs Py4J round trips, and a
+        commit makes hundreds of these calls. Threads racing the first call
+        resolve the same objects; ``_fs`` is set last, so a thread that
+        sees it also sees the class."""
+        if self._fs is None:
+            self._path_cls = self.spark._jvm.org.apache.hadoop.fs.Path
+            self._fs = self._path_cls(self.root).getFileSystem(
+                self.spark._jsc.hadoopConfiguration()
+            )
+        return self._fs, self._path_cls("/".join([self.root, *segments]))
 
     def _write_bytes(self, relpath: str, data: bytes) -> None:
         fs, path = self._fs_path(relpath)
@@ -1212,13 +1249,14 @@ class OhlcvStore(SnapshotStore):
         directly would spray up to shuffle.partitions small files into
         every dt dir. The within-partition sort leads with the partition
         columns, which is the ordering the partitioned writer requires, so
-        Spark adds no second sort; its ts tail keeps row-group ts skipping
-        tight. zstd: ~30-40% smaller than snappy at comparable scan cost,
-        the codec the manifest checkpoints use too. Columns are cast to
+        Spark adds no second sort; its ts tail keeps each file ts-sorted,
+        which the driver path's reads rely on. Spark stores ``ts`` as INT96
+        (``spark.sql.parquet.outputTimestampType``), which carries no
+        min/max statistics, so reads of these files prune by ``dt`` only.
+        zstd: ~30-40% smaller than snappy at comparable scan cost, the
+        codec the manifest checkpoints use too. Columns are cast to
         ``_DAY_SCHEMA``, the schema every read declares."""
-        df = df.select(
-            *[F.col(c).cast(t) for c, t in (f.split() for f in _DAY_SCHEMA.split(", "))]
-        )
+        df = df.select(*[F.col(c).cast(t) for c, t in _DAY_FIELDS])
         clustered = (
             df.coalesce(1) if one_task else df.repartition("symbol", "timeframe", "dt")
         )
@@ -1228,6 +1266,85 @@ class OhlcvStore(SnapshotStore):
             .option("compression", "zstd")
             .mode("overwrite")
         )
+
+    # -- driver path --------------------------------------------------------
+    # A cache request touches one series and a few day files, too little to
+    # pay for Spark jobs. On a local root with no undated file in the pruned
+    # listing, the coverage probe reads its boundary days' ts with pyarrow;
+    # get_data and save_data of a window within ONE_TASK_MAX_DAYS read and
+    # merge the day files with pyarrow too, and get_data returns a local
+    # relation, whose collect runs no job. save_data also needs an incoming
+    # frame whose rows are already in driver memory (a LocalRelation plan).
+    # Dates and coverage stay Spark expressions: incoming rows take dt from
+    # to_date(ts) in their one collect, stored rows from their day dir, and
+    # covered_expr runs over a one-row local relation.
+
+    def _driver_path(self, files: list[str], lo_d, hi_d) -> bool:
+        """True when a request over the series files ``files`` and the day
+        window lo_d..hi_d runs on the driver (see above)."""
+        return (
+            lo_d is not None
+            and hi_d is not None
+            and self.fits_one_task(lo_d, hi_d)
+            and all("/dt=" in f for f in files)
+            and self._local_root() is not None
+        )
+
+    def _arrow_days(self, rels: list[str], columns: list[str] = _FILE_COLS):
+        """``columns`` and ``dt`` of the committed day files ``rels``, read
+        with pyarrow in day order and cast to the declared types (Spark's
+        files store ts as INT96, read as UTC microseconds)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        schema = _arrow_schema([*columns, "dt"])
+        parts = []
+        for rel in sorted(rels):
+            path = os.path.join(self._local_root(), rel)
+            t = pq.ParquetFile(path, coerce_int96_timestamp_unit="us").read(columns)
+            day = date.fromisoformat(rel.split("/dt=")[1].split("/")[0])
+            parts.append(
+                pa.table(
+                    [t[c].cast(schema.field(c).type) for c in columns]
+                    + [pa.array([day] * t.num_rows, pa.date32())],
+                    schema=schema,
+                )
+            )
+        return pa.concat_tables(parts) if parts else schema.empty_table()
+
+    def _arrow_merge(self, rows: list, superseded: list[str], symbol: str, timeframe: str):
+        """The driver-path counterpart of _merge_writer: a _staged_commit
+        ``write`` of collected incoming ``rows`` (epoch-micros ts, the value
+        columns, dt) merged with the ``superseded`` day files' rows — one row
+        per ts, the incoming row where both hold one — as one ts-sorted file
+        per day dir. Like every OHLCV write it records no schema."""
+        import numpy as np
+        import pyarrow as pa
+
+        schema = _arrow_schema([*_FILE_COLS, "dt"])
+        cols = list(zip(*rows))
+        new = pa.table(
+            [pa.array(cols[0], pa.int64()).cast(schema.field("ts").type)]
+            + [pa.array(c, f.type) for c, f in zip(cols[1:], list(schema)[1:])],
+            schema=schema,
+        )
+        both = pa.concat_tables([new, self._arrow_days(superseded)])
+        # first occurrence of each ts, in ts order: incoming rows come first
+        _, first = np.unique(both["ts"].to_numpy(), return_index=True)
+        merged = both.take(first)
+        n = merged.num_rows
+        write = self._arrow_saving(
+            merged.append_column("symbol", pa.repeat(symbol, n)).append_column(
+                "timeframe", pa.repeat(timeframe, n)
+            ),
+            partition_by=("symbol", "timeframe", "dt"),
+            sort_by=("ts",),
+        )
+
+        def save(path: str) -> None:
+            write(path)
+
+        return save
 
     def read_version(self, version: int, with_dt: bool = False) -> DataFrame:
         """Time-travel read (Delta-style VERSION AS OF): the exact file set
@@ -1317,22 +1434,6 @@ class OhlcvStore(SnapshotStore):
             else:
                 yield datetime.strptime(day[3:], "%Y-%m-%d").date(), rel
 
-    def _read_series(
-        self, symbol: str, timeframe: str, lo_d=None, hi_d=None
-    ) -> tuple[DataFrame, bool]:
-        """Manifest-pruned scan of one series (see _series_window_files);
-        always carries the dt column for further filtering (derived from
-        ts for undated legacy files, see _read_day_files). Returns (scan,
-        undated): ``undated`` is True when the pruned listing holds an
-        undated legacy file, whose rows may span any days."""
-        man = self._snapshot()
-        files = self._series_window_files(
-            man["files"] if man else [], symbol, timeframe, lo_d, hi_d
-        )
-        if not files:
-            return self._empty(with_dt=True), False
-        return self._read_day_files(files), any("/dt=" not in f for f in files)
-
     def _exists(self) -> bool:
         man = self._snapshot()
         return bool(man and man["files"])
@@ -1371,6 +1472,13 @@ class OhlcvStore(SnapshotStore):
         snapshot manifest swap publishes them and retires the old files —
         concurrent readers see the old or the new day, never neither (see
         module docstring).
+
+        On the driver path (a local root and a ``df`` whose plan is a
+        LocalRelation, its rows already in driver memory) one collect
+        replaces the bounds agg, and a merge window within
+        ONE_TASK_MAX_DAYS with no undated file is merged and written with
+        pyarrow (_arrow_merge): no Spark job. Other batches keep the Spark
+        merge.
         """
         incoming = (
             df.withColumn("symbol", F.lit(symbol))
@@ -1383,40 +1491,56 @@ class OhlcvStore(SnapshotStore):
         # tz) while the dt partition column is to_date(ts) under the UTC
         # session tz — on a non-UTC driver a .date() on the collected
         # value can shift the merge window by a day and silently drop
-        # stored rows near midnight. DateType round-trips tz-free.
-        bounds = incoming.agg(
-            F.min(F.to_date("ts")).alias("lo_d"),
-            F.max(F.to_date("ts")).alias("hi_d"),
-            F.sum(F.col("ts").isNull().cast("long")).alias("n_null_ts"),
-        ).first()
-        if bounds["n_null_ts"]:
+        # stored rows near midnight. DateType round-trips tz-free; the
+        # driver path's collect carries ts as epoch micros for the same
+        # reason.
+        rows = None
+        if self._local_root() is not None and (
+            incoming._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+        ):
+            rows = incoming.select(  # cast as _day_file_writer casts
+                F.unix_micros(F.col("ts").cast("timestamp")),
+                *[F.col(c).cast("double") for c in _FILE_COLS[1:]],
+                F.to_date("ts"),
+            ).collect()
+            days = [r[-1] for r in rows if r[-1] is not None]
+            lo_d, hi_d = (min(days), max(days)) if days else (None, None)
+            n_null = len(rows) - len(days)
+        else:
+            lo_d, hi_d, n_null = incoming.agg(
+                F.min(F.to_date("ts")),
+                F.max(F.to_date("ts")),
+                F.sum(F.col("ts").isNull().cast("long")),
+            ).first()
+        if n_null:
             # a null ts would write dt=__HIVE_DEFAULT_PARTITION__, which the
             # manifest lists but the day-window parser cannot prune — poison
             # for every later scan. Data error: raise, don't silently drop.
             raise ValueError(
-                f"save_data({symbol}/{timeframe}): {bounds['n_null_ts']} "
+                f"save_data({symbol}/{timeframe}): {n_null} "
                 f"row(s) with null ts (unparseable timestamps?)"
             )
-        if bounds["lo_d"] is None:
+        if lo_d is None:
             return True  # empty batch: nothing to merge or rewrite
-        lo_d, hi_d = bounds["lo_d"], bounds["hi_d"]
         man = self._snapshot()
         superseded, legacy = self._upsert_files(
             man["files"] if man else [], symbol, timeframe, lo_d, hi_d
         )
         # a merge window within ONE_TASK_MAX_DAYS is merged and written as
-        # one task: one job, no shuffle (see _merge_writer); a legacy
-        # series' rewrite is unbounded
-        writer = self._merge_writer(
-            incoming, superseded, not legacy and self.fits_one_task(lo_d, hi_d)
-        )
+        # one task: one job, no shuffle (see _merge_writer), or on the
+        # driver; a legacy series' rewrite is unbounded
+        if rows is not None and self._driver_path(superseded, lo_d, hi_d):
+            save = self._arrow_merge(rows, superseded, symbol, timeframe)
+        else:
+            one_task = not legacy and self.fits_one_task(lo_d, hi_d)
+            save = self._merge_writer(incoming, superseded, one_task).save
         # the commit rebases onto the LATEST snapshot: a different series
         # committed since our merge snapshot composes (lock in-process,
         # CAS-retry cross-process); a same-series race is detected and
         # raised, since this merge was computed against files that are no
         # longer live
         self._staged_commit(
-            writer.save,
+            save,
             superseded,
             op=f"save_data({symbol}/{timeframe})",
             kind="same-series",
@@ -1512,15 +1636,35 @@ class OhlcvStore(SnapshotStore):
         legacy file (which may hold any day), the scan is coalesced to one
         task before the sort — a range sort over one partition needs no
         sampling job and no shuffle, so collecting it is one Spark job.
+        On a local root that window is read on the driver instead (the
+        driver-path comment above): pyarrow reads its day files, and the
+        result is a ts-sorted local relation, whose collect runs no job.
         Open or wider windows keep the distributed range sort."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
         s = _utc(start) if start is not None else None
         e = _utc(end) if end is not None else None
-        df, undated = self._read_series(
-            symbol,
-            timeframe,
-            s.date() if s is not None else None,
-            e.date() if e is not None else None,
+        lo_d = s.date() if s is not None else None
+        hi_d = e.date() if e is not None else None
+        man = self._snapshot()
+        files = self._series_window_files(
+            man["files"] if man else [], symbol, timeframe, lo_d, hi_d
         )
+        if self._driver_path(files, lo_d, hi_d):
+            t = self._arrow_days(files)
+            ts, typ = t["ts"], t.schema.field("ts").type
+            t = t.filter(
+                pc.and_(
+                    pc.greater_equal(ts, pa.scalar(s, typ)),
+                    pc.less_equal(ts, pa.scalar(e, typ)),
+                )
+            ).sort_by("ts")  # a day of several files is ts-sorted per file
+            t = t.append_column("symbol", pa.repeat(symbol, t.num_rows))
+            t = t.append_column("timeframe", pa.repeat(timeframe, t.num_rows))
+            return self.spark.createDataFrame(t.select(OHLCV_COLS), _SCHEMA)
+        undated = any("/dt=" not in f for f in files)
+        df = self._read_day_files(files) if files else self._empty(with_dt=True)
         df = df.where((F.col("symbol") == symbol) & (F.col("timeframe") == timeframe))
         if s is not None:
             df = df.where((F.col("ts") >= F.lit(s)) & (F.col("dt") >= F.lit(s.date())))
@@ -1528,7 +1672,7 @@ class OhlcvStore(SnapshotStore):
             df = df.where((F.col("ts") <= F.lit(e)) & (F.col("dt") <= F.lit(e.date())))
         df = df.select(*OHLCV_COLS)
         bounded = s is not None and e is not None
-        if bounded and not undated and self.fits_one_task(s.date(), e.date()):
+        if bounded and not undated and self.fits_one_task(lo_d, hi_d):
             df = df.coalesce(1)
         return df.orderBy("ts")
 
@@ -1552,7 +1696,15 @@ class OhlcvStore(SnapshotStore):
         Spark job computes min/max(ts) over them and applies
         ``covered_expr``. Cost: one job over at most two day files, whatever
         the store or series size; the only driver-side materialization is
-        the single result row. get_stored_info keeps the full scan."""
+        the single result row. get_stored_info keeps the full scan.
+
+        On a local root with no undated file among them (the driver-path
+        comment above), pyarrow reads the two days' ts instead and
+        ``covered_expr`` runs over a one-row local relation: no Spark job,
+        whatever the request window."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
         man = self._snapshot()
         days = list(self._series_days(man["files"] if man else [], symbol, timeframe))
         dated = [d for d, _ in days if d is not None]
@@ -1560,12 +1712,25 @@ class OhlcvStore(SnapshotStore):
         probe = [rel for d, rel in days if d is None or d in ends]
         if not probe:
             return False, None
+        if self._local_root() is not None and all("/dt=" in f for f in probe):
+            ts = self._arrow_days(probe, ["ts"])["ts"]
+            bounds = self.spark.createDataFrame(
+                pa.table(
+                    {
+                        "start_ts": pa.array([pc.min(ts).as_py()], ts.type),
+                        "end_ts": pa.array([pc.max(ts).as_py()], ts.type),
+                    }
+                )
+            )
+        else:
+            bounds = (
+                self._read_day_files(probe)
+                # two day files: one task, so the global agg needs no shuffle
+                .coalesce(1)
+                .agg(F.min("ts").alias("start_ts"), F.max("ts").alias("end_ts"))
+            )
         row = (
-            self._read_day_files(probe)
-            # two day files: one task, so the global agg needs no shuffle
-            .coalesce(1)
-            .agg(F.min("ts").alias("start_ts"), F.max("ts").alias("end_ts"))
-            .select(
+            bounds.select(
                 "start_ts",
                 "end_ts",
                 F.lit(timeframe).alias("timeframe"),

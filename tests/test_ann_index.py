@@ -111,13 +111,15 @@ def test_fingerprint_observed_equals_standalone(built):
 def test_load_memoizes_model_until_it_changes(spark, tmp_path, monkeypatch):
     """load() keeps the parsed model per handle, keyed by the live model
     files (immutable, uuid-named): an unchanged model costs no parquet read
-    and no Spark job. A commit primes the memo with the model it wrote, so
+    (neither a Spark read nor, on a local root, a pyarrow one) and no Spark
+    job. A commit primes the memo with the model it wrote, so
     load() after this handle's own append reads nothing either and carries
     the rolled-forward fingerprint; another handle's append changes the
     model files, and the next load() reads them once. A fresh handle
     parses the same index, field by field."""
     from dataclasses import asdict
 
+    import pyarrow.parquet as pq
     from pyspark.sql.readwriter import DataFrameReader
 
     root = str(tmp_path / "idx")
@@ -126,13 +128,18 @@ def test_load_memoizes_model_until_it_changes(spark, tmp_path, monkeypatch):
     first = st.load()
 
     reads = []
-    orig = DataFrameReader.parquet
+    orig, orig_file = DataFrameReader.parquet, pq.ParquetFile
 
     def counting(self, *paths, **kw):
         reads.append(paths)
         return orig(self, *paths, **kw)
 
+    def counting_file(source, *a, **kw):  # load()'s read on a local root
+        reads.append((source,))
+        return orig_file(source, *a, **kw)
+
     monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    monkeypatch.setattr(pq, "ParquetFile", counting_file)
 
     def traced_load(group):
         reads.clear()

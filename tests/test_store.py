@@ -525,13 +525,17 @@ def test_get_data_prunes_manifest_driver_side(store, spark):
 
     files = store.get_data("BTCUSDT", "1h").inputFiles()
     assert files and all("symbol=BTCUSDT/timeframe=1h/" in f for f in files)
-    # day-window bound: only the second day's file is even in the scan
-    bounded = store.get_data(
-        "BTCUSDT", "1h", start=start2, end=start2 + timedelta(hours=5)
-    )
+    # day-window bound: only the second day's file is even in the scan of
+    # the Spark plan, and in the read of the driver path
+    window = ("BTCUSDT", "1h", start2, start2 + timedelta(hours=5))
+    bounded = _spark_path(store).get_data(*window)
     bfiles = bounded.inputFiles()
     assert bfiles and all("dt=2024-01-02" in f for f in bfiles)
     assert bounded.count() == 6
+    read, arrow_days = [], store._arrow_days
+    store._arrow_days = lambda rels, *a: read.extend(rels) or arrow_days(rels, *a)
+    assert store.get_data(*window).count() == 6
+    assert read and all("dt=2024-01-02" in f for f in read)
     # correctness unchanged: full-series read still sees both days
     assert store.get_data("BTCUSDT", "1h").count() == 30
 
@@ -1124,26 +1128,46 @@ def test_coverage_probe_agrees_with_full_series_scan(store, spark, tmp_path):
 
 
 def test_coverage_probe_runs_one_job(store, spark):
-    """A coverage probe is one Spark job over the series' two boundary day
-    files, however many series and days the store holds (no request
-    DataFrame, no broadcast join, no shuffle) — also right after each
-    commit, whose new day files a read must not infer a schema from."""
+    """A coverage probe reads only the series' two boundary day files,
+    however many series and days the store holds (no request DataFrame, no
+    broadcast join, no shuffle). On a local root pyarrow reads them and the
+    probe runs no Spark job; elsewhere (a handle whose _local_root() is
+    None) it is one Spark job. Both hold right after each commit, whose new
+    day files a read must not infer a schema from."""
     t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
     _three_series_six_days(store, spark, t0)
     args = ("BBBUSDT", "1h", t0 + timedelta(days=2), t0 + timedelta(days=3))
     now = datetime(2030, 1, 1, tzinfo=timezone.utc)
-    n_jobs, first = jobs_of(
-        spark, "coverage-probe", lambda: store.check_data_exists(*args, now=now)
-    )
-    assert n_jobs == 1 and first[0] is True
+    paths = ((store, 0, "driver"), (_spark_path(store), 1, "spark"))
+    first = store.check_data_exists(*args, now=now)
+    assert first[0] is True
     # an upsert of the first and last days writes new boundary files
-    for day in (0, 5):
-        store.save_data(_grid(spark, t0 + timedelta(days=day), 24, 3600), "BBBUSDT", "1h")
-        n_jobs, again = jobs_of(
-            spark, f"coverage-probe-{day}", lambda: store.check_data_exists(*args, now=now)
-        )
-        assert n_jobs == 1 and again == first
+    for day in (None, 0, 5):
+        if day is not None:
+            new = _grid(spark, t0 + timedelta(days=day), 24, 3600)
+            store.save_data(new, "BBBUSDT", "1h")
+        for st, want, name in paths:
+            n_jobs, again = jobs_of(
+                spark,
+                f"coverage-probe-{name}-{day}",
+                lambda: st.check_data_exists(*args, now=now),
+            )
+            assert n_jobs == want and again == first, (name, day)
 
+
+
+def _spark_path(st):
+    """A second handle of ``st``'s root whose _local_root() is None: it
+    runs the Spark plans of a non-local root over the same files."""
+    other = type(st)(st.spark, st.root)
+    other._local_root_cache = None
+    return other
+
+
+def _local(spark, df):
+    """``df``'s rows as a local relation: a frame already in driver
+    memory, as PagedKlineSource.to_ohlcv builds them."""
+    return spark.createDataFrame(df.toArrow())
 
 
 def _three_series_six_days(store, spark, t0):
@@ -1162,31 +1186,44 @@ def _shuffles(df) -> bool:
 
 
 def test_one_task_read_and_upsert_job_counts(store, spark):
-    """A one-day window is planned as one task: right after a commit of 3
-    series x 6 days, building get_data runs no Spark job and collecting it
-    is exactly 1 (no range-sort sampling job, no shuffle stage),
-    load_incremental's gap planner over a stored day is 1 (no broadcast
-    job either), and a one-day save_data upsert is at most 3 (its bounds
-    agg plus one merge-and-write job)."""
+    """A one-day window is planned as one task. Right after a commit of 3
+    series x 6 days, building get_data runs no Spark job. Collecting it
+    runs none on a local root, whose driver path reads the day with
+    pyarrow, and exactly 1 elsewhere (a handle whose _local_root() is None:
+    no range-sort sampling job, no shuffle stage). load_incremental's gap
+    planner over a stored day is 1 on both (no broadcast job either). A
+    one-day save_data upsert runs none on a local root for a frame already
+    in driver memory, and at most 3 elsewhere (its bounds agg plus one
+    merge-and-write job)."""
     from binance_data_framework_spark.api import CacheOrFetchLoader
 
     t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
     _three_series_six_days(store, spark, t0)
     args = ("BBBUSDT", "1h", t0 + timedelta(days=2), t0 + timedelta(days=3, milliseconds=-1))
-    n_plan, df = jobs_of(spark, "one-day-plan", lambda: store.get_data(*args))
-    assert n_plan == 0
-    n_read, rows = jobs_of(spark, "one-day-read", df.collect)
-    assert n_read == 1 and len(rows) == 24
-    src = _RecordingSource(None)  # the day is stored: nothing to fetch
-    loader = CacheOrFetchLoader(store, src)
     now = datetime(2030, 1, 1, tzinfo=timezone.utc)
-    n_plan, _ = jobs_of(spark, "gap-planner", lambda: loader.load_incremental(*args, now=now))
-    assert n_plan == 1 and src.ranges == []
-    upsert = _grid(spark, t0 + timedelta(days=2), 24, 3600).withColumn("close", -F.col("close"))
-    n_save, _ = jobs_of(spark, "one-day-upsert", lambda: store.save_data(upsert, "BBBUSDT", "1h"))
-    assert n_save <= 3
-    rows = store.get_data(*args).collect()
-    assert len(rows) == 24 and all(r["close"] < 0 for r in rows)
+    upsert = _grid(spark, t0 + timedelta(days=2), 24, 3600)
+    paths = (
+        (store, 0, 0, _local(spark, upsert.withColumn("close", -F.col("close")))),
+        (_spark_path(store), 1, 3, upsert.withColumn("close", -2 * F.col("close"))),
+    )
+    for st, read_jobs, save_jobs, new in paths:
+        name = "spark" if read_jobs else "driver"
+        n_plan, df = jobs_of(spark, f"one-day-plan-{name}", lambda: st.get_data(*args))
+        assert n_plan == 0
+        n_read, rows = jobs_of(spark, f"one-day-read-{name}", df.collect)
+        assert n_read == read_jobs and len(rows) == 24
+        src = _RecordingSource(None)  # the day is stored: nothing to fetch
+        loader = CacheOrFetchLoader(st, src)
+        n_plan, _ = jobs_of(
+            spark, f"gap-planner-{name}", lambda: loader.load_incremental(*args, now=now)
+        )
+        assert n_plan == 1 and src.ranges == []
+        n_save, _ = jobs_of(
+            spark, f"one-day-upsert-{name}", lambda: st.save_data(new, "BBBUSDT", "1h")
+        )
+        assert n_save <= save_jobs
+        rows = st.get_data(*args).collect()
+        assert [r["close"] for r in rows] == [r["close"] for r in new.collect()]
 
 
 class _RecordingSource:
@@ -1287,6 +1324,142 @@ def test_one_task_and_distributed_paths_agree(spark, tmp_path, monkeypatch, tf, 
     assert len(one["dirs"]) == len(set(one["dirs"])) == 4  # one file per day
     assert sum(r["close"] < 0 for r in one["rows"]) == per_day  # new rows win
     assert len(one["rows"]) == 4 * per_day
+
+
+class _MinuteExchange:
+    """In-memory kline pages for PagedKlineSource: closed-form 1m bars
+    with open time in [start_ms, end_ms] and before ``last_ms``."""
+
+    def __init__(self, last_ms: int):
+        self.last_ms = last_ms
+
+    def __call__(self, symbol, interval, start_ms, end_ms, limit):
+        lo = -(-start_ms // 60_000)
+        hi = min(end_ms, self.last_ms - 1) // 60_000
+        return [
+            [m * 60_000, str(c - 0.5), str(c + 1), str(c - 1), str(c), str(m % 97 + 1)]
+            + [m * 60_000 + 59_999, "0", 1, "0", "0", "0"]
+            for m in range(lo, min(hi + 1, lo + limit))
+            for c in [100 + m % 997 / 10]
+        ]
+
+
+def _ms(d: datetime) -> int:
+    return int(d.timestamp() * 1000)
+
+
+def test_loader_ops_job_budget(spark, tmp_path):
+    """perfbench's ohlcv_cache op kinds through CacheOrFetchLoader and a
+    PagedKlineSource on a local root, each with its collect: a hit and a
+    miss (fetch, upsert, read) run no Spark job; a resample runs at most 1
+    (its aggregate) and a gap fill at most 1 (its gap planner)."""
+    from binance_data_framework_spark.api import CacheOrFetchLoader
+    from binance_data_framework_spark.sources.rest_klines import PagedKlineSource
+
+    day, hour, ms = timedelta(days=1), timedelta(hours=1), timedelta(milliseconds=1)
+    t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    now = t0 + 4 * day
+    st = OhlcvStore(spark, str(tmp_path / "ohlcv"))
+    src = PagedKlineSource(_MinuteExchange(_ms(now)), page_size=1000)
+    hole = (t0 + day + 5 * hour, t0 + day + 6 * hour)
+    seed = src.to_ohlcv(spark, "BTCUSDT", "1m", _ms(t0), _ms(t0 + 3 * day) - 1)
+    st.save_data(seed.where(~F.col("ts").between(*hole)), "BTCUSDT", "1m")
+    loader = CacheOrFetchLoader(st, src)
+    ops = [  # (kind, job budget, op, rows)
+        ("hit", 0, lambda: loader.load("BTCUSDT", "1m", t0 + 2 * day, now - day - ms, now=now), 1440),
+        ("miss", 0, lambda: loader.load("BTCUSDT", "1m", now - day - 6 * hour, now - day + 2 * hour - ms, now=now), 480),
+        ("resample", 1, lambda: loader.load_resampled("BTCUSDT", "1h", t0 + 2 * day, now - day - ms, now=now), 24),
+        ("incremental", 1, lambda: loader.load_incremental("BTCUSDT", "1m", t0 + day, t0 + 2 * day - ms, now=now), 1440),
+    ]
+    for kind, budget, op, n_rows in ops:
+        n_jobs, rows = jobs_of(spark, f"loader-{kind}", lambda: op().collect())
+        assert n_jobs <= budget and len(rows) == n_rows, kind
+
+
+def test_driver_and_spark_paths_agree(spark, tmp_path):
+    """The driver path (a local root) and the Spark plans (a handle whose
+    _local_root() is None) agree over one request sequence on two stores:
+    misses, a hit, a gap fill, a resample, an upsert over stored days, bars
+    around UTC midnight, aware non-UTC bounds, an empty fetch (commits
+    nothing) and a null-ts batch (raises). Every read gives identical rows
+    in identical order and identical schemas, every probe the same answer,
+    and the stores end with the same live day dirs, one ts-sorted file
+    each. The driver store's days then mix Arrow-written files with a
+    Spark-written one (an upsert of a frame not in driver memory), and
+    read the same through both paths. An in-batch duplicate ts keeps
+    exactly one row on either path."""
+    import pyarrow.parquet as pq
+
+    from binance_data_framework_spark.api import CacheOrFetchLoader
+    from binance_data_framework_spark.sources.rest_klines import PagedKlineSource
+
+    utc, plus5 = timezone.utc, timezone(timedelta(hours=5))
+    day, hour, ms = timedelta(days=1), timedelta(hours=1), timedelta(milliseconds=1)
+    t0 = datetime(2024, 1, 1, tzinfo=utc)
+    now = t0 + 5 * day
+    src = PagedKlineSource(_MinuteExchange(_ms(now)), page_size=1000)
+    hole = (t0 + 3 * day - 10 * timedelta(minutes=1), t0 + 3 * day + 20 * timedelta(minutes=1))
+    windows = [
+        (t0, now - ms),
+        (t0 + 3 * day - hour, t0 + 3 * day + hour),
+        (datetime(2024, 1, 2, 4, 30, tzinfo=plus5), datetime(2024, 1, 2, 5, 29, 59, tzinfo=plus5)),
+    ]
+
+    def reads(st, out):
+        for s, e in windows:
+            df = st.get_data("BTCUSDT", "1m", s, e)
+            out.append((df.schema, df.collect(), st.check_data_exists("BTCUSDT", "1m", s, e, now=now)))
+
+    def run(st) -> dict:
+        loader = CacheOrFetchLoader(st, src)
+        out = {"ops": []}
+        op = lambda df: out["ops"].append(df.collect())  # noqa: E731
+        op(loader.load("BTCUSDT", "1m", t0, t0 + 2 * day - ms, now=now))
+        holed = src.to_ohlcv(spark, "BTCUSDT", "1m", _ms(t0 + 2 * day), _ms(t0 + 4 * day) - 1)
+        st.save_data(holed.where(~F.col("ts").between(*hole)), "BTCUSDT", "1m")
+        op(loader.load("BTCUSDT", "1m", *windows[2], now=now))  # a hit
+        op(loader.load_incremental("BTCUSDT", "1m", t0 + 2 * day, t0 + 4 * day - ms, now=now))
+        rs = loader.load_resampled("BTCUSDT", "4h", t0 + day + 3 * hour, t0 + 2 * day, now=now)
+        out["resampled"] = sorted(rs.collect())
+        new = src.to_ohlcv(spark, "BTCUSDT", "1m", _ms(t0 + day + 12 * hour), _ms(t0 + 2 * day + 12 * hour))
+        st.save_data(new.withColumn("close", -F.col("close")), "BTCUSDT", "1m")
+        op(loader.load("BTCUSDT", "1m", t0 + 4 * day - hour, t0 + 4 * day + hour, now=now))  # a miss
+        version = st._manifest_versions()[-1]
+        op(loader.load("BTCUSDT", "1m", now + day, now + day + hour, now=now))  # nothing to fetch
+        with pytest.raises(ValueError, match="null ts"):
+            st.save_data(new.withColumn("ts", F.lit(None).cast("timestamp")), "BTCUSDT", "1m")
+        assert st._manifest_versions()[-1] == version
+        reads(st, out.setdefault("reads", []))
+        # a Spark-written day among the driver store's Arrow-written ones
+        st.save_data(_grid(spark, t0 + 4 * day + 2 * hour, 120, 60), "BTCUSDT", "1m")
+        reads(st, out.setdefault("mixed", []))
+        files = st._snapshot()["files"]
+        out["dirs"] = sorted(f.rsplit("/", 1)[0] for f in files)
+        for f in files:
+            ts = pq.ParquetFile(f"{st.root}/{f}").read(columns=["ts"]).column("ts").to_pylist()
+            assert ts == sorted(ts), f
+        dup = new.limit(5).unionByName(new.limit(5).withColumn("close", F.lit(0.0)))
+        st.save_data(_local(spark, dup), "DUPUSDT", "1m")
+        out["dup"] = [r["ts"] for r in st.get_data("DUPUSDT", "1m", t0, now).collect()]
+        return out
+
+    driver_store = OhlcvStore(spark, str(tmp_path / "driver"))
+    driver, dist = run(driver_store), run(_spark_path(OhlcvStore(spark, str(tmp_path / "spark"))))
+    for k in dist:
+        assert driver[k] == dist[k], k
+    mixed = []
+    reads(_spark_path(driver_store), mixed)
+    assert mixed == driver["mixed"]
+    tz = {  # Arrow files store UTC micros, Spark's INT96 reads as naive
+        pq.ParquetFile(f"{driver_store.root}/{f}").schema_arrow.field("ts").type.tz
+        for f in driver_store._snapshot()["files"]
+        if f.startswith("symbol=BTCUSDT/")
+    }
+    assert tz == {"UTC", None}
+    rows = driver["reads"][0][1]
+    assert len(rows) == 4 * 1440 + 61 and sum(r["close"] < 0 for r in rows) == 1441
+    assert driver["dirs"] == sorted(set(driver["dirs"])) and len(driver["dirs"]) == 5
+    assert len(driver["dup"]) == len(set(driver["dup"])) == 5
 
 
 def test_mixed_legacy_series_reads_and_upserts(spark, tmp_path):

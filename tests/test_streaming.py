@@ -793,6 +793,36 @@ def test_gate_paths_agree(spark, tmp_path, monkeypatch):
     assert jobs == [2, 2]
 
 
+def test_fresh_ann_handle_reads_model_without_a_job(spark, tmp_path):
+    """A freshly opened AnnIndexStore handle has no model memo; on a local
+    root load() reads the model sidecar with pyarrow, so the handle's first
+    driver-path gate batch runs the 2 Spark jobs of a warm handle's (the
+    batch checkpoint and its one Arrow collect), not a third for the
+    model."""
+    from conftest import jobs_of
+
+    from binance_data_framework_spark.ann_index import AnnIndexStore
+    from binance_data_framework_spark.docstore import BandIndexStore, DocumentStore
+    from binance_data_framework_spark.streaming import neardup_ingest as gate
+
+    root = str(tmp_path / "ann")
+    built = _hand_made_ann(spark, root).load()
+    fresh = AnnIndexStore(spark, root, id_col="doc_id", vec_col="embedding")
+    assert fresh._model_memo is None
+    batch = spark.createDataFrame(
+        _gate_docs(13, 20), "doc_id bigint, text string, embedding array<float>"
+    )
+    store = DocumentStore(spark, str(tmp_path / "docs"), n_shards=2)
+    bands = BandIndexStore(spark, str(tmp_path / "bands"), n_buckets=4)
+    n_jobs, stats = jobs_of(
+        spark,
+        "gate-fresh-ann",
+        lambda: gate.neardup_gate_batch(batch, store, bands, ann_store=fresh),
+    )
+    assert n_jobs == 2 and stats["saved"] == 20
+    assert fresh.load().centroids == built.centroids
+
+
 def test_neardup_gate_band_param_drift_raises(spark, tmp_path):
     """Band hashes are a pure function of the minhash params, so the gate
     pins them in the band store's layout sidecar (ADVICE r6): reopening
