@@ -40,11 +40,12 @@ def meta_coverage(
     )
 
 
-def covered_expr(now: datetime) -> Column:
+def covered_expr(now: datetime, bar_ms: Column) -> Column:
     """The containment + freshness rule (reference check_data_exists,
     database_handler.py:279-298 incl. the freshness escape at 291-295), over
-    the columns ``start_ts``/``end_ts`` (stored coverage), ``req_start``/
-    ``req_end`` (request) and ``timeframe``:
+    the columns ``start_ts``/``end_ts`` (stored coverage) and ``req_start``/
+    ``req_end`` (request), with ``bar_ms`` the bar duration in ms (null for
+    an unknown timeframe, which is never covered):
       covered :=  start_ts <= req_start
               AND (end_ts + bar - 1ms >= req_end
                    OR abs(now - end_ts) < 2 * bar)       -- freshness escape
@@ -54,7 +55,6 @@ def covered_expr(now: datetime) -> Column:
     # it — the driver may run this in any TZ.
     if now.tzinfo is None:
         now = now.replace(tzinfo=timezone.utc)
-    bar_ms = timeframe_duration_col(F.col("timeframe"))
     end_ms = F.unix_millis(F.col("end_ts"))
     contained = end_ms + bar_ms - F.lit(1) >= F.unix_millis(F.col("req_end"))
     fresh = F.abs(F.lit(int(now.timestamp() * 1000)) - end_ms) < 2 * bar_ms
@@ -82,7 +82,7 @@ def coverage_check(
     # aggregate is the right side and is small by construction (one row per
     # SERIES — bars-not-events cardinality), so it is the legal broadcast.
     return requests.join(broadcast(coverage), on=list(key_cols), how="left").withColumn(
-        "covered", covered_expr(now)
+        "covered", covered_expr(now, timeframe_duration_col(F.col("timeframe")))
     )
 
 

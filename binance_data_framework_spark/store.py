@@ -12,7 +12,8 @@ days + precedence-aware dedup, replacing SQLite ``INSERT OR REPLACE``
 (database_handler.py:215-218) WITHOUT the whole-partition write
 amplification: appending one day to a multi-year series reads and rewrites
 only that day's files. The API surface mirrors the reference's five public
-methods (README.md:82-114).
+methods (README.md:82-114). The undated files of an adopted layout are
+rewritten into day files once, by the first snapshot (OhlcvStore._snapshot).
 
 SNAPSHOT COMMITS (the no-table-format-in-container stand-in for Delta/
 Iceberg): writers never delete data files in place. An upsert APPENDS
@@ -100,13 +101,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 from pyspark.sql.types import StructType
 
+from binance_data_framework_spark.functions.timeframes import TIMEFRAME_MS
 from binance_data_framework_spark.operators.coverage import covered_expr, meta_coverage
 
 KEY = ["ts", "symbol", "timeframe"]
 OHLCV_COLS = ["ts", "symbol", "timeframe", "open", "high", "low", "close", "volume"]
-#: the declared OHLCV row schema: undated legacy files read with it, day
-#: files with ``_DAY_SCHEMA``, and every write casts to the latter, so no
-#: read of the store infers a schema
+#: the declared OHLCV row schema: the adoption rewrite reads undated files
+#: with it, day files read with ``_DAY_SCHEMA``, and every write casts to
+#: the latter, so no read of the store infers a schema
 _SCHEMA = (
     "ts timestamp, symbol string, timeframe string, open double, high double, "
     "low double, close double, volume double"
@@ -1269,8 +1271,8 @@ class OhlcvStore(SnapshotStore):
 
     # -- driver path --------------------------------------------------------
     # A cache request touches one series and a few day files, too little to
-    # pay for Spark jobs. On a local root with no undated file in the pruned
-    # listing, the coverage probe reads its boundary days' ts with pyarrow;
+    # pay for Spark jobs. On a local root the coverage probe reads its
+    # boundary days' ts with pyarrow;
     # get_data and save_data of a window within ONE_TASK_MAX_DAYS read and
     # merge the day files with pyarrow too, and get_data returns a local
     # relation, whose collect runs no job. save_data also needs an incoming
@@ -1279,14 +1281,13 @@ class OhlcvStore(SnapshotStore):
     # to_date(ts) in their one collect, stored rows from their day dir, and
     # covered_expr runs over a one-row local relation.
 
-    def _driver_path(self, files: list[str], lo_d, hi_d) -> bool:
-        """True when a request over the series files ``files`` and the day
-        window lo_d..hi_d runs on the driver (see above)."""
+    def _driver_path(self, lo_d, hi_d) -> bool:
+        """True when a request over the day window lo_d..hi_d runs on the
+        driver (see above)."""
         return (
             lo_d is not None
             and hi_d is not None
             and self.fits_one_task(lo_d, hi_d)
-            and all("/dt=" in f for f in files)
             and self._local_root() is not None
         )
 
@@ -1346,6 +1347,45 @@ class OhlcvStore(SnapshotStore):
 
         return save
 
+    # -- adopted layouts ----------------------------------------------------
+    @staticmethod
+    def _undated(files: list[str]) -> list[str]:
+        """Files of a listing outside any ``dt=`` day dir: the undated rows
+        of an adopted pre-manifest layout."""
+        return [f for f in files if "/dt=" not in f]
+
+    def _snapshot(self) -> dict | None:
+        """Latest snapshot, of day files only. A head listing undated files
+        is rewritten in one commit: their rows and the day files of each
+        series holding one, merged to one row per ts (the undated row wins
+        a tie) into day files; other series are not read. The check repeats
+        under the commit lock, so threads rewrite a root once; a rewrite
+        that lost to another process returns its head if that lists no
+        undated file, and raises otherwise."""
+        man = super()._snapshot()
+        if not man or not self._undated(man["files"]):
+            return man
+        with self._commit_lock:
+            man = super()._snapshot()  # re-check under the lock
+            undated = self._undated(man["files"])
+            if not undated:
+                return man
+            series = tuple({"/".join(f.split("/")[:2]) + "/" for f in undated})
+            days = [f for f in man["files"] if f.startswith(series) and "/dt=" in f]
+            rows = self._scan(undated, _SCHEMA, self.root).select(*OHLCV_COLS)
+            rows = rows.withColumn("_rank", F.lit(0))
+            writer = self._merge_writer(rows, days, one_task=False)
+            try:
+                self._staged_commit(
+                    writer.save, undated + days, op="day-file rewrite", kind="same-series"
+                )
+            except RuntimeError:
+                man = super()._snapshot()
+                if man and self._undated(man["files"]):
+                    raise
+                return man
+            return super()._snapshot()
+
     def read_version(self, version: int, with_dt: bool = False) -> DataFrame:
         """Time-travel read (Delta-style VERSION AS OF): the exact file set
         manifest v<version> committed. The retention invariant guarantees
@@ -1353,32 +1393,25 @@ class OhlcvStore(SnapshotStore):
         superseded at commit vK is deleted at vK+2, by which point manifest
         v(K-1) — the last one referencing it — has been pruned), so this is
         a consistent snapshot, not best-effort. Versions outside the
-        retention window raise."""
-        return self._read_all(with_dt, self._resolve_retained(version))
+        retention window raise, and so does a version that lists undated
+        files (taken before the adoption rewrite, see _snapshot): the error
+        names the version that rewrote them."""
+        self._snapshot()  # rewrites an adopted layout first
+        man = self._resolve_retained(version)
+        if self._undated(man["files"]):
+            later = [v for v in self.snapshot_versions() if v > version]
+            fixed = next(v for v in later if not self._undated(self._resolve(v)["files"]))
+            raise ValueError(
+                f"snapshot v{version} lists undated files, which v{fixed} "
+                f"rewrote into day files; read v{fixed} or later"
+            )
+        return self._read_all(with_dt, man)
 
     # -- read path --------------------------------------------------------
     def _read_day_files(self, files: list[str]) -> DataFrame:
-        """Committed OHLCV rows of ``files`` (OHLCV_COLS + dt). Undated
-        legacy files (adopted layouts: rows under symbol=/timeframe= but
-        outside any dt= dir) discover no dt partition, so one spark.read
-        over both kinds fails partition discovery with
-        CONFLICTING_PARTITION_COLUMN_NAMES. They read as a second group
-        whose dt is to_date(ts), the value every day dir holds by
-        construction, unioned with the dated group. A pure-dated listing
-        stays one read. Both plan from the declared schema: no job."""
-        cols = [*OHLCV_COLS, "dt"]
-        dated = [f for f in files if "/dt=" in f]
-        undated = [f for f in files if "/dt=" not in f]
-        parts = []
-        if dated:
-            parts.append(self._scan(dated, _DAY_SCHEMA, self.root).select(*cols))
-        if undated:
-            parts.append(
-                self._scan(undated, _SCHEMA, self.root)
-                .withColumn("dt", F.to_date("ts"))
-                .select(*cols)
-            )
-        return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+        """Committed OHLCV rows of the day files ``files`` (OHLCV_COLS +
+        dt), planned from the declared schema: no job."""
+        return self._scan(files, _DAY_SCHEMA, self.root).select(*OHLCV_COLS, "dt")
 
     @staticmethod
     def _series_window_files(
@@ -1393,56 +1426,31 @@ class OhlcvStore(SnapshotStore):
         task-planning structure built from it — O(store files) even though
         Catalyst later prunes the partitions. A million-file store would
         pay that on every single-series read. Pruning here keeps the scan
-        O(series ∩ window) end to end.
-
-        Files under the series prefix but outside a ``dt=`` day dir
-        (adopted legacy layouts) may hold any day, so every window
-        includes them."""
+        O(series ∩ window) end to end."""
         return [
             rel
             for d, rel in OhlcvStore._series_days(files, symbol, timeframe)
-            if d is None
-            or ((lo_d is None or d >= lo_d) and (hi_d is None or d <= hi_d))
+            if (lo_d is None or d >= lo_d) and (hi_d is None or d <= hi_d)
         ]
-
-    def _upsert_files(
-        self, files: list[str], symbol: str, timeframe: str, lo_d, hi_d
-    ) -> tuple[list[str], bool]:
-        """(superseded, legacy) of an upsert of one series over the day
-        window lo_d..hi_d: the window's day files, or — when the series
-        still holds an undated legacy file (``legacy``), which may hold any
-        day — every file of the series. The merge then rewrites the legacy
-        rows into day files once (stored rows at rank 1, so new rows still
-        win), leaving no series mixed and no ts stored twice."""
-        window = self._series_window_files(files, symbol, timeframe, lo_d, hi_d)
-        legacy = any("/dt=" not in f for f in window)
-        if legacy:
-            return self._series_window_files(files, symbol, timeframe), True
-        return window, False
 
     @staticmethod
     def _series_days(files: list[str], symbol: str, timeframe: str):
-        """(day, rel) for every file of one series in a manifest listing:
-        ``day`` is the date of its ``dt=`` dir, None for an undated file."""
-        prefix = f"symbol={symbol}/timeframe={timeframe}/"
+        """(day, rel) for every day file of one series in a manifest
+        listing: ``day`` is the date of its ``dt=`` dir."""
+        prefix = f"symbol={symbol}/timeframe={timeframe}/dt="
         for rel in files:
-            if not rel.startswith(prefix):
-                continue
-            day = rel[len(prefix):].split("/", 1)[0]
-            if not day.startswith("dt="):
-                yield None, rel
-            else:
-                yield datetime.strptime(day[3:], "%Y-%m-%d").date(), rel
+            if rel.startswith(prefix):
+                day = rel[len(prefix):].split("/", 1)[0]
+                yield datetime.strptime(day, "%Y-%m-%d").date(), rel
 
     def _exists(self) -> bool:
         man = self._snapshot()
         return bool(man and man["files"])
 
     def _empty(self, with_dt: bool) -> DataFrame:
-        schema = _DAY_SCHEMA if with_dt else _SCHEMA
-        return self.spark.createDataFrame([], schema).select(
-            *(OHLCV_COLS + ["dt"] if with_dt else OHLCV_COLS)
-        )
+        """No rows, as an empty Arrow local relation: its plans run no job."""
+        cols = [*OHLCV_COLS, "dt"] if with_dt else OHLCV_COLS
+        return self.spark.createDataFrame(_arrow_schema(cols).empty_table())
 
     def _read_all(self, with_dt: bool = False, man: dict | None = None) -> DataFrame:
         """Every row of snapshot ``man`` (default: the latest)."""
@@ -1466,9 +1474,7 @@ class OhlcvStore(SnapshotStore):
         Days outside the incoming range are never read and never rewritten
         (the reference's SQLite rewrites nothing but holds everything in one
         B-tree; a naive Spark translation rewrote the whole series per
-        batch). The one exception is a series that still holds an undated
-        legacy file: its first upsert rewrites it whole, once, into day
-        files (_upsert_files). The new day files are APPENDED (unique part names), then the
+        batch). The new day files are APPENDED (unique part names), then the
         snapshot manifest swap publishes them and retires the old files —
         concurrent readers see the old or the new day, never neither (see
         module docstring).
@@ -1476,9 +1482,8 @@ class OhlcvStore(SnapshotStore):
         On the driver path (a local root and a ``df`` whose plan is a
         LocalRelation, its rows already in driver memory) one collect
         replaces the bounds agg, and a merge window within
-        ONE_TASK_MAX_DAYS with no undated file is merged and written with
-        pyarrow (_arrow_merge): no Spark job. Other batches keep the Spark
-        merge.
+        ONE_TASK_MAX_DAYS is merged and written with pyarrow (_arrow_merge):
+        no Spark job. Other batches keep the Spark merge.
         """
         incoming = (
             df.withColumn("symbol", F.lit(symbol))
@@ -1523,16 +1528,15 @@ class OhlcvStore(SnapshotStore):
         if lo_d is None:
             return True  # empty batch: nothing to merge or rewrite
         man = self._snapshot()
-        superseded, legacy = self._upsert_files(
+        superseded = self._series_window_files(
             man["files"] if man else [], symbol, timeframe, lo_d, hi_d
         )
         # a merge window within ONE_TASK_MAX_DAYS is merged and written as
-        # one task: one job, no shuffle (see _merge_writer), or on the
-        # driver; a legacy series' rewrite is unbounded
-        if rows is not None and self._driver_path(superseded, lo_d, hi_d):
+        # one task: one job, no shuffle (see _merge_writer), or on the driver
+        if rows is not None and self._driver_path(lo_d, hi_d):
             save = self._arrow_merge(rows, superseded, symbol, timeframe)
         else:
-            one_task = not legacy and self.fits_one_task(lo_d, hi_d)
+            one_task = self.fits_one_task(lo_d, hi_d)
             save = self._merge_writer(incoming, superseded, one_task).save
         # the commit rebases onto the LATEST snapshot: a different series
         # committed since our merge snapshot composes (lock in-process,
@@ -1603,9 +1607,9 @@ class OhlcvStore(SnapshotStore):
             {
                 f
                 for r in bounds
-                for f in self._upsert_files(
+                for f in self._series_window_files(
                     live, r["symbol"], r["timeframe"], r["lo_d"], r["hi_d"]
-                )[0]
+                )
             }
         )
         # bulk imports keep the distributed plan: no day bound holds here
@@ -1631,10 +1635,9 @@ class OhlcvStore(SnapshotStore):
         and the ts predicate reaches the parquet row groups. Naive bounds
         are pinned UTC before becoming literals (see _utc).
 
-        A fourth tier sizes the plan: when both bounds are given, the day
-        span fits ONE_TASK_MAX_DAYS and the pruned listing holds no undated
-        legacy file (which may hold any day), the scan is coalesced to one
-        task before the sort — a range sort over one partition needs no
+        A fourth tier sizes the plan: when both bounds are given and the
+        day span fits ONE_TASK_MAX_DAYS, the scan is coalesced to one task
+        before the sort — a range sort over one partition needs no
         sampling job and no shuffle, so collecting it is one Spark job.
         On a local root that window is read on the driver instead (the
         driver-path comment above): pyarrow reads its day files, and the
@@ -1651,7 +1654,7 @@ class OhlcvStore(SnapshotStore):
         files = self._series_window_files(
             man["files"] if man else [], symbol, timeframe, lo_d, hi_d
         )
-        if self._driver_path(files, lo_d, hi_d):
+        if self._driver_path(lo_d, hi_d):
             t = self._arrow_days(files)
             ts, typ = t["ts"], t.schema.field("ts").type
             t = t.filter(
@@ -1663,7 +1666,6 @@ class OhlcvStore(SnapshotStore):
             t = t.append_column("symbol", pa.repeat(symbol, t.num_rows))
             t = t.append_column("timeframe", pa.repeat(timeframe, t.num_rows))
             return self.spark.createDataFrame(t.select(OHLCV_COLS), _SCHEMA)
-        undated = any("/dt=" not in f for f in files)
         df = self._read_day_files(files) if files else self._empty(with_dt=True)
         df = df.where((F.col("symbol") == symbol) & (F.col("timeframe") == timeframe))
         if s is not None:
@@ -1672,7 +1674,7 @@ class OhlcvStore(SnapshotStore):
             df = df.where((F.col("ts") <= F.lit(e)) & (F.col("dt") <= F.lit(e.date())))
         df = df.select(*OHLCV_COLS)
         bounded = s is not None and e is not None
-        if bounded and not undated and self.fits_one_task(lo_d, hi_d):
+        if bounded and self.fits_one_task(lo_d, hi_d):
             df = df.coalesce(1)
         return df.orderBy("ts")
 
@@ -1691,28 +1693,27 @@ class OhlcvStore(SnapshotStore):
         Boundary-file probe: the ``dt`` partition is ``to_date(ts)``, so the
         series' min ts lies in its first stored day file and its max ts in
         its last (the invariant get_data's day pruning relies on too). The
-        manifest listing is pruned driver-side to those two days (plus any
-        undated legacy files, which may hold any day), and one single-task
-        Spark job computes min/max(ts) over them and applies
+        manifest listing is pruned driver-side to those two days, and one
+        single-task Spark job computes min/max(ts) over them and applies
         ``covered_expr``. Cost: one job over at most two day files, whatever
         the store or series size; the only driver-side materialization is
         the single result row. get_stored_info keeps the full scan.
 
-        On a local root with no undated file among them (the driver-path
-        comment above), pyarrow reads the two days' ts instead and
-        ``covered_expr`` runs over a one-row local relation: no Spark job,
-        whatever the request window."""
+        On a local root (the driver-path comment above), pyarrow reads the
+        two days' ts instead and ``covered_expr`` runs over a one-row local
+        relation: no Spark job, whatever the request window. An unknown
+        timeframe has no bar duration, so it is never covered; its bounds
+        are still returned."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
         man = self._snapshot()
         days = list(self._series_days(man["files"] if man else [], symbol, timeframe))
-        dated = [d for d, _ in days if d is not None]
-        ends = {min(dated), max(dated)} if dated else set()
-        probe = [rel for d, rel in days if d is None or d in ends]
-        if not probe:
+        if not days:
             return False, None
-        if self._local_root() is not None and all("/dt=" in f for f in probe):
+        ends = {min(days)[0], max(days)[0]}
+        probe = [rel for d, rel in days if d in ends]
+        if self._local_root() is not None:
             ts = self._arrow_days(probe, ["ts"])["ts"]
             bounds = self.spark.createDataFrame(
                 pa.table(
@@ -1729,15 +1730,16 @@ class OhlcvStore(SnapshotStore):
                 .coalesce(1)
                 .agg(F.min("ts").alias("start_ts"), F.max("ts").alias("end_ts"))
             )
+        now = _utc(now or datetime.now(timezone.utc))
+        bar_ms = F.lit(TIMEFRAME_MS.get(timeframe)).cast("long")
         row = (
             bounds.select(
                 "start_ts",
                 "end_ts",
-                F.lit(timeframe).alias("timeframe"),
                 F.lit(_utc(start)).alias("req_start"),
                 F.lit(_utc(end)).alias("req_end"),
             )
-            .withColumn("covered", covered_expr(_utc(now or datetime.now(timezone.utc))))
+            .withColumn("covered", covered_expr(now, bar_ms))
             .first()
         )
         if row["start_ts"] is None:
@@ -1751,7 +1753,7 @@ class OhlcvStore(SnapshotStore):
         files (and emptied dirs) are vacuumed two commits later (the
         _vacuum reader-grace window), same as an upsert's superseded
         files. No rewrite of unrelated data ever."""
-        if not self._snapshot():  # bootstraps legacy layouts
+        if not self._snapshot():  # adopts legacy layouts
             return False
         prefix = f"symbol={symbol}/timeframe={timeframe}/"
 
@@ -1767,7 +1769,7 @@ class OhlcvStore(SnapshotStore):
 
     def _part_of(self, rel: str) -> str | None:
         """The day dir of a file under ``symbol=``, ``timeframe=`` and
-        ``dt=``; None for a stray legacy file outside that layout."""
+        ``dt=``; None for a file outside that layout."""
         day = rel.rpartition("/")[0]
         keys = {seg.partition("=")[0] for seg in day.split("/") if "=" in seg}
         return day if {"symbol", "timeframe", "dt"} <= keys else None
@@ -1789,9 +1791,9 @@ class OhlcvStore(SnapshotStore):
         number of day partitions compacted.
 
         Why it matters at scale: ranged upserts keep each LIVE day at one
-        file, but multi-file days still arise — legacy-layout adoption
-        (the _snapshot bootstrap inherits whatever file fragmentation the
-        external writer left), size-split writes (``max_records_per_file``),
+        file, but multi-file days still arise — an adopted layout's dt=
+        dirs (they keep the external writer's files; its undated rows are
+        rewritten one file per day), size-split writes (``max_records_per_file``),
         and any future append-mode ingest. A store that adopted millions of
         externally-written small files pays for them on every scan (task
         count, open() overhead) and in every checkpoint manifest. Planning
@@ -1822,11 +1824,6 @@ class OhlcvStore(SnapshotStore):
 
     def get_stored_info(self) -> DataFrame:
         """Catalog scan: per-series coverage + row counts
-        (reference get_stored_info, database_handler.py:348-377)."""
-        if not self._exists():
-            return self.spark.createDataFrame(
-                [],
-                "symbol string, timeframe string, start_ts timestamp, "
-                "end_ts timestamp, n_rows long",
-            )
+        (reference get_stored_info, database_handler.py:348-377). An empty
+        store aggregates an empty local relation: no job."""
         return meta_coverage(self._read_all()).orderBy("symbol", "timeframe")

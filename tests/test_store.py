@@ -1055,8 +1055,10 @@ def test_coverage_probe_agrees_with_full_series_scan(store, spark, tmp_path):
     get_data(symbol, tf) plus the containment/freshness rule written out
     in Python — on the result and both bounds: requests on the boundary
     days, interior days, a day with a hole, past the frontier, through the
-    freshness escape, before the first bar; a deleted series; and an
-    adopted legacy layout (undated files, multi-file boundary day)."""
+    freshness escape, before the first bar; a deleted series; an adopted
+    legacy layout (undated files, multi-file boundary day); and a timeframe
+    with no known bar duration, which is never covered but keeps its
+    bounds, on both the driver and the Spark path."""
     from binance_data_framework_spark.operators.coverage import meta_coverage
 
     utc = timezone.utc
@@ -1126,6 +1128,12 @@ def test_coverage_probe_agrees_with_full_series_scan(store, spark, tmp_path):
             assert covered is rule is want, where
             assert bounds == (ref["start_ts"], ref["end_ts"]), where
 
+    store.save_data(_grid(spark, t0, 24, 3600), "BTCUSDT", "9x")
+    ref = meta_coverage(store.get_data("BTCUSDT", "9x")).first()
+    for st in (store, _spark_path(store)):
+        got = st.check_data_exists("BTCUSDT", "9x", t0, t0 + hour, now=t0 + hour)
+        assert got == (False, (ref["start_ts"], ref["end_ts"]))
+
 
 def test_coverage_probe_runs_one_job(store, spark):
     """A coverage probe reads only the series' two boundary day files,
@@ -1154,6 +1162,25 @@ def test_coverage_probe_runs_one_job(store, spark):
             )
             assert n_jobs == want and again == first, (name, day)
 
+
+
+def test_empty_reads_run_no_job(store, spark):
+    """Reads that find no rows plan from empty local relations: on a
+    handle whose _local_root() is None, an empty store's _read_all and
+    get_stored_info, and an open and a bounded get_data of a series the
+    store does not hold, run no Spark job, collect included."""
+    st = _spark_path(store)
+    t0 = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    calls = {"read-all": st._read_all, "stored-info": st.get_stored_info}
+    for name, fn in calls.items():
+        n_jobs, rows = jobs_of(spark, f"empty-{name}", lambda: fn().collect())
+        assert n_jobs == 0 and rows == [], name
+    store.save_data(_grid(spark, t0, 24, 3600), "BTCUSDT", "1h")
+    for name, window in (("open", ()), ("bounded", (t0, t0 + timedelta(hours=5)))):
+        n_jobs, rows = jobs_of(
+            spark, f"unknown-{name}", lambda: st.get_data("ETHUSDT", "1h", *window).collect()
+        )
+        assert n_jobs == 0 and rows == [], name
 
 
 def _spark_path(st):
@@ -1247,8 +1274,9 @@ def test_one_task_and_distributed_paths_agree(spark, tmp_path, monkeypatch, tf, 
     open start, open end); load_incremental fetches the same ranges; a
     save_data upsert over stored days (new rows win) leaves the same rows,
     one ts-sorted file per dt dir and the same manifest delta. An adopted
-    legacy series in undated files takes the distributed plan under the
-    default bound and agrees too."""
+    legacy series in undated files is rewritten into day files by its first
+    snapshot, so it plans like any series (the driver path under the
+    default bound) and agrees too."""
     import pyarrow.parquet as pq
 
     from binance_data_framework_spark.api import CacheOrFetchLoader
@@ -1288,7 +1316,7 @@ def test_one_task_and_distributed_paths_agree(spark, tmp_path, monkeypatch, tf, 
             assert _shuffles(df) is not (one_task and bound == default), (s, e)
             out["reads"].append(df.collect())
         legacy_day = legacy.get_data("BTCUSDT", tf, t0 + 2 * day, t0 + 3 * day - ms)
-        assert _shuffles(legacy_day)  # an undated file may hold any day
+        assert _shuffles(legacy_day) is not (bound == default)
         out["legacy"] = legacy_day.collect()
         src = _RecordingSource(full)
         filled = CacheOrFetchLoader(st, src).load_incremental(
@@ -1462,13 +1490,23 @@ def test_driver_and_spark_paths_agree(spark, tmp_path):
     assert len(driver["dup"]) == len(set(driver["dup"])) == 5
 
 
-def test_mixed_legacy_series_reads_and_upserts(spark, tmp_path):
+def test_mixed_legacy_series_reads_and_upserts(spark, tmp_path, monkeypatch):
     """One series holding both an undated legacy file and a dt= day file
-    (an adopted layout) reads as one series — get_data, the coverage probe
-    and get_stored_info, where one spark.read over both failed partition
-    discovery — and an overlapping save_data rewrites the legacy rows into
-    day files: new rows win, no ts is stored twice, no undated file stays."""
+    (an adopted layout) is rewritten into day files by the first snapshot,
+    in one commit: once when two threads open the root at once, also when
+    the root's v1 already lists the undated file. It then reads as one
+    series — get_data, the coverage probe and get_stored_info — and the
+    pre-rewrite version raises on read_version. On a fresh root the first
+    call leaves only day files, also when another writer's rewrite wins
+    the commit race: the rows are the fixture's, one per ts, the undated
+    row winning a ts a day file holds too, and a series with no undated
+    file keeps its files. An overlapping save_data then merges as usual:
+    new rows win, no ts is stored twice."""
+    import shutil
+    from concurrent.futures import ThreadPoolExecutor
+
     from binance_data_framework_spark.operators.coverage import meta_coverage
+    from binance_data_framework_spark.store import ConcurrentCommit, SnapshotStore
 
     utc = timezone.utc
     day, hour = timedelta(days=1), timedelta(hours=1)
@@ -1480,6 +1518,44 @@ def test_mixed_legacy_series_reads_and_upserts(spark, tmp_path):
     _grid(spark, t0 + 3 * day, 24, 3600).coalesce(1).write.parquet(
         f"{series}/dt={(t0 + 3 * day).date()}"
     )
+    shutil.copytree(st.root, tmp_path / "fresh")
+
+    # the bootstrap alone commits v1 listing the undated file
+    assert st._undated(SnapshotStore._snapshot(st)["files"])
+    probe = lambda h: h.check_data_exists("BTCUSDT", "1h", t0, t0 + 3 * day, now=far)  # noqa: E731
+    with ThreadPoolExecutor(2) as pool:
+        got = list(pool.map(probe, [OhlcvStore(spark, st.root) for _ in range(2)]))
+    assert got[0] == got[1] and got[0][0]
+    assert st._manifest_versions() == [1, 2]
+    assert not st._undated(st._snapshot()["files"])
+    with pytest.raises(ValueError, match="v1 lists undated files, which v2 rewrote"):
+        st.read_version(1)
+
+    fresh = OhlcvStore(spark, str(tmp_path / "fresh"))
+    _grid(spark, t0, 24, 3600).coalesce(1).write.parquet(
+        f"{fresh.root}/symbol=ETHUSDT/timeframe=1h/dt={t0.date()}"
+    )
+    _grid(spark, t0 + day, 12, 3600).withColumn("close", F.lit(-1.0)).coalesce(1).write.parquet(
+        f"{fresh.root}/symbol=BTCUSDT/timeframe=1h/dt={(t0 + day).date()}"
+    )
+    eth = sorted(f for f in fresh._list_data_files() if f.startswith("symbol=ETHUSDT/"))
+    real_commit = fresh._commit
+
+    def lose_rewrite_race(added, removed, prev, schemas=None):
+        if removed and prev["version"] == 1:  # another writer rewrites first
+            OhlcvStore(spark, fresh.root)._snapshot()
+            raise ConcurrentCommit("simulated lost race")
+        return real_commit(added, removed, prev, schemas)
+
+    monkeypatch.setattr(fresh, "_commit", lose_rewrite_race)
+    assert fresh.check_data_exists("ETHUSDT", "1h", t0, t0 + hour, now=far)[0]
+    files = fresh._snapshot()["files"]
+    assert fresh._manifest_versions() == [1, 2] and not fresh._undated(files)
+    assert sorted(f for f in files if f.startswith("symbol=ETHUSDT/")) == eth
+    fixture = _grid(spark, t0, 48, 3600).unionByName(_grid(spark, t0 + 3 * day, 24, 3600))
+    want = {r["ts"]: r["close"] for r in fixture.collect()}
+    rows = fresh.get_data("BTCUSDT", "1h").collect()
+    assert len(rows) == len(want) and {r["ts"]: r["close"] for r in rows} == want
 
     rows = st.get_data("BTCUSDT", "1h").collect()
     assert len(rows) == len({r["ts"] for r in rows}) == 72
