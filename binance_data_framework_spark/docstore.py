@@ -37,6 +37,7 @@ two-commit vacuum grace for concurrent readers.
 
 from __future__ import annotations
 
+import json
 import math
 from functools import reduce
 
@@ -96,35 +97,37 @@ class _HashLayoutStore(SnapshotStore):
       forever; a pinned store never relayouts on its own (the same
       provenance rule as a pinned n_centroids ANN index).
     - auto (``n_<part>s=None``): the count is DERIVED state owned by the
-      store — ``_auto_count`` of the committed row count, which the
-      tier's writes keep in the sidecar. The growth trigger
-      (``_maybe_grow``, behind ``maybe_rebucket``/``maybe_reshard``)
-      re-derives it and remaps the layout once the rule asks for
-      >= grow_factor x the current count. Without it, a store started
-      small keeps batch-1's count while the corpus grows 1000x.
+      store — ``_auto_count`` of the committed row count. The growth
+      trigger (``_maybe_grow``, behind ``maybe_rebucket``/
+      ``maybe_reshard``) re-derives it and remaps the layout once the rule
+      asks for >= grow_factor x the current count. Without it, a store
+      started small keeps batch-1's count while the corpus grows 1000x.
 
-    The ``_layout.json`` sidecar pins the count, the key column and its
-    provenance on first write and is validated on every later open. Its
-    ``n_rows`` is the auto-mode row counter: only auto stores maintain
-    it, so a pinned store's stays at its creation value. This class owns
-    the count rule, mode setup, that check, the partition-dir parser
-    (``_part_of``), the growth trigger and the remap. A tier supplies its
-    data (``_PART``, the clamp bounds, ``_KEY_ATTR``, the remap's commit
-    ``_KIND``) and hooks: ``_remap_rows(man)`` and
-    ``_remap_writer(rows, n)``, the remap's row source and staged write, and
-    for sidecar fields of its own, ``_layout_extra``/``_check_extra``.
+    The count and the row count are table state, committed with the files
+    (the Delta protocol's ``metaData``/``numRecords`` beside its ``add``
+    actions): every commit records ``{"count", "rows"}`` as the manifest's
+    layout (_staged_commit), rows as the previous head's plus the write's
+    row delta, added against the head the commit CAS'd on, so the row
+    count is exact under concurrent writers. Each operation routes with
+    the count of the snapshot it resolves (_snapshot), a write whose
+    rebased head holds another count raises instead of publishing
+    misrouted rows, and a remap publishes its count in the same manifest
+    as its files, so no handle ever routes with a count its files do not
+    have.
 
-    Single-maintainer note: a remap swaps the routing (sidecar) and the
-    file layout (manifest) in two steps; auto-mode handles re-read the
-    sidecar on every operation, so any op started after the remap commit
-    sees the new layout. A lookup that reads the sidecar in the
-    microseconds BEFORE a concurrent remap's commit and the manifest
-    after it can prune with the old routing for that one call — run
-    maintenance from the store's single writer (the gate), the same
-    assumption AnnIndexStore.maybe_rebuild's full-layout swap makes."""
+    The ``_layout.json`` sidecar pins the store's creation-time identity
+    (the key column, the auto flag, the target rows and the tier's own
+    fields) on first contact and is validated by every later handle's
+    first contact (_open). This class owns the count rule, mode setup,
+    that check, the partition-dir parser (``_part_of``), the growth
+    trigger and the remap. A tier supplies its data (``_PART``, the clamp
+    bounds, ``_KEY_ATTR``, the remap's commit ``_KIND``) and hooks:
+    ``_remap_rows(man)`` and ``_remap_writer(rows, n)``, the remap's row
+    source and staged write, and for sidecar fields of its own,
+    ``_layout_extra``/``_check_extra``."""
 
     #: partition directory name; the sidecar fields derive from it
-    #: (``n_<part>s``, ``auto_<part>s``, ``target_<part>_rows``)
+    #: (``auto_<part>s``, ``target_<part>_rows``)
     _PART = ""
     #: clamp bounds of the derived count
     _MIN_PARTS = 1
@@ -133,6 +136,8 @@ class _HashLayoutStore(SnapshotStore):
     _KEY_ATTR = ""
     #: staged-commit kind of the remap (its conflict message)
     _KIND = ""
+    #: the identity sidecar, outside the manifest protocol
+    _LAYOUT = "_layout.json"
 
     @classmethod
     def _auto_count(cls, n_rows: int, target_rows: int) -> int:
@@ -161,73 +166,115 @@ class _HashLayoutStore(SnapshotStore):
         self._target = target_rows
         self._auto = n is None
         self._n = n if n is not None else self._auto_count(0, target_rows)
+        # committed rows as of this handle's last snapshot or commit
+        self._rows = 0
         self._layout_checked = False
 
-    def _check_layout(self) -> None:
-        """Pin (count, key column, the tier's extra fields) in the sidecar
-        on first write and VALIDATE them on every later open (code-review
-        r6): reopening with a different count would route the same key to
-        a different partition, so upserts would miss the stored copy,
-        deletes and lookups would miss rows — silently. Layout drift is a
-        config error and must raise, exactly like schema drift.
+    def _read_layout(self) -> dict:
+        return json.loads(self._read_bytes(self._LAYOUT))
 
-        An auto handle adopts the stored layout wholesale: a reopened auto
-        store keeps its grown count, and opening a PINNED store with None
-        adopts the pinned count and stays pinned (auto provenance is
-        recorded at creation, not re-guessed). Pinning an auto store
-        raises. Auto handles also RE-ADOPT the sidecar's count on every
-        later call (one small driver-side read): a remap — by this handle
-        or another — must be visible to the next operation, not to the
-        next process."""
+    def _write_layout(self, layout: dict) -> None:
+        self._write_bytes(self._LAYOUT, json.dumps(layout).encode())
+
+    def _snapshot(self) -> dict | None:
+        """Latest snapshot; its count becomes this handle's routing count.
+        A handle's first call checks the store's identity (_open)."""
+        man = super()._snapshot()
+        if not self._layout_checked:
+            man = self._open(man)
+        if man and man["layout"]:
+            self._n, self._rows = man["layout"]["count"], man["layout"]["rows"]
+        return man
+
+    def _check_layout(self) -> None:
+        """Make this handle's first contact (_snapshot) if it has not: an
+        operation that routes keys without resolving a snapshot routes
+        with the count of the handle's last snapshot or commit."""
+        if not self._layout_checked:
+            self._snapshot()
+
+    def _open(self, man: dict | None) -> dict | None:
+        """First contact of a handle with snapshot ``man``: pin the
+        identity in the sidecar on first write and VALIDATE it on every
+        later open (code-review r6). Reopening with a different key column
+        or count would route the same key to a different partition, so
+        upserts would miss the stored copy, deletes and lookups would miss
+        rows — silently. Layout drift is a config error and must raise,
+        exactly like schema drift.
+
+        An auto handle adopts the stored mode: a reopened auto store keeps
+        its grown count, and opening a PINNED store with None adopts the
+        head's count and stays pinned (auto provenance is recorded at
+        creation, not re-guessed). Pinning an auto store raises, and so
+        does a pinned count other than the head's.
+
+        A head written before the manifest recorded the layout (its count
+        and row count then lived in the sidecar) is upgraded here, once:
+        one metadata-only commit records the sidecar's count and the
+        head's exact row count, and the sidecar keeps only the identity.
+        Returns the snapshot, upgraded."""
         count, auto, target = (
             f"n_{self._PART}s",
             f"auto_{self._PART}s",
             f"target_{self._PART}_rows",
         )
-        if self._layout_checked:
-            if self._auto:
-                self._n = int(self._read_layout()[count])
-            return
-        name = type(self).__name__
+        name, pinned = type(self).__name__, not self._auto
         fs, p = self._fs_path(self._LAYOUT)
-        if fs.exists(p):
+        if not fs.exists(p):
+            stored, fresh = {}, {
+                self._KEY_ATTR: self._key,
+                **self._layout_extra(),
+                auto: self._auto,
+                target: self._target,
+            }
+        else:
             stored = self._read_layout()
             if self._auto:
-                self._n = int(stored[count])
                 self._auto = bool(stored.get(auto, False))
-                if stored.get(target):
-                    self._target = int(stored[target])
+                self._target = int(stored.get(target) or self._target)
             elif stored.get(auto, False):
                 raise ValueError(
                     f"{name} at {self.root} is auto-{self._PART}ed (its "
-                    f"count is derived state, currently {stored.get(count)}) "
-                    f"— open it with {count}=None instead of pinning {self._n}"
+                    f"count is derived state) — open it with {count}=None "
+                    f"instead of pinning {self._n}"
                 )
-            if stored.get(count) != self._n or stored.get(self._KEY_ATTR) != self._key:
-                raise ValueError(
-                    f"{name} layout mismatch at {self.root}: stored {stored}, "
-                    f"requested {count}={self._n} {self._KEY_ATTR}={self._key!r}"
-                )
-            self._check_extra(stored)
-        else:
-            self._write_layout(
-                {
-                    count: self._n,
-                    self._KEY_ATTR: self._key,
-                    **self._layout_extra(),
-                    auto: self._auto,
-                    target: self._target,
-                    "n_rows": 0,
-                }
+            fresh = {k: v for k, v in stored.items() if k not in (count, "n_rows")}
+            fresh.update(self._check_extra(stored, man))
+        if man and man["files"] and not man["layout"]:
+            man = self._upgrade(int(stored.get(count, self._n)))
+        held = man["layout"]["count"] if man and man["layout"] else self._n
+        if fresh.get(self._KEY_ATTR) != self._key or (pinned and held != self._n):
+            raise ValueError(
+                f"{name} layout mismatch at {self.root}: stored {fresh} with "
+                f"{count}={held}, requested {count}={self._n} "
+                f"{self._KEY_ATTR}={self._key!r}"
             )
+        if fresh != stored:
+            self._write_layout(fresh)
         self._layout_checked = True
+        return man
+
+    def _upgrade(self, n: int) -> dict:
+        """One metadata-only commit recording count ``n`` and the head's
+        exact row count on a head without layout metadata (a concurrent
+        upgrade makes it a no-op); returns the new head."""
+        self._commit_rebased(
+            lambda latest: None if latest["layout"] else ([], []),
+            layout=lambda prev, *_: {
+                "count": n,
+                "rows": self._row_count(prev["files"], self._key, prev),
+            },
+        )
+        return super()._snapshot()
 
     def _layout_extra(self) -> dict:
         """The tier's own sidecar fields, written at creation."""
         return {}
 
-    def _check_extra(self, stored: dict) -> None:
-        """Validate the tier's own sidecar fields on the first open."""
+    def _check_extra(self, stored: dict, man: dict | None) -> dict:
+        """Validate the tier's own sidecar fields on first contact with
+        snapshot ``man``; returns the fields to record."""
+        return {}
 
     def _part_of(self, rel: str) -> int | None:
         """Partition index of a store-relative path; None outside the
@@ -238,54 +285,84 @@ class _HashLayoutStore(SnapshotStore):
         except ValueError:
             return None
 
+    def _staged_commit(self, write, superseded=(), *, rows=None, **kw):
+        """SnapshotStore._staged_commit that records the layout: the count
+        this write routed with and the head's row count plus the write's
+        delta — ``rows()``, evaluated after the write, or else the footer
+        rows of the added files minus those of the removed ones. A rebased
+        head whose count differs from the routed one raises the conflict,
+        and this handle adopts the head's count, so a retry routes with
+        it."""
+        routed, done = self._n, {}
+
+        def layout(prev, added, removed, new):
+            head = prev and prev["layout"] or {"count": routed, "rows": 0}
+            if head["count"] != routed:
+                self._n = head["count"]
+                raise RuntimeError(
+                    f"concurrent re{self._PART}: this write routed its rows "
+                    f"with {routed} {self._PART}s, the head has "
+                    f"{head['count']} — retry"
+                )
+            if rows is not None:
+                delta = rows()
+            else:  # the footer cache keeps the files of both snapshots
+                live = {**new, "files": new["files"] + removed}
+                delta = self._row_count(added, self._key, live)
+                delta -= self._row_count(removed, self._key, live)
+            done.update(count=routed, rows=head["rows"] + delta)
+            return dict(done)
+
+        new_files = super()._staged_commit(write, superseded, layout=layout, **kw)
+        if done:
+            self._n, self._rows = done["count"], done["rows"]
+        return new_files
+
     def _maybe_grow(self, grow_factor: float) -> bool:
-        """The growth trigger: an O(1) sidecar check per call (the row
-        counter the tier's writes maintain); remaps once the count rule
-        at the committed size asks for >= ``grow_factor`` x the current
-        count. Pinned stores never grow. True iff a remap committed."""
+        """The growth trigger, O(1): the count rule at the row count of
+        this handle's last snapshot or commit; remaps once it asks for >=
+        ``grow_factor`` x the current count. Pinned stores never grow.
+        True iff a remap committed."""
         self._check_layout()
-        if not self._auto:
-            return False
-        stored = self._read_layout()
-        ideal = self._auto_count(
-            int(stored.get("n_rows", 0)),
-            int(stored.get(f"target_{self._PART}_rows", self._target)),
-        )
-        if ideal < grow_factor * int(stored[f"n_{self._PART}s"]):
-            return False
-        return self._remap(None)
+        ideal = self._auto_count(self._rows, self._target)
+        return self._auto and ideal >= grow_factor * self._n and self._remap(None)
 
     def _remap(self, n: int | None) -> bool:
         """Rewrite the committed rows under count ``n`` — a narrow remap
         (one hash mod the new count; no content recompute) superseding
-        every prior file in ONE commit, so readers see the old or the new
-        layout whole, never a mix. ``n=None`` derives the count from the
-        EXACT committed row count, measured on the rewrite's rows (the
-        sidecar counter is best-effort; the rewrite is the authoritative
-        recount and resets it). Also folds multi-file partitions (one file
-        per new partition). True iff the layout changed; an equal count
-        only refreshes an auto store's row counter. A pinned store's
-        ``n_rows`` is not written: nothing else maintains it there."""
-        self._check_layout()
+        every prior file in ONE commit that also records the new count,
+        so readers see the old or the new layout whole, never a mix, and
+        no handle routes with a count its files do not have. ``n=None``
+        derives the count from the EXACT committed row count, measured on
+        the rewrite's rows, which the commit records. Any commit since the
+        remap's snapshot raises its conflict: a file it did not read would
+        keep rows under the old count. Also folds multi-file partitions
+        (one file per new partition). True iff the layout changed; an
+        equal count commits nothing."""
         man = self._snapshot()
         if not man or not man["files"]:
             return False
         rows = self._remap_rows(man)
         exact = rows.count()
         final = n if n is not None else self._auto_count(exact, self._target)
-        counter = {"n_rows": exact} if self._auto else {}
         if final == self._n:
-            if counter:
-                self._layout_update(**counter)
             return False
-        self._staged_commit(
+        who = f"{self._KIND} write" if self._KIND else "write"
+
+        def whole(latest: dict | None) -> list[str]:
+            if self._live(latest) != man["files"]:
+                raise RuntimeError(
+                    f"concurrent {who} during re{self._PART}: the files "
+                    f"changed since its snapshot — retry"
+                )
+            return man["files"]
+
+        super()._staged_commit(
             self._remap_writer(rows, final),
-            list(man["files"]),
-            op=f"re{self._PART}",
-            kind=self._KIND,
+            removed_fn=whole,
+            layout=lambda *_: {"count": final, "rows": exact},
         )
-        self._layout_update(**{f"n_{self._PART}s": final}, **counter)
-        self._n = final
+        self._n, self._rows = final, exact
         return True
 
 
@@ -318,7 +395,8 @@ class BandIndexStore(_HashLayoutStore):
     pruning once touched ≈ n_buckets). n_buckets remains the layout knob
     bounding per-bucket file size and join-path pruning. Pinned
     (``n_buckets=<int>``) and auto (``n_buckets=None``) modes, growth
-    (``maybe_rebucket``) and the sidecar check are _HashLayoutStore's;
+    (``maybe_rebucket``), the count in the manifest and the identity
+    sidecar are _HashLayoutStore's;
     re-bucketing is a narrow remap of the committed (id, band_idx,
     band_hash) rows — pmod against the new count; no signature or
     shingle recompute.
@@ -391,7 +469,7 @@ class BandIndexStore(_HashLayoutStore):
     def _layout_extra(self) -> dict:
         return {"params": self.params}
 
-    def _check_extra(self, stored: dict) -> None:
+    def _check_extra(self, stored: dict, man: dict | None) -> dict:
         """Pin the band-generation params: different generator params
         (minhash widths) produce band hashes that never match committed
         rows, so a mismatch must raise, not silently miss candidates
@@ -404,7 +482,6 @@ class BandIndexStore(_HashLayoutStore):
             # with UNKNOWN params, and adopting whatever the first
             # post-upgrade caller passes would legitimize exactly the
             # drift the pin exists to catch (review r7 #3)
-            man = self._snapshot()
             if man and man["files"]:
                 raise ValueError(
                     f"BandIndexStore at {self.root} holds committed bands "
@@ -412,15 +489,15 @@ class BandIndexStore(_HashLayoutStore):
                     f"generator params of the stored rows are unknowable; "
                     f"rebuild the index to pin {self.params}"
                 )
-            stored["params"] = self.params
-            self._write_layout(stored)
-        elif self.params is not None and stored_params != self.params:
+            return {"params": self.params}
+        if self.params is not None and stored_params != self.params:
             raise ValueError(
                 f"BandIndexStore band-param mismatch at {self.root}: "
                 f"stored {stored_params}, requested {self.params} — "
                 f"band hashes from different generator params never "
                 f"match committed rows (rebuild the index to change them)"
             )
+        return {}
 
     def pin_params(self, params: dict) -> None:
         """Declare the band-generation params this session derives keys
@@ -485,10 +562,9 @@ class BandIndexStore(_HashLayoutStore):
 
         A frame's one count() re-executes the caller's band projection —
         cheap for every caller (they all derive bands from checkpointed
-        signatures) and it is what picks the physical form and maintains
-        the exact row bookkeeping the fold/rebucket triggers read. A Table
-        on a local root runs no job: pyarrow writes the same files
-        (_arrow_saving)."""
+        signatures) and it is what picks the physical form and is the
+        row delta the commit records. A Table on a local root runs no job:
+        pyarrow writes the same files (_arrow_saving)."""
         self._check_layout()
         cols = (self.id_col, "band_idx", "band_hash")
         if not isinstance(bands, DataFrame) and self._local_root() is None:
@@ -522,15 +598,7 @@ class BandIndexStore(_HashLayoutStore):
             write = _saving(with_bucket, "delta", writer)
         else:
             write = self._bucketed_write(with_bucket)
-        new_files = self._staged_commit(write)
-        if not new_files:
-            return 0
-        if self._auto:
-            # growth bookkeeping for maybe_rebucket's O(1) trigger —
-            # exact: n_in is the committed row count (best-effort under
-            # concurrent appenders; rebucket recounts exactly)
-            self._bump_rows(n_in)
-        return len(new_files)
+        return len(self._staged_commit(write, rows=lambda: n_in))
 
     def _read_files(self, files: list[str], man: dict) -> DataFrame:
         """Committed band rows (id_col, band_idx, band_hash, bucket) from
@@ -555,7 +623,6 @@ class BandIndexStore(_HashLayoutStore):
         """Full committed band-row scan (id_col, band_idx, band_hash,
         bucket) — maintenance/inspection surface; lookups should go
         through candidates() (bucket-pruned)."""
-        self._check_layout()
         man = self._snapshot()
         if not man or not man["files"]:
             return self.spark.createDataFrame(
@@ -567,9 +634,10 @@ class BandIndexStore(_HashLayoutStore):
     def candidates(self, bands):
         """(id_new, id_stored) distinct pairs whose (band_idx, band_hash)
         matches a committed row. Empty store -> empty result. A
-        driver-side pyarrow Table of band rows with their ``bucket`` (as
-        append() takes them) gets a Table of pairs (_candidates_table); a
-        DataFrame gets a DataFrame.
+        driver-side pyarrow Table of band rows (as append() takes them)
+        gets a Table of pairs (_candidates_table); a DataFrame gets a
+        DataFrame. Either is routed with the count of the snapshot the
+        lookup resolves.
 
         Two physical strategies (VERDICT r9 #2 — the read_keys lesson one
         tier over; reference analogue: the coverage-metadata point lookup,
@@ -595,9 +663,9 @@ class BandIndexStore(_HashLayoutStore):
           of the touched buckets' committed files joined on the band key —
           the pre-r10 path, still the right plan when the probe side is
           itself corpus-sized (dedup-style self-comparisons)."""
-        self._check_layout()
         if not isinstance(bands, DataFrame):
             return self._candidates_table(bands)
+        man = self._snapshot()
         # a null band key never equals a stored one, and count_distinct
         # below skips rows with any null column while the probe collect
         # would not — drop them so the count and the collect agree
@@ -607,7 +675,6 @@ class BandIndexStore(_HashLayoutStore):
             "band_hash",
             self._bucket_of("band_hash").alias("bucket"),
         ).dropna()
-        man = self._snapshot()
         empty = incoming.select("id_new").limit(0).withColumn(
             "id_stored", F.col("id_new")
         )
@@ -717,10 +784,11 @@ class BandIndexStore(_HashLayoutStore):
         )
 
     def _candidates_table(self, bands):
-        """candidates() of a pyarrow Table of band rows with their
-        buckets, on the driver: the touched files' cached footers plan the
-        row groups and _band_pairs reads them — no Spark job. A non-local
-        root or an unreadable footer takes the frame path."""
+        """candidates() of a pyarrow Table of band rows, on the driver:
+        each row's bucket under the snapshot's count (pmod, as
+        _bucket_of), then the touched files' cached footers plan the row
+        groups and _band_pairs reads them — no Spark job. A non-local root
+        or an unreadable footer takes the frame path."""
         import pandas as pd
         import pyarrow as pa
 
@@ -730,12 +798,13 @@ class BandIndexStore(_HashLayoutStore):
         if not man or not man["files"]:
             return out.empty_table()
         probe = (
-            bands.select([self.id_col, "band_idx", "band_hash", "bucket"])
-            .rename_columns(["id_new", "band_idx", "band_hash", "bucket"])
+            bands.select([self.id_col, "band_idx", "band_hash"])
+            .rename_columns(["id_new", "band_idx", "band_hash"])
             .drop_null()
             .to_pandas()
             .drop_duplicates()
         )
+        probe["bucket"] = probe["band_hash"] % self.n_buckets
         touched = set(probe["bucket"].tolist())
         files = [
             f
@@ -784,7 +853,6 @@ class BandIndexStore(_HashLayoutStore):
         rewritten (0 = nothing to do)."""
         if drop_bands is not None and drop_keys is not None:
             raise ValueError("pass drop_bands OR drop_keys, not both")
-        self._check_layout()
         man = self._snapshot()
         if not man or not man["files"]:
             return 0
@@ -856,7 +924,6 @@ class BandIndexStore(_HashLayoutStore):
         target_bucket_rows (a small store folds once its runs hold one
         bucket's worth of rows). The fold is compact()'s full rewrite.
         Returns True iff a fold was committed."""
-        self._check_layout()
         man = self._snapshot()
         files = man["files"] if man else []
         deltas = [f for f in files if self._is_delta(f)]
@@ -899,9 +966,9 @@ class DocumentStore(_HashLayoutStore):
     - ``n_shards=<int>`` (pinned, default 16): the creation-time count is
       layout forever, and the deterministic shard = training-shard
       identity holds across the store's life.
-    - ``n_shards=None`` (auto): the count is derived state, with a row
-      counter maintained exactly by append_docs/delete_docs (save_docs in
-      auto mode recounts the store after commit). ``maybe_reshard()``
+    - ``n_shards=None`` (auto): the count is derived state, from the
+      exact row count every commit records in the manifest.
+      ``maybe_reshard()``
       remaps the layout — a narrow re-hash of the key column, one pmod,
       one commit — once the rule asks for >= grow_factor x the current
       count. Without it each shard of an append-only store started small
@@ -1020,7 +1087,7 @@ class DocumentStore(_HashLayoutStore):
         smallest content hash survives (VERDICT r9 #3: the survivor must
         not depend on partitioning, so the committed BYTES are replay-
         and repartition-invariant, not just the key set)."""
-        self._check_layout()
+        man = self._snapshot()
         incoming = shard_assign(df, self.n_shards, self.key_col)
         # one model-sized agg: touched shards + null-key guard (<= n_shards
         # + 1 rows ever reach the driver)
@@ -1035,7 +1102,6 @@ class DocumentStore(_HashLayoutStore):
         touched = sorted(r["shard"] for r in stats)
         if not touched:
             return 0
-        man = self._snapshot()
         live = man["files"] if man else []
         self._check_schema_against_stored(
             incoming.drop("shard").schema, man, "save_docs"
@@ -1073,13 +1139,6 @@ class DocumentStore(_HashLayoutStore):
                 else self._same_shard_rule(superseded, set(touched), "save_docs")
             ),
         )
-        if self._auto:
-            # upsert mixes inserts and replacements, so the counter cannot
-            # be rolled forward from the delta alone — recount the live
-            # files (footer row counts on a local root: no Spark job)
-            now = self._snapshot()
-            total = self._row_count(now["files"], self.key_col, now, self.root)
-            self._layout_update(n_rows=total)
         return len(touched)
 
     def append_docs(self, df, on_existing: str = "raise") -> int:
@@ -1119,16 +1178,16 @@ class DocumentStore(_HashLayoutStore):
 
         ``df`` may also be a driver-side pyarrow Table: trusted, on a
         local root and with each row's ``shard`` (shard_assign under the
-        current count) it is written by pyarrow (_append_table); otherwise
-        it takes the frame path."""
+        handle's count, ``n_shards``) it is written by pyarrow
+        (_append_table); otherwise it takes the frame path."""
         if on_existing not in ("raise", "skip", "trust"):
             raise ValueError(f"append_docs: unknown on_existing {on_existing!r}")
-        self._check_layout()
         if not isinstance(df, DataFrame):
             local = self._local_root() is not None
             if on_existing == "trust" and local and "shard" in df.column_names:
                 return self._append_table(df)
             df = self.spark.createDataFrame(df)
+        man = self._snapshot()
         incoming = shard_assign(df, self.n_shards, self.key_col)
         stats = (
             incoming.groupBy("shard")
@@ -1140,7 +1199,6 @@ class DocumentStore(_HashLayoutStore):
             raise ValueError(f"append_docs: {n_null} row(s) with null {self.key_col}")
         if not stats:
             return 0
-        man = self._snapshot()
         live = man["files"] if man else []
         self._check_schema_against_stored(
             incoming.drop("shard").schema, man, "append_docs"
@@ -1181,23 +1239,21 @@ class DocumentStore(_HashLayoutStore):
 
         obs = Observation()
         new_files = self._staged_commit(
-            self._shard_write(deduped.observe(obs, F.count(F.lit(1)).alias("n")))
+            self._shard_write(deduped.observe(obs, F.count(F.lit(1)).alias("n"))),
+            rows=lambda: int(obs.get["n"]),
         )
-        if not new_files:
-            return 0
-        n_rows = int(obs.get["n"])
-        if self._auto and n_rows:
-            self._bump_rows(n_rows)
-        return n_rows
+        return int(obs.get["n"]) if new_files else 0
 
     def _append_table(self, t) -> int:
         """append_docs(on_existing="trust") of a pyarrow Table on a local
         root, with no Spark job: one pyarrow-written key-sorted file per
-        touched shard (_arrow_saving). The Table's keys must be non-null and distinct
-        (the frame path's one-survivor rule needs a content order the
-        driver does not compute)."""
+        touched shard (_arrow_saving). The Table's keys must be non-null
+        and distinct (the frame path's one-survivor rule needs a content
+        order the driver does not compute). Its ``shard`` column was
+        routed by the caller under this handle's count, so no snapshot is
+        resolved here: the commit raises if the head holds another count,
+        and on schema drift (_commit)."""
         import pyarrow.compute as pc
-        from pyspark.sql.pandas.types import from_arrow_schema
 
         key = self.key_col
         if t[key].null_count or len(pc.unique(t[key])) != t.num_rows:
@@ -1206,32 +1262,23 @@ class DocumentStore(_HashLayoutStore):
             )
         if not t.num_rows:
             return 0
-        self._check_schema_against_stored(
-            from_arrow_schema(t.drop_columns(["shard"]).schema),
-            self._snapshot(),
-            "append_docs",
-        )
         new_files = self._staged_commit(
-            self._arrow_saving(t, partition_by=("shard",), sort_by=(key,))
+            self._arrow_saving(t, partition_by=("shard",), sort_by=(key,)),
+            rows=lambda: t.num_rows,
         )
-        if not new_files:
-            return 0
-        if self._auto:
-            self._bump_rows(t.num_rows)
-        return t.num_rows
+        return t.num_rows if new_files else 0
 
     def delete_docs(self, keys: DataFrame) -> int:
         """Keyed delete: rewrite the touched shards WITHOUT the given keys
         (``keys`` must carry ``key_col``). Anti-join inside the touched
         shards only; commit semantics identical to save_docs. Returns the
         number of shards rewritten."""
-        self._check_layout()
+        man = self._snapshot()
         keyed = shard_assign(keys.select(self.key_col), self.n_shards, self.key_col)
         touched = {
             r["shard"]
             for r in keyed.select("shard").distinct().collect()
         }
-        man = self._snapshot()
         if not man or not touched:
             return 0
         superseded = self._shard_files(man["files"], touched)
@@ -1241,30 +1288,21 @@ class DocumentStore(_HashLayoutStore):
         survivors = stored.join(
             keyed.select(self.key_col), on=self.key_col, how="left_anti"
         )
-        new_files = self._staged_commit(
+        self._staged_commit(
             self._shard_write(survivors),
             removed_fn=self._same_shard_rule(superseded, touched, "delete_docs"),
         )
-        if self._auto:
-            # exact removed-row delta (footer row counts on a local root)
-            live = {**man, "files": man["files"] + new_files}
-            self._bump_rows(
-                self._row_count(new_files, self.key_col, live, self.root)
-                - self._row_count(superseded, self.key_col, live, self.root)
-            )
         return len({self._part_of(f) for f in superseded})
 
     # -- read path ---------------------------------------------------------
     def read(self) -> DataFrame:
         """Latest committed snapshot (all shards). Raises on an empty store
-        — there is no schema to fabricate an empty frame from. An auto
-        handle adopts the layout sidecar (one small read, no Spark job),
-        so its ``n_shards`` is the stored count once it has read."""
+        — there is no schema to fabricate an empty frame from. Like every
+        operation it adopts the snapshot's count, so ``n_shards`` is the
+        stored count once the handle has read."""
         man = self._snapshot()
         if not man or not man["files"]:
             raise ValueError(f"DocumentStore at {self.root} is empty")
-        if self._auto:
-            self._check_layout()
         return self._committed_parquet(man["files"], man, self.root)
 
     #: key sets at or below this take read_keys' pushed-filter path: the
@@ -1284,9 +1322,11 @@ class DocumentStore(_HashLayoutStore):
         touches every shard, and the semi-join form read them WHOLE) or
         semi-join (large key sets). A pyarrow Table of keys gets a Table
         of the stored rows' data columns (_read_keys_table)."""
-        self._check_layout()
         if not isinstance(keys, DataFrame):
             return self._read_keys_table(keys)
+        man = self._snapshot()
+        if not man:
+            raise ValueError(f"DocumentStore at {self.root} is empty")
         # a null key never matches a stored row (save/append reject null
         # keys), and count_distinct below skips nulls while the probe
         # collect would not — drop them so the count and the collect agree
@@ -1313,9 +1353,6 @@ class DocumentStore(_HashLayoutStore):
                 r[self.key_col]
                 for r in keyed.select(self.key_col).distinct().collect()
             ]
-        man = self._snapshot()
-        if not man:
-            raise ValueError(f"DocumentStore at {self.root} is empty")
         files = self._shard_files(man["files"], touched)
         if not files:
             return self.read().limit(0)  # store schema, zero rows
@@ -1388,7 +1425,10 @@ class DocumentStore(_HashLayoutStore):
         originals = sorted(f for fl in todo for f in fl)
         rows = self._committed_parquet(originals, man, self.root)
         self._staged_commit(
-            self._shard_write(rows, max_records_per_file), originals, op="optimize"
+            self._shard_write(rows, max_records_per_file),
+            originals,
+            op="optimize",
+            rows=lambda: 0,
         )
         return len(todo)
 

@@ -62,6 +62,12 @@ written before schemas were recorded has no map: its reads infer each
 group once per resolved snapshot, and the tier's next commit records
 them all.
 
+LAYOUT METADATA: a tier whose routing depends on table state (the hash
+layouts of docstore._HashLayoutStore: partition count and row count)
+records it in the manifest the same way — the full value in a
+checkpoint, a delta manifest only when it changed — so the state commits
+atomically with the files it describes.
+
 CONCURRENCY: commits are a read-rebase-commit loop. The manifest publish
 is CREATE-EXCLUSIVE: the fully-written tmp manifest is hard-linked to its
 versioned name on local filesystems (atomic, fails if the version exists
@@ -611,34 +617,6 @@ class SnapshotStore:
         finally:
             stream.close()
 
-    # -- layout sidecar (driver-side JSON, outside the manifest protocol) --
-    #: pins a derived-layout tier's identity (DocumentStore shard count,
-    #: BandIndexStore bucket count) and holds its auto-mode row counter
-    _LAYOUT = "_layout.json"
-
-    def _read_layout(self) -> dict:
-        return json.loads(self._read_bytes(self._LAYOUT))
-
-    def _write_layout(self, layout: dict) -> None:
-        self._write_bytes(self._LAYOUT, json.dumps(layout).encode())
-
-    def _layout_update(self, **fields) -> dict:
-        """Read-modify-write the layout sidecar — bookkeeping fields
-        (n_rows, the derived count) only; pinned identity fields never
-        change this way."""
-        stored = self._read_layout()
-        stored.update(fields)
-        self._write_layout(stored)
-        return stored
-
-    def _bump_rows(self, delta: int) -> None:
-        """Auto-mode row bookkeeping (best-effort under concurrent
-        writers — a lost increment only delays the growth trigger; the
-        re-layout rewrite recounts exactly)."""
-        stored = self._read_layout()
-        stored["n_rows"] = max(0, int(stored.get("n_rows", 0)) + delta)
-        self._write_layout(stored)
-
     # -- manifest protocol -----------------------------------------------
     def _manifest_versions(self) -> list[int]:
         fs, mdir = self._fs_path(_MANIFEST_DIR)
@@ -702,12 +680,13 @@ class SnapshotStore:
         return out
 
     def _resolve(self, version: int) -> dict:
-        """Resolved snapshot {version, files, schemas} of manifest
+        """Resolved snapshot {version, files, schemas, layout} of manifest
         v<version>: walk back to the nearest checkpoint manifest (one
         embedding the full ``files`` list — every _CHECKPOINT_EVERY-th
         commit, v1, and any legacy full manifest), then replay the delta
-        manifests' removed/added forward, and their group schemas the same
-        way. Bounded by the checkpoint cadence, never O(history)."""
+        manifests' removed/added forward, and their group schemas and
+        layout metadata the same way. Bounded by the checkpoint cadence,
+        never O(history)."""
         deltas = []
         v, man = version, self._read_manifest(version)
         while "files" not in man and "checkpoint" not in man:
@@ -719,11 +698,13 @@ class SnapshotStore:
         else:  # legacy JSON-embedded checkpoint
             files = set(man["files"])
         schemas = dict(man.get("schemas", {}))
+        layout = man.get("layout")
         for d in reversed(deltas):
             files -= set(d["removed"])
             files |= set(d["added"])
             schemas.update(d.get("schemas", {}))
-        return {"version": version, "files": sorted(files), "schemas": schemas}
+            layout = d.get("layout", layout)
+        return dict(version=version, files=sorted(files), schemas=schemas, layout=layout)
 
     def _snapshot(self) -> dict | None:
         """Latest committed snapshot, resolved; bootstraps a v1 checkpoint
@@ -778,6 +759,7 @@ class SnapshotStore:
         removed: list[str],
         prev: dict | None,
         schemas: dict | None = None,
+        layout=None,
     ) -> dict:
         """Publish one commit atomically, then vacuum what the PREVIOUS
         commit superseded (safe: after this commit, those files are two
@@ -792,6 +774,13 @@ class SnapshotStore:
         carries every group's schema, a delta manifest the groups whose
         schema changed. Without it the previous schemas carry over.
 
+        ``layout(prev, added, removed, new)`` returns the tier's layout
+        metadata for ``new``, the snapshot this commit publishes (a hash
+        tier's partition count and row count, _HashLayoutStore), and may
+        raise to abort the commit. A checkpoint manifest carries it, a
+        delta manifest only when it changed. Without it the previous
+        layout carries over.
+
         The publish is create-exclusive on every scheme (_publish_manifest):
         a lost race raises ConcurrentCommit for _commit_rebased to retry.
         Returns the new RESOLVED snapshot."""
@@ -801,6 +790,9 @@ class SnapshotStore:
         old = prev["schemas"] if prev else {}
         known = self._next_schemas(prev, files, added, schemas)
         changed = {g: s for g, s in known.items() if old.get(g) != s}
+        was = prev and prev["layout"]
+        new = {"version": version, "files": files, "schemas": known, "layout": was}
+        new["layout"] = layout(prev, added, removed, new) if layout else was
         ckpt_name = None
         if version == 1 or version % _CHECKPOINT_EVERY == 0:
             # uuid-unique sidecar name: two writers racing the same version
@@ -812,6 +804,8 @@ class SnapshotStore:
             changed = known
         if changed:
             man["schemas"] = changed
+        if new["layout"] and (ckpt_name or new["layout"] != was):
+            man["layout"] = new["layout"]
         try:
             self._publish_manifest(version, json.dumps(man).encode())
         except BaseException:
@@ -837,7 +831,7 @@ class SnapshotStore:
             # retained-window sweep (see _vacuum); checkpoint commits sweep
             # unconditionally, covering failures in other processes
             self._vacuum_failed = True
-        return {"version": version, "files": files, "schemas": known}
+        return new
 
     def _publish_manifest(self, version: int, data: bytes) -> None:
         """Create-exclusive manifest publish (the commit CAS). The content
@@ -884,11 +878,12 @@ class SnapshotStore:
                     f"manifest v{version} was published by a concurrent writer"
                 )
 
-    def _commit_rebased(self, delta_fn, schemas: dict | None = None) -> dict | None:
+    def _commit_rebased(self, delta_fn, schemas=None, layout=None) -> dict | None:
         """Read-rebase-commit loop: resolve the CURRENT head, ask
         ``delta_fn(latest_resolved_or_None)`` for this write's
         (added, removed) — or None to abort with no commit — and publish
-        (with the staged files' ``schemas``, see _commit).
+        (with the staged files' ``schemas`` and the ``layout`` rule, see
+        _commit).
         If the publish loses the rename CAS to a concurrent PROCESS, rebase
         onto the new head and retry (bounded); concurrent threads on this
         instance are serialized by the lock outright. delta_fn is
@@ -906,7 +901,7 @@ class SnapshotStore:
                     return None
                 added, removed = delta
                 try:
-                    return self._commit(added, removed, latest, schemas)
+                    return self._commit(added, removed, latest, schemas, layout)
                 except ConcurrentCommit as e:
                     last_err = e
             raise last_err
@@ -1076,7 +1071,7 @@ class SnapshotStore:
         return new_files
 
     def _commit_or_reclaim(
-        self, new_files: list[str], delta_fn, schemas: dict | None = None
+        self, new_files: list[str], delta_fn, schemas: dict | None = None, layout=None
     ) -> dict | None:
         """_commit_rebased, but a failed commit (same-series conflict,
         exhausted CAS retries) must not leak the already-placed files into
@@ -1095,7 +1090,7 @@ class SnapshotStore:
         unreferenced files reclaimable by a future optimize/manual sweep,
         which is recoverable, unlike deleting published data."""
         try:
-            return self._commit_rebased(delta_fn, schemas)
+            return self._commit_rebased(delta_fn, schemas, layout)
         except Exception:
             fs, _ = self._fs_path()
             for rel in new_files:
@@ -1120,6 +1115,7 @@ class SnapshotStore:
         op: str = "",
         kind: str = "",
         removed_fn=None,
+        layout=None,
     ) -> list[str]:
         """Steps 2-4 of the snapshot protocol, for every store write:
 
@@ -1137,7 +1133,8 @@ class SnapshotStore:
            staging listing IS the exact new file set. Driver-side metadata
            ops; reader visibility is gated by the manifest, not the renames.
         3. _commit_or_reclaim publishes added=<staged files> on the rebased
-           head, and deletes them again if the commit fails.
+           head, with the tier's ``layout`` rule (_commit), and deletes
+           them again if the commit fails.
 
         Conflict rule (default): every ``superseded`` file must still be
         live at the rebased head — the rewrite was computed from them, so
@@ -1175,7 +1172,7 @@ class SnapshotStore:
                 return list(superseded)
 
         self._commit_or_reclaim(
-            new_files, lambda latest: (new_files, removed_fn(latest)), schemas
+            new_files, lambda latest: (new_files, removed_fn(latest)), schemas, layout
         )
         return new_files
 
@@ -1442,10 +1439,6 @@ class OhlcvStore(SnapshotStore):
             if rel.startswith(prefix):
                 day = rel[len(prefix):].split("/", 1)[0]
                 yield datetime.strptime(day, "%Y-%m-%d").date(), rel
-
-    def _exists(self) -> bool:
-        man = self._snapshot()
-        return bool(man and man["files"])
 
     def _empty(self, with_dt: bool) -> DataFrame:
         """No rows, as an empty Arrow local relation: its plans run no job."""

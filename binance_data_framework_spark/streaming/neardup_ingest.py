@@ -496,13 +496,16 @@ def _driver_checks(
     """Gate stages 1-3 on the driver, _spark_checks' result as pyarrow
     Tables, after ONE Spark job: a projection of the checkpointed batch
     computes each row's signature, band keys, doc shard, band buckets
-    (per band store) and, with an ANN leg, the encode inputs — the Spark
-    expressions of the frame paths, under each tier's current layout —
+    and, with an ANN leg, the encode inputs — the Spark expressions of
+    the frame paths, under the layout counts the two handles last saw —
     and is collected through Arrow; the Table forms of the tier methods
     take those columns. Self-dedup runs the large-bucket UDF's pair
-    kernel per band bucket; the eval and corpus checks are _table_drops.
-    None when an id is null or repeats: such a batch takes _spark_checks,
-    whose joins define what it keeps."""
+    kernel per band bucket; the eval and corpus checks are _table_drops,
+    whose lookups route under the counts of the snapshots they resolve.
+    Their snapshots also refresh the handles' counts: one that moved (a
+    concurrent reshard or rebucket) raises, as the stale rows' commit
+    would. None when an id is null or repeats: such a batch takes
+    _spark_checks, whose joins define what it keeps."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -517,11 +520,11 @@ def _driver_checks(
         .withColumn("_bands", _band_keys(num_bands, False, num_hashes))
     )
     docstore._check_layout()
-    frame = shard_assign(frame, docstore.n_shards, docstore.key_col)
-    for name, st in (("_bucket", band_store), ("_ev_bucket", eval_band_store)):
-        if st is not None:
-            st._check_layout()
-            frame = frame.withColumn(name, F.transform("_bands", st._bucket_of))
+    band_store._check_layout()
+    routed = (docstore.n_shards, band_store.n_buckets)
+    frame = shard_assign(frame, routed[0], docstore.key_col).withColumn(
+        "_bucket", F.transform("_bands", band_store._bucket_of)
+    )
     if ann_store is not None:
         frame = ann_store._delta_projection(frame)
     t = frame.toArrow()
@@ -534,8 +537,8 @@ def _driver_checks(
     flat = lambda c: pc.list_flatten(t[c]).to_numpy().reshape(n, -1)  # noqa: E731
     sig, keys = flat("sig"), flat("_bands")
 
-    def bands_of(rows, bucket: str):
-        """The band rows of ``rows`` with their buckets' column."""
+    def bands_of(rows):
+        """The band rows of ``rows`` with their buckets in band_store."""
         rows = np.flatnonzero(rows)
         return pa.table(
             {
@@ -544,7 +547,7 @@ def _driver_checks(
                     np.tile(np.arange(num_bands, dtype=np.int32), len(rows))
                 ),
                 "band_hash": pa.array(keys[rows].ravel()),
-                "bucket": pa.array(flat(bucket)[rows].ravel()),
+                "bucket": pa.array(flat("_bucket")[rows].ravel()),
             }
         )
 
@@ -564,7 +567,7 @@ def _driver_checks(
     # 2. eval decontamination, 3. corpus check (_spark_checks' order)
     if eval_band_store is not None:
         drops, _, _ = _table_drops(
-            bands_of(alive, "_ev_bucket"), ids, sig, eval_docstore,
+            bands_of(alive), ids, sig, eval_docstore,
             eval_band_store, num_hashes, eval_threshold, False,
         )
         alive &= ~np.isin(ids, list(drops))
@@ -572,7 +575,7 @@ def _driver_checks(
         tick("eval_check")
     dman = docstore._snapshot()
     dropped, redelivered, stored = _table_drops(
-        bands_of(alive, "_bucket"), ids, sig, docstore, band_store, num_hashes,
+        bands_of(alive), ids, sig, docstore, band_store, num_hashes,
         threshold, True, own=ids[alive] if dman and dman["files"] else None,
     )
     alive &= ~np.isin(ids, list(dropped))
@@ -583,6 +586,12 @@ def _driver_checks(
     same = [h is not None and h == s for h, s in zip(held, t["sig"].to_pylist())]
     to_band = to_store | (new & np.array(same, dtype=bool))
     tick("corpus_check")
+    if (docstore.n_shards, band_store.n_buckets) != routed:
+        raise RuntimeError(
+            f"concurrent reshard or rebucket during the gate batch: its rows "
+            f"routed with (n_shards, n_buckets) {routed}, the stores now "
+            f"hold {(docstore.n_shards, band_store.n_buckets)} — retry"
+        )
     docs = t.select([id_col, "sig", *(c for c in cols if c != id_col), "shard"])
     vecs = None
     if ann_store is not None:
@@ -593,7 +602,7 @@ def _driver_checks(
         n_eval,
         int(alive.sum()),
         docs.filter(pa.array(to_store)),
-        bands_of(to_band, "_bucket"),
+        bands_of(to_band),
         vecs,
     )
 
@@ -696,10 +705,10 @@ def neardup_gate_batch(
     ``doc_reshard_factor`` (DocumentStore.maintain's grow leg): for an
     AUTO-sharded DocumentStore (n_shards=None), re-derive the shard count
     at the grown corpus after each accepted batch
-    (DocumentStore.maybe_reshard — O(1) sidecar check; the reshard itself
-    is a narrow key-hash remap). Completes the
-    growth-leg symmetry: IVF cells (r8), band buckets and doc shards
-    (r9) all track the data they index. Pinned stores no-op; None
+    (DocumentStore.maybe_reshard — O(1): the row count the store's commits
+    record in its manifest; the reshard itself is a narrow key-hash
+    remap). Completes the growth-leg symmetry: IVF cells (r8), band
+    buckets and doc shards (r9) all track the data they index. Pinned stores no-op; None
     disables.
 
     ``band_rebucket_factor`` / ``band_compact_min_files`` (VERDICT r8
@@ -707,10 +716,10 @@ def neardup_gate_batch(
     compaction legs of BandIndexStore.maintain, around its delta-run
     fold): when the band store is AUTO-bucketed (created with
     n_buckets=None), the gate re-derives its bucket count at the grown
-    corpus after each append (BandIndexStore.maybe_rebucket — O(1)
-    sidecar check; the rebucket itself is a narrow remap of committed
-    band rows) so per-batch candidate reads stay flat as the corpus
-    grows; pinned stores no-op. Otherwise, once any band bucket
+    corpus after each append (BandIndexStore.maybe_rebucket — O(1): the
+    row count its commits record in its manifest; the rebucket itself is
+    a narrow remap of committed band rows) so per-batch candidate reads
+    stay flat as the corpus grows; pinned stores no-op. Otherwise, once any band bucket
     accumulates that many committed files from streaming appends, the
     gate folds the layout (BandIndexStore.compact() — also folds
     redelivery duplicates). None disables either leg (explicit

@@ -56,6 +56,16 @@ def jobs_of(spark, group: str, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
 
+def set_layout_rows(st, rows: int) -> None:
+    """Commit ``rows`` as the row count of hash-layout store ``st``'s head
+    (a metadata-only commit) and refresh the handle from it."""
+    st._commit_rebased(
+        lambda latest: ([], []),
+        layout=lambda prev, *_: {**prev["layout"], "rows": rows},
+    )
+    st._snapshot()
+
+
 def drop_recorded_schemas(root: str) -> None:
     """Strip the group schemas from every manifest of the store at
     ``root``: the manifests of a store committed before schemas were

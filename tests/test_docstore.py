@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from binance_data_framework_spark.docstore import BandIndexStore, DocumentStore
 from binance_data_framework_spark.operators.curation import shard_assign
-from conftest import jobs_of
+from conftest import jobs_of, set_layout_rows
 
 
 def _docs(spark, rows):
@@ -296,8 +296,8 @@ def test_band_index_auto_rebucket_grows_and_preserves_candidates(
 
 
 def test_band_index_stale_handle_sees_rebucket(spark, tmp_path):
-    """Auto-mode handles re-read the layout sidecar per operation: a
-    handle opened BEFORE a rebucket routes lookups with the NEW count
+    """Every operation routes with the count of the snapshot it resolves:
+    a handle opened BEFORE a rebucket routes lookups with the NEW count
     afterwards (a stale count would prune the wrong buckets and silently
     miss candidates — the exact silent-miss class the layout pin exists
     to prevent)."""
@@ -391,46 +391,46 @@ class _DocTier:
 
 @pytest.mark.parametrize("tier", [_BandTier, _DocTier], ids=["band", "doc"])
 def test_hash_layout_lifecycle(spark, tmp_path, tier):
-    """The auto-sized hash layout both tiers share: the sidecar written at
-    creation, the pinned/auto provenance rules (a pinned remap leaves the
-    row counter alone), growth seen by a stale auto handle and by a
-    reopened one after read(), and an equal-count remap that only
-    refreshes n_rows."""
+    """The auto-sized hash layout both tiers share: the identity sidecar
+    written at creation, the count and exact row count each commit
+    records in the head manifest, the pinned/auto provenance rules,
+    growth seen by a stale auto handle and by a reopened one after read(),
+    and an equal-count remap that commits nothing."""
     t = tier(spark)
     n_of = lambda st: getattr(st, t.count)  # noqa: E731
 
-    def sidecar(n, auto, target):
-        return {
-            t.count: n, t.key: "doc_id", **t.extra,
-            t.auto: auto, t.target: target, "n_rows": 0,
-        }
+    def sidecar(auto, target):
+        return {t.key: "doc_id", **t.extra, t.auto: auto, t.target: target}
 
-    # pinned: the creation sidecar (keys in this order), a pinned reopen
-    # with another count raises, an auto handle adopts and stays pinned
+    def head(st):
+        return st._snapshot()["layout"]
+
+    # pinned: the creation sidecar (keys in this order) holds the
+    # identity; the head holds the count and the row count
     proot = str(tmp_path / "pinned")
     pinned = t.open(proot, 4, target=1)
     t.write(pinned, range(5))
-    laid = pinned._read_layout()
-    assert list(laid.items()) == list(sidecar(4, False, 1).items())
-    # an explicit pinned remap moves the count; n_rows, the auto-mode
-    # counter, stays at its creation value
+    assert list(pinned._read_layout().items()) == list(sidecar(False, 1).items())
+    assert head(pinned) == {"count": 4, "rows": t.rows(pinned)}
+    # an explicit pinned remap commits the new count with its files
     assert t.remap(pinned, 6) is True
-    assert list(pinned._read_layout().items()) == list(sidecar(6, False, 1).items())
+    assert head(pinned) == {"count": 6, "rows": t.rows(pinned)}
+    assert list(pinned._read_layout().items()) == list(sidecar(False, 1).items())
     with pytest.raises(ValueError, match="layout mismatch"):
         t.open(proot, 8)._check_layout()
-    # a row counter far past the growth threshold: pinned never grows
-    pinned._layout_update(n_rows=10**6)
+    # a row count far past the growth threshold: pinned never grows
+    set_layout_rows(pinned, 10**6)
     adopted = t.open(proot, None)
     assert t.grow(adopted) is False and t.grow(pinned) is False
     assert n_of(adopted) == n_of(pinned) == 6 and not adopted._auto
-    assert pinned._read_layout()[t.count] == 6
+    assert head(pinned)["count"] == 6
 
     # auto: the creation sidecar; a stale handle adopts the floor count
     aroot = str(tmp_path / "auto")
     auto = t.open(aroot, None, target=t.auto_target)
     auto._check_layout()
     assert list(auto._read_layout().items()) == list(
-        sidecar(t.floor, True, t.auto_target).items()
+        sidecar(True, t.auto_target).items()
     )
     stale = t.open(aroot, None)
     stale._check_layout()
@@ -438,9 +438,10 @@ def test_hash_layout_lifecycle(spark, tmp_path, tier):
     t.write(auto, range(3))
     assert t.grow(auto) is False  # below 2 x the floor
     t.write(auto, range(3, 40))
+    assert head(auto) == {"count": t.floor, "rows": t.rows(auto)}
     assert t.grow(auto) is True
     grown = n_of(auto)
-    assert grown == 20 and auto._read_layout()[t.count] == grown
+    assert grown == 20 and head(auto) == {"count": grown, "rows": t.rows(auto)}
     # the stale handle routes its next op with the grown count
     assert t.lookup(stale, [1, 2, 999]) == {1, 2}
     assert n_of(stale) == grown
@@ -452,15 +453,117 @@ def test_hash_layout_lifecycle(spark, tmp_path, tier):
     with pytest.raises(ValueError, match=t.auto_word):
         t.open(aroot, t.floor)._check_layout()
 
-    # an explicit remap to the same count commits nothing and refreshes
-    # the row counter to the exact committed count
-    exact = t.rows(auto)
+    # an explicit remap to the same count commits nothing
+    version = auto._snapshot()["version"]
     for n in (grown, None):
-        auto._layout_update(n_rows=0)
-        version = auto._snapshot()["version"]
         assert t.remap(auto, n) is False
-        assert auto._read_layout()["n_rows"] == exact
+        assert head(auto) == {"count": grown, "rows": t.rows(auto)}
         assert auto._snapshot()["version"] == version
+
+
+class _Crash(BaseException):
+    """A writer process dying: raised past every ``except Exception``."""
+
+
+@pytest.mark.parametrize("tier", [_BandTier, _DocTier], ids=["band", "doc"])
+def test_remap_crash_after_publish_keeps_routing(spark, tmp_path, monkeypatch, tier):
+    """A remap whose writer dies right after its manifest publish leaves
+    a store that a fresh auto handle routes with the new count: the
+    count is committed with the files, so candidates/read_keys find every
+    stored row."""
+    t = tier(spark)
+    root = str(tmp_path / "store")
+    st = t.open(root, None, target=t.auto_target)
+    t.write(st, range(40))
+    real = st._commit
+
+    def crash_after_remap(added, removed, *rest):
+        man = real(added, removed, *rest)
+        if removed:
+            raise _Crash
+        return man
+
+    monkeypatch.setattr(st, "_commit", crash_after_remap)
+    with pytest.raises(_Crash):
+        t.grow(st)
+    fresh = t.open(root, None)
+    assert t.lookup(fresh, range(40)) == set(range(40))
+    assert getattr(fresh, t.count) == 20
+
+
+def test_append_table_routed_before_a_reshard_raises(spark, tmp_path, monkeypatch):
+    """A second handle reshards between an append_docs Table's routing
+    and its commit: the append raises the reshard conflict, none of its
+    rows land (under either count) and the handle then routes with the
+    new count, so the re-routed append lands."""
+    root = str(tmp_path / "ds")
+    a = DocumentStore(spark, root, n_shards=None, target_shard_rows=2)
+    a.append_docs(_docs(spark, [(i, f"t{i}", 0.0) for i in range(10)]))
+    before = a._snapshot()
+    new = _docs(spark, [(i, f"t{i}", 0.0) for i in range(10, 14)])
+    table = shard_assign(new, a.n_shards).toArrow()
+    b = DocumentStore(spark, root, n_shards=None)
+    real = DocumentStore._publish_staged
+
+    def racing_publish(self, staging):
+        if self is a:
+            assert b.reshard(8) is True
+        return real(self, staging)
+
+    monkeypatch.setattr(DocumentStore, "_publish_staged", racing_publish)
+    with pytest.raises(RuntimeError, match="concurrent reshard"):
+        a.append_docs(table, on_existing="trust")
+    monkeypatch.undo()
+    man = a._snapshot()
+    assert man["layout"] == {"count": 8, "rows": 10} and a.n_shards == 8
+    assert set(a._list_data_files()) <= set(before["files"]) | set(man["files"])
+    assert {r["doc_id"] for r in a.read().collect()} == set(range(10))
+    assert a.append_docs(shard_assign(new, a.n_shards).toArrow(), "trust") == 4
+    keys = spark.createDataFrame([(i,) for i in range(14)], "doc_id bigint")
+    assert {r["doc_id"] for r in a.read_keys(keys).collect()} == set(range(14))
+    assert a._snapshot()["layout"] == {"count": 8, "rows": 14}
+
+
+@pytest.mark.parametrize("tier", [_BandTier, _DocTier], ids=["band", "doc"])
+def test_store_in_sidecar_count_format_upgrades_once(spark, tmp_path, tier):
+    """A store laid down in the format that kept the count and the row
+    counter in ``_layout.json`` (manifests without layout) opens, routes
+    with its grown count and is upgraded once: one metadata-only commit
+    records the sidecar's count and the exact row count (the sidecar's
+    counter had drifted), and the sidecar keeps only the identity. It
+    then accepts writes."""
+    import glob
+    import json
+
+    t = tier(spark)
+    root = str(tmp_path / "store")
+    st = t.open(root, None, target=t.auto_target)
+    t.write(st, range(40))
+    assert t.remap(st) is True
+    identity = st._read_layout()
+    for path in glob.glob(os.path.join(root, "_manifests", "v*.json")):
+        with open(path) as f:
+            man = json.load(f)
+        man.pop("layout", None)
+        with open(path, "w") as f:
+            json.dump(man, f)
+    st._write_layout({t.count: 20, **identity, "n_rows": 7})
+    version = st._snapshot()["version"]
+
+    old = t.open(root, None)
+    assert t.lookup(old, [1, 2, 39, 999]) == {1, 2, 39}
+    assert getattr(old, t.count) == 20
+    man = old._snapshot()
+    assert man["version"] == version + 1
+    assert man["layout"] == {"count": 20, "rows": t.rows(old)}
+    assert old._read_manifest(man["version"])["added"] == []
+    assert old._read_layout() == identity
+    again = t.open(root, None)
+    again._check_layout()
+    assert again._snapshot()["version"] == version + 1
+    t.write(again, range(40, 45))
+    assert t.lookup(again, [42]) == {42}
+    assert again._snapshot()["layout"] == {"count": 20, "rows": t.rows(again)}
 
 
 def test_reads_plan_from_recorded_schema_after_each_commit(
@@ -524,9 +627,10 @@ def test_drifted_schema_commit_raises_before_publish(spark, tmp_path):
 
 
 def test_auto_row_counter_runs_no_extra_job(spark, tmp_path):
-    """On a local root the auto-mode row counter reads parquet footers:
-    save_docs and delete_docs on an auto store run exactly the jobs a
-    pinned 4-shard store runs, and n_rows stays exact."""
+    """On a local root the row count each commit records reads parquet
+    footers: save_docs and delete_docs on an auto store run exactly the
+    jobs a pinned 4-shard store runs, and both heads' row counts stay
+    exact."""
     pinned = DocumentStore(spark, str(tmp_path / "pinned"), n_shards=4)
     auto = DocumentStore(spark, str(tmp_path / "auto"), n_shards=None)
     rows = _docs(spark, [(i, f"t{i}", 0.0) for i in range(200)])
@@ -541,8 +645,8 @@ def test_auto_row_counter_runs_no_extra_job(spark, tmp_path):
         n_pinned, _ = jobs_of(spark, f"pinned-{label}", lambda: op(pinned))
         n_auto, _ = jobs_of(spark, f"auto-{label}", lambda: op(auto))
         assert n_auto == n_pinned, label
-        n_rows = auto._read_layout()["n_rows"]
-        assert n_rows == auto.read().count() == pinned.read().count(), label
+        rows = {st._snapshot()["layout"]["rows"] for st in (auto, pinned)}
+        assert rows == {auto.read().count()} == {pinned.read().count()}, label
     assert auto.n_shards == 4 and auto.read().count() == 250 - 84
 
 

@@ -620,7 +620,7 @@ def test_stream_kline_source_to_store_end_to_end(spark, tmp_path):
         while _time.time() < deadline:
             # snapshot-manifest commits: reads concurrent with micro-batch
             # upserts are safe by design — no error tolerance needed here
-            if store._exists() and store.get_data("BTCUSDT", "1h").count() >= 8:
+            if store._snapshot() and store.get_data("BTCUSDT", "1h").count() >= 8:
                 break
             _time.sleep(0.5)
         _time.sleep(2)
@@ -954,7 +954,7 @@ def test_stream_endurance_restart_exactly_once(spark, tmp_path):
     try:
         deadline = _time.time() + 180
         while _time.time() < deadline:
-            if store._exists() and store.get_data("BTCUSDT", "1h").count() >= 10:
+            if store._snapshot() and store.get_data("BTCUSDT", "1h").count() >= 10:
                 break
             _time.sleep(0.25)
     finally:

@@ -15,7 +15,7 @@ from binance_data_framework_spark.ann_index import AnnIndexStore
 from binance_data_framework_spark.docstore import BandIndexStore, DocumentStore
 from binance_data_framework_spark.operators.curation import shard_assign
 from binance_data_framework_spark.store import OhlcvStore, SnapshotStore
-from conftest import jobs_of
+from conftest import jobs_of, set_layout_rows
 
 #: one manifest listing holding every tier's layout files plus the files
 #: each tier must leave out of its partitions
@@ -201,9 +201,10 @@ def test_maintain_order(spark, tmp_path, monkeypatch, tier):
     step(2.0, 3, True, [grow, *fold, compact])
     groups = st._files_by_part(st._snapshot()["files"])
     assert sorted(len(fl) for fl in groups.values()) == [1, 1]
-    # a row counter past the growth threshold; a 1-file threshold makes
-    # the compaction due as well
-    st._layout_update(n_rows=10**4)
+    # a head row count past the growth threshold; a 1-file threshold
+    # makes the compaction due as well
+    set_layout_rows(st, 10**4)
+    v = _version(st)
     step(2.0, 1, True, [grow])
     if fold:
         st.append(t.delta_run)

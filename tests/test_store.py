@@ -1541,11 +1541,11 @@ def test_mixed_legacy_series_reads_and_upserts(spark, tmp_path, monkeypatch):
     eth = sorted(f for f in fresh._list_data_files() if f.startswith("symbol=ETHUSDT/"))
     real_commit = fresh._commit
 
-    def lose_rewrite_race(added, removed, prev, schemas=None):
+    def lose_rewrite_race(added, removed, prev, *rest):
         if removed and prev["version"] == 1:  # another writer rewrites first
             OhlcvStore(spark, fresh.root)._snapshot()
             raise ConcurrentCommit("simulated lost race")
-        return real_commit(added, removed, prev, schemas)
+        return real_commit(added, removed, prev, *rest)
 
     monkeypatch.setattr(fresh, "_commit", lose_rewrite_race)
     assert fresh.check_data_exists("ETHUSDT", "1h", t0, t0 + hour, now=far)[0]
