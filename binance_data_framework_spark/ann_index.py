@@ -44,6 +44,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Callable
 from dataclasses import dataclass
 from functools import reduce
 
@@ -147,6 +148,43 @@ class AnnIndexStore(SnapshotStore):
         (_v), its norm and its content hash (_chash) — Spark expressions,
         so every append path normalizes and hashes a vector identically."""
         return S.with_norm(df, self.vec_col).withColumn("_chash", self._content_hash())
+
+    # -- the encode plan ----------------------------------------------------
+    # build() and append()'s distributed path encode with these three
+    # steps; each caller places its own checkpoint between them and picks
+    # its own writer. append()'s driver path computes the same rows with
+    # S.encode_ivfpq over the same kernels.
+    def _assigned(self, df: DataFrame, centroids) -> DataFrame:
+        """``df``'s _delta_projection plus its IVF cell ``_c``."""
+        return self._delta_projection(df).withColumn(
+            "_c", S._assign_udf(centroids)(F.col("_v"))
+        )
+
+    def _residuals(self, assigned: DataFrame, centroids) -> DataFrame:
+        """(id, _c, _norm, _chash, _r) of an _assigned frame: ``_r`` is
+        the vector minus its cell's centroid."""
+        return assigned.select(
+            self.id_col,
+            "_c",
+            "_norm",
+            "_chash",
+            S._residual_udf(centroids)(F.col("_v"), F.col("_c")).alias("_r"),
+        )
+
+    def _code_rows(
+        self, resid: DataFrame, sub_dim: int, pq_books, rotation, opq_books
+    ) -> DataFrame:
+        """The code rows (id, cell, norm[, chash], code, variant) of a
+        _residuals frame (without ``_chash`` for a legacy layout): the PQ
+        codes of each residual and the OPQ codes of its rotation, one row
+        per vector and variant."""
+        coded = (
+            S.pq_code_rows(resid, books, sub_dim, rot).withColumn("variant", F.lit(v))
+            for v, books, rot in (("pq", pq_books, None), ("opq", opq_books, rotation))
+        )
+        return reduce(DataFrame.unionByName, coded).withColumnsRenamed(
+            {"_c": "cell", "_code": "code", "_norm": "norm", "_chash": "chash"}
+        )
 
     # -- filtered-search decision cache -------------------------------------
     # VERDICT r9 #7: the selectivity-gated filtered search re-measures
@@ -359,7 +397,6 @@ class AnnIndexStore(SnapshotStore):
             ):
                 return existing
 
-        sub_dim = dim // m_sub
         # Sampled training (VERDICT r10 #1): Lloyd iterations only need
         # ~TRAIN_SAMPLE_PER_CENTROID points per centroid to place cells /
         # codebooks — training on the full corpus made build the one ANN
@@ -381,14 +418,6 @@ class AnnIndexStore(SnapshotStore):
         centroids = S.kmeans_fit(
             train_df, n_centroids, 3, self.id_col, self.vec_col, dim
         )
-        # _chash = this vector's contribution to the fingerprint's
-        # content_sum, stored PER CODE ROW so delete() can subtract exactly
-        # the deleted vectors' contributions without re-reading the corpus
-        base = (
-            S.with_norm(df, self.vec_col)
-            .withColumn("_c", S._assign_udf(centroids)(F.col("_v")))
-            .withColumn("_chash", self._content_hash())
-        )
         # One corpus materialization, placed AFTER the residual projection
         # (r11): every downstream consumer — both encode passes and (on
         # at-or-below-cap corpora) both trainings — needs only
@@ -396,13 +425,8 @@ class AnnIndexStore(SnapshotStore):
         # residual (the r10 layout) stored embedding + _v (two full vector
         # payloads per row, ~2.5x this checkpoint's bytes) and re-ran the
         # residual UDF on every scan of it.
-        resid = base.select(
-            self.id_col,
-            "_c",
-            "_norm",
-            "_chash",
-            S._residual_udf(centroids)(F.col("_v"), F.col("_c")).alias("_r"),
-        ).localCheckpoint(eager=False)
+        resid = self._residuals(self._assigned(df, centroids), centroids)
+        resid = resid.localCheckpoint(eager=False)
         if train_frac < 1.0:
             # sample-sized residual lineage rooted at the sample
             # checkpoint: the ~10 training actions inside pq/opq iterate
@@ -426,39 +450,7 @@ class AnnIndexStore(SnapshotStore):
         rotation, opq_books = S.opq_train(
             train_resid, m_sub, ksub, 2, 2, dim, self.id_col
         )
-
-        import numpy as np
-
-        coded_pq = resid.select(
-            self.id_col,
-            "_c",
-            "_norm",
-            "_chash",
-            S._pq_codes_udf(pq_books, sub_dim)(F.col("_r")).alias("_code"),
-        ).withColumn("variant", F.lit("pq"))
-        rotated = resid.select(
-            self.id_col,
-            "_c",
-            "_norm",
-            "_chash",
-            S._rotate_udf(np.asarray(rotation))(F.col("_r")).alias("_rr"),
-        )
-        coded_opq = rotated.select(
-            self.id_col,
-            "_c",
-            "_norm",
-            "_chash",
-            S._pq_codes_udf(opq_books, sub_dim)(F.col("_rr")).alias("_code"),
-        ).withColumn("variant", F.lit("opq"))
-
-        coded = (
-            coded_pq.unionByName(coded_opq)
-            .withColumnRenamed("_c", "cell")
-            .withColumnRenamed("_code", "code")
-            .withColumnRenamed("_norm", "norm")
-            .withColumnRenamed("_chash", "chash")
-        )
-
+        coded = self._code_rows(resid, dim // m_sub, pq_books, rotation, opq_books)
         # full-replace: a rebuild supersedes every prior artifact file
         return self._commit_model(
             self._cell_write(coded),
@@ -522,14 +514,15 @@ class AnnIndexStore(SnapshotStore):
         )
         return _saving(rows, "codes", writer)
 
-    def _committed_ids_among(self, ids: list, masked: bool) -> set:
+    def _committed_ids_among(self, ids: list, man: dict, masked: bool) -> set:
         """The ids among ``ids`` (a collected, micro-batch-sized delta id
-        list) already present in the committed code layout. Point probe
-        (the DocumentStore.read_keys rule one tier over): on a local root
-        the cached footer id-ranges plan the row groups that can hold an
-        id (code files are id-sorted within each (variant, cell), so the
-        bounds are tight — a batch of genuinely new ids hits nothing) and
-        pyarrow reads just their id column on the driver, no Spark job.
+        list) already present in the code layout of snapshot ``man``.
+        Point probe (the DocumentStore.read_keys rule one tier over): on a
+        local root the cached footer id-ranges plan the row groups that
+        can hold an id (code files are id-sorted within each (variant,
+        cell), so the bounds are tight — a batch of genuinely new ids hits
+        nothing) and pyarrow reads just their id column on the driver, no
+        Spark job.
         The files whose footer cannot be read (a concurrent vacuum), or
         every file on another root, take a Spark scan with the id list
         pushed in. A delta run holds an id's pq and opq rows, so a hit may
@@ -539,10 +532,9 @@ class AnnIndexStore(SnapshotStore):
         import pyarrow.parquet as pq
 
         ids = sorted(set(ids))
-        man = self._snapshot()
         files = [
             f
-            for f in (man["files"] if man else [])
+            for f in man["files"]
             if self._is_code_delta(f) or ((vc := self._part_of(f)) and vc[0] == "pq")
         ]
         if not files or not ids:
@@ -649,12 +641,12 @@ class AnnIndexStore(SnapshotStore):
         contribution.
 
         Two encode paths, one set of numpy kernels (operators.similarity
-        encode_ivfpq and the UDFs that wrap the same functions): a delta of
-        at most min(APPEND_PROBE_MAX, CODES_DELTA_MAX_VECTORS) vectors is
-        collected once and encoded on the driver (_encode_on_driver); a
-        larger one is encoded by pandas UDFs in Spark
-        (_encode_distributed). Both write the same code rows and roll the
-        same fingerprint.
+        encode_ivfpq and the UDFs that wrap the same functions), chosen by
+        one size rule: a delta of at most min(APPEND_PROBE_MAX,
+        CODES_DELTA_MAX_VECTORS) vectors is collected once and encoded on
+        the driver (_encode_on_driver); a larger one is encoded by the
+        build's Spark plan (_encode_distributed). Both write the same code
+        rows and roll the same fingerprint.
 
         ``purge`` decides when pending tombstones are physically reclaimed
         (ADVICE r7 #3 — the old unconditional purge attached an
@@ -679,30 +671,37 @@ class AnnIndexStore(SnapshotStore):
         search path reads codes() masked.
 
         ``delta`` may also be a driver-side pyarrow Table of id and
-        _delta_projection columns (a collect of the caller's batch): it
-        takes the driver encode whatever its size and its fingerprint is
-        summed from it — no checkpoint or fingerprint job."""
+        _delta_projection columns (a collect of the caller's batch). The
+        same size rule applies: within the bound its fingerprint is summed
+        from it (no checkpoint or fingerprint job); above it, its id and
+        vector columns become a frame for the distributed encode."""
         if purge not in ("auto", "always", "never"):
             raise ValueError(f"append: unknown purge mode {purge!r}")
+        bound = min(self.APPEND_PROBE_MAX, self.CODES_DELTA_MAX_VECTORS)
         table = None
-        if not isinstance(delta, DataFrame):
+        if not isinstance(delta, DataFrame) and delta.num_rows <= bound:
             table = delta
             n_ids = table.num_rows - table[self.id_col].null_count
             dfp = [table.num_rows]
             # the tombstone re-add check below joins the delta's ids
             delta = self.spark.createDataFrame(table.select([self.id_col]))
-        # The delta plan feeds up to five separate ACTIONS below (re-add
-        # check, fingerprint, in-delta dup agg, membership probe, encode +
-        # write) — materialize it ONCE. Without this every action re-runs
-        # the caller's upstream plan, which is NOT batch-sized in general:
-        # the r11 20M-vector ann_ops point measured a fixed 2000-row
-        # append at 85 s because its sort-limit delta plan re-scanned the
-        # 20M-row corpus per action (14.6 s at 2M); with the checkpoint
-        # the op is O(delta plan once + batch work). Bulk-load deltas
-        # spill to disk via the default MEMORY_AND_DISK blocks. The
-        # fingerprint rides this job as observe() metrics; both encode
-        # paths recompute it for the frame they actually index.
         else:
+            if not isinstance(delta, DataFrame):
+                delta = self.spark.createDataFrame(
+                    delta.select([self.id_col, self.vec_col])
+                )
+            # The delta plan feeds up to five separate ACTIONS below
+            # (re-add check, fingerprint, in-delta dup agg, membership
+            # probe, encode + write) — materialize it ONCE. Without this
+            # every action re-runs the caller's upstream plan, which is NOT
+            # batch-sized in general: the r11 20M-vector ann_ops point
+            # measured a fixed 2000-row append at 85 s because its
+            # sort-limit delta plan re-scanned the 20M-row corpus per
+            # action (14.6 s at 2M); with the checkpoint the op is
+            # O(delta plan once + batch work). Bulk-load deltas spill to
+            # disk via the default MEMORY_AND_DISK blocks. The fingerprint
+            # rides this job as observe() metrics; both encode paths
+            # recompute it for the frame they actually index.
             delta, dfp, n_ids = self._ckpt_fingerprint(delta)
         if n_ids != dfp[0]:
             # a null id cannot be probed, deduplicated or summed into the
@@ -711,56 +710,49 @@ class AnnIndexStore(SnapshotStore):
                 f"append: {dfp[0] - n_ids} null id(s) in the delta — every "
                 f"vector needs an id"
             )
-        tomb0 = self._tombstones_from(self._snapshot())
+        # one snapshot for the whole append: the model it encodes with,
+        # the membership probe and the commit's conflict rule (_model_rule)
+        # all read it
+        man = self._snapshot()
+        tomb0 = self._tombstones_from(man)
         if tomb0 is not None:
-            if purge == "always":
-                self.purge_tombstones()
-            else:
+            n_readd = 0
+            if purge != "always":
                 n_readd = delta.join(
                     F.broadcast(tomb0), self.id_col, "left_semi"
                 ).count()
-                if n_readd:
-                    if purge == "never":
-                        raise ValueError(
-                            f"append: {n_readd} delta id(s) have live "
-                            f"tombstones — run purge_tombstones() first "
-                            f"(purge='never'), or use purge='auto'"
-                        )
-                    self.purge_tombstones()
-                elif (
-                    purge == "auto"
-                    and tomb0.count() >= self.PURGE_APPEND_THRESHOLD
-                ):
-                    # threshold purge belongs to "auto" only: "never" is
-                    # the explicit-maintenance mode and must not attach
-                    # the O(affected-cells) rewrite it exists to avoid
-                    # (ADVICE r8 #1)
-                    self.purge_tombstones()
-        idx = self.load()
+            if n_readd and purge == "never":
+                raise ValueError(
+                    f"append: {n_readd} delta id(s) have live "
+                    f"tombstones — run purge_tombstones() first "
+                    f"(purge='never'), or use purge='auto'"
+                )
+            # threshold purge belongs to "auto" only: "never" is the
+            # explicit-maintenance mode and must not attach the
+            # O(affected-cells) rewrite it exists to avoid (ADVICE r8 #1)
+            if (
+                purge == "always"
+                or n_readd
+                or (purge == "auto" and tomb0.count() >= self.PURGE_APPEND_THRESHOLD)
+            ):
+                self.purge_tombstones()
+                man = self._snapshot()
+        idx = self._index_of(man)
         if idx is None:
             raise ValueError(
                 f"AnnIndexStore at {self.root} is empty — build() before append()"
             )
-        # orig_man MUST be the manifest idx was parsed from (its version),
-        # not a fresh _snapshot(): a rebuild landing between load() and a
-        # later snapshot read would make the concurrency check (_model_rule)
-        # compare against the NEW model while the encode below uses the
-        # OLD one — committing stale-quantizer codes that the check can't
-        # see (review r6b #1, TOCTOU).
-        orig_man = self._resolve(idx.version)
         if dfp[0] == 0:
             return idx
         # stores committed before delete support lack the chash column;
         # keep their code schema uniform (delete stays unsupported there
         # until a rebuild) instead of writing mixed-schema files
         with_chash = not any(
-            f.startswith("codes/") for f in orig_man["files"]
-        ) or "chash" in self._group_schema(orig_man, "codes").fieldNames()
+            f.startswith("codes/") for f in man["files"]
+        ) or "chash" in self._group_schema(man, "codes").fieldNames()
         # a delta that the membership probe may collect and that lands as
         # one delta run is encoded on the driver; bulk loads stay in Spark
-        if table is not None or dfp[0] <= min(
-            self.APPEND_PROBE_MAX, self.CODES_DELTA_MAX_VECTORS
-        ):
+        if dfp[0] <= bound:
             if table is None:
                 table = (
                     self._delta_projection(delta)
@@ -768,7 +760,7 @@ class AnnIndexStore(SnapshotStore):
                     .toArrow()
                 )
             staged = self._encode_on_driver(
-                table, idx, check_duplicates, skip_existing, with_chash
+                table, idx, man, check_duplicates, skip_existing, with_chash
             )
         else:
             staged = self._encode_distributed(
@@ -779,7 +771,7 @@ class AnnIndexStore(SnapshotStore):
         write_codes, dfp = staged
         return self._commit_model(
             write_codes,
-            self._model_rule(orig_man, "append"),
+            self._model_rule(man, "append"),
             self._rolled_params(idx),
             [a + b for a, b in zip(idx.fingerprint, dfp)],
             idx.centroids,
@@ -822,6 +814,7 @@ class AnnIndexStore(SnapshotStore):
         self,
         t,
         idx: AnnIndex,
+        man: dict,
         check_duplicates: bool,
         skip_existing: bool,
         with_chash: bool,
@@ -829,9 +822,10 @@ class AnnIndexStore(SnapshotStore):
         """append()'s micro-batch path over ``t``, the delta's
         _delta_projection collected through Arrow (norm and chash are
         Spark expressions, so they are bit-identical to the distributed
-        path): (write_codes, delta fingerprint), or None when
-        skip_existing leaves nothing. The membership checks are set
-        operations, the fingerprint is summed as Python ints, the codes
+        path), against ``man``, the snapshot ``idx`` was read from:
+        (write_codes, delta fingerprint), or None when skip_existing
+        leaves nothing. The membership checks are set operations, the
+        fingerprint is summed as Python ints, the codes
         come from the same numpy kernels the encode UDFs wrap, and
         pyarrow writes the delta run — no JVM->Python UDF crossing."""
         import numpy as np
@@ -839,7 +833,7 @@ class AnnIndexStore(SnapshotStore):
 
         ids = t.column(self.id_col).to_pylist()
         if skip_existing:
-            existing = self._committed_ids_among(ids, masked=False)
+            existing = self._committed_ids_among(ids, man, masked=False)
             if existing:
                 t = t.filter(pa.array([i not in existing for i in ids]))
                 ids = t.column(self.id_col).to_pylist()
@@ -852,7 +846,7 @@ class AnnIndexStore(SnapshotStore):
             # redundant under skip_existing, which just dropped the
             # committed ids (review r7 #2)
             if not skip_existing:
-                n_dup = len(self._committed_ids_among(ids, masked=True))
+                n_dup = len(self._committed_ids_among(ids, man, masked=True))
                 if n_dup:
                     raise self._collision_error(n_dup)
         chash = t.column("_chash")
@@ -953,62 +947,18 @@ class AnnIndexStore(SnapshotStore):
                 )
                 if n_dup:
                     raise self._collision_error(n_dup)
-        sub_dim = idx.dim // idx.m_sub
-        centroids = idx.centroids
-        base = (
-            S.with_norm(delta, self.vec_col)
-            .withColumn("_c", S._assign_udf(centroids)(F.col("_v")))
-            .withColumn("_chash", self._content_hash())
-        )
         # EAGER: unlike build(), append has no training collects to
         # materialize a lazy checkpoint before the code write, whose
         # pq/opq subtrees would otherwise each recompute the norm+assign
         # UDF pass over the whole delta (first-action-no-dedup trap;
         # review r6b #7)
-        base = base.localCheckpoint(eager=True)
-        resid = base.select(
-            self.id_col,
-            "_c",
-            "_norm",
-            "_chash",
-            S._residual_udf(centroids)(F.col("_v"), F.col("_c")).alias("_r"),
-        )
-
-        import numpy as np
-
-        coded_pq = resid.select(
-            self.id_col,
-            "_c",
-            "_norm",
-            "_chash",
-            S._pq_codes_udf(idx.pq_books, sub_dim)(F.col("_r")).alias("_code"),
-        ).withColumn("variant", F.lit("pq"))
-        rotated = resid.select(
-            self.id_col,
-            "_c",
-            "_norm",
-            "_chash",
-            S._rotate_udf(np.asarray(idx.opq_rotation))(F.col("_r")).alias("_rr"),
-        )
-        coded_opq = rotated.select(
-            self.id_col,
-            "_c",
-            "_norm",
-            "_chash",
-            S._pq_codes_udf(idx.opq_books, sub_dim)(F.col("_rr")).alias("_code"),
-        ).withColumn("variant", F.lit("opq"))
+        assigned = self._assigned(delta, idx.centroids).localCheckpoint(eager=True)
+        resid = self._residuals(assigned, idx.centroids)
         if not with_chash:
-            coded_pq = coded_pq.drop("_chash")
-            coded_opq = coded_opq.drop("_chash")
-
-        coded = (
-            coded_pq.unionByName(coded_opq)
-            .withColumnRenamed("_c", "cell")
-            .withColumnRenamed("_code", "code")
-            .withColumnRenamed("_norm", "norm")
-            .withColumnRenamed("_chash", "chash")
+            resid = resid.drop("_chash")
+        coded = self._code_rows(
+            resid, idx.dim // idx.m_sub, idx.pq_books, idx.opq_rotation, idx.opq_books
         )
-
         if dfp[0] <= self.CODES_DELTA_MAX_VECTORS:
             # delta-run write (r10): a micro-batch append lands as ONE
             # (variant, cell)-sorted file instead of one near-empty file
@@ -1036,7 +986,15 @@ class AnnIndexStore(SnapshotStore):
         model file list (see ``_model_memo``): only a commit that replaced
         the model costs a read — pyarrow on a local root, else one collect
         with no schema inference."""
-        man = self._snapshot()
+        idx = self._index_of(self._snapshot())
+        if idx is not None and validate_against is not None:
+            if self._fingerprint(validate_against) != idx.fingerprint:
+                return None
+        return idx
+
+    def _index_of(self, man: dict | None) -> AnnIndex | None:
+        """The index handle of resolved snapshot ``man`` (None for an
+        empty store), its model read through the model memo."""
         if not man or not man["files"]:
             return None
         model_files = tuple(sorted(f for f in man["files"] if f.startswith("model/")))
@@ -1062,7 +1020,7 @@ class AnnIndexStore(SnapshotStore):
             )
         comp = {k: json.loads(v) for k, v in self._model_memo[1].items()}
         meta = comp["meta"]
-        idx = AnnIndex(
+        return AnnIndex(
             version=man["version"],
             dim=meta["dim"],
             n_centroids=meta["n_centroids"],
@@ -1078,10 +1036,6 @@ class AnnIndexStore(SnapshotStore):
             auto_cells=meta.get("auto_cells", False),
             target_cell=meta.get("target_cell", 100_000),
         )
-        if validate_against is not None:
-            if self._fingerprint(validate_against) != idx.fingerprint:
-                return None
-        return idx
 
     def _tombstones_from(self, man: dict | None) -> DataFrame | None:
         """Committed tombstone set (deleted-but-not-yet-purged ids) of the
@@ -1200,12 +1154,12 @@ class AnnIndexStore(SnapshotStore):
         matched). Reference analogue: delete_data
         (database_handler.py:243-255) — the reference deletes rows; the
         index tier follows suit."""
-        idx = self.load()
+        orig_man = self._snapshot()
+        idx = self._index_of(orig_man)
         if idx is None:
             raise ValueError(
                 f"AnnIndexStore at {self.root} is empty — nothing to delete"
             )
-        orig_man = self._resolve(idx.version)
         pq = self.codes("pq", masked=False)
         if "_chash" not in pq.columns:
             raise ValueError(
@@ -1391,7 +1345,7 @@ class AnnIndexStore(SnapshotStore):
         return self.compact_codes(min_files=2, fold_deltas=True) > 0
 
     def maybe_rebuild(
-        self, corpus: DataFrame, grow_factor: float = 2.0
+        self, corpus: Callable[[], DataFrame], grow_factor: float = 2.0
     ) -> bool:
         """Maintenance trigger for an index grown through appends
         (ADVICE r7 #4): append() reuses the committed quantizer AND cell
@@ -1400,15 +1354,17 @@ class AnnIndexStore(SnapshotStore):
         distribution) while the corpus grows 1000x underneath it —
         re-introducing the linear per-cell candidate growth auto_centroids
         exists to prevent. This re-runs the SAME derivation at the CURRENT
-        committed size and retrains (force build over ``corpus``) when the
-        rule asks for >= ``grow_factor`` x the committed cell count.
+        committed size and retrains (force build over ``corpus()``) when
+        the rule asks for >= ``grow_factor`` x the committed cell count.
 
-        The check is O(1) driver-side (two sidecar fields); the rebuild is
-        the corpus-sized op, by design — call this at a maintenance cadence
-        (the streaming gate calls it per accepted batch; it no-ops until
-        the threshold trips). Pinned-cell indexes (built with an explicit
-        n_centroids) never auto-rebuild: auto_cells is recorded provenance,
-        not a guess. Returns True iff a rebuild was committed."""
+        The check is O(1) driver-side (two sidecar fields), and ``corpus``
+        is called only once it trips, so a caller builds its corpus frame
+        only for a rebuild; the rebuild is the corpus-sized op, by design
+        — call this at a maintenance cadence (the streaming gate calls it
+        per accepted batch; it no-ops until the threshold trips).
+        Pinned-cell indexes (built with an explicit n_centroids) never
+        auto-rebuild: auto_cells is recorded provenance, not a guess.
+        Returns True iff a rebuild was committed."""
         idx = self.load()
         if idx is None or not idx.auto_cells:
             return False
@@ -1416,7 +1372,7 @@ class AnnIndexStore(SnapshotStore):
         if ideal < grow_factor * idx.n_centroids:
             return False
         self.build(
-            corpus,
+            corpus(),
             dim=idx.dim,
             n_centroids=None,  # re-derive at the current size
             m_sub=idx.m_sub,

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, pandas_udf
 
+from binance_data_framework_spark.materialize import collect_bounded
+
 
 def _dot(a: Column, b: Column) -> Column:
     """Sequential left-to-right double-precision dot product — bit-for-bit
@@ -158,9 +160,10 @@ def _probe_cells_udf(centroids: list[list[float]], nprobe: int):
 
 # -- IVF-PQ encode kernels ----------------------------------------------------
 # Plain numpy functions of row matrices. The pandas UDFs are thin wrappers
-# (one Arrow batch -> one kernel call), and AnnIndexStore.append encodes a
-# collected micro-batch by calling the same kernels on the driver, so the
-# two encode paths run the same arithmetic.
+# (one Arrow batch -> one kernel call) that pq_code_rows chains into the
+# Spark encode plan, and AnnIndexStore.append encodes a collected
+# micro-batch by calling the same kernels on the driver (encode_ivfpq), so
+# the two encode paths run the same arithmetic.
 
 
 def assign_cells(m: np.ndarray, cm: np.ndarray, cn: np.ndarray) -> np.ndarray:
@@ -209,8 +212,8 @@ def encode_ivfpq(
     opq_books: list[list[list[float]]],
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(cells, PQ codes, OPQ codes) of the rows of ``v`` under a committed
-    IVF-PQ model: the chain build/append run as pandas UDFs (assign,
-    residual, PQ; rotate, PQ), called once over a driver-side matrix."""
+    IVF-PQ model: the chain of _assign_udf, _residual_udf and pq_code_rows,
+    called once over a driver-side matrix."""
     cm = np.asarray(centroids, dtype=np.float64)
     cells = assign_cells(v, cm, _sq_norms(cm))
     r = residuals(v, cm, cells)
@@ -231,6 +234,61 @@ def _assign_udf(centroids: list[list[float]]):
         return pd.Series(assign_cells(np.vstack(v.to_numpy()), cm, cn))
 
     return assign
+
+
+def _pq_codes_udf(books: list[list[list[float]]], sub_dim: int):
+    """Vectorized PQ encoding: residual -> M codebook indices, one
+    pq_encode call per Arrow batch."""
+    b3 = np.asarray(books, dtype=np.float64).reshape(len(books), -1, sub_dim)
+    bn = _sq_norms(b3)  # M x ksub
+
+    @pandas_udf("array<int>")
+    def codes(r: pd.Series) -> pd.Series:
+        return pd.Series(list(pq_encode(np.vstack(r.to_numpy()), b3, bn)))
+
+    return codes
+
+
+def _residual_udf(centroids: list[list[float]]):
+    cm = np.asarray(centroids, dtype=np.float64)
+
+    @pandas_udf("array<double>")
+    def resid(v: pd.Series, c: pd.Series) -> pd.Series:
+        return pd.Series(list(residuals(np.vstack(v.to_numpy()), cm, c.to_numpy())))
+
+    return resid
+
+
+def _rotate_udf(R: np.ndarray):
+    """Vectorized orthogonal rotation: one rotate call per Arrow batch."""
+    Rt = np.asarray(R, dtype=np.float64).T
+
+    @pandas_udf("array<double>")
+    def rot(v: pd.Series) -> pd.Series:
+        return pd.Series(list(rotate(np.vstack(v.to_numpy()), Rt)))
+
+    return rot
+
+
+def pq_code_rows(
+    resid: DataFrame,
+    books: list[list[list[float]]],
+    sub_dim: int,
+    rotation: list[list[float]] | np.ndarray | None = None,
+) -> DataFrame:
+    """``resid`` with its residual column ``_r`` replaced by ``_code``, the
+    PQ codes of ``_r`` under ``books`` — of ``_r`` rotated by ``rotation``
+    first when one is given (OPQ codes). The Spark form of encode_ivfpq's
+    residual -> [rotate] -> PQ step: one kernel call per Arrow batch and
+    step, every other column carried through."""
+    keep = [c for c in resid.columns if c != "_r"]
+    if rotation is not None:
+        resid = resid.select(
+            *keep, _rotate_udf(np.asarray(rotation))(F.col("_r")).alias("_r")
+        )
+    return resid.select(
+        *keep, _pq_codes_udf(books, sub_dim)(F.col("_r")).alias("_code")
+    )
 
 
 def train_sample(
@@ -462,29 +520,6 @@ def topk_cosine_lsh(
 # ---------------------------------------------------------------------------
 
 
-def _pq_codes_udf(books: list[list[list[float]]], sub_dim: int):
-    """Vectorized PQ encoding: residual -> M codebook indices, one
-    pq_encode call per Arrow batch."""
-    b3 = np.asarray(books, dtype=np.float64).reshape(len(books), -1, sub_dim)
-    bn = _sq_norms(b3)  # M x ksub
-
-    @pandas_udf("array<int>")
-    def codes(r: pd.Series) -> pd.Series:
-        return pd.Series(list(pq_encode(np.vstack(r.to_numpy()), b3, bn)))
-
-    return codes
-
-
-def _residual_udf(centroids: list[list[float]]):
-    cm = np.asarray(centroids, dtype=np.float64)
-
-    @pandas_udf("array<double>")
-    def resid(v: pd.Series, c: pd.Series) -> pd.Series:
-        return pd.Series(list(residuals(np.vstack(v.to_numpy()), cm, c.to_numpy())))
-
-    return resid
-
-
 def pq_train(
     residuals: DataFrame,
     m_sub: int = 8,
@@ -554,17 +589,6 @@ def pq_train(
     return books
 
 
-def _rotate_udf(R: np.ndarray):
-    """Vectorized orthogonal rotation: one rotate call per Arrow batch."""
-    Rt = np.asarray(R, dtype=np.float64).T
-
-    @pandas_udf("array<double>")
-    def rot(v: pd.Series) -> pd.Series:
-        return pd.Series(list(rotate(np.vstack(v.to_numpy()), Rt)))
-
-    return rot
-
-
 def opq_train(
     residuals: DataFrame,
     m_sub: int = 8,
@@ -615,9 +639,9 @@ def opq_train(
         b3 = np.asarray(books, dtype=np.float64)
         sub_dim = dim // m_sub
         # carry the ORIGINAL x alongside its code — no join-back shuffle
-        coded = base.select(
-            "_x", _rotate_udf(R)(F.col("_x")).alias("_r")
-        ).select("_x", _pq_codes_udf(books, sub_dim)(F.col("_r")).alias("_code"))
+        coded = pq_code_rows(
+            base.select("_x", F.col("_x").alias("_r")), books, sub_dim, R
+        )
 
         def corr_partials(pdfs):
             for pdf in pdfs:
@@ -863,13 +887,9 @@ def topk_cosine_ivfpq(
             else:
                 rotation = None
                 books = pq_train(resid, m_sub, ksub, 2, dim, id_col)
-        if rotation is not None:
-            resid = resid.select(
-                id_col, "_c", _rotate_udf(np.asarray(rotation))(F.col("_r")).alias("_r")
-            )
-        coded = resid.select(
-            id_col, "_c", _pq_codes_udf(books, sub_dim)(F.col("_r")).alias("_code")
-        ).localCheckpoint(eager=False)
+        coded = pq_code_rows(resid, books, sub_dim, rotation).localCheckpoint(
+            eager=False
+        )
     else:
         if books is None:
             raise ValueError("coded requires the matching books")
@@ -1411,19 +1431,14 @@ def cosine_pairs_exact(
     the OUTPUT. Scale shape: one narrow candidate scan, no shuffle until
     the output-sized certify join."""
     base = with_norm(df, vec_col)
-    probe_rows = (
-        base.where(probe_filter)
-        .select(id_col, "_v", "_norm")
-        .limit(probe_max + 1)
-        .collect()
+    probe_rows = collect_bounded(
+        base.where(probe_filter).select(id_col, "_v", "_norm"),
+        probe_max,
+        f"cosine_pairs_exact: probe_filter matched more than "
+        f"{probe_max} rows — the probe side is collected to the "
+        f"driver and must stay probe-sized. Narrow the filter or "
+        f"raise probe_max explicitly.",
     )
-    if len(probe_rows) > probe_max:
-        raise ValueError(
-            f"cosine_pairs_exact: probe_filter matched more than "
-            f"{probe_max} rows — the probe side is collected to the "
-            f"driver and must stay probe-sized. Narrow the filter or "
-            f"raise probe_max explicitly."
-        )
     if not probe_rows:
         # np.array([]) would be shape (0,), not (0, dim), and every screen
         # task would crash on M @ P.T (ADVICE r6) — zero probes is simply

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from binance_data_framework_spark.materialize import collect_bounded
 from binance_data_framework_spark.operators import similarity as S
 
 # Hard cap on probes collected per micro-batch. serve_batch must pull the
@@ -72,16 +73,16 @@ def serve_batch(
     batch."""
     import numpy as np
 
-    rows = probes.select(id_col, vec_col).limit(SERVE_PROBE_MAX + 1).collect()
+    rows = collect_bounded(
+        probes.select(id_col, vec_col),
+        SERVE_PROBE_MAX,
+        f"serve_batch: micro-batch exceeds SERVE_PROBE_MAX="
+        f"{SERVE_PROBE_MAX} probes — bound the trigger "
+        "(maxOffsetsPerTrigger / maxFilesPerTrigger) so each batch's "
+        "probe set fits the driver-side cell-resolution budget",
+    )
     if not rows:
         return None
-    if len(rows) > SERVE_PROBE_MAX:
-        raise ValueError(
-            f"serve_batch: micro-batch exceeds SERVE_PROBE_MAX="
-            f"{SERVE_PROBE_MAX} probes — bound the trigger "
-            "(maxOffsetsPerTrigger / maxFilesPerTrigger) so each batch's "
-            "probe set fits the driver-side cell-resolution budget"
-        )
     pv = np.array([list(r[vec_col]) for r in rows], dtype=np.float64)
     cent = np.array(idx.centroids)
     d2 = ((pv[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)

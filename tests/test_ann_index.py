@@ -209,7 +209,9 @@ def test_append_driver_and_distributed_paths_agree(
     build, the two paths must commit identical code rows (id, variant,
     cell, code, norm, chash), the same fingerprint and the same top-k
     search results — through a skip_existing append with redelivered ids
-    and the in-delta duplicate and collision errors. Arrow batches of 3
+    and the in-delta duplicate and collision errors. The same deltas as
+    pyarrow Tables above the bound take the distributed encode too, and
+    commit the same rows and fingerprint. Arrow batches of 3
     rows make the driver encode its delta in several row blocks, as the
     UDFs encode several batches. A warm micro-batch append with one
     redelivery runs at most 5 Spark jobs on the driver path. The
@@ -230,24 +232,35 @@ def test_append_driver_and_distributed_paths_agree(
     def ids(lo, hi):
         return full.where((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
 
-    def run(name, probe_max):
+    def run(name, probe_max, as_table=False):
         shutil.copytree(src.root, tmp_path / name)
         monkeypatch.setattr(AnnIndexStore, "APPEND_PROBE_MAX", probe_max)
         st = AnnIndexStore(spark, str(tmp_path / name))
-        st.append(ids(58, 66), skip_existing=True)  # 58, 59 redelivered
+
+        def form(df):
+            return st._delta_projection(df).toArrow() if as_table else df
+
+        st.append(form(ids(58, 66)), skip_existing=True)  # 58, 59 redelivered
         with pytest.raises(ValueError, match="1 duplicate id"):
-            st.append(ids(66, 68).unionByName(ids(67, 68)))
+            st.append(form(ids(66, 68).unionByName(ids(67, 68))))
         with pytest.raises(ValueError, match="2 delta id"):
-            st.append(ids(64, 68))  # 64, 65 already indexed
+            st.append(form(ids(64, 68)))  # 64, 65 already indexed
         return st
 
     drv = run("driver", AnnIndexStore.APPEND_PROBE_MAX)
     dist = run("spark", 0)
+
+    def driver_encode(*a, **k):
+        raise AssertionError("a Table above the bound took the driver encode")
+
+    monkeypatch.setattr(AnnIndexStore, "_encode_on_driver", driver_encode)
+    tab = run("table", 0, as_table=True)
     rows = _code_rows(drv)
-    assert rows == _code_rows(dist) and len(rows) == 2 * 66
+    assert rows == _code_rows(dist) == _code_rows(tab) and len(rows) == 2 * 66
     assert (
         drv.load().fingerprint
         == dist.load().fingerprint
+        == tab.load().fingerprint
         == src._fingerprint(ids(0, 66))
     )
 
@@ -735,13 +748,13 @@ def test_maybe_rebuild_rederives_cells_on_grown_corpus(spark, tmp_path):
     # small growth: ideal = max(16, ceil(30/2)) = 16 < 2x16 -> no rebuild
     st.append(_emb(spark, n=30).where(F.col("vec_id") >= 20))
     full30 = _emb(spark, n=30)
-    assert st.maybe_rebuild(full30) is False
+    assert st.maybe_rebuild(lambda: full30) is False
     assert st.load().n_centroids == 16
 
     # grown past the factor: ideal = ceil(70/2) = 35 >= 2x16 -> rebuild
     st.append(_emb(spark, n=70).where(F.col("vec_id") >= 30))
     full70 = _emb(spark, n=70)
-    assert st.maybe_rebuild(full70) is True
+    assert st.maybe_rebuild(lambda: full70) is True
     idx2 = st.load()
     assert idx2.n_centroids == 35 and idx2.auto_cells
     assert idx2.n_vectors == 70
@@ -763,7 +776,7 @@ def test_maybe_rebuild_rederives_cells_on_grown_corpus(spark, tmp_path):
     st2 = AnnIndexStore(spark, str(tmp_path / "pinned"))
     st2.build(first, **BUILD)
     st2.append(_emb(spark, n=70).where(F.col("vec_id") >= 20))
-    assert st2.maybe_rebuild(_emb(spark, n=70)) is False
+    assert st2.maybe_rebuild(lambda: _emb(spark, n=70)) is False
     assert st2.load().n_centroids == BUILD["n_centroids"]
 
 

@@ -96,7 +96,9 @@ class _Ann:
         return self.st.maybe_fold_code_deltas(**kw)
 
     def lookup(self, ids) -> set:
-        return self.st._committed_ids_among(list(ids), masked=False)
+        return self.st._committed_ids_among(
+            list(ids), self.st._snapshot(), masked=False
+        )
 
 
 @pytest.mark.parametrize("tier", [_Band, _Ann], ids=["band", "ann"])
