@@ -35,9 +35,12 @@ FINGERPRINT (count + id-sum, one tiny agg) recorded at build time and
 checked on load: a regenerated or grown corpus triggers a rebuild instead
 of silently serving a stale quantizer.
 
-All training is deterministic (kmeans_fit / pq_train / opq_train init from
-lowest ids, no RNG), so a rebuild over the same corpus produces the
-identical model — build idempotence is testable equality, not luck.
+All training is deterministic: the S.train_* kernels init from the lowest
+ids (no RNG) and sum in id order over a driver-side matrix (one Arrow
+collect of the corpus or its training sample), so a rebuild over the same
+corpus produces the identical model however Spark partitioned it — build
+idempotence is testable equality, not luck. A corpus within append()'s
+size rule is also encoded and written on the driver (build()).
 """
 
 from __future__ import annotations
@@ -149,11 +152,17 @@ class AnnIndexStore(SnapshotStore):
         so every append path normalizes and hashes a vector identically."""
         return S.with_norm(df, self.vec_col).withColumn("_chash", self._content_hash())
 
+    def _delta_table(self, df: DataFrame):
+        """The id and _delta_projection columns of ``df``, collected
+        through Arrow in one job: what the driver encode reads."""
+        cols = (self.id_col, "_v", "_norm", "_chash")
+        return self._delta_projection(df).select(*cols).toArrow()
+
     # -- the encode plan ----------------------------------------------------
-    # build() and append()'s distributed path encode with these three
-    # steps; each caller places its own checkpoint between them and picks
-    # its own writer. append()'s driver path computes the same rows with
-    # S.encode_ivfpq over the same kernels.
+    # The distributed paths of build() and append() encode with these
+    # three steps; each places its own checkpoint between them and picks
+    # its own writer. Their driver paths compute the same rows with
+    # S.encode_ivfpq over the same kernels (_code_table).
     def _assigned(self, df: DataFrame, centroids) -> DataFrame:
         """``df``'s _delta_projection plus its IVF cell ``_c``."""
         return self._delta_projection(df).withColumn(
@@ -354,15 +363,32 @@ class AnnIndexStore(SnapshotStore):
         a certified setting.
 
         One build = IVF k-means + plain-PQ codebooks + OPQ (rotation +
-        codebooks) + two vectorized encode passes writing the
+        codebooks) + the PQ and OPQ encode of every vector into the
         cell-partitioned code layout + one commit. Past
         max(TRAIN_SAMPLE_MIN, TRAIN_SAMPLE_PER_CENTROID * n_centroids)
         vectors, ALL training runs on a deterministic id-hash sample of
         that size (S.train_sample) and only the assign/encode passes
         touch the full corpus — the sub-linear-training story (VERDICT
-        r10 #1); at or below the cap the models are bit-identical to
-        full-corpus training."""
-        fp = self._fingerprint(df)
+        r10 #1); at or below the cap the models equal full-corpus
+        training.
+
+        ``df`` may be a frame or a pyarrow Table of id and
+        _delta_projection columns, and append()'s size rule picks the
+        path. A corpus of at most min(APPEND_PROBE_MAX,
+        CODES_DELTA_MAX_VECTORS) vectors that needs no sample (a frame is
+        collected once, ``bound + 1`` rows at most) is fingerprinted,
+        trained (the S.train_* kernels), encoded (S.encode_ivfpq) and
+        written (_arrow_saving) on the driver: no Spark job for a Table on
+        a local root. A larger one keeps the fingerprint agg and the
+        Spark encode; its training sample is collected once by the
+        S trainers (Spark loops past S.TRAIN_DRIVER_MAX_BYTES)."""
+        bound = min(self.APPEND_PROBE_MAX, self.CODES_DELTA_MAX_VECTORS)
+        is_frame = isinstance(df, DataFrame)
+        table = self._delta_table(df.limit(bound + 1)) if is_frame else df
+        if is_frame and table.num_rows > bound:
+            fp = self._fingerprint(df)
+        else:
+            fp = self._table_fp(table)
         auto_cells = n_centroids is None
         if n_centroids is None:
             n_centroids = S.auto_centroids(fp[0], target_cell)
@@ -397,70 +423,58 @@ class AnnIndexStore(SnapshotStore):
             ):
                 return existing
 
-        # Sampled training (VERDICT r10 #1): Lloyd iterations only need
-        # ~TRAIN_SAMPLE_PER_CENTROID points per centroid to place cells /
-        # codebooks — training on the full corpus made build the one ANN
-        # tier whose cost grew with EVERY pass over 100 TB. The sample is
-        # a deterministic id-hash filter (S.train_sample: portable Knuth
-        # mix, no RNG state), materialized ONCE as a sample-sized
-        # checkpoint that all three trainings iterate over; the full
-        # corpus is still assigned + encoded exactly once below. Corpora
-        # at or below the cap train on everything — bit-identical models
-        # to the unsampled path, so fixture indexes, recall certificates
-        # and the oracle rows are untouched.
-        train_df, train_frac = S.train_sample(
-            df, fp[0], params["train_sample_cap"], self.id_col
-        )
-        if train_frac < 1.0:
-            train_df = train_df.select(
-                self.id_col, self.vec_col
-            ).localCheckpoint(eager=False)
-        centroids = S.kmeans_fit(
-            train_df, n_centroids, 3, self.id_col, self.vec_col, dim
-        )
-        # One corpus materialization, placed AFTER the residual projection
-        # (r11): every downstream consumer — both encode passes and (on
-        # at-or-below-cap corpora) both trainings — needs only
-        # (id, cell, norm, chash, residual). Checkpointing BEFORE the
-        # residual (the r10 layout) stored embedding + _v (two full vector
-        # payloads per row, ~2.5x this checkpoint's bytes) and re-ran the
-        # residual UDF on every scan of it.
-        resid = self._residuals(self._assigned(df, centroids), centroids)
-        resid = resid.localCheckpoint(eager=False)
-        if train_frac < 1.0:
-            # sample-sized residual lineage rooted at the sample
-            # checkpoint: the ~10 training actions inside pq/opq iterate
-            # over O(sample) rows instead of re-filtering the full-corpus
-            # checkpoint per action
+        cap = params["train_sample_cap"]
+        if fp[0] <= min(bound, cap):
+            v = S.table_matrix(table.sort_by(self.id_col), "_v")
+            cm = S.train_kmeans(v, n_centroids)
+            r = S.residuals(v, cm, S.assign_cells(v, cm, S._sq_norms(cm)))
+            rotation, opq_books = S.train_opq(r, m_sub, ksub)
+            pq_books = S.train_pq(r, m_sub, ksub)
+            model = [a.tolist() for a in (cm, pq_books, rotation, opq_books)]
+            write = self._arrow_saving(
+                self._code_table(table, model, with_chash=True),
+                "codes",
+                partition_by=("variant", "cell"),
+                sort_by=(self.id_col,),
+            )
+        else:
+            if not is_frame:
+                df = self.spark.createDataFrame(df.select([self.id_col, self.vec_col]))
+            # Sampled training (VERDICT r10 #1): Lloyd iterations only need
+            # ~TRAIN_SAMPLE_PER_CENTROID points per centroid. The sample is
+            # a deterministic id-hash filter (S.train_sample: portable Knuth
+            # mix, no RNG state); the lazy checkpoints hold it and its
+            # residuals for the trainers' one collect each, and the full
+            # corpus is assigned and encoded exactly once below.
+            train_df, _ = S.train_sample(df, fp[0], cap, self.id_col)
+            train_df = train_df.select(self.id_col, self.vec_col).localCheckpoint(
+                eager=False
+            )
+            cents = S.kmeans_fit(
+                train_df, n_centroids, 3, self.id_col, self.vec_col, dim
+            )
+            vd = F.transform(F.col(self.vec_col), lambda x: x.cast("double"))
             train_resid = train_df.select(
                 self.id_col,
-                F.transform(
-                    F.col(self.vec_col), lambda x: x.cast("double")
-                ).alias("_v"),
-            )
-            train_resid = train_resid.select(
-                self.id_col,
-                S._residual_udf(centroids)(
-                    F.col("_v"), S._assign_udf(centroids)(F.col("_v"))
-                ).alias("_r"),
+                S._residual_udf(cents)(vd, S._assign_udf(cents)(vd)).alias("_r"),
             ).localCheckpoint(eager=False)
-        else:
-            train_resid = resid
-        pq_books = S.pq_train(train_resid, m_sub, ksub, 2, dim, self.id_col)
-        rotation, opq_books = S.opq_train(
-            train_resid, m_sub, ksub, 2, 2, dim, self.id_col
-        )
-        coded = self._code_rows(resid, dim // m_sub, pq_books, rotation, opq_books)
+            model = [
+                cents,
+                S.pq_train(train_resid, m_sub, ksub, 2, dim, self.id_col),
+                *S.opq_train(train_resid, m_sub, ksub, 2, 2, dim, self.id_col),
+            ]
+            # EAGER: the code write's pq and opq branches would each
+            # recompute the assign UDF pass over the corpus
+            assigned = self._assigned(df, cents).localCheckpoint(eager=True)
+            resid = self._residuals(assigned, cents)
+            write = self._cell_write(self._code_rows(resid, dim // m_sub, *model[1:]))
         # full-replace: a rebuild supersedes every prior artifact file
         return self._commit_model(
-            self._cell_write(coded),
+            write,
             self._live,
             params,
             fp,
-            centroids,
-            pq_books,
-            rotation,
-            opq_books,
+            *model,
             {"n_planes": lsh_planes, "n_tables": lsh_tables, "seed": 42},
         )
 
@@ -754,11 +768,7 @@ class AnnIndexStore(SnapshotStore):
         # one delta run is encoded on the driver; bulk loads stay in Spark
         if dfp[0] <= bound:
             if table is None:
-                table = (
-                    self._delta_projection(delta)
-                    .select(self.id_col, "_v", "_norm", "_chash")
-                    .toArrow()
-                )
+                table = self._delta_table(delta)
             staged = self._encode_on_driver(
                 table, idx, man, check_duplicates, skip_existing, with_chash
             )
@@ -828,7 +838,6 @@ class AnnIndexStore(SnapshotStore):
         fingerprint is summed as Python ints, the codes
         come from the same numpy kernels the encode UDFs wrap, and
         pyarrow writes the delta run — no JVM->Python UDF crossing."""
-        import numpy as np
         import pyarrow as pa
 
         ids = t.column(self.id_col).to_pylist()
@@ -849,46 +858,64 @@ class AnnIndexStore(SnapshotStore):
                 n_dup = len(self._committed_ids_among(ids, man, masked=True))
                 if n_dup:
                     raise self._collision_error(n_dup)
-        chash = t.column("_chash")
-        dfp = [len(ids), sum(ids), sum(chash.to_pylist())]
-        # encode in Arrow-batch-sized row blocks: assign_cells allocates
-        # rows x n_centroids distances, so a block bounds driver memory the
-        # way the UDF path's one kernel call per Arrow batch bounds a worker
-        v = np.vstack(t.column("_v").to_numpy(zero_copy_only=False))
+        model = (idx.centroids, idx.pq_books, idx.opq_rotation, idx.opq_books)
+        # (variant, cell)-sorted like the distributed path's run; the id
+        # sort key keeps the id column's footer statistics
+        write = self._arrow_saving(
+            self._code_table(t, model, with_chash),
+            "codes_delta",
+            sort_by=("variant", "cell", self.id_col),
+        )
+        return write, self._table_fp(t)
+
+    def _table_fp(self, t) -> list[int]:
+        """The fingerprint of ``t``, a table of id and _delta_projection
+        columns, summed as Python ints (_chash is the Spark expression, so
+        the sums equal _fingerprint's)."""
+        if t[self.id_col].null_count:
+            raise ValueError(
+                f"{t[self.id_col].null_count} null id(s) — every vector needs an id"
+            )
+        ids = t.column(self.id_col).to_pylist()
+        return [len(ids), sum(ids), sum(t.column("_chash").to_pylist())]
+
+    def _code_table(self, t, model, with_chash: bool):
+        """The code rows (id, cell, norm[, chash], code, variant) of ``t``,
+        a table of id and _delta_projection columns, under ``model``
+        (centroids, pq_books, rotation, opq_books), as the distributed
+        encode writes them, opq rows first. S.encode_ivfpq runs in
+        Arrow-batch-sized row blocks: assign_cells allocates rows x
+        n_centroids distances, so a block bounds driver memory the way the
+        UDF path's one kernel call per Arrow batch bounds a worker."""
+        import numpy as np
+        import pyarrow as pa
+
+        v = S.table_matrix(t, "_v")
         block = int(
             self.spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
         )
         if block <= 0:  # Spark's "no limit"
-            block = len(v)
+            block = max(1, len(v))
         cells, pq, opq = (
             np.concatenate(parts)
             for parts in zip(
                 *(
-                    S.encode_ivfpq(
-                        v[i : i + block],
-                        idx.centroids,
-                        idx.pq_books,
-                        idx.opq_rotation,
-                        idx.opq_books,
-                    )
+                    S.encode_ivfpq(v[i : i + block], *model)
                     for i in range(0, len(v), block)
                 )
             )
         )
-        # the distributed path's row layout: (variant, cell)-sorted, opq
-        # before pq, columns (id, cell, norm[, chash], code, variant); the
-        # id sort key keeps the id column's footer statistics
+        n = t.num_rows
         cols = {
             self.id_col: pa.concat_arrays([t.column(self.id_col).combine_chunks()] * 2),
             "cell": pa.array(np.tile(cells, 2)),
             "norm": pa.array(np.tile(t.column("_norm").to_numpy(), 2)),
         }
         if with_chash:
-            cols["chash"] = pa.array(np.tile(chash.to_numpy(), 2))
+            cols["chash"] = pa.array(np.tile(t.column("_chash").to_numpy(), 2))
         cols["code"] = pa.array(list(np.concatenate([opq, pq])))
-        cols["variant"] = pa.array(["opq"] * len(ids) + ["pq"] * len(ids))
-        sort_by = ("variant", "cell", self.id_col)
-        return self._arrow_saving(pa.table(cols), "codes_delta", sort_by=sort_by), dfp
+        cols["variant"] = pa.array(["opq"] * n + ["pq"] * n)
+        return pa.table(cols)
 
     def _encode_distributed(
         self,

@@ -563,12 +563,10 @@ class BandIndexStore(_HashLayoutStore):
         A frame's one count() re-executes the caller's band projection —
         cheap for every caller (they all derive bands from checkpointed
         signatures) and it is what picks the physical form and is the
-        row delta the commit records. A Table on a local root runs no job:
-        pyarrow writes the same files (_arrow_saving)."""
+        row delta the commit records. A Table is written by _arrow_saving:
+        by pyarrow with no job on a local root."""
         self._check_layout()
         cols = (self.id_col, "band_idx", "band_hash")
-        if not isinstance(bands, DataFrame) and self._local_root() is None:
-            bands = self.spark.createDataFrame(bands)
         if isinstance(bands, DataFrame):
             bucket = self._bucket_of("band_hash").alias("bucket")
             with_bucket = bands.select(*cols, bucket)
@@ -1176,15 +1174,14 @@ class DocumentStore(_HashLayoutStore):
         Among duplicate incoming keys one row survives (the save_docs
         rule). Returns the number of rows appended.
 
-        ``df`` may also be a driver-side pyarrow Table: trusted, on a
-        local root and with each row's ``shard`` (shard_assign under the
-        handle's count, ``n_shards``) it is written by pyarrow
-        (_append_table); otherwise it takes the frame path."""
+        ``df`` may also be a driver-side pyarrow Table: trusted and with
+        each row's ``shard`` (shard_assign under the handle's count,
+        ``n_shards``) it is written by _append_table; otherwise it takes
+        the frame path."""
         if on_existing not in ("raise", "skip", "trust"):
             raise ValueError(f"append_docs: unknown on_existing {on_existing!r}")
         if not isinstance(df, DataFrame):
-            local = self._local_root() is not None
-            if on_existing == "trust" and local and "shard" in df.column_names:
+            if on_existing == "trust" and "shard" in df.column_names:
                 return self._append_table(df)
             df = self.spark.createDataFrame(df)
         man = self._snapshot()
@@ -1245,9 +1242,9 @@ class DocumentStore(_HashLayoutStore):
         return int(obs.get["n"]) if new_files else 0
 
     def _append_table(self, t) -> int:
-        """append_docs(on_existing="trust") of a pyarrow Table on a local
-        root, with no Spark job: one pyarrow-written key-sorted file per
-        touched shard (_arrow_saving). The Table's keys must be non-null
+        """append_docs(on_existing="trust") of a pyarrow Table, with no
+        Spark job on a local root: one key-sorted file per touched shard
+        (_arrow_saving). The Table's keys must be non-null
         and distinct (the frame path's one-survivor rule needs a content
         order the driver does not compute). Its ``shard`` column was
         routed by the caller under this handle's count, so no snapshot is

@@ -223,6 +223,109 @@ def encode_ivfpq(
     return cells, pq_encode(r, pq, _sq_norms(pq)), pq_encode(rr, opq, _sq_norms(opq))
 
 
+# -- quantizer training kernels -----------------------------------------------
+# Lloyd's k-means, PQ codebooks and OPQ over an id-sorted driver-side row
+# matrix, on the encode kernels above. Each mean is a sum in row order, so
+# the model depends only on the rows, not on how an engine partitioned
+# them. kmeans_fit, pq_train and opq_train collect their frame once and
+# call these; they keep their Spark loops only above TRAIN_DRIVER_MAX_BYTES.
+
+#: training matrices (rows x dim x 8 bytes) up to this size train on the
+#: driver. 65,536 sampled rows (AnnIndexStore.TRAIN_SAMPLE_MIN) fit up to
+#: dim 512; wider vectors keep the Spark loops (BENCH_SCALING.json ann_ops)
+TRAIN_DRIVER_MAX_BYTES = 256 << 20
+
+
+def driver_matrix(
+    df: DataFrame,
+    id_col: str,
+    col: str,
+    dim: int,
+    max_bytes: int = TRAIN_DRIVER_MAX_BYTES,
+) -> np.ndarray | None:
+    """The array column ``col`` of ``df`` as an id-sorted float64 matrix,
+    collected in one Arrow job, or None when it holds more than
+    ``max_bytes`` // (8 * ``dim``) rows (no collect at all for a bound
+    under one row)."""
+    max_rows = max_bytes // (8 * dim)
+    if max_rows < 1:
+        return None
+    t = df.select(id_col, col).limit(max_rows + 1).toArrow()
+    return None if t.num_rows > max_rows else table_matrix(t.sort_by(id_col), col)
+
+
+def table_matrix(t, col: str) -> np.ndarray:
+    """The array column ``col`` of pyarrow Table ``t`` as a float64 matrix,
+    one row per table row."""
+    vals = t.column(col).combine_chunks().flatten().to_numpy()
+    return vals.astype(np.float64).reshape(t.num_rows, -1 if t.num_rows else 0)
+
+
+def _lloyd_means(x: np.ndarray, labels: np.ndarray, prev: np.ndarray) -> np.ndarray:
+    """Per-label means of the rows of ``x``, summed in row order; a label
+    no row carries keeps its row of ``prev``."""
+    sums = np.zeros_like(prev)
+    np.add.at(sums, labels, x)
+    n = np.bincount(labels, minlength=len(prev))
+    out = prev.copy()
+    out[n > 0] = sums[n > 0] / n[n > 0, None]
+    return out
+
+
+def train_kmeans(m: np.ndarray, n_centroids: int, n_iter: int = 3) -> np.ndarray:
+    """Lloyd's k-means of the id-sorted rows ``m``: init from the
+    n_centroids lowest-id rows (fewer rows give fewer cells), then
+    ``n_iter`` assign + mean rounds, an empty cell keeping its centroid."""
+    c = m[:n_centroids]
+    if not len(c):
+        raise ValueError("kmeans_fit needs a non-empty corpus")
+    # assign in blocks: a block's distance matrix stays under ~32 MB
+    block = max(1, (1 << 22) // len(c))
+    for _ in range(n_iter):
+        cn = _sq_norms(c)
+        cells = np.concatenate(
+            [assign_cells(m[i : i + block], c, cn) for i in range(0, len(m), block)]
+        )
+        c = _lloyd_means(m, cells, c)
+    return c
+
+
+def train_pq(r: np.ndarray, m_sub: int, ksub: int, n_iter: int = 2) -> np.ndarray:
+    """PQ codebooks (m_sub x ksub x sub_dim) of the id-sorted rows ``r``:
+    codeword j of each subspace starts as the j-th lowest-id row's
+    sub-vector (zeros past the last row), then ``n_iter`` pq_encode + mean
+    rounds, an empty code keeping its codeword."""
+    sub = r.reshape(len(r), m_sub, -1)
+    books = np.zeros((m_sub, ksub, sub.shape[2]))
+    books[:, : len(sub[:ksub])] = sub[:ksub].transpose(1, 0, 2)
+    for _ in range(n_iter):
+        codes = pq_encode(r, books, _sq_norms(books))
+        books = np.stack(
+            [_lloyd_means(sub[:, j], codes[:, j], books[j]) for j in range(m_sub)]
+        )
+    return books
+
+
+def train_opq(
+    r: np.ndarray, m_sub: int, ksub: int, n_sweeps: int = 2, n_iter: int = 2
+) -> tuple[np.ndarray, np.ndarray]:
+    """(rotation R, codebooks of R-rotated rows) of the id-sorted rows
+    ``r`` by opq_train's alternating minimization: train_pq on the
+    rotated rows, then the orthogonal-Procrustes step R = U Vt from
+    SVD(sum y x^T), y the PQ reconstruction of R x."""
+    rot, books = np.eye(r.shape[1]), np.zeros(0)
+    for sweep in range(n_sweeps):
+        x = rotate(r, rot.T)
+        books = train_pq(x, m_sub, ksub, n_iter)
+        if sweep == n_sweeps - 1:
+            break
+        codes = pq_encode(x, books, _sq_norms(books))
+        y = np.concatenate([books[j][codes[:, j]] for j in range(m_sub)], axis=1)
+        u, _, vt = np.linalg.svd(y.T @ r)
+        rot = u @ vt
+    return rot, books
+
+
 def _assign_udf(centroids: list[list[float]]):
     """Vectorized nearest-centroid assignment (L2): one assign_cells call
     per Arrow batch against the broadcast centroid matrix."""
@@ -338,17 +441,22 @@ def kmeans_fit(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
+    max_bytes: int = TRAIN_DRIVER_MAX_BYTES,
 ) -> list[list[float]]:
-    """Deterministic Lloyd's k-means expressed as DataFrame plans; only the
-    model (n_centroids x dim floats) ever reaches the driver.
+    """Deterministic Lloyd's k-means (init: the n_centroids lowest-id
+    vectors, no RNG). Vectors within ``max_bytes`` are collected once and
+    fitted by train_kmeans. Above it the rounds run as DataFrame plans and
+    only the model (n_centroids x dim floats) reaches the driver:
 
-    - init: the n_centroids lowest-id vectors (deterministic, no RNG);
     - assign: broadcast centroid matrix into a vectorized Arrow batch UDF;
     - update: explode (cluster, pos, component) and groupBy-avg — hash
       aggregation with map-side partial combine, so each executor emits at
       most n_centroids*dim partial rows per partition regardless of input
       size. The 100 TB shape: one narrow pass + one tiny shuffle per iter.
     """
+    m = driver_matrix(df, id_col, vec_col, dim, max_bytes)
+    if m is not None:
+        return train_kmeans(m, n_centroids, n_iter).tolist()
     base = df.select(
         id_col, F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v")
     )
@@ -528,16 +636,23 @@ def pq_train(
     dim: int = 64,
     id_col: str = "vec_id",
     resid_col: str = "_r",
+    max_bytes: int = TRAIN_DRIVER_MAX_BYTES,
 ) -> list[list[list[float]]]:
     """Train M per-subspace codebooks (Lloyd's) over residual sub-vectors.
+    Init = lowest-id sub-vectors (deterministic, no RNG), mirroring
+    kmeans_fit. Residuals within ``max_bytes`` are collected once and
+    trained by train_pq.
 
-    ALL subspaces train together in one DataFrame job per iteration: explode
-    each residual into its M sub-vectors, assign against the current
-    codebooks in one vectorized pass, update with a (subspace, code,
-    component)-keyed avg — map-side partial combine bounds every executor's
-    output at m_sub*ksub*sub_dim rows regardless of corpus size. Only the
-    codebooks (m_sub x ksub x sub_dim floats) reach the driver. Init =
-    lowest-id sub-vectors (deterministic, no RNG), mirroring kmeans_fit."""
+    Above it ALL subspaces train together in one DataFrame job per
+    iteration: explode each residual into its M sub-vectors, assign
+    against the current codebooks in one vectorized pass, update with a
+    (subspace, code, component)-keyed avg — map-side partial combine
+    bounds every executor's output at m_sub*ksub*sub_dim rows regardless
+    of corpus size. Only the codebooks (m_sub x ksub x sub_dim floats)
+    reach the driver."""
+    m = driver_matrix(residuals, id_col, resid_col, dim, max_bytes)
+    if m is not None:
+        return train_pq(m, m_sub, ksub, n_iter).tolist()
     sub_dim = dim // m_sub
     subs = residuals.select(
         F.col(id_col),
@@ -598,6 +713,7 @@ def opq_train(
     dim: int = 64,
     id_col: str = "vec_id",
     resid_col: str = "_r",
+    max_bytes: int = TRAIN_DRIVER_MAX_BYTES,
 ) -> tuple[list[list[float]], list[list[list[float]]]]:
     """OPQ (Ge et al., CVPR 2013, non-parametric): learn an orthogonal
     rotation R so that product quantization of R·x loses less than PQ of x
@@ -610,15 +726,20 @@ def opq_train(
           y_i = q(R·x_i) the reconstruction, R* = U·Vᵀ from
           SVD(Σ y_i·x_iᵀ) minimizes Σ ||R·x_i − y_i||².
 
-    Scale shape: step (b)'s Σ y·xᵀ is a dim×dim (64×64) matrix accumulated
-    as ONE grouped-by-partition applyInPandas pass emitting a flattened
-    partial matrix per partition — only n_partitions × dim² floats reach
-    the driver, where the trivial 64×64 SVD runs. Everything is
-    deterministic (no RNG anywhere: pq_train inits from lowest ids,
+    Residuals within ``max_bytes`` are collected once and trained by
+    train_opq. Above it step (b)'s Σ y·xᵀ is a dim×dim (64×64) matrix
+    accumulated as ONE grouped-by-partition applyInPandas pass emitting a
+    flattened partial matrix per partition — only n_partitions × dim²
+    floats reach the driver, where the trivial 64×64 SVD runs. Everything
+    is deterministic (no RNG anywhere: pq_train inits from lowest ids,
     np.linalg.svd is deterministic for a fixed input).
 
     Returns (R as dim×dim row-major lists, codebooks trained on R-rotated
     residuals)."""
+    m = driver_matrix(residuals, id_col, resid_col, dim, max_bytes)
+    if m is not None:
+        R, books = train_opq(m, m_sub, ksub, n_sweeps, n_iter)
+        return R.tolist(), books.tolist()
     R = np.eye(dim)
     books: list[list[list[float]]] = []
     # checkpoint both the residual source and each sweep's rotation: every
@@ -633,7 +754,7 @@ def opq_train(
         rot = base.select(
             id_col, _rotate_udf(R)(F.col("_x")).alias("_r")
         ).localCheckpoint(eager=False)
-        books = pq_train(rot, m_sub, ksub, n_iter, dim, id_col, "_r")
+        books = pq_train(rot, m_sub, ksub, n_iter, dim, id_col, "_r", max_bytes=0)
         if sweep == n_sweeps - 1:
             break  # end on codebook training for the final rotation
         b3 = np.asarray(books, dtype=np.float64)

@@ -2245,7 +2245,7 @@ def q_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ann_kmeans_ctes(n_cent: int = 16, n_iter: int = 3, dim: int = 64) -> tuple[str, str]:
     """DuckDB CTEs replaying the IVF coarse quantizer's TRAINING
-    (S.kmeans_fit: init = the n_cent lowest-id vectors, then n_iter Lloyd
+    (S.train_kmeans: init = the n_cent lowest-id vectors, then n_iter Lloyd
     rounds of argmin-L2 assignment + per-(cell, component) mean, empty
     cells keeping their previous centroid) — the r11 LSH-plane-replay
     technique (VERDICT r11 #1) extended to a DATA-DEPENDENT model: the
@@ -2254,9 +2254,10 @@ def _ann_kmeans_ctes(n_cent: int = 16, n_iter: int = 3, dim: int = 64) -> tuple[
     frozen data with the same deterministic arithmetic. Returns
     (cte_body, final_centroid_cte_name); the final CTE is (c, cvec).
 
-    Float parity: the replay agrees with the persisted Spark model to the
-    last bit at both gate fixtures (measured — numpy BLAS vs DuckDB
-    sequential list folds land on identical doubles here), and the
+    Float parity: the persisted model is trained on the driver, each mean
+    a row-order sum over the id-sorted corpus (one model however Spark
+    partitions it); DuckDB's grouped avg may fold the same values in
+    another order, so the two can differ in the last bits. The
     decisions the model feeds (argmin cell, argsort probe cells, ADC
     shortlist ranks) have margins ~1e-3, ten orders above float-
     reassociation noise (~1e-13), so this is a frozen-fixture property in

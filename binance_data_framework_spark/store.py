@@ -343,14 +343,21 @@ class SnapshotStore:
         the other fixed-width columns: bounds of a text or list payload
         would outweigh a batch-sized file's data (as would dictionary
         pages of unique values, and an Arrow schema blob the manifest
-        already holds). On another root an unpartitioned table is written
-        through _saving."""
+        already holds). On another root the same rows take a Spark write
+        of the same layout through _saving."""
         import pyarrow as pa
         from pyspark.sql.pandas.types import from_arrow_schema
 
         t = table.sort_by([(c, "ascending") for c in sort_by]) if sort_by else table
-        if self._local_root() is None and not partition_by:
-            return _saving(self.spark.createDataFrame(t).coalesce(1), group)
+        if self._local_root() is None:
+            df = self.spark.createDataFrame(t)
+            df = df.repartition(*partition_by) if partition_by else df.coalesce(1)
+            if sort_by:
+                df = df.sortWithinPartitions(*sort_by)
+            w = df.write.partitionBy(*partition_by).option("compression", "zstd")
+            if row_group_bytes:
+                w = w.option("parquet.block.size", str(row_group_bytes))
+            return _saving(df, group, w.mode("overwrite"))
 
         def write(path: str) -> dict:
             from urllib.parse import urlparse

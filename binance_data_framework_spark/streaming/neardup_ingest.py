@@ -856,10 +856,6 @@ def neardup_gate_batch(
             # to_store here would lose its vector forever. skip_existing
             # makes the already-appended ids a no-op, so this converges.
             if ann_store.load() is None:
-                if not isinstance(vecs, DataFrame):
-                    vecs = batch_df.sparkSession.createDataFrame(
-                        vecs.select([ann_store.id_col, ann_store.vec_col])
-                    )
                 ann_store.build(vecs, **(ann_build_kwargs or {}))
             else:
                 ann_store.append(vecs, skip_existing=True)

@@ -62,6 +62,10 @@ def semantic_gate_batch(
     check_k: int = 8,
     check_refine: int = 64,
     ann_build_kwargs: dict | None = None,
+    ann_rebuild_factor: float | None = 2.0,
+    ann_compact_min_files: int | None = 64,
+    doc_compact_min_files: int | None = 64,
+    doc_reshard_factor: float | None = 2.0,
 ) -> dict:
     """Run one micro-batch through the semantic gate (module docstring).
     ``vec_store`` is a DocumentStore keyed on ``id_col`` holding the
@@ -77,10 +81,16 @@ def semantic_gate_batch(
     deterministic, stages 2-3 see the rows its first delivery stored)
     and converges to a no-op through the skip paths.
 
+    After each committing batch the vector store and (after an append)
+    the index run one ``maintain`` step, with neardup_gate_batch's knobs
+    and defaults: grow the layout with the corpus (a rebuild reads the
+    stored vectors), else fold due delta runs, else compact; None skips
+    a leg.
+
     ``stage_sec`` in the returned stats itemizes the gate the same way
     neardup_gate_batch does (each boundary sits after an eager
     checkpoint/count, so deltas attribute real work): in_batch_dedup /
-    redelivery_check / corpus_check / commit."""
+    redelivery_check / corpus_check / commit (maintenance included)."""
     import time as _time
 
     stage_sec: dict[str, float] = {}
@@ -195,6 +205,7 @@ def semantic_gate_batch(
     if n_kept > 0 or redelivered > 0:
         if n_kept > 0:
             vec_store.append_docs(survivors, on_existing="skip")
+            vec_store.maintain(doc_reshard_factor, doc_compact_min_files)
         if idx is None:
             # covers the first-batch crash window too: build() reads the
             # full vector store, which already holds any redelivered rows
@@ -204,6 +215,12 @@ def semantic_gate_batch(
             )
         else:
             idx = ann_store.append(to_index, skip_existing=True)
+            if ann_store.maintain(
+                ann_rebuild_factor,
+                ann_compact_min_files,
+                corpus=lambda: vec_store.read().select(id_col, vec_col),
+            ):
+                idx = ann_store.load()
 
     _tick("commit")
     return {

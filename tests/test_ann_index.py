@@ -321,7 +321,6 @@ def test_codes_layout_and_physical_cell_pruning(built):
         st.codes("nope")
 
 
-@pytest.mark.slow
 def test_persisted_search_equals_inplan_trained_search(built):
     """The whole point of persistence: a search over the committed
     artifact is the SAME computation as the train-in-plan path — equal
@@ -943,6 +942,106 @@ def test_train_sample_deterministic_and_partition_invariant(spark):
     assert ids1 == ids2 and f1 == f2 == 0.25
     # binomial around the cap, and never empty
     assert 50 <= len(ids1) <= 150
+
+
+def test_trainers_numpy_and_spark_agree(spark, sf_dir):
+    """kmeans_fit, pq_train and opq_train train on the driver (one Arrow
+    collect, the S.train_* kernels) within their byte bound, and in Spark
+    Lloyd loops above it (max_bytes=0). On seeded Gaussian rows the two
+    give the same centroids, PQ books, rotation and OPQ books to 1e-9
+    relative, and the two models encode every sf0.001 embedding to the
+    same cells, PQ codes and OPQ codes."""
+    import numpy as np
+
+    from binance_data_framework_spark.sources.fixtures import load_table
+
+    dim = 64
+    X = np.random.RandomState(11).randn(300, dim)
+    df = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(X)],
+        "vec_id bigint, embedding array<double>",
+    )
+
+    def train(max_bytes):
+        cents = S.kmeans_fit(df, 8, 3, dim=dim, max_bytes=max_bytes)
+        v = F.col("embedding")
+        resid = df.select(
+            "vec_id", S._residual_udf(cents)(v, S._assign_udf(cents)(v)).alias("_r")
+        ).localCheckpoint()
+        books = S.pq_train(resid, 8, 16, 2, dim, max_bytes=max_bytes)
+        rotation, opq_books = S.opq_train(resid, 8, 16, 2, 2, dim, max_bytes=max_bytes)
+        return cents, books, rotation, opq_books
+
+    on_driver, in_spark = train(S.TRAIN_DRIVER_MAX_BYTES), train(0)
+    for a, b in zip(on_driver, in_spark):
+        a, b = np.asarray(a), np.asarray(b)
+        assert a.shape == b.shape
+        assert np.abs(a - b).max() <= 1e-9 * np.abs(b).max()
+    emb = load_table(spark, sf_dir, "embeddings").select("embedding").toArrow()
+    v = S.table_matrix(emb, "embedding")
+    for a, b in zip(S.encode_ivfpq(v, *on_driver), S.encode_ivfpq(v, *in_spark)):
+        assert np.array_equal(a, b)
+
+
+def _model(idx):
+    return [idx.centroids, idx.pq_books, idx.opq_rotation, idx.opq_books]
+
+
+def _sf_vectors(spark, sf_dir):
+    from binance_data_framework_spark.sources.fixtures import load_table
+
+    return load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+
+
+def test_build_paths_commit_identical_rows(spark, tmp_path, sf_dir):
+    """build() trains, encodes and writes a corpus within append()'s size
+    rule on the driver: from a Table with no Spark job on a local root,
+    from a frame with one bounded collect. Above the rule
+    (CODES_DELTA_MAX_VECTORS = 0 here) it keeps the Spark encode. All of
+    them commit the same code rows (id, variant, cell, code, norm, chash),
+    fingerprint, model and group schemas, and so does a Table build on a
+    root taken as non-local, whose partitioned code table takes a Spark
+    write (_arrow_saving)."""
+    df = _sf_vectors(spark, sf_dir)
+    kw = dict(dim=64, n_centroids=8)
+
+    def store(name):
+        return AnnIndexStore(spark, str(tmp_path / name))
+
+    on_table, on_frame, dist, remote = map(store, ("table", "frame", "dist", "remote"))
+    table = on_table._delta_table(df)
+    n_table, idx = jobs_of(spark, "build-table", lambda: on_table.build(table, **kw))
+    n_frame, _ = jobs_of(spark, "build-frame", lambda: on_frame.build(df, **kw))
+    assert n_table == 0 and n_frame <= 2
+    dist.CODES_DELTA_MAX_VECTORS = 0
+    dist.build(df, **kw)
+    remote._local_root_cache = None
+    remote.build(table, **kw)
+    rows = _code_rows(on_table)
+    assert len(rows) == 2 * 500
+    # pyarrow writes no .crc sidecars; Spark's writer does
+    assert not list((tmp_path / "table" / "codes").rglob("*.crc"))
+    assert list((tmp_path / "dist" / "codes").rglob("*.crc"))
+    for st in (on_frame, dist, remote):
+        got = st.load()
+        assert _code_rows(st) == rows
+        assert got.fingerprint == idx.fingerprint == on_table._fingerprint(df)
+        assert _model(got) == _model(idx)
+        assert st._snapshot()["schemas"] == on_table._snapshot()["schemas"]
+
+
+def test_build_model_independent_of_partitioning(spark, tmp_path, sf_dir):
+    """The trainers sum in id order, so the committed model depends only
+    on the corpus: builds over repartition(1) and repartition(7) of one
+    frame commit identical models."""
+    df = _sf_vectors(spark, sf_dir)
+    one, seven = (
+        AnnIndexStore(spark, str(tmp_path / str(n))).build(
+            df.repartition(n), dim=64, n_centroids=8
+        )
+        for n in (1, 7)
+    )
+    assert _model(one) == _model(seven) and one.fingerprint == seven.fingerprint
 
 
 @pytest.mark.slow

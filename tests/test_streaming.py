@@ -1983,6 +1983,44 @@ def test_semantic_gate_batch_stats_and_stages(spark, tmp_path):
     assert ann_store.load().version == s2["index_version"]
 
 
+def test_semantic_gate_maintains_and_folds_code_deltas(spark, tmp_path):
+    """semantic_gate_batch runs one maintain step per committing batch on
+    the vector store and, after an append, on the index. With the index's
+    run-file cap at 1 (DELTA_FOLD_MAX_FILES), the appended batch's delta
+    run folds into the cell layout in that batch's maintenance: the
+    build, the append and the fold commit versions 1, 2 and 3, no run is
+    left, and the index holds every accepted vector."""
+    import numpy as np
+
+    from binance_data_framework_spark.ann_index import AnnIndexStore
+    from binance_data_framework_spark.docstore import DocumentStore
+    from binance_data_framework_spark.streaming.semantic_ingest import (
+        semantic_gate_batch,
+    )
+
+    X = np.random.RandomState(0).randn(25, 8)  # no pair reaches cosine 0.95
+
+    def batch(lo, hi):
+        return spark.createDataFrame(
+            [(i, X[i].tolist()) for i in range(lo, hi)],
+            "vec_id long, embedding array<double>",
+        )
+
+    vec_store = DocumentStore(
+        spark, str(tmp_path / "vecs"), key_col="vec_id", n_shards=4
+    )
+    ann_store = AnnIndexStore(spark, str(tmp_path / "idx"))
+    ann_store.DELTA_FOLD_MAX_FILES = 1
+    build = dict(dim=8, n_centroids=4, m_sub=4, ksub=4)
+    kw = dict(threshold=0.95, dim=8, ann_build_kwargs=build)
+    for lo, hi, version in ((0, 20, 1), (20, 25, 3)):
+        stats = semantic_gate_batch(batch(lo, hi), vec_store, ann_store, **kw)
+        assert stats["kept"] == hi - lo and stats["index_version"] == version
+    man = ann_store._snapshot()
+    assert not any(f.startswith("codes_delta/") for f in man["files"])
+    assert ann_store.load().n_vectors == 25 == ann_store.codes("opq").count()
+
+
 @pytest.mark.slow
 def test_stream_semantic_ingest_wrapper(spark, tmp_path):
     """The foreachBatch wrapper: an availableNow pass over a file-source

@@ -79,9 +79,16 @@ def run_point(spark, sf_dir: str, root: str) -> dict:
     st = AnnIndexStore(spark, root)
     times: dict[str, float] = {}
 
+    # the build's Spark jobs, counted through a job group (the test
+    # suite's jobs_of rule)
+    sc, group = spark.sparkContext, f"bench-ann-build-{time.time_ns()}"
+    sc.setJobGroup(group, group)
     t0 = time.perf_counter()
     idx = st.build(emb)
     times["build_sec"] = time.perf_counter() - t0
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    build_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
 
     # fixed-size delta: the DELTA_ROWS lowest ids re-enter under new ids
     # (same vectors — the op cost does not depend on the values). The
@@ -213,6 +220,7 @@ def run_point(spark, sf_dir: str, root: str) -> dict:
 
     return {
         "n_vectors": n,
+        "build_jobs": build_jobs,
         "n_probed_cells": len(cells),
         "nprobe_held": int(nprobe_held),
         "refine_held": REFINE_HELD,
