@@ -39,7 +39,9 @@ All training is deterministic: the S.train_* kernels init from the lowest
 ids (no RNG) and sum in id order over a driver-side matrix (one Arrow
 collect of the corpus or its training sample), so a rebuild over the same
 corpus produces the identical model however Spark partitioned it — build
-idempotence is testable equality, not luck. A corpus within append()'s
+idempotence is testable equality, not luck. Only a sample past
+S.TRAIN_DRIVER_MAX_BYTES trains in the Spark trainers' loops, whose float
+sums follow the partitioning. A corpus within append()'s
 size rule is also encoded and written on the driver (build()).
 """
 
@@ -380,8 +382,9 @@ class AnnIndexStore(SnapshotStore):
         trained (the S.train_* kernels), encoded (S.encode_ivfpq) and
         written (_arrow_saving) on the driver: no Spark job for a Table on
         a local root. A larger one keeps the fingerprint agg and the
-        Spark encode; its training sample is collected once by the
-        S trainers (Spark loops past S.TRAIN_DRIVER_MAX_BYTES)."""
+        Spark encode, so a Table of it must also carry ``vec_col``; its
+        training sample is collected once and trained by S.train_ivfpq
+        when S.fits_driver holds, else by the S trainers' Spark loops."""
         bound = min(self.APPEND_PROBE_MAX, self.CODES_DELTA_MAX_VECTORS)
         is_frame = isinstance(df, DataFrame)
         table = self._delta_table(df.limit(bound + 1)) if is_frame else df
@@ -426,11 +429,7 @@ class AnnIndexStore(SnapshotStore):
         cap = params["train_sample_cap"]
         if fp[0] <= min(bound, cap):
             v = S.table_matrix(table.sort_by(self.id_col), "_v")
-            cm = S.train_kmeans(v, n_centroids)
-            r = S.residuals(v, cm, S.assign_cells(v, cm, S._sq_norms(cm)))
-            rotation, opq_books = S.train_opq(r, m_sub, ksub)
-            pq_books = S.train_pq(r, m_sub, ksub)
-            model = [a.tolist() for a in (cm, pq_books, rotation, opq_books)]
+            model = S.train_ivfpq(v, n_centroids, m_sub, ksub)
             write = self._arrow_saving(
                 self._code_table(table, model, with_chash=True),
                 "codes",
@@ -439,34 +438,48 @@ class AnnIndexStore(SnapshotStore):
             )
         else:
             if not is_frame:
+                if self.vec_col not in df.column_names:
+                    raise ValueError(
+                        f"a Table of more than {min(bound, cap)} vectors "
+                        f"needs its {self.vec_col!r} column"
+                    )
                 df = self.spark.createDataFrame(df.select([self.id_col, self.vec_col]))
             # Sampled training (VERDICT r10 #1): Lloyd iterations only need
             # ~TRAIN_SAMPLE_PER_CENTROID points per centroid. The sample is
             # a deterministic id-hash filter (S.train_sample: portable Knuth
-            # mix, no RNG state); the lazy checkpoints hold it and its
-            # residuals for the trainers' one collect each, and the full
-            # corpus is assigned and encoded exactly once below.
+            # mix, no RNG state) of about min(corpus, cap) rows, trained
+            # on the driver from one collect when that many fit, else by
+            # the Spark trainers over its lazy checkpoints.
             train_df, _ = S.train_sample(df, fp[0], cap, self.id_col)
-            train_df = train_df.select(self.id_col, self.vec_col).localCheckpoint(
-                eager=False
-            )
-            cents = S.kmeans_fit(
-                train_df, n_centroids, 3, self.id_col, self.vec_col, dim
-            )
-            vd = F.transform(F.col(self.vec_col), lambda x: x.cast("double"))
-            train_resid = train_df.select(
-                self.id_col,
-                S._residual_udf(cents)(vd, S._assign_udf(cents)(vd)).alias("_r"),
-            ).localCheckpoint(eager=False)
-            model = [
-                cents,
-                S.pq_train(train_resid, m_sub, ksub, 2, dim, self.id_col),
-                *S.opq_train(train_resid, m_sub, ksub, 2, 2, dim, self.id_col),
-            ]
-            # EAGER: the code write's pq and opq branches would each
-            # recompute the assign UDF pass over the corpus
-            assigned = self._assigned(df, cents).localCheckpoint(eager=True)
-            resid = self._residuals(assigned, cents)
+            if S.fits_driver(min(fp[0], cap), dim):
+                v = S.driver_matrix(train_df, self.id_col, self.vec_col)
+                model = S.train_ivfpq(v, n_centroids, m_sub, ksub)
+            else:
+                # lazy checkpoints: each trainer's first action fills
+                # what the later ones re-read
+                train_df = train_df.select(self.id_col, self.vec_col)
+                train_df = train_df.localCheckpoint(eager=False)
+                cents = S.kmeans_fit(
+                    train_df, n_centroids, 3, self.id_col, self.vec_col, dim
+                )
+                vd = F.transform(F.col(self.vec_col), lambda x: x.cast("double"))
+                train_resid = train_df.select(
+                    self.id_col,
+                    S._residual_udf(cents)(vd, S._assign_udf(cents)(vd)).alias("_r"),
+                ).localCheckpoint(eager=False)
+                model = [
+                    cents,
+                    S.pq_train(train_resid, m_sub, ksub, 2, dim, self.id_col),
+                    *S.opq_train(train_resid, m_sub, ksub, 2, 2, dim, self.id_col),
+                ]
+            # One corpus materialization, placed AFTER the residual
+            # projection (r11): both encode branches read only (id, cell,
+            # norm, chash, residual), one vector payload per row. EAGER:
+            # no training action fills it, and each branch would otherwise
+            # recompute the assign and residual UDFs over the corpus.
+            cents = model[0]
+            resid = self._residuals(self._assigned(df, cents), cents)
+            resid = resid.localCheckpoint(eager=True)
             write = self._cell_write(self._code_rows(resid, dim // m_sub, *model[1:]))
         # full-replace: a rebuild supersedes every prior artifact file
         return self._commit_model(

@@ -228,30 +228,25 @@ def encode_ivfpq(
 # matrix, on the encode kernels above. Each mean is a sum in row order, so
 # the model depends only on the rows, not on how an engine partitioned
 # them. kmeans_fit, pq_train and opq_train collect their frame once and
-# call these; they keep their Spark loops only above TRAIN_DRIVER_MAX_BYTES.
+# call these when fits_driver holds; above it they keep their Spark loops.
 
 #: training matrices (rows x dim x 8 bytes) up to this size train on the
-#: driver. 65,536 sampled rows (AnnIndexStore.TRAIN_SAMPLE_MIN) fit up to
-#: dim 512; wider vectors keep the Spark loops (BENCH_SCALING.json ann_ops)
-TRAIN_DRIVER_MAX_BYTES = 256 << 20
+#: driver: the largest one measured there, the 65,536-row sample
+#: (AnnIndexStore.TRAIN_SAMPLE_MIN) at dim 64 (BENCH_SCALING.json ann_ops
+#: sf10: build_sec on the driver vs build_spark_sec in the Spark loops)
+TRAIN_DRIVER_MAX_BYTES = 32 << 20
 
 
-def driver_matrix(
-    df: DataFrame,
-    id_col: str,
-    col: str,
-    dim: int,
-    max_bytes: int = TRAIN_DRIVER_MAX_BYTES,
-) -> np.ndarray | None:
+def fits_driver(rows: int, dim: int) -> bool:
+    """Whether ``rows`` x ``dim`` training doubles fit
+    TRAIN_DRIVER_MAX_BYTES."""
+    return rows * dim * 8 <= TRAIN_DRIVER_MAX_BYTES
+
+
+def driver_matrix(df: DataFrame, id_col: str, col: str) -> np.ndarray:
     """The array column ``col`` of ``df`` as an id-sorted float64 matrix,
-    collected in one Arrow job, or None when it holds more than
-    ``max_bytes`` // (8 * ``dim``) rows (no collect at all for a bound
-    under one row)."""
-    max_rows = max_bytes // (8 * dim)
-    if max_rows < 1:
-        return None
-    t = df.select(id_col, col).limit(max_rows + 1).toArrow()
-    return None if t.num_rows > max_rows else table_matrix(t.sort_by(id_col), col)
+    collected in one Arrow job."""
+    return table_matrix(df.select(id_col, col).toArrow().sort_by(id_col), col)
 
 
 def table_matrix(t, col: str) -> np.ndarray:
@@ -324,6 +319,16 @@ def train_opq(
         u, _, vt = np.linalg.svd(y.T @ r)
         rot = u @ vt
     return rot, books
+
+
+def train_ivfpq(v: np.ndarray, n_centroids: int, m_sub: int, ksub: int) -> list:
+    """The model AnnIndexStore.build commits, (centroids, pq_books,
+    rotation, opq_books) as lists, trained on the id-sorted rows ``v``:
+    train_kmeans, then train_pq and train_opq on the residuals."""
+    cm = train_kmeans(v, n_centroids)
+    r = residuals(v, cm, assign_cells(v, cm, _sq_norms(cm)))
+    rotation, opq_books = train_opq(r, m_sub, ksub)
+    return [a.tolist() for a in (cm, train_pq(r, m_sub, ksub), rotation, opq_books)]
 
 
 def _assign_udf(centroids: list[list[float]]):
@@ -441,10 +446,9 @@ def kmeans_fit(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    max_bytes: int = TRAIN_DRIVER_MAX_BYTES,
 ) -> list[list[float]]:
     """Deterministic Lloyd's k-means (init: the n_centroids lowest-id
-    vectors, no RNG). Vectors within ``max_bytes`` are collected once and
+    vectors, no RNG). Vectors within fits_driver are collected once and
     fitted by train_kmeans. Above it the rounds run as DataFrame plans and
     only the model (n_centroids x dim floats) reaches the driver:
 
@@ -454,8 +458,8 @@ def kmeans_fit(
       most n_centroids*dim partial rows per partition regardless of input
       size. The 100 TB shape: one narrow pass + one tiny shuffle per iter.
     """
-    m = driver_matrix(df, id_col, vec_col, dim, max_bytes)
-    if m is not None:
+    if fits_driver(df.count(), dim):
+        m = driver_matrix(df, id_col, vec_col)
         return train_kmeans(m, n_centroids, n_iter).tolist()
     base = df.select(
         id_col, F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v")
@@ -636,23 +640,33 @@ def pq_train(
     dim: int = 64,
     id_col: str = "vec_id",
     resid_col: str = "_r",
-    max_bytes: int = TRAIN_DRIVER_MAX_BYTES,
 ) -> list[list[list[float]]]:
     """Train M per-subspace codebooks (Lloyd's) over residual sub-vectors.
     Init = lowest-id sub-vectors (deterministic, no RNG), mirroring
-    kmeans_fit. Residuals within ``max_bytes`` are collected once and
-    trained by train_pq.
-
-    Above it ALL subspaces train together in one DataFrame job per
-    iteration: explode each residual into its M sub-vectors, assign
-    against the current codebooks in one vectorized pass, update with a
-    (subspace, code, component)-keyed avg — map-side partial combine
-    bounds every executor's output at m_sub*ksub*sub_dim rows regardless
-    of corpus size. Only the codebooks (m_sub x ksub x sub_dim floats)
-    reach the driver."""
-    m = driver_matrix(residuals, id_col, resid_col, dim, max_bytes)
-    if m is not None:
+    kmeans_fit. Residuals within fits_driver are collected once and
+    trained by train_pq; above it they train in _pq_spark's loops."""
+    if fits_driver(residuals.count(), dim):
+        m = driver_matrix(residuals, id_col, resid_col)
         return train_pq(m, m_sub, ksub, n_iter).tolist()
+    return _pq_spark(residuals, m_sub, ksub, n_iter, dim, id_col, resid_col)
+
+
+def _pq_spark(
+    residuals: DataFrame,
+    m_sub: int,
+    ksub: int,
+    n_iter: int,
+    dim: int,
+    id_col: str,
+    resid_col: str,
+) -> list[list[list[float]]]:
+    """pq_train as Spark plans: ALL subspaces train together in one
+    DataFrame job per iteration: explode each residual into its M
+    sub-vectors, assign against the current codebooks in one vectorized
+    pass, update with a (subspace, code, component)-keyed avg — map-side
+    partial combine bounds every executor's output at m_sub*ksub*sub_dim
+    rows regardless of corpus size. Only the codebooks (m_sub x ksub x
+    sub_dim floats) reach the driver."""
     sub_dim = dim // m_sub
     subs = residuals.select(
         F.col(id_col),
@@ -713,7 +727,6 @@ def opq_train(
     dim: int = 64,
     id_col: str = "vec_id",
     resid_col: str = "_r",
-    max_bytes: int = TRAIN_DRIVER_MAX_BYTES,
 ) -> tuple[list[list[float]], list[list[list[float]]]]:
     """OPQ (Ge et al., CVPR 2013, non-parametric): learn an orthogonal
     rotation R so that product quantization of R·x loses less than PQ of x
@@ -726,7 +739,7 @@ def opq_train(
           y_i = q(R·x_i) the reconstruction, R* = U·Vᵀ from
           SVD(Σ y_i·x_iᵀ) minimizes Σ ||R·x_i − y_i||².
 
-    Residuals within ``max_bytes`` are collected once and trained by
+    Residuals within fits_driver are collected once and trained by
     train_opq. Above it step (b)'s Σ y·xᵀ is a dim×dim (64×64) matrix
     accumulated as ONE grouped-by-partition applyInPandas pass emitting a
     flattened partial matrix per partition — only n_partitions × dim²
@@ -736,8 +749,8 @@ def opq_train(
 
     Returns (R as dim×dim row-major lists, codebooks trained on R-rotated
     residuals)."""
-    m = driver_matrix(residuals, id_col, resid_col, dim, max_bytes)
-    if m is not None:
+    if fits_driver(residuals.count(), dim):
+        m = driver_matrix(residuals, id_col, resid_col)
         R, books = train_opq(m, m_sub, ksub, n_sweeps, n_iter)
         return R.tolist(), books.tolist()
     R = np.eye(dim)
@@ -754,7 +767,7 @@ def opq_train(
         rot = base.select(
             id_col, _rotate_udf(R)(F.col("_x")).alias("_r")
         ).localCheckpoint(eager=False)
-        books = pq_train(rot, m_sub, ksub, n_iter, dim, id_col, "_r", max_bytes=0)
+        books = _pq_spark(rot, m_sub, ksub, n_iter, dim, id_col, "_r")
         if sweep == n_sweeps - 1:
             break  # end on codebook training for the final rotation
         b3 = np.asarray(books, dtype=np.float64)

@@ -49,6 +49,12 @@ from binance_data_framework_spark.materialize import checkpoint_observed
 from binance_data_framework_spark.operators import similarity as S
 from binance_data_framework_spark.streaming.ann_serve import serve_batch
 
+#: the maintain() step after a committing batch, on the vector store and
+#: the index: grow the layout once the corpus passes this factor of the
+#: size it was laid out for, compact once a partition holds this many
+#: files (neardup_gate_batch's defaults)
+GROW_FACTOR, COMPACT_MIN_FILES = 2.0, 64
+
 
 def semantic_gate_batch(
     batch_df: DataFrame,
@@ -62,10 +68,6 @@ def semantic_gate_batch(
     check_k: int = 8,
     check_refine: int = 64,
     ann_build_kwargs: dict | None = None,
-    ann_rebuild_factor: float | None = 2.0,
-    ann_compact_min_files: int | None = 64,
-    doc_compact_min_files: int | None = 64,
-    doc_reshard_factor: float | None = 2.0,
 ) -> dict:
     """Run one micro-batch through the semantic gate (module docstring).
     ``vec_store`` is a DocumentStore keyed on ``id_col`` holding the
@@ -82,10 +84,9 @@ def semantic_gate_batch(
     and converges to a no-op through the skip paths.
 
     After each committing batch the vector store and (after an append)
-    the index run one ``maintain`` step, with neardup_gate_batch's knobs
-    and defaults: grow the layout with the corpus (a rebuild reads the
-    stored vectors), else fold due delta runs, else compact; None skips
-    a leg.
+    the index run one ``maintain`` step (GROW_FACTOR,
+    COMPACT_MIN_FILES): grow the layout with the corpus (a rebuild reads
+    the stored vectors), else fold due delta runs, else compact.
 
     ``stage_sec`` in the returned stats itemizes the gate the same way
     neardup_gate_batch does (each boundary sits after an eager
@@ -205,7 +206,7 @@ def semantic_gate_batch(
     if n_kept > 0 or redelivered > 0:
         if n_kept > 0:
             vec_store.append_docs(survivors, on_existing="skip")
-            vec_store.maintain(doc_reshard_factor, doc_compact_min_files)
+            vec_store.maintain(GROW_FACTOR, COMPACT_MIN_FILES)
         if idx is None:
             # covers the first-batch crash window too: build() reads the
             # full vector store, which already holds any redelivered rows
@@ -216,8 +217,8 @@ def semantic_gate_batch(
         else:
             idx = ann_store.append(to_index, skip_existing=True)
             if ann_store.maintain(
-                ann_rebuild_factor,
-                ann_compact_min_files,
+                GROW_FACTOR,
+                COMPACT_MIN_FILES,
                 corpus=lambda: vec_store.read().select(id_col, vec_col),
             ):
                 idx = ann_store.load()

@@ -944,10 +944,10 @@ def test_train_sample_deterministic_and_partition_invariant(spark):
     assert 50 <= len(ids1) <= 150
 
 
-def test_trainers_numpy_and_spark_agree(spark, sf_dir):
+def test_trainers_numpy_and_spark_agree(spark, sf_dir, monkeypatch):
     """kmeans_fit, pq_train and opq_train train on the driver (one Arrow
-    collect, the S.train_* kernels) within their byte bound, and in Spark
-    Lloyd loops above it (max_bytes=0). On seeded Gaussian rows the two
+    collect, the S.train_* kernels) within S.fits_driver, and in Spark
+    Lloyd loops above it (a bound of 0). On seeded Gaussian rows the two
     give the same centroids, PQ books, rotation and OPQ books to 1e-9
     relative, and the two models encode every sf0.001 embedding to the
     same cells, PQ codes and OPQ codes."""
@@ -962,17 +962,19 @@ def test_trainers_numpy_and_spark_agree(spark, sf_dir):
         "vec_id bigint, embedding array<double>",
     )
 
-    def train(max_bytes):
-        cents = S.kmeans_fit(df, 8, 3, dim=dim, max_bytes=max_bytes)
+    def train():
+        cents = S.kmeans_fit(df, 8, 3, dim=dim)
         v = F.col("embedding")
         resid = df.select(
             "vec_id", S._residual_udf(cents)(v, S._assign_udf(cents)(v)).alias("_r")
         ).localCheckpoint()
-        books = S.pq_train(resid, 8, 16, 2, dim, max_bytes=max_bytes)
-        rotation, opq_books = S.opq_train(resid, 8, 16, 2, 2, dim, max_bytes=max_bytes)
+        books = S.pq_train(resid, 8, 16, 2, dim)
+        rotation, opq_books = S.opq_train(resid, 8, 16, 2, 2, dim)
         return cents, books, rotation, opq_books
 
-    on_driver, in_spark = train(S.TRAIN_DRIVER_MAX_BYTES), train(0)
+    on_driver = train()
+    monkeypatch.setattr(S, "TRAIN_DRIVER_MAX_BYTES", 0)
+    in_spark = train()
     for a, b in zip(on_driver, in_spark):
         a, b = np.asarray(a), np.asarray(b)
         assert a.shape == b.shape
@@ -1001,7 +1003,8 @@ def test_build_paths_commit_identical_rows(spark, tmp_path, sf_dir):
     them commit the same code rows (id, variant, cell, code, norm, chash),
     fingerprint, model and group schemas, and so does a Table build on a
     root taken as non-local, whose partitioned code table takes a Spark
-    write (_arrow_saving)."""
+    write (_arrow_saving). A Table above the rule needs the vector
+    column the Spark encode reads."""
     df = _sf_vectors(spark, sf_dir)
     kw = dict(dim=64, n_centroids=8)
 
@@ -1014,6 +1017,8 @@ def test_build_paths_commit_identical_rows(spark, tmp_path, sf_dir):
     n_frame, _ = jobs_of(spark, "build-frame", lambda: on_frame.build(df, **kw))
     assert n_table == 0 and n_frame <= 2
     dist.CODES_DELTA_MAX_VECTORS = 0
+    with pytest.raises(ValueError, match="embedding"):
+        dist.build(table, **kw)
     dist.build(df, **kw)
     remote._local_root_cache = None
     remote.build(table, **kw)
@@ -1082,10 +1087,10 @@ def test_sampled_build_deterministic_and_encodes_full_corpus(
     assert idx2.fingerprint == idx.fingerprint
 
     # repartitioned source: the SAMPLE is id-hash-stable (same member
-    # set), so the model matches to float ulps — F.avg's partial-sum
-    # order is partition-dependent for every training path (pre-existing,
-    # not introduced by sampling); bit-identity across layouts is not the
-    # contract, replay identity above is
+    # set), so the model matches to float ulps — the Spark loops' F.avg
+    # partial-sum order is partition-dependent; bit-identity across
+    # layouts is asserted only for the driver trainers
+    # (test_build_model_independent_of_partitioning)
     import numpy as np
 
     st3 = AnnIndexStore(spark, str(tmp_path / "c"))
@@ -1098,6 +1103,15 @@ def test_sampled_build_deterministic_and_encodes_full_corpus(
     # near-tie points flip); assert the invariant instead: orthogonality
     R = np.asarray(idx3.opq_rotation)
     assert np.allclose(R @ R.T, np.eye(R.shape[0]), atol=1e-9)
+
+    # a sample past the driver bound trains in the Spark loops: the same
+    # model to float ulps, and the full corpus is still encoded
+    monkeypatch.setattr(S, "TRAIN_DRIVER_MAX_BYTES", 0)
+    st4 = AnnIndexStore(spark, str(tmp_path / "d"))
+    idx4 = st4.build(df, **BUILD)
+    assert np.allclose(idx4.centroids, idx.centroids)
+    assert np.allclose(idx4.pq_books, idx.pq_books)
+    assert st4.codes("opq").count() == 60
 
     hits = S.topk_cosine_ivfpq(
         df,

@@ -41,6 +41,7 @@ from __future__ import annotations
 
 import json
 import os
+import resource
 import shutil
 import sys
 import time
@@ -69,6 +70,19 @@ NPROBE = 4
 REFINE_HELD = S.DEFAULT_REFINE
 
 
+def timed_build(spark, st: AnnIndexStore, emb):
+    """(seconds, Spark jobs, index) of ``st.build(emb)``; the jobs are
+    counted through a job group (the test suite's jobs_of rule)."""
+    sc, group = spark.sparkContext, f"bench-ann-build-{time.time_ns()}"
+    sc.setJobGroup(group, group)
+    t0 = time.perf_counter()
+    idx = st.build(emb)
+    sec = time.perf_counter() - t0
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sec, len(sc.statusTracker().getJobIdsForGroup(group)), idx
+
+
 def run_point(spark, sf_dir: str, root: str) -> dict:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
@@ -79,16 +93,23 @@ def run_point(spark, sf_dir: str, root: str) -> dict:
     st = AnnIndexStore(spark, root)
     times: dict[str, float] = {}
 
-    # the build's Spark jobs, counted through a job group (the test
-    # suite's jobs_of rule)
-    sc, group = spark.sparkContext, f"bench-ann-build-{time.time_ns()}"
-    sc.setJobGroup(group, group)
-    t0 = time.perf_counter()
-    idx = st.build(emb)
-    times["build_sec"] = time.perf_counter() - t0
-    sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    build_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    rss0 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+    times["build_sec"], build_jobs, idx = timed_build(spark, st, emb)
+    # growth of this process's peak RSS (KiB on Linux) over the build:
+    # what driver-side training and encode hold at once
+    rss_mb = (resource.getrusage(resource.RUSAGE_SELF).ru_maxrss - rss0) / 1024
+    # the same build all in Spark: the distributed encode and the
+    # trainers' Spark loops (a driver byte bound of 0), the other side of
+    # S.TRAIN_DRIVER_MAX_BYTES at this point's training matrix
+    spark_st = AnnIndexStore(spark, root + "_spark")
+    spark_st.CODES_DELTA_MAX_VECTORS = 0
+    bound, S.TRAIN_DRIVER_MAX_BYTES = S.TRAIN_DRIVER_MAX_BYTES, 0
+    try:
+        times["build_spark_sec"], build_spark_jobs, _ = timed_build(spark, spark_st, emb)
+    finally:
+        S.TRAIN_DRIVER_MAX_BYTES = bound
+    shutil.rmtree(root + "_spark")
+    cap = max(st.TRAIN_SAMPLE_MIN, st.TRAIN_SAMPLE_PER_CENTROID * idx.n_centroids)
 
     # fixed-size delta: the DELTA_ROWS lowest ids re-enter under new ids
     # (same vectors — the op cost does not depend on the values). The
@@ -221,6 +242,9 @@ def run_point(spark, sf_dir: str, root: str) -> dict:
     return {
         "n_vectors": n,
         "build_jobs": build_jobs,
+        "build_spark_jobs": build_spark_jobs,
+        "train_matrix_mb": round(min(n, cap) * idx.dim * 8 / 2**20, 1),
+        "build_rss_mb": round(rss_mb, 1),
         "n_probed_cells": len(cells),
         "nprobe_held": int(nprobe_held),
         "refine_held": REFINE_HELD,
@@ -285,7 +309,13 @@ def main() -> int:
             "recall_at_10_held at the recall-held knobs "
             "(nprobe=ceil(cells/4), refine=REFINE_HELD) with its "
             "search_held_sec cost, and scores_match pinning that "
-            "reported cosines are exact."
+            "reported cosines are exact. build_spark_sec / "
+            "build_spark_jobs time the same build with the distributed "
+            "encode and the trainers' Spark loops "
+            "(S.TRAIN_DRIVER_MAX_BYTES = 0); train_matrix_mb is the "
+            "training matrix (sample rows x dim x 8 B) and build_rss_mb "
+            "the growth of the bench process's peak RSS over the "
+            "default build."
         ),
         "points": points,
     }
