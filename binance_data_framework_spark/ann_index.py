@@ -1384,9 +1384,7 @@ class AnnIndexStore(SnapshotStore):
             return False
         return self.compact_codes(min_files=2, fold_deltas=True) > 0
 
-    def maybe_rebuild(
-        self, corpus: Callable[[], DataFrame], grow_factor: float = 2.0
-    ) -> bool:
+    def maybe_rebuild(self, corpus: Callable[[], DataFrame]) -> bool:
         """Maintenance trigger for an index grown through appends
         (ADVICE r7 #4): append() reuses the committed quantizer AND cell
         count by design, so an index auto-sized at its first build keeps
@@ -1395,7 +1393,7 @@ class AnnIndexStore(SnapshotStore):
         re-introducing the linear per-cell candidate growth auto_centroids
         exists to prevent. This re-runs the SAME derivation at the CURRENT
         committed size and retrains (force build over ``corpus()``) when
-        the rule asks for >= ``grow_factor`` x the committed cell count.
+        the rule asks for >= GROW_FACTOR x the committed cell count.
 
         The check is O(1) driver-side (two sidecar fields), and ``corpus``
         is called only once it trips, so a caller builds its corpus frame
@@ -1409,7 +1407,7 @@ class AnnIndexStore(SnapshotStore):
         if idx is None or not idx.auto_cells:
             return False
         ideal = S.auto_centroids(idx.n_vectors, idx.target_cell)
-        if ideal < grow_factor * idx.n_centroids:
+        if ideal < self.GROW_FACTOR * idx.n_centroids:
             return False
         self.build(
             corpus(),

@@ -100,7 +100,7 @@ class _HashLayoutStore(SnapshotStore):
       store — ``_auto_count`` of the committed row count. The growth
       trigger (``_maybe_grow``, behind ``maybe_rebucket``/
       ``maybe_reshard``) re-derives it and remaps the layout once the rule
-      asks for >= grow_factor x the current count. Without it, a store
+      asks for >= GROW_FACTOR x the current count. Without it, a store
       started small keeps batch-1's count while the corpus grows 1000x.
 
     The count and the row count are table state, committed with the files
@@ -318,14 +318,14 @@ class _HashLayoutStore(SnapshotStore):
             self._n, self._rows = done["count"], done["rows"]
         return new_files
 
-    def _maybe_grow(self, grow_factor: float) -> bool:
+    def _maybe_grow(self) -> bool:
         """The growth trigger, O(1): the count rule at the row count of
         this handle's last snapshot or commit; remaps once it asks for >=
-        ``grow_factor`` x the current count. Pinned stores never grow.
+        GROW_FACTOR x the current count. Pinned stores never grow.
         True iff a remap committed."""
         self._check_layout()
         ideal = self._auto_count(self._rows, self._target)
-        return self._auto and ideal >= grow_factor * self._n and self._remap(None)
+        return self._auto and ideal >= self.GROW_FACTOR * self._n and self._remap(None)
 
     def _remap(self, n: int | None) -> bool:
         """Rewrite the committed rows under count ``n`` — a narrow remap
@@ -907,14 +907,14 @@ class BandIndexStore(_HashLayoutStore):
         rewritten = {self._part_of(f) for f in files}
         return len(rewritten - {None}) or 1
 
-    def maybe_rebucket(self, grow_factor: float = 2.0) -> bool:
+    def maybe_rebucket(self) -> bool:
         """Growth trigger of an auto-bucketed index (_maybe_grow): without
         it a gate started on a small corpus keeps batch-1's bucket count
         while the corpus grows 1000x, so per-batch candidate reads grow
         linearly (num_bands x corpus / n_buckets) and the measured-flat
         gate claim quietly expires (VERDICT r8 #1). Returns True iff a
         rebucket was committed."""
-        return self._maybe_grow(grow_factor)
+        return self._maybe_grow()
 
     def maybe_fold_deltas(self, max_fraction: float = 0.02) -> bool:
         """Amortized LSM fold trigger (pairs with append()'s delta runs):
@@ -968,7 +968,7 @@ class DocumentStore(_HashLayoutStore):
       exact row count every commit records in the manifest.
       ``maybe_reshard()``
       remaps the layout — a narrow re-hash of the key column, one pmod,
-      one commit — once the rule asks for >= grow_factor x the current
+      one commit — once the rule asks for >= GROW_FACTOR x the current
       count. Without it each shard of an append-only store started small
       becomes corpus/16, compaction rewrites balloon, and the
       one-file-per-shard write loses all parallelism."""
@@ -1429,10 +1429,10 @@ class DocumentStore(_HashLayoutStore):
         )
         return len(todo)
 
-    def maybe_reshard(self, grow_factor: float = 2.0) -> bool:
+    def maybe_reshard(self) -> bool:
         """Growth trigger of an AUTO-sharded store grown through appends
         (_maybe_grow). Returns True iff a reshard was committed."""
-        return self._maybe_grow(grow_factor)
+        return self._maybe_grow()
 
     def reshard(self, n_shards: int | None = None) -> bool:
         """Remap the committed rows to ``n_shards`` shards, or to

@@ -207,25 +207,21 @@ def _maintenance(grow: str, fold: str | None, compact: str):
     named here and called through ``self`` at call time: the one
     grow -> fold -> compact order of every tier."""
 
-    def maintain(
-        self, grow_factor: float | None, compact_min_files: int | None, **grow_kw
-    ) -> bool:
-        """One maintenance step: grow the layout with the corpus
-        (``grow_kw`` passes through, e.g. a rebuild's ``corpus``), else
-        fold due delta runs (a tier without runs has no fold leg), else
-        compact once any partition holds ``compact_min_files`` files. A
-        rewrite supersedes the layout the later legs would look at, so the
-        first leg that commits ends the step; a None factor or threshold
-        skips its leg. True iff a rewrite committed."""
-        if grow_factor is not None and getattr(self, grow)(
-            grow_factor=grow_factor, **grow_kw
-        ):
+    def maintain(self, **grow_kw) -> bool:
+        """One maintenance step: grow the layout with the corpus once it
+        passes GROW_FACTOR x the size it was laid out for (``grow_kw``
+        passes through, e.g. a rebuild's ``corpus``), else fold due delta
+        runs (a tier without runs has no fold leg), else compact once any
+        partition holds COMPACT_MIN_FILES files. A rewrite supersedes the
+        layout the later legs would look at, so the first leg that
+        commits ends the step. True iff a rewrite committed."""
+        if getattr(self, grow)(**grow_kw):
             return True
         if fold is not None and getattr(self, fold)():
             return True
-        man = self._snapshot() if compact_min_files is not None else None
+        man = self._snapshot()
         groups = self._files_by_part(man["files"] if man else [])
-        due = any(len(fl) >= compact_min_files for fl in groups.values())
+        due = any(len(fl) >= self.COMPACT_MIN_FILES for fl in groups.values())
         return due and getattr(self, compact)() > 0
 
     return maintain
@@ -466,6 +462,12 @@ class SnapshotStore:
     #: of tiny batches would otherwise park thousands of runs below the row
     #: floor, and every lookup would pay O(runs) file overhead
     DELTA_FOLD_MAX_FILES = 64
+    #: the maintain() policy of the gate tiers, read at call time: a grow
+    #: leg relayouts once its sizing rule asks for GROW_FACTOR x the
+    #: committed partition count, and the compaction leg runs once any
+    #: partition holds COMPACT_MIN_FILES committed files
+    GROW_FACTOR = 2.0
+    COMPACT_MIN_FILES = 64
 
     def _footer_stats(
         self, rels: list[str], column: str, local_root: str, live_files: list[str]

@@ -45,15 +45,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from binance_data_framework_spark.materialize import checkpoint_observed
+from binance_data_framework_spark.materialize import checkpoint_observed, stage_timer
 from binance_data_framework_spark.operators import similarity as S
 from binance_data_framework_spark.streaming.ann_serve import serve_batch
-
-#: the maintain() step after a committing batch, on the vector store and
-#: the index: grow the layout once the corpus passes this factor of the
-#: size it was laid out for, compact once a partition holds this many
-#: files (neardup_gate_batch's defaults)
-GROW_FACTOR, COMPACT_MIN_FILES = 2.0, 64
 
 
 def semantic_gate_batch(
@@ -84,23 +78,15 @@ def semantic_gate_batch(
     and converges to a no-op through the skip paths.
 
     After each committing batch the vector store and (after an append)
-    the index run one ``maintain`` step (GROW_FACTOR,
-    COMPACT_MIN_FILES): grow the layout with the corpus (a rebuild reads
-    the stored vectors), else fold due delta runs, else compact.
+    the index run one ``maintain`` step, the same as neardup_gate_batch's
+    tiers: grow the layout with the corpus (a rebuild reads the stored
+    vectors), else fold due delta runs, else compact.
 
     ``stage_sec`` in the returned stats itemizes the gate the same way
     neardup_gate_batch does (each boundary sits after an eager
     checkpoint/count, so deltas attribute real work): in_batch_dedup /
     redelivery_check / corpus_check / commit (maintenance included)."""
-    import time as _time
-
-    stage_sec: dict[str, float] = {}
-    _mark = [_time.time()]
-
-    def _tick(name: str) -> None:
-        now = _time.time()
-        stage_sec[name] = round(now - _mark[0], 3)
-        _mark[0] = now
+    stage_sec, tick = stage_timer()
 
     def _ckpt_count(df: DataFrame) -> tuple[DataFrame, int]:
         out, obs = checkpoint_observed(df)
@@ -116,7 +102,7 @@ def semantic_gate_batch(
             "dropped_vs_corpus": 0,
             "redelivered": 0,
             "index_version": idx.version if idx else None,
-            "stage_sec": {},
+            "stage_sec": stage_sec,
         }
 
     # 1. in-batch self-dedup — the batch tier's operator verbatim
@@ -127,7 +113,7 @@ def semantic_gate_batch(
         batch_df.join(F.broadcast(reps), on=id_col, how="left_semi")
     )
     dropped_in_batch = n_arrived - n_after_batch
-    _tick("in_batch_dedup")
+    tick("in_batch_dedup")
 
     # 2. redelivery check — shard-pruned point read, same-id rows are
     # already stored (first-write-wins, like the band gate's append_new).
@@ -152,7 +138,7 @@ def semantic_gate_batch(
     else:
         fresh, n_fresh = kept_batch, n_after_batch
     redelivered = n_after_batch - n_fresh
-    _tick("redelivery_check")
+    tick("redelivery_check")
 
     # 3. corpus check — committed-index probe, exact-cosine verify: drop
     # if ANY of the top check_k exact cosines clears the threshold. The
@@ -186,7 +172,7 @@ def semantic_gate_batch(
     else:
         survivors, n_kept = fresh, n_fresh
     dropped_vs_corpus = n_fresh - n_kept
-    _tick("corpus_check")
+    tick("corpus_check")
 
     # 4. commit survivors: vectors first, then the index. The index leg
     # feeds the UNION of survivors and the batch's redelivered rows
@@ -206,7 +192,7 @@ def semantic_gate_batch(
     if n_kept > 0 or redelivered > 0:
         if n_kept > 0:
             vec_store.append_docs(survivors, on_existing="skip")
-            vec_store.maintain(GROW_FACTOR, COMPACT_MIN_FILES)
+            vec_store.maintain()
         if idx is None:
             # covers the first-batch crash window too: build() reads the
             # full vector store, which already holds any redelivered rows
@@ -217,13 +203,11 @@ def semantic_gate_batch(
         else:
             idx = ann_store.append(to_index, skip_existing=True)
             if ann_store.maintain(
-                GROW_FACTOR,
-                COMPACT_MIN_FILES,
-                corpus=lambda: vec_store.read().select(id_col, vec_col),
+                corpus=lambda: vec_store.read().select(id_col, vec_col)
             ):
                 idx = ann_store.load()
 
-    _tick("commit")
+    tick("commit")
     return {
         "arrived": n_arrived,
         "kept": n_kept,
@@ -241,34 +225,16 @@ def stream_semantic_ingest(
     ann_store,
     checkpoint_dir: str,
     stats_path: str | None = None,
-    threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    nprobe: int = 4,
-    check_k: int = 8,
-    check_refine: int = 64,
-    ann_build_kwargs: dict | None = None,
     trigger_available_now: bool = True,
+    **gate_kwargs,
 ):
     """Attach the semantic gate as a foreachBatch sink on an embedding
-    stream. Per-batch stats optionally land at ``stats_path`` as one
-    JSON line per batch keyed by batch_id (dynamic partition overwrite —
-    replayed batches replace their own stats row)."""
+    stream; ``gate_kwargs`` pass through to semantic_gate_batch. Per-batch
+    stats optionally land at ``stats_path`` as one JSON line per batch
+    keyed by batch_id (dynamic partition overwrite — replayed batches
+    replace their own stats row)."""
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        stats = semantic_gate_batch(
-            batch_df,
-            vec_store,
-            ann_store,
-            threshold=threshold,
-            id_col=id_col,
-            vec_col=vec_col,
-            dim=dim,
-            nprobe=nprobe,
-            check_k=check_k,
-            check_refine=check_refine,
-            ann_build_kwargs=ann_build_kwargs,
-        )
+        stats = semantic_gate_batch(batch_df, vec_store, ann_store, **gate_kwargs)
         if stats_path is not None:
             spark = vec_store.spark
             # explicit schema (ADVICE r12 low): an EMPTY micro-batch's

@@ -733,7 +733,7 @@ def test_compact_codes_folds_append_fragments(spark, tmp_path, monkeypatch):
 def test_maybe_rebuild_rederives_cells_on_grown_corpus(spark, tmp_path):
     """maybe_rebuild (ADVICE r7 #4): an auto-sized index keeps batch-1's
     cell count through every append; once the auto rule at the CURRENT
-    committed size asks for >= grow_factor x the committed cells, the
+    committed size asks for >= GROW_FACTOR x the committed cells, the
     index force-retrains over the full corpus — new cell count, quantizer
     trained on the current distribution, fingerprint fresh. Pinned-cell
     indexes never auto-rebuild."""

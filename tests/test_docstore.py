@@ -773,7 +773,7 @@ def test_docstore_auto_reshard_grows_and_preserves_reads(spark, tmp_path):
 
 @pytest.mark.slow
 def test_gate_auto_reshards_docstore(spark, tmp_path):
-    """The gate's doc_reshard_factor leg: an auto-sharded store grows its
+    """The gate's DocumentStore grow leg: an auto-sharded store grows its
     shard count mid-stream; dedup detection and point reads stay correct
     across the remap."""
     from binance_data_framework_spark.docstore import BandIndexStore

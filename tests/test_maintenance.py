@@ -175,10 +175,11 @@ class _BandTier:
 
 @pytest.mark.parametrize("tier", [_DocTier, _BandTier], ids=["doc", "band"])
 def test_maintain_order(spark, tmp_path, monkeypatch, tier):
-    """maintain(): None legs never fire; one partition at >= N files
-    compacts every multi-file partition; a committed grow skips the fold
-    and the compaction; a due fold skips the compaction (band); the
-    return value says whether a rewrite committed."""
+    """maintain(): legs at unreachable GROW_FACTOR / COMPACT_MIN_FILES
+    never fire, at any corpus size; one partition at >= N files compacts
+    every multi-file partition; a committed grow skips the fold and the
+    compaction; a due fold skips the compaction (band); the return value
+    says whether a rewrite committed."""
     t = tier(spark, tmp_path)
     st = t.store
     grow, fold, compact = t.legs[0], list(t.legs[1:-1]), t.legs[-1]
@@ -189,14 +190,17 @@ def test_maintain_order(spark, tmp_path, monkeypatch, tier):
 
     def step(grow_factor, min_files, committed: bool, legs: list[str]) -> None:
         nonlocal v
+        monkeypatch.setattr(type(st), "GROW_FACTOR", grow_factor)
+        monkeypatch.setattr(type(st), "COMPACT_MIN_FILES", min_files)
         calls.clear()
-        assert st.maintain(grow_factor, min_files) is committed
+        assert st.maintain() is committed
         assert calls == legs
         v += committed
         assert _version(st) == v
 
-    # the band fold has no knob: it runs, with nothing due
-    step(None, None, False, fold)
+    never = float("inf")
+    # the band fold has its own trigger: it runs, with nothing due
+    step(never, 1 << 30, False, [grow, *fold])
     step(2.0, 4, False, [grow, *fold])
     step(2.0, 3, True, [grow, *fold, compact])
     groups = st._files_by_part(st._snapshot()["files"])
@@ -205,6 +209,7 @@ def test_maintain_order(spark, tmp_path, monkeypatch, tier):
     # makes the compaction due as well
     set_layout_rows(st, 10**4)
     v = _version(st)
+    step(never, 1, False, [grow, *fold, compact])
     step(2.0, 1, True, [grow])
     if fold:
         st.append(t.delta_run)

@@ -520,9 +520,10 @@ def test_neardup_gate_batch_stats_and_band_layout(spark, tmp_path):
 def test_gate_stage_sec_times_each_stage_alone(spark, tmp_path, monkeypatch, gate_path):
     """stage_sec["ann_append"] times the ANN append alone: the doc and
     band maintain calls and the ANN maintain call land in "maintenance",
-    which reports the sum of both pieces — on both gate paths. The ANN
-    leg is a stub whose calls and the doc-store maintain step take known
-    times."""
+    which reports the sum of both pieces — on both gate paths. On the
+    batch that builds the index, stage_sec["ann_build"] times the build
+    alone, outside "maintenance". The ANN leg is a stub whose calls and
+    the doc-store maintain step take known times."""
     import time
 
     from binance_data_framework_spark.ann_index import AnnIndexStore
@@ -543,8 +544,15 @@ def test_gate_stage_sec_times_each_stage_alone(spark, tmp_path, monkeypatch, gat
         def append(self, vecs, skip_existing):
             time.sleep(0.05)
 
-        def maintain(self, grow_factor, compact_min_files, corpus):
+        def maintain(self, corpus):
             time.sleep(0.3)
+
+    class _NewAnn(_Ann):
+        def load(self):
+            return None  # no index yet: the build branch
+
+        def build(self, vecs, **kwargs):
+            time.sleep(0.4)
 
     store = DocumentStore(spark, str(tmp_path / "store"), n_shards=2)
     bands = BandIndexStore(spark, str(tmp_path / "bands"), n_buckets=4)
@@ -569,6 +577,21 @@ def test_gate_stage_sec_times_each_stage_alone(spark, tmp_path, monkeypatch, gat
     }
     assert 0.05 <= stages["ann_append"] < 0.3
     assert stages["maintenance"] >= 0.9
+    batch = spark.createDataFrame(
+        [(3, "a third text on some other topic", [3.0])],
+        "doc_id bigint, text string, embedding array<float>",
+    )
+    stages = neardup_gate_batch(batch, store, bands, ann_store=_NewAnn())["stage_sec"]
+    assert set(stages) == {
+        "sig_selfdedup",
+        "corpus_check",
+        "save_docs",
+        "band_append",
+        "ann_build",
+        "maintenance",
+    }
+    assert stages["ann_build"] >= 0.4
+    assert 0.6 <= stages["maintenance"] < 1.0
 
 
 def test_gate_batch_reads_docstore_once(spark, tmp_path, monkeypatch, gate_path):
@@ -1180,7 +1203,7 @@ def test_build_eval_index_rerun_is_idempotent(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_gated_ingest_rebuilds_outgrown_ann_index(spark, tmp_path):
+def test_gated_ingest_rebuilds_outgrown_ann_index(spark, tmp_path, monkeypatch):
     """ADVICE r7 #4: the composed pipeline trains the ANN index on the
     FIRST accepted batch, pinning batch-1's auto-derived cell count and
     quantizer distribution through every later append. The gate must
@@ -1241,13 +1264,14 @@ def test_gated_ingest_rebuilds_outgrown_ann_index(spark, tmp_path):
     )
     assert ann.codes("pq").count() == 70
 
-    # ann_rebuild_factor=None disables the trigger
+    # a grow factor no corpus reaches disables the trigger
+    monkeypatch.setattr(AnnIndexStore, "GROW_FACTOR", float("inf"))
     store2 = DocumentStore(spark, str(tmp_path / "store2"), n_shards=4)
     bands2 = BandIndexStore(spark, str(tmp_path / "bands2"), n_buckets=8)
     ann2 = AnnIndexStore(
         spark, str(tmp_path / "ann2"), id_col="doc_id", vec_col="embedding"
     )
-    kw2 = dict(kw, ann_store=ann2, ann_rebuild_factor=None)
+    kw2 = dict(kw, ann_store=ann2)
     neardup_gate_batch(batch(0, 20), store2, bands2, **kw2)
     neardup_gate_batch(batch(20, 70), store2, bands2, **kw2)
     assert ann2.load().n_centroids == 16 and ann2.load().n_vectors == 70
@@ -1255,7 +1279,7 @@ def test_gated_ingest_rebuilds_outgrown_ann_index(spark, tmp_path):
 
 @pytest.mark.slow
 def test_gated_ingest_auto_compacts_fragmented_cells(spark, tmp_path, monkeypatch):
-    """ann_compact_min_files, BULK regime (delta threshold forced to 0 so
+    """The ANN compaction leg, BULK regime (delta threshold forced to 0 so
     every append takes the bucketed per-cell write — micro-batch appends
     land as delta runs since r10, covered by the fold test below):
     appends fragment touched cells one file per batch; once a cell passes
@@ -1268,6 +1292,7 @@ def test_gated_ingest_auto_compacts_fragmented_cells(spark, tmp_path, monkeypatc
     )
 
     monkeypatch.setattr(AnnIndexStore, "CODES_DELTA_MAX_VECTORS", 0)
+    monkeypatch.setattr(AnnIndexStore, "COMPACT_MIN_FILES", 3)
 
     store = DocumentStore(spark, str(tmp_path / "store"), n_shards=2)
     bands = BandIndexStore(spark, str(tmp_path / "bands"), n_buckets=4)
@@ -1303,7 +1328,6 @@ def test_gated_ingest_auto_compacts_fragmented_cells(spark, tmp_path, monkeypatc
         threshold=0.9,
         ann_store=ann,
         ann_build_kwargs=dict(dim=8, n_centroids=2, m_sub=4, ksub=4),
-        ann_compact_min_files=3,
     )
     neardup_gate_batch(batch(0, 6), store, bands, **kw)    # build
     neardup_gate_batch(batch(6, 12), store, bands, **kw)   # frag 2 — below
@@ -1335,6 +1359,8 @@ def test_gated_ingest_folds_code_delta_runs(spark, tmp_path, monkeypatch):
     # 6 docs/batch: <= 6 takes the delta write AND 12 delta code rows
     # >= the floor of 6 trips the fold — both roles of the constant
     monkeypatch.setattr(AnnIndexStore, "CODES_DELTA_MAX_VECTORS", 6)
+    # no compaction: the fold leg alone rewrites the code layout
+    monkeypatch.setattr(AnnIndexStore, "COMPACT_MIN_FILES", 1 << 30)
     store = DocumentStore(spark, str(tmp_path / "store"), n_shards=2)
     bands = BandIndexStore(spark, str(tmp_path / "bands"), n_buckets=4)
     ann = AnnIndexStore(
@@ -1363,7 +1389,6 @@ def test_gated_ingest_folds_code_delta_runs(spark, tmp_path, monkeypatch):
         threshold=0.9,
         ann_store=ann,
         ann_build_kwargs=dict(dim=8, n_centroids=2, m_sub=4, ksub=4),
-        ann_compact_min_files=None,
     )
     neardup_gate_batch(batch(0, 6), store, bands, **kw)  # build (bucketed)
     n_bucketed = len(files("codes/"))
@@ -1388,7 +1413,7 @@ def test_gated_ingest_folds_code_delta_runs(spark, tmp_path, monkeypatch):
 
 
 @pytest.mark.slow
-def test_streaming_full_stack_gate(spark, tmp_path):
+def test_streaming_full_stack_gate(spark, tmp_path, monkeypatch):
     """Capstone: the COMPLETE self-maintaining pipeline through the
     streaming entry point — JSONL tail -> in-batch dedup -> eval
     decontamination -> corpus near-dup gate -> DocumentStore + band
@@ -1407,6 +1432,8 @@ def test_streaming_full_stack_gate(spark, tmp_path):
         stream_neardup_ingest,
     )
 
+    monkeypatch.setattr(DocumentStore, "COMPACT_MIN_FILES", 2)
+    monkeypatch.setattr(BandIndexStore, "COMPACT_MIN_FILES", 2)
     land = tmp_path / "landing"
     land.mkdir()
     ckpt = str(tmp_path / "ckpt")
@@ -1447,8 +1474,6 @@ def test_streaming_full_stack_gate(spark, tmp_path):
             eval_docstore=ev_store,
             eval_band_store=ev_bands,
             drift_every=1,
-            doc_compact_min_files=2,
-            band_compact_min_files=2,
         )
         q.awaitTermination(180)
 
@@ -1548,12 +1573,13 @@ def test_delete_documents_composes_all_three_tiers(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_gate_auto_rebuckets_and_compacts_band_index(spark, tmp_path):
+def test_gate_auto_rebuckets_and_compacts_band_index(spark, tmp_path, monkeypatch):
     """VERDICT r8 #1/#5: the self-maintaining gate's band-index legs.
     With an AUTO-bucketed band store and a tiny occupancy target, enough
     accepted batches trip maybe_rebucket (bucket count grows mid-stream,
     near-dup detection unaffected); independently, append fragmentation
-    past band_compact_min_files folds buckets back to one file each.
+    past BandIndexStore.COMPACT_MIN_FILES folds buckets back to one file
+    each.
     Pinned band stores (every pre-r9 caller) take neither leg."""
     from collections import Counter
 
@@ -1562,6 +1588,8 @@ def test_gate_auto_rebuckets_and_compacts_band_index(spark, tmp_path):
         neardup_gate_batch,
     )
 
+    # no compaction: the rebucket and fold legs alone rewrite the layout
+    monkeypatch.setattr(BandIndexStore, "COMPACT_MIN_FILES", 1 << 30)
     store = DocumentStore(spark, str(tmp_path / "store"), n_shards=2)
     bands = BandIndexStore(
         spark, str(tmp_path / "bands"), n_buckets=None, target_bucket_rows=8
@@ -1583,7 +1611,6 @@ def test_gate_auto_rebuckets_and_compacts_band_index(spark, tmp_path):
             mk([(i, texts[i]) for i in range(lo, lo + 10)]),
             store,
             bands,
-            band_compact_min_files=None,
         )
         assert s["kept"] == 10
     assert bands.n_buckets > first
@@ -1596,7 +1623,7 @@ def test_gate_auto_rebuckets_and_compacts_band_index(spark, tmp_path):
     # threshold (append() takes the delta-run path at n_in <= target) AND
     # at the fold floor (maybe_fold_deltas fires at delta_rows >= target),
     # so every gate batch lands as ONE run and folds into the bucket
-    # layout the same cycle. band_compact_min_files=None makes the fold
+    # layout the same cycle. An unreachable COMPACT_MIN_FILES makes the fold
     # leg the ONLY folder in the gate — the one-file-per-bucket assertion
     # below can only hold if maybe_fold_deltas really ran (review r10 #6:
     # the old tiny target routed every append onto the bucketed path and
@@ -1610,7 +1637,6 @@ def test_gate_auto_rebuckets_and_compacts_band_index(spark, tmp_path):
             mk([(i, texts[i]) for i in range(lo, lo + 10)]),
             store2,
             bands2,
-            band_compact_min_files=None,
         )
     files = bands2._snapshot()["files"]
     assert not any(f.startswith("delta/") for f in files)
@@ -1711,11 +1737,11 @@ def test_drift_baseline_read_runs_no_job(spark, tmp_path, monkeypatch):
     assert [n for path, n in reads if "/_drift_baseline-" in path] == [0]
 
 
-def test_gate_append_new_save_path(spark, tmp_path):
-    """save_mode="append_new" (r9): survivors already stored (band-detected
+def test_gate_append_new_save_path(spark, tmp_path, monkeypatch):
+    """The append-new save (r9): survivors already stored (band-detected
     redeliveries) are excluded from every tier's write — the doc commit is
-    add-only and batch-sized, replay converges, stored content matches the
-    upsert path for identical redeliveries, and the shard-compaction leg
+    add-only and batch-sized, replay converges, stored content is
+    unchanged by identical redeliveries, and the shard-compaction leg
     folds the per-batch fragmentation."""
     from collections import Counter
 
@@ -1724,6 +1750,8 @@ def test_gate_append_new_save_path(spark, tmp_path):
         neardup_gate_batch,
     )
 
+    # no shard compaction until the last batch
+    monkeypatch.setattr(DocumentStore, "COMPACT_MIN_FILES", 1 << 30)
     store = DocumentStore(spark, str(tmp_path / "store"), n_shards=2)
     bands = BandIndexStore(spark, str(tmp_path / "bands"), n_buckets=4)
     mk = lambda rows: spark.createDataFrame(  # noqa: E731
@@ -1735,7 +1763,6 @@ def test_gate_append_new_save_path(spark, tmp_path):
     ]
     s1 = neardup_gate_batch(
         mk([(i, texts[i]) for i in range(10)]), store, bands,
-        doc_compact_min_files=None,
     )
     assert s1["kept"] == 10 and s1["saved"] == 10
     v1 = store._snapshot()["version"]
@@ -1744,7 +1771,6 @@ def test_gate_append_new_save_path(spark, tmp_path):
     # exact replay: all redeliveries -> NOTHING written anywhere
     s2 = neardup_gate_batch(
         mk([(i, texts[i]) for i in range(10)]), store, bands,
-        doc_compact_min_files=None,
     )
     assert s2["kept"] == 10 and s2["saved"] == 0
     assert store._snapshot()["version"] == v1  # no doc commit at all
@@ -1754,7 +1780,6 @@ def test_gate_append_new_save_path(spark, tmp_path):
     # mixed batch: 5 redelivered + 5 new -> only the new 5 written
     s3 = neardup_gate_batch(
         mk([(i, texts[i]) for i in range(5, 15)]), store, bands,
-        doc_compact_min_files=None,
     )
     assert s3["kept"] == 10 and s3["saved"] == 5
     assert store.read().count() == 15
@@ -1763,9 +1788,9 @@ def test_gate_append_new_save_path(spark, tmp_path):
 
     # shard-compaction leg: batches fragment shards one file per append;
     # threshold 2 folds them back to one file per shard
+    monkeypatch.setattr(DocumentStore, "COMPACT_MIN_FILES", 2)
     s4 = neardup_gate_batch(
         mk([(i, texts[i]) for i in range(15, 20)]), store, bands,
-        doc_compact_min_files=2,
     )
     assert s4["saved"] == 5
     frag = Counter(

@@ -37,3 +37,18 @@ class A:
         f"7 {path}",
         "14 total",
     ]
+
+
+def test_code_lines_counts_every_module_under_a_directory(tmp_path, capsys):
+    """A directory argument stands for every ``*.py`` file under it, in
+    sorted order, nested packages included; other files do not count."""
+    (tmp_path / "sub").mkdir()
+    (tmp_path / "a.py").write_text("x = 1\n")
+    (tmp_path / "sub" / "b.py").write_text('"""Doc."""\ny = 2\nz = 3\n')
+    (tmp_path / "notes.txt").write_text("not python\n")
+    assert main([str(tmp_path)]) == 0
+    assert capsys.readouterr().out.splitlines() == [
+        f"1 {tmp_path / 'a.py'}",
+        f"2 {tmp_path / 'sub' / 'b.py'}",
+        "3 total",
+    ]

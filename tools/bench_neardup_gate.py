@@ -268,6 +268,7 @@ def main() -> int:
         shutil.rmtree(scratch, ignore_errors=True)
         store = DocumentStore(spark, f"{scratch}/docs", n_shards=None)
         bands = BandIndexStore(spark, f"{scratch}/bands", n_buckets=None)
+        store.COMPACT_MIN_FILES = bands.COMPACT_MIN_FILES = 4
         bands.pin_params({"num_hashes": 16, "num_bands": 4, "shingle_n": 3})
         corpus = docs.where(F.col("doc_id") <= ids[su_n - 1])
         sigs = minhash_signature(corpus).localCheckpoint(eager=True)
@@ -288,10 +289,6 @@ def main() -> int:
                 store,
                 bands,
                 threshold=0.8,
-                doc_compact_min_files=4,
-                band_compact_min_files=4,
-                doc_reshard_factor=2.0,
-                band_rebucket_factor=2.0,
                 drift_report=(b % 6 == 5),
             )
             series.append(round(time.time() - t0, 3))

@@ -5,10 +5,12 @@ physical line. Docstrings are the string expressions that open a module,
 class or function body (``ast.get_docstring``'s definition).
 
 Usage:
-    python tools/code_lines.py FILE [FILE ...]
+    python tools/code_lines.py PATH [PATH ...]
 
-Prints one ``<count> <file>`` line per file and, for several files, a
-``<count> total`` line.
+A directory PATH stands for every ``*.py`` file under it. Prints one
+``<count> <file>`` line per file and, for several files, a
+``<count> total`` line, e.g. the package figure:
+``python tools/code_lines.py binance_data_framework_spark``.
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ import ast
 import io
 import sys
 import tokenize
+from pathlib import Path
 
 _SKIP = {
     tokenize.COMMENT,
@@ -57,13 +60,17 @@ def code_lines(source: str) -> int:
 
 
 def main(argv: list[str]) -> int:
+    paths = [
+        q
+        for arg in argv
+        for q in (sorted(Path(arg).rglob("*.py")) if Path(arg).is_dir() else [arg])
+    ]
     total = 0
-    for path in argv:
-        with open(path, encoding="utf-8") as f:
-            n = code_lines(f.read())
+    for path in paths:
+        n = code_lines(Path(path).read_text(encoding="utf-8"))
         total += n
         print(f"{n} {path}")
-    if len(argv) > 1:
+    if len(paths) > 1:
         print(f"{total} total")
     return 0
 
